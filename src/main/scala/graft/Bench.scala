@@ -59,11 +59,14 @@ object Bench {
     val defaultRuns = if (only.nonEmpty) "5" else "3"
     val runs =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", defaultRuns).toInt.max(1)
-    val cpus = Runtime.getRuntime.availableProcessors()
     // external load only: stamped before OUR Spark session exists
     val loadPre = loadavg()
     val spark = graft.util.Sessions.local(graft.util.Sessions.cpus(
-      cpus.toString))
+      Runtime.getRuntime.availableProcessors().toString))
+    // the N of the session's local[N] (SPARK_GRAFT_CPUS), not the host's
+    // core count — the stamp and the contention threshold describe the
+    // session that ran
+    val cpus = spark.sparkContext.defaultParallelism
 
     // Warm the session (JVM classloading + codegen infra), not the data:
     // the tiny region table also exercises the parquet scan path, so the

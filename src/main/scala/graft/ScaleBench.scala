@@ -320,7 +320,8 @@ object ScaleBench {
       s""""scaled":${graft.util.Host.jsonStr(out)},""" +
       s""""copies":$copies,"load_pre":$loadPreJson,""" +
       s""""load_post":$loadPostJson,""" +
-      s""""cpus":${Runtime.getRuntime.availableProcessors()},""" +
+      // local[N]'s N, as graft.Bench stamps it
+      s""""cpus":${spark.sparkContext.defaultParallelism},""" +
       s""""queries":$qs,"sub_quadratic":$subQuadratic}"""
     println(line)
     // full-surface ladders are several KB — keep a self-contained

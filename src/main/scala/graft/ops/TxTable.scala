@@ -29,6 +29,14 @@ import java.nio.charset.StandardCharsets
   *                                        relative file path per line
   * }}}
   *
+  * Each file line may carry a tab-separated stats suffix (see the file
+  * stats section). Among its tokens is the id of the Spark row schema
+  * the file's data dir was written with; the head line's carried
+  * `graft.dataschema.<id>` keys map each id a live line uses to that
+  * schema's JSON — the per-file half of Delta's `metaData` action, so
+  * readers pin the schema instead of asking Spark to infer it from a
+  * footer (a one-task job per read).
+  *
   * Commit protocol: (1) write the new data files, (2) write the full
   * manifest (head line carries the action AND a per-commit nonce) to a
   * tmp name, (3) atomically claim the next free version slot. The claim
@@ -164,9 +172,14 @@ object TxTable {
 
   private def declaredSchemaAt(fs: FileSystem, p: Path,
                                v: Long): Option[StructType] =
-    parseMeta(readManifest(fs, p, v)._1).get(SchemaMetaKey).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(dec(j))
-        .asInstanceOf[StructType])
+    declaredSchemaOf(parseMeta(readManifest(fs, p, v)._1))
+
+  private def declaredSchemaOf(meta: Map[String, String]): Option[StructType] =
+    meta.get(SchemaMetaKey).map(j => schemaFromJson(dec(j)))
+
+  private def schemaFromJson(json: String): StructType =
+    org.apache.spark.sql.types.DataType.fromJson(json)
+      .asInstanceOf[StructType]
 
   private def declaredPartitionColsAt(fs: FileSystem, p: Path,
                                       v: Long): Option[Seq[String]] =
@@ -540,23 +553,26 @@ object TxTable {
       Map(ConstraintMetaPrefix + name -> ""))
   }
 
-  /** Enforcement: one aggregate over `newFiles` counting violations
+  /** Enforcement: one aggregate over `newLines` counting violations
     * per active constraint; on any violation delete `cleanupDir` (the
     * uncommitted data dir) and throw. Reads with the declared schema
     * when present so a constraint on an evolved column sees nulls
-    * (which PASS) rather than an analysis error.
+    * (which PASS) rather than an analysis error; otherwise with the
+    * schema record `recordMeta` holds for the lines' id, if any.
     */
   private def enforceConstraints(spark: SparkSession, path: String,
                                  fs: FileSystem, p: Path,
-                                 newFiles: Seq[String],
+                                 newLines: Seq[String],
+                                 recordMeta: Map[String, String],
                                  cleanupDir: Option[String],
                                  constraints: Map[String, String]): Unit = {
-    if (newFiles.isEmpty) return
+    if (newLines.isEmpty) return
     val cons = constraints.toSeq.sortBy(_._1)
     if (cons.isEmpty) return
     val pinned = versions(spark, path).lastOption
       .flatMap(v => declaredSchemaAt(fs, p, v))
-    val written = scanFiles(spark, p, newFiles, mergeSchema = false, pinned)
+    val written = scanFiles(spark, p, newLines, recordMeta,
+      mergeSchema = false, pinned)
     val flags = cons.zipWithIndex.map { case ((_, e), i) =>
       sum(when(expr(e) === false, 1L).otherwise(0L)).as(s"c$i")
     }
@@ -803,6 +819,68 @@ object TxTable {
   // query scanning the lake and scanning the handful of files whose
   // [min,max] straddles the needle. Pre-null-count manifests (4-token
   // tuples) keep working: absent null info is "may match".
+  //
+  // Schema record: a 2-token tuple `schema,<id>` (an arity the stats
+  // parser skips) names the Spark row schema of the file's data dir.
+  // [[commit]] takes it from the new files' footers — the
+  // `org.apache.spark.sql.parquet.row.metadata` value Spark's own
+  // schema inference deserializes — and records it only when every
+  // footer of the dir carries the same one. The id is a content hash
+  // of the schema JSON, so equal schemas share one entry and racing
+  // committers allocate nothing; the JSON lives once per id in the
+  // carried `graft.dataschema.<id>` head key, which every commit
+  // prunes to the ids its live lines still use. The manifest grows
+  // with distinct schemas, not files. Readers ([[scanFiles]],
+  // [[graft.sources.GraftResolve]], [[bloomTokens]]) pin a file group
+  // whose lines share one recorded id; groups without a record
+  // (manifests written before the record, COPY INTO, streaming file
+  // commits) are inferred as before.
+
+  private[graft] val SchemaRecordPrefix = "graft.dataschema."
+  private val SchemaIdTag = "schema"
+  private val SparkRowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Content id of a row-schema JSON: 16 hex chars of its SHA-256. */
+  private def schemaIdFor(json: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(json.getBytes(StandardCharsets.UTF_8))
+      .take(8).map("%02x".format(_)).mkString
+
+  /** The schema id a manifest file line carries, if any. */
+  private def schemaIdOf(line: String): Option[String] = {
+    val i = line.indexOf('\t')
+    if (i < 0) None
+    else line.substring(i + 1).split(';').iterator.map(_.split(','))
+      .collectFirst { case Array(SchemaIdTag, id) => id }
+  }
+
+  private def withSchemaId(line: String, id: Option[String]): String =
+    id.fold(line) { s =>
+      line + (if (line.indexOf('\t') < 0) '\t' else ';') + s"$SchemaIdTag,$s"
+    }
+
+  /** The schema recorded for ALL of `lines`, looked up in `meta` (the
+    * head meta of the manifest they come from) — None when a line has
+    * no id, the ids differ, or the dictionary lacks the id.
+    */
+  private def recordedSchemaOf(meta: Map[String, String],
+                               lines: Seq[String]): Option[StructType] =
+    lines.map(schemaIdOf).distinct match {
+      case Seq(Some(id)) =>
+        meta.get(SchemaRecordPrefix + id).map(j => schemaFromJson(dec(j)))
+      case _ => None
+    }
+
+  /** The schema recorded for every file of version `v`, if one is,
+    * as a file scan resolves it (every field nullable).
+    */
+  private[graft] def recordedSchema(spark: SparkSession, path: String,
+                                    v: Long): Option[StructType] = {
+    val (fs, p) = fsFor(spark, path)
+    val (head, lines) = readManifest(fs, p, v)
+    recordedSchemaOf(parseMeta(head), lines).map(s =>
+      org.apache.spark.sql.GraftShim.nullable(s).asInstanceOf[StructType])
+  }
 
   /** Manifest file line → relative path (stats suffix stripped). */
   private def pathOf(line: String): String = {
@@ -1045,13 +1123,15 @@ object TxTable {
     */
   private def bloomTokens(spark: SparkSession, fs: FileSystem, p: Path,
                           relFiles: Seq[String], cols: Seq[String],
-                          bits: Int, k: Int): Map[String, String] =
+                          bits: Int, k: Int,
+                          rowSchema: Option[StructType]): Map[String, String] =
     if (relFiles.isEmpty) Map.empty
     else try {
       val qualOf = relFiles.map { r =>
         fs.makeQualified(new Path(p, r)).toUri.getPath -> r
       }.toMap
-      val df = spark.read.parquet(
+      val reader = spark.read
+      val df = rowSchema.fold(reader)(reader.schema).parquet(
         relFiles.map(r => fs.makeQualified(new Path(p, r)).toString): _*)
       val present = cols.filter(df.columns.contains)
       val perFile = scala.collection.mutable.Map
@@ -1148,11 +1228,13 @@ object TxTable {
   /** `pendingMeta`: the meta of the commit IN FLIGHT — a bloom config
     * declared there (see [[bloomDeclarationMeta]]) applies to this
     * commit's own files, overriding the head's carried config.
+    * `rowSchema`: the files' recorded schema, pinning the bloom scan.
     */
   private def statsLines(spark: SparkSession, fs: FileSystem, p: Path,
                          path: String, relFiles: Seq[String],
                          pendingMeta: Map[String, String] = Map.empty,
-                         precomputed: Option[Map[String, String]] = None)
+                         precomputed: Option[Map[String, String]] = None,
+                         rowSchema: Option[StructType] = None)
       : Seq[String] = {
     val stats = precomputed.getOrElse(footerStats(fs, p, relFiles))
     val headMeta = versions(spark, path).lastOption
@@ -1160,7 +1242,7 @@ object TxTable {
       .getOrElse(Map.empty[String, String])
     val blooms = bloomConfigOf(headMeta ++ pendingMeta)
       .map { case (cols, bits, k) =>
-        bloomTokens(spark, fs, p, relFiles, cols, bits, k) }
+        bloomTokens(spark, fs, p, relFiles, cols, bits, k, rowSchema) }
       .getOrElse(Map.empty[String, String])
     relFiles.map { f =>
       val toks = Seq(stats.get(f), blooms.get(f)).flatten
@@ -1177,22 +1259,29 @@ object TxTable {
   private def footerStats(fs: FileSystem, p: Path,
                           relFiles: Seq[String]): Map[String, String] =
     footerInfo(fs, p, relFiles).collect {
-      case (rel, (stats, _)) if stats.nonEmpty => rel -> stats
+      case (rel, f) if f.stats.nonEmpty => rel -> f.stats
     }
 
-  /** ONE footer read per file: (stats string — possibly empty — plus
-    * the file's exact row count). The commit path previously paid one
-    * SERIAL footer pass for zero-row filtering and a second for stats,
-    * so a commit's driver-side time scaled with 2× its file count;
-    * this fuses them and runs the reads on a small thread pool (guide
-    * §6 — commit cost must be O(data), not O(files × passes)).
+  /** What one footer read yields: the stats string (possibly empty),
+    * the file's exact row count, and the Spark row schema JSON the
+    * writer stored in the footer (None for non-Spark writers).
+    */
+  private final case class FooterInfo(stats: String, rows: Long,
+                                      rowSchema: Option[String])
+
+  /** ONE footer read per file: its [[FooterInfo]]. The commit path
+    * previously paid one SERIAL footer pass for zero-row filtering and
+    * a second for stats, so a commit's driver-side time scaled with 2×
+    * its file count; this fuses them and runs the reads on a small
+    * thread pool (guide §6 — commit cost must be O(data), not
+    * O(files × passes)).
     * Unreadable footers are simply absent from the map (callers treat
     * a missing entry as "no stats, conservatively non-empty").
     */
   private def footerInfo(fs: FileSystem, p: Path, relFiles: Seq[String])
-      : Map[String, (String, Long)] = {
+      : Map[String, FooterInfo] = {
     val conf = fs.getConf
-    def readOne(rel: String): Option[(String, (String, Long))] = {
+    def readOne(rel: String): Option[(String, FooterInfo)] = {
       val parsed =
         try {
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -1295,7 +1384,8 @@ object TxTable {
                 case _ => ""
               }
             }.filter(_.nonEmpty).mkString(";")
-            Some((statsStr, totalRows))
+            Some(FooterInfo(statsStr, totalRows, Option(r.getFooter
+              .getFileMetaData.getKeyValueMetaData.get(SparkRowSchemaKey))))
           } finally r.close()
         } catch { case scala.util.control.NonFatal(_) => None }
       parsed.map(rel -> _)
@@ -1472,6 +1562,7 @@ object TxTable {
     */
   private def resolveConjuncts(spark: SparkSession, p: Path,
                                lines: Seq[String],
+                               meta: Map[String, String],
                                predicate: org.apache.spark.sql.Column,
                                mergeSchema: Boolean,
                                schema: Option[StructType]): Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
@@ -1480,7 +1571,7 @@ object TxTable {
       case And(l, r) => split(l) ++ split(r)
       case other => Seq(other)
     }
-    scanFiles(spark, p, lines.map(pathOf), mergeSchema, schema)
+    scanFiles(spark, p, lines, meta, mergeSchema, schema)
       .where(predicate).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
           split(f.condition)
@@ -1502,12 +1593,14 @@ object TxTable {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, vs.last)._2
-    val pinned = schema.orElse(declaredSchemaAt(fs, p, vs.last))
+    val (head, lines) = readManifest(fs, p, vs.last)
+    val meta = parseMeta(head)
+    val pinned = schema.orElse(declaredSchemaOf(meta))
     val cs =
       if (lines.isEmpty)
         Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
-      else resolveConjuncts(spark, p, lines, predicate, mergeSchema, pinned)
+      else resolveConjuncts(spark, p, lines, meta, predicate, mergeSchema,
+        pinned)
     val kept = lines.filter { l =>
       // footer stats + partition-value pseudo-stats: a partition-column
       // predicate prunes from the manifest path alone (no footer I/O);
@@ -1525,9 +1618,9 @@ object TxTable {
     else if (kept.isEmpty)
       // no file can match: Catalyst folds Filter(false) to an empty
       // relation, so this reads nothing while keeping the snapshot schema
-      scanFiles(spark, p, lines.map(pathOf), mergeSchema, pinned)
+      scanFiles(spark, p, lines, meta, mergeSchema, pinned)
         .where(lit(false))
-    else scanFiles(spark, p, kept.map(pathOf), mergeSchema, pinned)
+    else scanFiles(spark, p, kept, meta, mergeSchema, pinned)
       .where(predicate)
   }
 
@@ -1563,11 +1656,12 @@ object TxTable {
                   mergeSchema: Boolean = false,
                   schema: Option[StructType] = None): DataFrame = {
     val (fs, p) = fsFor(spark, path)
-    val (_, files) = readManifest(fs, p, v)
+    val (head, files) = readManifest(fs, p, v)
+    val meta = parseMeta(head)
     // an explicit caller pin wins; otherwise the schema the manifest
     // itself declares (create/evolveSchema) pins the read — files
     // written before an evolution surface the added columns as null
-    val pinned = schema.orElse(declaredSchemaAt(fs, p, v))
+    val pinned = schema.orElse(declaredSchemaOf(meta))
     if (files.isEmpty) pinned match {
       // an empty snapshot has no parquet footer to infer from — a
       // pinned or declared schema reads it as an empty frame (same
@@ -1578,7 +1672,7 @@ object TxTable {
         s"version $v of $path is an empty snapshot with no files — " +
         "pass an explicit schema to read it as an empty frame")
     }
-    else scanFiles(spark, p, files.map(pathOf), mergeSchema, pinned)
+    else scanFiles(spark, p, files, meta, mergeSchema, pinned)
   }
 
   /** Absolute data-file paths of version `v`'s snapshot — the
@@ -1765,7 +1859,7 @@ object TxTable {
       .map(_.toString).sorted
   }
 
-  /** Scan an explicit manifest-relative file list as one DataFrame.
+  /** Scan explicit manifest file lines as one DataFrame.
     *
     * Partition discovery walks each file's parents collecting
     * key=value dirs and requires every file to resolve the SAME
@@ -1777,17 +1871,24 @@ object TxTable {
     * The union is N = live-commit-dirs branches — bounded by commits
     * since the last overwrite, vacuum resets it — and filters/pruning
     * push into every branch.
+    *
+    * Each branch's schema is `schema` (the caller's or the declared
+    * one) when given, else the schema recorded for the branch's lines
+    * in `meta` — the head meta of the manifest the lines come from.
+    * Only a branch with neither leaves Spark to infer its schema from
+    * a footer, which costs a job.
     */
-  private def scanFiles(spark: SparkSession, p: Path, files: Seq[String],
+  private def scanFiles(spark: SparkSession, p: Path, lines: Seq[String],
+                        meta: Map[String, String],
                         mergeSchema: Boolean,
                         schema: Option[StructType]): DataFrame = {
     def scan(group: Seq[String]): DataFrame = {
       val r = spark.read.option("mergeSchema", mergeSchema.toString)
         .option("basePath", p.toString)
-      schema.fold(r)(r.schema)
-        .parquet(group.map(f => new Path(p, f).toString): _*)
+      schema.orElse(recordedSchemaOf(meta, group)).fold(r)(r.schema)
+        .parquet(group.map(l => new Path(p, pathOf(l)).toString): _*)
     }
-    val out = files.groupBy(_.split('/').take(2).mkString("/")).toSeq
+    val out = lines.groupBy(pathOf(_).split('/').take(2).mkString("/")).toSeq
       .sortBy(_._1).map(g => scan(g._2))
       // mergeSchema also widens ACROSS commit dirs (append may have
       // added columns); without it a heterogeneous union fails loudly
@@ -1842,12 +1943,14 @@ object TxTable {
     val base =
       if (fromV <= 0) Set.empty[String]
       else readManifest(fs, p, fromV)._2.map(pathOf).toSet
-    val snapshot = readManifest(fs, p, hi)._2.map(pathOf)
-    val pinned = schema.orElse(declaredSchemaAt(fs, p, hi))
-    val added = snapshot.filterNot(base)
-    if (added.nonEmpty) scanFiles(spark, p, added, mergeSchema, pinned)
+    val (head, snapshot) = readManifest(fs, p, hi)
+    val meta = parseMeta(head)
+    val pinned = schema.orElse(declaredSchemaOf(meta))
+    val added = snapshot.filterNot(l => base(pathOf(l)))
+    if (added.nonEmpty) scanFiles(spark, p, added, meta, mergeSchema, pinned)
     else if (snapshot.nonEmpty) // no new files: empty frame, snapshot schema
-      scanFiles(spark, p, snapshot, mergeSchema, pinned).where(lit(false))
+      scanFiles(spark, p, snapshot, meta, mergeSchema, pinned)
+        .where(lit(false))
     else pinned match { // empty snapshot: no footer anywhere to infer from
       case Some(s) => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
@@ -1903,7 +2006,8 @@ object TxTable {
     val frames = range.flatMap { v =>
       // ONE manifest read per version: the ts stamp comes from the
       // meta already in hand, not a second commitTimestamp read
-      val meta = parseMeta(readManifest(fs, p, v)._1)
+      val (head, cur) = readManifest(fs, p, v)
+      val meta = parseMeta(head)
       val tsMs = commitTimestampOf(fs, p, v, meta)
       meta.get(ChangeDataMetaKey) match {
         case Some("0") => None // row-change-free commit
@@ -1915,24 +2019,29 @@ object TxTable {
           // full-history read (fromV=0) the cumulative snapshot IS the
           // insert set — exact. A mid-history consumer has no baseline
           // to diff against: fail loudly, never double-ingest.
-          val prev =
-            if (v - 1 <= 0) Set.empty[String]
+          val (prevHead, prev) =
+            if (v - 1 <= 0) ("", Seq.empty[String])
             else if (!vs.contains(v - 1)) {
-              if (fromV == 0) Set.empty[String]
+              if (fromV == 0) ("", Seq.empty[String])
               else sys.error(
                 s"version ${v - 1} of $path was vacuumed — file-granular " +
                 s"change capture for v$v has no baseline to diff against")
             }
-            else readManifest(fs, p, v - 1)._2.map(pathOf).toSet
-          val cur = readManifest(fs, p, v)._2.map(pathOf)
-          val added = cur.filterNot(prev)
-          val removed = (prev -- cur.toSet).toSeq.sorted
-          val pinned = schema.orElse(declaredSchemaAt(fs, p, v))
-          def tagged(files: Seq[String], tag: String): Option[DataFrame] =
-            if (files.isEmpty) None
-            else Some(scanFiles(spark, p, files, mergeSchema, pinned)
-              .withColumn(ChangeTypeCol, lit(tag)))
-          (tagged(added, "insert") ++ tagged(removed, "delete"))
+            else readManifest(fs, p, v - 1)
+          val prevPaths = prev.map(pathOf).toSet
+          val curPaths = cur.map(pathOf).toSet
+          val added = cur.filterNot(l => prevPaths(pathOf(l)))
+          val removed = prev.filterNot(l => curPaths(pathOf(l)))
+            .sortBy(pathOf)
+          val pinned = schema.orElse(declaredSchemaOf(meta))
+          // each side's schema record lives in its own manifest's head
+          def tagged(lines: Seq[String], linesMeta: Map[String, String],
+                     tag: String): Option[DataFrame] =
+            if (lines.isEmpty) None
+            else Some(scanFiles(spark, p, lines, linesMeta, mergeSchema,
+              pinned).withColumn(ChangeTypeCol, lit(tag)))
+          (tagged(added, meta, "insert") ++
+            tagged(removed, parseMeta(prevHead), "delete"))
             .reduceOption(_.unionByName(_,
               allowMissingColumns = mergeSchema))
             .map(stamped(_, v, tsMs))
@@ -2080,11 +2189,13 @@ object TxTable {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, vs.last)._2
+    val (headLine, lines) = readManifest(fs, p, vs.last)
     if (lines.isEmpty) return None
-    val pinned = schema.orElse(declaredSchemaAt(fs, p, vs.last))
+    val headMeta = parseMeta(headLine)
+    val pinned = schema.orElse(declaredSchemaOf(headMeta))
     val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
-    val cs = resolveConjuncts(spark, p, lines, predicate, mergeSchema, pinned)
+    val cs = resolveConjuncts(spark, p, lines, headMeta, predicate,
+      mergeSchema, pinned)
     // footer stats + partition-path pseudo-stats: a DELETE/UPDATE whose
     // predicate names a partition column rewrites only that partition's
     // files — pruned from the manifest alone, same as readWhere
@@ -2099,7 +2210,7 @@ object TxTable {
     // keep-only-the-analyzed-set filter would silently drop them)
     val candidatePaths = candidates.map(pathOf).toSet
     val candidateRows =
-      scanFiles(spark, p, candidates.map(pathOf), mergeSchema, pinned)
+      scanFiles(spark, p, candidates, headMeta, mergeSchema, pinned)
     // build the rewrite plan FIRST: its eager validations (unknown SET
     // columns, …) must fail before any change file hits disk
     val rewritten = rewrite(candidateRows, predicate)
@@ -2166,8 +2277,9 @@ object TxTable {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, vs.last)._2
-    val pinned = schema.orElse(declaredSchemaAt(fs, p, vs.last))
+    val (headLine, lines) = readManifest(fs, p, vs.last)
+    val headMeta = parseMeta(headLine)
+    val pinned = schema.orElse(declaredSchemaOf(headMeta))
     val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
     val u = updates.localCheckpoint()
     // key bounds + null-key flags layout shared by both probe shapes
@@ -2238,8 +2350,8 @@ object TxTable {
     val cs =
       if (boundPreds.isEmpty)
         Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
-      else resolveConjuncts(spark, p, lines, boundPreds.reduce(_ && _),
-        mergeSchema, pinned)
+      else resolveConjuncts(spark, p, lines, headMeta,
+        boundPreds.reduce(_ && _), mergeSchema, pinned)
     // under null-safe matching a null update key may match rows in ANY
     // file whose key columns may hold nulls — but a file whose
     // null-count stats PROVE zero null keys can only match through the
@@ -2267,8 +2379,8 @@ object TxTable {
     val existing: DataFrame =
       if (candidates.isEmpty) null
       else {
-        val e = scanFiles(spark, p, candidates.map(pathOf),
-          mergeSchema, pinned)
+        val e = scanFiles(spark, p, candidates, headMeta, mergeSchema,
+          pinned)
         if (changeFeed)
           e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else e
@@ -2410,8 +2522,9 @@ object TxTable {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, vs.last)._2
-    val pinned = schema.orElse(declaredSchemaAt(fs, p, vs.last))
+    val (headLine, lines) = readManifest(fs, p, vs.last)
+    val headMeta = parseMeta(headLine)
+    val pinned = schema.orElse(declaredSchemaOf(headMeta))
     val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
     val s0 = source.localCheckpoint()
     // duplicate source keys would make "which row wins" arbitrary
@@ -2472,8 +2585,8 @@ object TxTable {
         }
         if (boundPreds.isEmpty)
           Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
-        else resolveConjuncts(spark, p, lines, boundPreds.reduce(_ && _),
-          mergeSchema, pinned)
+        else resolveConjuncts(spark, p, lines, headMeta,
+          boundPreds.reduce(_ && _), mergeSchema, pinned)
       }
     val (candidates, _) = lines.partition { l =>
       lazy val st = statsOf(l) ++ partitionStats(pathOf(l))
@@ -2493,8 +2606,8 @@ object TxTable {
     val existing =
       if (candidates.isEmpty) null
       else {
-        val e = scanFiles(spark, p, candidates.map(pathOf),
-          mergeSchema, pinned)
+        val e = scanFiles(spark, p, candidates, headMeta, mergeSchema,
+          pinned)
         if (changeFeed)
           e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else e
@@ -2637,8 +2750,9 @@ object TxTable {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, vs.last)._2
-    val pinned = schema.orElse(declaredSchemaAt(fs, p, vs.last))
+    val (headLine, lines) = readManifest(fs, p, vs.last)
+    val headMeta = parseMeta(headLine)
+    val pinned = schema.orElse(declaredSchemaOf(headMeta))
     val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
     val u = upserts.localCheckpoint()
     val dk = deleteKeys.select(keyCols.map(col): _*).distinct()
@@ -2673,8 +2787,8 @@ object TxTable {
     val cs =
       if (boundPreds.isEmpty || hasNullKey)
         Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
-      else resolveConjuncts(spark, p, lines, boundPreds.reduce(_ && _),
-        mergeSchema, pinned)
+      else resolveConjuncts(spark, p, lines, headMeta,
+        boundPreds.reduce(_ && _), mergeSchema, pinned)
     val (candidates, _) = lines.partition { l =>
       lazy val st = statsOf(l) ++ partitionStats(pathOf(l))
       cs.isEmpty || cs.forall(mayMatch(st, _))
@@ -2697,7 +2811,7 @@ object TxTable {
       if (candidates.isEmpty)
         (u, u.withColumn(ChangeTypeCol, lit("insert")), null: DataFrame)
       else {
-        val existing = scanFiles(spark, p, candidates.map(pathOf),
+        val existing = scanFiles(spark, p, candidates, headMeta,
           mergeSchema, pinned)
         if (changeFeed)
           existing.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2778,7 +2892,8 @@ object TxTable {
     val origByPath = todo.map(l => pathOf(l) -> l).toMap
     val kept = refreshed.map { l =>
       val orig = origByPath(pathOf(l))
-      if (!l.contains('\t') && orig.contains('\t')) orig else l
+      if (!l.contains('\t') && orig.contains('\t')) orig
+      else withSchemaId(l, schemaIdOf(orig))
     }
     if (kept.sorted == todo.sorted) return vs.last // nothing computable
     val todoPaths = todo.map(pathOf).toSet
@@ -3090,7 +3205,7 @@ object TxTable {
       // don't delete on failure, just refuse the commit (the thrown
       // error fails the batch and the checkpoint retries)
       val activeConstraints = headConstraints(spark, path)
-      enforceConstraints(spark, path, fs, p, relFiles, None,
+      enforceConstraints(spark, path, fs, p, relFiles, Map.empty, None,
         activeConstraints)
       val newLines = statsLines(spark, fs, p, path, relFiles)
       val layoutMeta =
@@ -3174,7 +3289,7 @@ object TxTable {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, vs.last)._2
+    val (head, lines) = readManifest(fs, p, vs.last)
     require(lines.nonEmpty || where.isDefined,
       s"nothing to rewrite: head of $path is empty")
     val kept = where match {
@@ -3182,9 +3297,9 @@ object TxTable {
       case Some(pred) =>
         if (lines.isEmpty) Seq.empty
         else {
-          val pinned = declaredSchemaAt(fs, p, vs.last)
-          val cs = resolveConjuncts(spark, p, lines, pred, mergeSchema,
-            pinned)
+          val meta = parseMeta(head)
+          val cs = resolveConjuncts(spark, p, lines, meta, pred,
+            mergeSchema, declaredSchemaOf(meta))
           lines.filter { l =>
             val st = statsOf(l) ++ partitionStats(pathOf(l))
             cs.forall(mayMatch(st, _))
@@ -3260,8 +3375,15 @@ object TxTable {
       s"$path is hive-partitioned — pass partitionCols so the rewrite " +
       "preserves the partition layout")
     val rewritten = relFiles.toSet
-    val snapshot = scanFiles(spark, p, relFiles, mergeSchema,
-      schema.orElse(declaredSchemaAt(fs, p, vs.last)))
+    val (head, lines) = readManifest(fs, p, vs.last)
+    val meta = parseMeta(head)
+    // the head's lines for relFiles carry their schema ids; a file the
+    // head no longer lists scans bare (the claim's requirePresent
+    // aborts that commit anyway)
+    val lineOf = lines.map(l => pathOf(l) -> l).toMap
+    val snapshot = scanFiles(spark, p,
+      relFiles.map(f => lineOf.getOrElse(f, f)), meta, mergeSchema,
+      schema.orElse(declaredSchemaOf(meta)))
     // dataChange=false (OPTIMIZE/compact): the transform is
     // data-identical by contract, so the commit declares zero change
     // rows — change-feed readers skip it instead of seeing the whole
@@ -3291,8 +3413,11 @@ object TxTable {
       s"version $v of $path does not exist or was vacuumed " +
       s"(retained: ${vs.headOption.getOrElse(-1L)}..${vs.lastOption.getOrElse(-1L)})")
     val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, v)._2
-    commitLines(spark, path, "restore", lines, (_, _) => Seq.empty)
+    val (head, lines) = readManifest(fs, p, v)
+    // v's schema records travel with its lines (the head may have
+    // pruned them since)
+    commitLines(spark, path, "restore", lines, (_, _) => Seq.empty,
+      parseMeta(head).filter(_._1.startsWith(SchemaRecordPrefix)))
   }
 
   /** Multiset row-level diff between two committed snapshots — the
@@ -3561,7 +3686,7 @@ object TxTable {
     // later read. Unreferenced files are invisible to readers, a retry
     // REUSES them via the exists-check above (the failure cost is
     // already paid), and vacuum's orphan grace collects genuine debris.
-    enforceConstraints(spark, path, fs, p, freshRels, None,
+    enforceConstraints(spark, path, fs, p, freshRels, Map.empty, None,
       activeConstraints)
     val newLines = statsLines(spark, fs, p, path, freshRels)
     val freshSet = freshRels.toSet
@@ -3684,25 +3809,38 @@ object TxTable {
     val info = footerInfo(fs, p, allParts)
     val newFiles = {
       val nonEmpty = allParts.filter(rel =>
-        info.get(rel).map(_._2).getOrElse(-1L) != 0L)
+        info.get(rel).map(_.rows).getOrElse(-1L) != 0L)
       if (nonEmpty.nonEmpty) nonEmpty
       else if (allowZeroParts) Seq.empty
       else allParts.take(1)
     }
+    // the dir's schema record: the row schema every new footer carries,
+    // or none when one lacks it or they disagree
+    val rowSchema =
+      newFiles.map(info.get(_).flatMap(_.rowSchema)).distinct match {
+        case Seq(Some(json)) => Some(json)
+        case _ => None
+      }
+    val schemaId = rowSchema.map(schemaIdFor)
+    val recordMeta = schemaId.zip(rowSchema)
+      .map { case (id, json) => SchemaRecordPrefix + id -> enc(json) }.toMap
     // CHECK constraints validate the freshly written files before any
     // claim — a violating commit cleans up and throws, invisible to
     // readers; the validated set's fingerprint rides into the claim
     // loop so a concurrent ADD/DROP CONSTRAINT aborts this commit
     // instead of letting unvalidated data slip past the new rules
     val activeConstraints = headConstraints(spark, path)
-    enforceConstraints(spark, path, fs, p, newFiles, Some(dataDir),
+    enforceConstraints(spark, path, fs, p,
+      newFiles.map(withSchemaId(_, schemaId)), recordMeta, Some(dataDir),
       activeConstraints)
     // footer min/max (+ declared blooms — including one declared by
     // THIS commit's meta) per new file ride in the manifest line;
     // failures degrade to stats-less lines
     val newLines = statsLines(spark, fs, p, path, newFiles, meta,
       precomputed = Some(info.collect {
-        case (rel, (st, _)) if st.nonEmpty => rel -> st }))
+        case (rel, f) if f.stats.nonEmpty => rel -> f.stats }),
+      rowSchema = rowSchema.map(schemaFromJson))
+      .map(withSchemaId(_, schemaId))
     // declare the layout in the manifest: partitioned commits state
     // their columns; overwrites own the WHOLE layout, so they also
     // clear a stale declaration when the new snapshot is flat. A flat
@@ -3713,7 +3851,8 @@ object TxTable {
       if (partitionCols.nonEmpty || action == "overwrite")
         Map(PartitionsMetaKey -> enc(partitionCols.mkString(",")))
       else Map.empty[String, String]
-    commitLines(spark, path, action, newLines, baseKeep, layoutMeta ++ meta,
+    commitLines(spark, path, action, newLines, baseKeep,
+      layoutMeta ++ recordMeta ++ meta,
       requirePresent, guard, requireUnchangedUnder,
       requireConstraints = Some(constraintFingerprint(activeConstraints)),
       requireHeadVersion = requireHeadVersion)
@@ -3858,14 +3997,18 @@ object TxTable {
       // carried keys survive manifest pruning: re-emit the previous
       // head's txn.*/graft.* tokens, this commit's own meta winning on
       // conflict; the ts stamp is per-commit and never carried
-      val carried = parseMeta(prevHead)
-        .filter(kv => CarriedMetaPrefixes.exists(kv._1.startsWith)) ++ meta
+      val lines = baseKeep(base, newLines) ++ newLines
+      // ... except schema records no live line uses any more
+      val liveIds = lines.flatMap(schemaIdOf).toSet
+      val carried = (parseMeta(prevHead)
+        .filter(kv => CarriedMetaPrefixes.exists(kv._1.startsWith)) ++ meta)
+        .filter { case (k, _) => !k.startsWith(SchemaRecordPrefix) ||
+          liveIds(k.stripPrefix(SchemaRecordPrefix)) }
       val stamped = carried +
         (TimestampMetaKey -> System.currentTimeMillis().toString)
       val allTokens = stamped.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
       val headLine = (action +: allTokens :+ nonce).mkString(" ")
-      val body = (headLine +: (baseKeep(base, newLines) ++ newLines))
-        .mkString("", "\n", "\n")
+      val body = (headLine +: lines).mkString("", "\n", "\n")
       val slot = new Path(new Path(p, LogDir), manifestName(next))
       if (claimSlot(fs, slot, body, nonce)) committed = next
       // lost the race: loop re-reads the NEW head, so an append/replace

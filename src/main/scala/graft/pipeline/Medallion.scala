@@ -301,7 +301,7 @@ object Orchestrator {
   /** CLI entry: `runMain graft.pipeline.Orchestrator <lakeRoot>`. */
   def main(args: Array[String]): Unit = {
     val lake = args.headOption.getOrElse(sys.error("usage: Orchestrator <lakeRoot>"))
-    val spark = SparkSession.builder()
+    val spark = graft.util.Sessions.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
       .appName("graft-medallion")
       .config("spark.sql.shuffle.partitions",

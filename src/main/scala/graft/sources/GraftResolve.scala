@@ -44,8 +44,12 @@ private[sources] object GraftResolve {
     // the schema (and partition columns) the manifest itself DECLARES
     // (create / evolveSchema / every partitioned commit) — when present
     // it pins resolution instead of footer inference, which is what
-    // makes empty snapshots and post-evolution reads resolvable
+    // makes empty snapshots and post-evolution reads resolvable.
+    // Failing that, the row schema the manifest RECORDED for the
+    // snapshot's files pins the data columns: footer inference is a
+    // Spark job, left only to snapshots without one shared record
     val declared = TxTable.declaredSchema(spark, path, v)
+    lazy val recorded = TxTable.recordedSchema(spark, path, v)
     val declaredParts = TxTable.declaredPartitionCols(spark, path, v)
     val name = s"graft:$path@$v"
 
@@ -65,7 +69,8 @@ private[sources] object GraftResolve {
         s"$path@$v declares partition columns " +
           s"${declaredParts.get.mkString(",")} but its files are flat")
       val pt = ParquetTable(name, spark, CaseInsensitiveStringMap.empty(),
-        files, userSpecifiedSchema = declared, classOf[ParquetFileFormat])
+        files, userSpecifiedSchema = declared.orElse(recorded),
+        classOf[ParquetFileFormat])
       GraftResolved(name, pt.fileIndex, pt.schema, pt.dataSchema, Nil)
     } else {
       val root = new Path(path)
@@ -105,10 +110,12 @@ private[sources] object GraftResolve {
           .snapshotIndex(spark, absFiles, dirs, colNames)
       }
       // data schema from the declaration when present (footer-written
-      // files may predate an evolution), else from one footer
-      // (partition values live in dir names, never in the files)
+      // files may predate an evolution), else the recorded one, else
+      // from one footer (partition values live in dir names, never in
+      // the files)
       val dataSchema = declared
         .map(s => StructType(s.filterNot(f => colNames.contains(f.name))))
+        .orElse(recorded)
         .getOrElse(spark.read.parquet(files.head).schema)
       GraftResolved(name, idx,
         StructType(dataSchema.fields ++ partSchema.fields), dataSchema,

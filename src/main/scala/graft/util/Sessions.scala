@@ -12,8 +12,17 @@ object Sessions {
   def cpus(fallback: => String): String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", fallback)
 
+  /** The builder every session here starts from — [[local]], the test
+    * session and `Medallion.main`: local file I/O goes through
+    * [[NioLocalFileSystem]], so Hadoop forks no `chmod` or `ls` per
+    * file it creates or lists.
+    */
+  def builder(): SparkSession.Builder =
+    SparkSession.builder()
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+
   def local(nCpus: String): SparkSession = {
-    val spark = SparkSession.builder()
+    val spark = builder()
       .master(s"local[$nCpus]")
       .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")

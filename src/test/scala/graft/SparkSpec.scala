@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.util.Sessions.builder()
       .master("local[4]")
       .appName("graft-tests")
       .withExtensions(new graft.functions.GraftExtensions)
