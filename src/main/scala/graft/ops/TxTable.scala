@@ -2475,10 +2475,18 @@ object TxTable {
     * (Delta's multiple-matches error) because "which source row
     * updates the target" would be nondeterministic.
     *
-    * Scale shape = [[merge]]: rewrite bounded by the source's key
-    * bounds (stats + partition pruning), untouched files carried
-    * verbatim, one atomic replace commit carrying the row-level change
-    * feed (delete / update_preimage / update_postimage / insert).
+    * Scale shape: one grouped aggregate over the source keys yields the
+    * duplicate-key check, emptiness and the key bounds. The rewrite is
+    * bounded by those bounds (stats + partition pruning, as in
+    * [[merge]]); untouched files are carried verbatim. The candidate
+    * files are FULL OUTER JOINed to the source once, and every joined
+    * row is classified once (delete / update / carry / insert, Delta's
+    * MERGE shape). Both writes are single projections of that join:
+    * the new files, and the row-level change feed (delete /
+    * update_preimage / update_postimage / insert, one explode over each
+    * row's images). With the feed on, the join is persisted for the two
+    * writes, so each reads it exactly once. One atomic replace commit
+    * lands both.
     */
   def mergeInto(spark: SparkSession, path: String, source: DataFrame,
                 keyCols: Seq[String],
@@ -2497,7 +2505,9 @@ object TxTable {
                 meta: Map[String, String] = Map.empty,
                 guard: Map[String, Long] = Map.empty,
                 changeFeed: Boolean = true): Long = {
-    import org.apache.spark.sql.functions.{col, lit, max, min, when}
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{array, col, lit, max, min, when}
+    import org.apache.spark.sql.types.StructField
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
     require(updateWhen.isEmpty || updateSet.nonEmpty,
       "updateWhen needs a non-empty updateSet")
@@ -2527,11 +2537,19 @@ object TxTable {
     val pinned = schema.orElse(declaredSchemaOf(headMeta))
     val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
     val s0 = source.localCheckpoint()
-    // duplicate source keys would make "which row wins" arbitrary
-    val dup = s0.groupBy(keyCols.map(col): _*)
-      .count().where(col("count") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"mergeInto source has duplicate key ${dup.headOption}" +
+    // ONE aggregate over the GROUPED source keys yields duplicate-key
+    // detection, emptiness and the key bounds together (as in merge).
+    // Duplicate source keys would make "which row wins" arbitrary; the
+    // offending key is looked up only on the failure path
+    val cnt = graft.util.Cols.fresh(s0, "__cnt")
+    val grouped = s0.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as(cnt))
+    val probeAggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k)))) :+
+      max(col(cnt))
+    val probe = grouped.agg(probeAggs.head, probeAggs.tail: _*).head()
+    val sourceEmpty = probe.isNullAt(probeAggs.size - 1)
+    require(sourceEmpty || probe.getLong(probeAggs.size - 1) == 1,
+      "mergeInto source has duplicate key " +
+      s"${grouped.where(col(cnt) > 1).limit(1).collect().headOption}" +
       " — aggregate the source first (Delta's multiple-matches error)")
     val inserts0 =
       if (!insertUnmatched) s0.where(lit(false))
@@ -2544,7 +2562,7 @@ object TxTable {
         else Map.empty[String, String]), guard = guard)
     // an empty source is NOT a no-op under a by-source clause: every
     // target row is then unmatched and subject to the by-source clauses
-    if (s0.isEmpty && !hasBySource)
+    if (sourceEmpty && !hasBySource)
       return if (meta.isEmpty && guard.isEmpty) vs.last
       else commitLines(spark, path, "append", Seq.empty,
         (base, _) => base, meta + (ChangeDataMetaKey -> "0"),
@@ -2570,18 +2588,15 @@ object TxTable {
     // key-bounds pruning, as in merge (null source keys never match,
     // so they constrain nothing). A by-source clause DISABLES pruning:
     // any file may hold source-unmatched rows, so every file is a
-    // candidate (see scaladoc) — and then the source min/max job is
-    // skipped entirely, not run and discarded
+    // candidate (see scaladoc) and the probe's bounds go unused
     val cs =
       if (hasBySource)
         Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
       else {
-        val aggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k))))
-        val row = s0.agg(aggs.head, aggs.tail: _*).head()
         val boundPreds = keyCols.zipWithIndex.flatMap { case (k, i) =>
-          if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) None
-          else Some(col(k).between(lit(row.get(2 * i)),
-            lit(row.get(2 * i + 1))))
+          if (probe.isNullAt(2 * i) || probe.isNullAt(2 * i + 1)) None
+          else Some(col(k).between(lit(probe.get(2 * i)),
+            lit(probe.get(2 * i + 1))))
         }
         if (boundPreds.isEmpty)
           Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
@@ -2600,116 +2615,135 @@ object TxTable {
       else commitLines(spark, path, "append", Seq.empty,
         (base, _) => base, meta + (ChangeDataMetaKey -> "0"),
         guard = guard)
-    // changeFeed on → the joined candidate scan feeds two jobs (feed
-    // write references it three times, the rewrite once); persist the
-    // scan so each pays a cache read, not a parquet re-scan (ADVICE r7)
-    val existing =
-      if (candidates.isEmpty) null
-      else {
-        val e = scanFiles(spark, p, candidates, headMeta, mergeSchema,
-          pinned)
-        if (changeFeed)
-          e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else e
-      }
+    // no candidate file can hold a match: every passing source row is an
+    // insert and nothing is rewritten
+    if (candidates.isEmpty)
+      return commit(spark, path, inserts0, "replace", (base, _) => base,
+        layout, meta ++ (if (changeFeed)
+          writeChangeData(fs, p,
+            inserts0.withColumn(ChangeTypeCol, lit("insert")))
+        else Map.empty[String, String]), guard = guard)
+    val existing = scanFiles(spark, p, candidates, headMeta, mergeSchema,
+      pinned)
     // the joined frame: target columns by name, source as src_<name>,
     // plus a match marker (null-safe "did a source row join here").
     // Guard the namespace: a target column that already looks like a
     // source reference (or the marker) would make clause expressions
     // silently ambiguous — refuse loudly instead
-    if (existing != null) {
-      val clash = existing.columns.filter(c =>
-        c == "__m" || c.startsWith("src_"))
-      require(clash.isEmpty,
-        s"mergeInto cannot run against target columns named " +
-        s"${clash.mkString(", ")} — the src_ prefix and __m are " +
-        "reserved for clause-expression scoping")
-    }
-    val srcPrefixed = s0.toDF(s0.columns.map(c => s"src_$c"): _*)
+    val clash = existing.columns.filter(c =>
+      c == "__m" || c.startsWith("src_"))
+    require(clash.isEmpty,
+      s"mergeInto cannot run against target columns named " +
+      s"${clash.mkString(", ")} — the src_ prefix and __m are " +
+      "reserved for clause-expression scoping")
+    // ONE full outer join classifies every row once: target rows carry
+    // a target marker, source rows the match marker and their insert
+    // flag (insertWhen over the source's own columns). Both writes are
+    // single projections of it; with the change feed on, two writes
+    // read it, so it is persisted and the second pays a cache read
+    val tMark = graft.util.Cols.fresh(existing, "__t")
+    val iFlag = graft.util.Cols.fresh(existing.columns ++ s0.columns, "__i")
+    val tgt = existing.withColumn(tMark, lit(true))
+    val srcFlagged = s0.withColumn(iFlag,
+      if (!insertUnmatched) lit(false)
+      else coalesce(insertWhen.getOrElse(lit(true)), lit(false)))
+      .toDF(s0.columns.map(c => s"src_$c") :+ iFlag: _*)
       .withColumn("__m", lit(true))
-    def joined = existing.join(srcPrefixed,
-      keyCols.map(k => existing(k) === col(s"src_$k")).reduce(_ && _),
-      "left")
-    val matched = coalesce(col("__m"), lit(false))
+    val joined = tgt.join(srcFlagged,
+      keyCols.map(k => tgt(k) === col(s"src_$k")).reduce(_ && _),
+      "full_outer")
+    val isTarget = col(tMark).isNotNull
+    val matched = isTarget && coalesce(col("__m"), lit(false))
     val delCond = matched &&
       coalesce(deleteWhen.getOrElse(lit(false)), lit(false))
     // by-source clauses: target rows with NO source match; conditions
     // and SET values see the target row alone (source columns are all
     // null here). Delete evaluated first, mirroring the matched side.
-    val bySrcDel = !matched &&
+    val bySrcDel = isTarget && !matched &&
       coalesce(deleteBySourceWhen.getOrElse(lit(false)), lit(false))
     val updCond = matched && !delCond &&
       coalesce(updWhen.getOrElse(lit(false)), lit(false))
-    val bySrcUpdCond = !matched && !bySrcDel &&
+    val bySrcUpdCond = isTarget && !matched && !bySrcDel &&
       coalesce(updBySrcWhen.getOrElse(lit(false)), lit(false))
-    def applyClauses(j: DataFrame): DataFrame =
-      j.where(!delCond && !bySrcDel).select(existing.columns.map { name =>
-        // matched-update and by-source-update branches are mutually
-        // exclusive (matched vs not); CaseWhen evaluates only the
-        // taken branch, so a matched SET referencing src_ columns is
-        // never evaluated over a source-absent row
-        val branches =
-          updateSet.get(name).filter(_ => updWhen.isDefined)
-            .map(e => (updCond, e)).toSeq ++
-          updateBySourceSet.get(name).filter(_ => updBySrcWhen.isDefined)
-            .map(e => (bySrcUpdCond, e))
-        branches match {
-          case Seq() => col(name)
-          case (c1, e1) +: rest =>
-            rest.foldLeft(when(c1, e1)) { case (acc, (c2, e2)) =>
-              acc.when(c2, e2)
-            }.otherwise(col(name)).as(name)
-        }
-      }.toIndexedSeq: _*)
-    val existingKeys =
-      if (candidates.isEmpty) null
-      else existing.select(keyCols.map(col): _*).distinct()
-        .toDF(keyCols.map(k => s"__e_$k"): _*)
-    def unmatchedInserts: DataFrame =
-      if (candidates.isEmpty) inserts0
-      else inserts0.join(existingKeys,
-        keyCols.map(k => inserts0(k) === col(s"__e_$k")).reduce(_ && _),
-        "left_anti")
-    val newData =
-      if (candidates.isEmpty) inserts0
-      else {
-        val base = applyClauses(joined)
-        if (!insertUnmatched) base
-        else base.unionByName(unmatchedInserts,
-          allowMissingColumns = mergeSchema)
+    val removed = delCond || bySrcDel
+    val updated = updCond || bySrcUpdCond
+    val inserted = !isTarget && col(iFlag)
+    // a target column after the clauses: matched-update and
+    // by-source-update branches are mutually exclusive (matched vs
+    // not); CaseWhen evaluates only the taken branch, so a matched SET
+    // referencing src_ columns is never evaluated over a source-absent
+    // row
+    def afterClauses(name: String): Column = {
+      val branches =
+        updateSet.get(name).filter(_ => updWhen.isDefined)
+          .map(e => (updCond, e)).toSeq ++
+        updateBySourceSet.get(name).filter(_ => updBySrcWhen.isDefined)
+          .map(e => (bySrcUpdCond, e))
+      branches match {
+        case Seq() => col(name)
+        case (c1, e1) +: rest =>
+          rest.foldLeft(when(c1, e1)) { case (acc, (c2, e2)) =>
+            acc.when(c2, e2)
+          }.otherwise(col(name))
       }
-    val cdfMeta =
-      if (!changeFeed) Map.empty[String, String]
-      else {
-        val changes =
-          if (candidates.isEmpty)
-            inserts0.withColumn(ChangeTypeCol, lit("insert"))
-          else {
-            val tgtCols = existing.columns.toIndexedSeq.map(col)
-            val deleted = joined.where(delCond || bySrcDel)
-              .select(tgtCols: _*)
-              .withColumn(ChangeTypeCol, lit("delete"))
-            val pre = joined.where(updCond || bySrcUpdCond)
-              .select(tgtCols: _*)
-              .withColumn(ChangeTypeCol, lit("update_preimage"))
-            val post = applyClauses(joined.where(updCond || bySrcUpdCond))
-              .withColumn(ChangeTypeCol, lit("update_postimage"))
-            val core = deleted
-              .unionByName(pre, allowMissingColumns = mergeSchema)
-              .unionByName(post, allowMissingColumns = mergeSchema)
-            if (!insertUnmatched) core
-            else core.unionByName(unmatchedInserts
-              .withColumn(ChangeTypeCol, lit("insert")),
-              allowMissingColumns = mergeSchema)
-          }
-        writeChangeData(fs, p, changes)
-      }
+    }
+    // Output shapes come from unionByName over unexecuted frames of the
+    // target, clause-applied and source sides: the same column order,
+    // widened types and errors as unioning the branches themselves.
+    // Each output column is then taken from its side by name (matched
+    // as unionByName matches) and cast to the shape's type
+    val tgtCols = existing.columns.toIndexedSeq
+    def union(a: DataFrame, b: DataFrame): DataFrame =
+      a.unionByName(b, allowMissingColumns = mergeSchema)
+    def withInserts(df: DataFrame, srcSide: DataFrame): DataFrame =
+      if (insertUnmatched) union(df, srcSide) else df
+    val post = joined.select(tgtCols.map(c => afterClauses(c).as(c)): _*)
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    type Side = StructField => Column
+    def side(names: Seq[String], expr: String => Column): Side = f =>
+      names.find(n => if (caseSensitive) n == f.name
+        else n.equalsIgnoreCase(f.name))
+        .map(expr).getOrElse(lit(null)).cast(f.dataType)
+    val preImage = side(tgtCols, col)
+    val postImage = side(tgtCols, afterClauses)
+    val srcImage = side(s0.columns.toSeq, c => col(s"src_$c"))
+    val newData = {
+      val shape = withInserts(post, s0).schema
+      joined.where((isTarget && !removed) || inserted)
+        .select(shape.fields.toIndexedSeq.map(f =>
+          (if (insertUnmatched) when(isTarget, postImage(f))
+            .otherwise(srcImage(f))
+          else postImage(f)).as(f.name)): _*)
+    }
+    // the change feed: one explode over each row's conditional images
+    // (delete, update pre + post, insert) in the feed's union shape
+    val changes = if (!changeFeed) None else Some {
+      def tagged(df: DataFrame) = df.withColumn(ChangeTypeCol, lit(""))
+      val shape =
+        withInserts(union(tagged(existing), tagged(post)), tagged(s0)).schema
+      def image(cond: Column, img: Side, tag: String) =
+        when(cond, struct(shape.fields.toIndexedSeq.map(f =>
+          (if (f.name == ChangeTypeCol) lit(tag) else img(f))
+            .as(f.name)): _*))
+      val images = Seq(image(removed, preImage, "delete"),
+        image(updated, preImage, "update_preimage"),
+        image(updated, postImage, "update_postimage")) ++
+        (if (insertUnmatched) Seq(image(inserted, srcImage, "insert"))
+        else Nil)
+      joined.select(explode(array(images: _*)).as("image"))
+        .where(col("image").isNotNull).select("image.*")
+    }
+    // persisted only now, so a shape error above leaves nothing cached;
+    // both writes still read the cache, which Spark substitutes into a
+    // plan when it executes
+    if (changeFeed)
+      joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try commit(spark, path, newData, "replace",
       (base, _) => base.filterNot(l => candidatePaths.contains(pathOf(l))),
-      layout, meta ++ cdfMeta, requirePresent = candidatePaths,
-      guard = guard)
-    finally if (changeFeed && existing != null)
-      existing.unpersist(blocking = false)
+      layout, meta ++ changes.fold(Map.empty[String, String])(
+        writeChangeData(fs, p, _)),
+      requirePresent = candidatePaths, guard = guard)
+    finally if (changeFeed) joined.unpersist(blocking = false)
   }
 
   /** Apply a keyed CHANGE SET — upserts plus deletes — as ONE atomic

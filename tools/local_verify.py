@@ -3,17 +3,24 @@
 part of the Scala library): run graft.Verify at a given sf, execute each
 oracle SQL in DuckDB over the same parquet tables, and compare
 rows/schema/values strictly (rows sorted by all columns; exact value
-equality, including doubles)."""
+equality, including doubles).
+
+SPARK_GRAFT_ONLY=q_a,q_b (read by graft.Verify too) selects a subset: only
+the selected queries are dumped, compared and counted, and a selected query
+with no output fails. Unset, every query is."""
 import json, math, subprocess, sys, glob, os
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 RUN_SPARK = os.environ.get("SKIP_SPARK", "") != "1"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ONLY = {q.strip() for q in os.environ.get("SPARK_GRAFT_ONLY", "").split(",")
+        if q.strip()} or None
 
 if RUN_SPARK:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}'],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=REPO)
     sys.stdout.write("\n".join(r.stdout.splitlines()[-3:]) + "\n")
     if r.returncode != 0:
         print(r.stdout[-3000:]); print(r.stderr[-2000:]); sys.exit(1)
@@ -26,7 +33,11 @@ for p in glob.glob(f"{SF_DIR}/*.parquet"):
 
 oracle = json.load(open(f"{OUT}/oracle_sql.json"))
 results = {}
-for name in sorted(oracle):
+# a selected query that is not oracled still fails without output
+for name in sorted((ONLY or set()) - set(oracle)):
+    if not glob.glob(f"{OUT}/{name}/*.parquet"):
+        results[name] = {"status": "NO_SPARK_OUTPUT"}
+for name in sorted(n for n in oracle if ONLY is None or n in ONLY):
     res_dir = f"{OUT}/{name}"
     parts = glob.glob(f"{res_dir}/*.parquet")
     if not parts:
@@ -108,7 +119,8 @@ for name, e in results.items():
 # rows-only queries (no oracle): report row counts
 for d in sorted(glob.glob(f"{OUT}/q_*")):
     name = os.path.basename(d)
-    if name not in oracle and os.path.isdir(d):
+    if (name not in oracle and os.path.isdir(d)
+            and (ONLY is None or name in ONLY)):
         try:
             n = con.execute(f"SELECT count(*) FROM '{d}/*.parquet'").fetchone()[0]
             print(f"[ROWS-ONLY] {name} rows={n}")
