@@ -106,7 +106,7 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- queries
 
-  // lazy val, not def: Bench/ExplainAudit index this per query name —
+  // lazy val, not def: Bench and perfbench index this per query name —
   // a def would rebuild the whole 64-entry map (and its closures)
   // inside Bench's timed window on every lookup
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

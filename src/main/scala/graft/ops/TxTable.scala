@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{abs, coalesce, col, collect_set, count, explode, expr, from_json, input_file_name, lit, not, pmod, sequence, struct, sum, to_json, when, xxhash64}
 import org.apache.spark.sql.types.StructType
 
@@ -2232,35 +2232,30 @@ object TxTable {
       guard = guard, allowZeroParts = survivorsExist))
   }
 
-  /** Keyed MERGE (upsert), copy-on-write: rows of `updates` replace
-    * existing rows with equal key tuples and insert otherwise —
-    * `whenMatched update-all / whenNotMatched insert-all`, the Delta
-    * MERGE fast path. Null keys never match (SQL equality): null-key
-    * update rows insert, null-key existing rows survive.
+  /** Keyed MERGE (upsert), copy-on-write: each row of `updates`
+    * replaces the existing rows with an equal key tuple and is inserted
+    * otherwise — `WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *`,
+    * the Delta MERGE fast path, run by [[keyedRewrite]] (see there for
+    * the scale shape). A replaced row's post-image is the whole update
+    * row: under `mergeSchema` the update's extra columns land, and a
+    * replaced row's target-only columns become null. A key that several
+    * existing rows hold replaces each of them (one image pair per
+    * existing row, as in [[mergeInto]]).
     *
-    * The rewrite set is bounded the same way as [[delete]]: a file can
-    * hold a matching row only if EVERY key column's [min,max] window
-    * intersects the updates' observed bounds (one small agg over the
-    * update side), so a merge touching one day's keys rewrites one
-    * day's files, not the table. Untouched files carry over verbatim,
-    * matched candidates are anti-joined against the update keys and
-    * re-written together with the updates in one atomic "replace"
-    * commit. Update schema must match the table's (modulo
-    * `mergeSchema` widening).
+    * Null keys never match (SQL equality): null-key update rows insert,
+    * null-key existing rows survive. `nullSafeKeys = true` matches with
+    * `<=>` instead, so existing null-key rows ARE replaced by null-key
+    * update rows — what an aggregate-view maintainer needs (a null group
+    * is a group).
     *
-    * `updates` is MATERIALIZED once (localCheckpoint) before use: its
-    * plan is consumed three times (bounds agg, anti-join, union), and a
-    * nondeterministic source re-evaluated per pass could yield keys
-    * outside the observed bounds — leaving matched old rows alive in
-    * pruned files. An empty update set is a no-op (no commit): without
-    * observable bounds every file would be a rewrite candidate, and
-    * "merge nothing" must not rewrite the table.
-    *
-    * `nullSafeKeys = true` switches key matching to null-safe equality
-    * (`<=>`): existing null-key rows ARE replaced by null-key update
-    * rows — what an aggregate-view maintainer needs (a null group is a
-    * group). Since stats say nothing about null presence, any null key
-    * in `updates` then disables file pruning for safety.
+    * Duplicate update keys are rejected: they would land several rows
+    * per key in a table whose contract is one row per key. A caller
+    * whose updates are key-unique by construction (a groupBy's output,
+    * a topOnePerGroup winner set) passes `checkUniqueKeys = false` and
+    * skips the grouped probe's exchange, which matters on
+    * merge-per-microbatch hot paths. An empty update set rewrites
+    * nothing; a non-empty `meta` or `guard` still commits, metadata
+    * only, so an incremental consumer's offset advances.
     */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
             keyCols: Seq[String],
@@ -2271,162 +2266,11 @@ object TxTable {
             nullSafeKeys: Boolean = false,
             guard: Map[String, Long] = Map.empty,
             changeFeed: Boolean = true,
-            checkUniqueKeys: Boolean = true): Long = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val (headLine, lines) = readManifest(fs, p, vs.last)
-    val headMeta = parseMeta(headLine)
-    val pinned = schema.orElse(declaredSchemaOf(headMeta))
-    val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
-    val u = updates.localCheckpoint()
-    // key bounds + null-key flags layout shared by both probe shapes
-    val boundAggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k)))) ++
-      keyCols.map(k => max(col(k).isNull.cast("int")))
-    // With checkUniqueKeys (the default): ONE aggregate over the
-    // GROUPED update keys yields duplicate-key detection, emptiness,
-    // key bounds, and null-key flags together — duplicate update keys
-    // would land several rows per key in a table whose whole contract
-    // is one-row-per-key convergence, so reject like mergeInto does
-    // instead of silently corrupting the keyed table. A caller whose
-    // updates are key-unique BY CONSTRUCTION (a groupBy's output, a
-    // topOnePerGroup winner set) passes false and keeps the cheaper
-    // map-side global agg — the grouped probe pays one extra exchange,
-    // which matters on merge-per-microbatch hot paths.
-    val (uIsEmpty, row) =
-      if (checkUniqueKeys) {
-        val cnt = graft.util.Cols.fresh(u, "__cnt")
-        val g = u.groupBy(keyCols.map(col): _*)
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as(cnt))
-        val aggs = boundAggs ++
-          Seq(max(col(cnt)), org.apache.spark.sql.functions.sum(col(cnt)))
-        val r = g.agg(aggs.head, aggs.tail: _*).head()
-        val empty = r.isNullAt(aggs.size - 1)
-        // the offending key is looked up only on the failure path
-        if (!empty && r.getLong(aggs.size - 2) > 1) {
-          val dupKey = g.where(col(cnt) > 1).limit(1).collect()
-          throw new IllegalArgumentException(
-            s"merge updates have duplicate key ${dupKey.headOption}" +
-            " — aggregate the updates first (or pass latestBy in the" +
-            " streaming sink) so exactly one row per key remains")
-        }
-        (empty, r)
-      } else if (u.isEmpty) (true, null)
-      else (false, u.agg(boundAggs.head, boundAggs.tail: _*).head())
-    if (lines.isEmpty) {
-      // merge into an empty table: every update row is an insert
-      val cdfMeta =
-        if (changeFeed) writeChangeData(fs, p,
-          u.withColumn(ChangeTypeCol, lit("insert")))
-        else Map.empty[String, String]
-      return commit(spark, path, u, "replace", (_, _) => Seq.empty,
-        layout, meta ++ cdfMeta, guard = guard)
-    }
-    if (uIsEmpty)
-      // nothing to rewrite, but meta (e.g. a consumer offset) must
-      // still land durably: a metadata-only commit — silently dropping
-      // it would stall incremental consumers on empty increments. A
-      // guard must be evaluated through the claim loop too, never
-      // skipped: a guard-only caller is asking "did a concurrent
-      // committer beat me", and a silent return would answer wrongly
-      return if (meta.isEmpty && guard.isEmpty) vs.last
-      else commitLines(spark, path, "append", Seq.empty,
-        (base, _) => base, meta + (ChangeDataMetaKey -> "0"),
-        guard = guard)
-
-    // observed key bounds on the update side (from the same grouped
-    // row); a null bound (all-null keys) disables pruning for that
-    // column — conservative. Under null-safe matching a null key may
-    // match rows in ANY file, so pruning is disabled entirely when one
-    // is present.
-    val anyNullKey =
-      keyCols.indices.exists(i => row.getInt(2 * keyCols.size + i) == 1)
-    val boundPreds = keyCols.zipWithIndex.flatMap { case (k, i) =>
-      if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) None
-      else Some(col(k).between(lit(row.get(2 * i)), lit(row.get(2 * i + 1))))
-    }
-    val cs =
-      if (boundPreds.isEmpty)
-        Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
-      else resolveConjuncts(spark, p, lines, headMeta,
-        boundPreds.reduce(_ && _), mergeSchema, pinned)
-    // under null-safe matching a null update key may match rows in ANY
-    // file whose key columns may hold nulls — but a file whose
-    // null-count stats PROVE zero null keys can only match through the
-    // non-null bounds, so it still prunes (pre-null-count manifests
-    // have no counts and conservatively stay candidates)
-    def mayHoldNullKey(st: Map[String, ColStats]): Boolean =
-      keyCols.exists(k => st.get(k).flatMap(_.nulls).forall(_ > 0))
-    val (candidates, _) = lines.partition { l =>
-      lazy val st = statsOf(l) ++ partitionStats(pathOf(l))
-      (cs.isEmpty || cs.forall(mayMatch(st, _))) ||
-        (nullSafeKeys && anyNullKey && mayHoldNullKey(st))
-    }
-    // see rewriteMatching: drop exactly the rewritten files, so a racing
-    // append between analysis and claim is never lost
-    val candidatePaths = candidates.map(pathOf).toSet
-    // change feed: matched existing rows are update_preimage, their
-    // replacing update rows update_postimage, unmatched updates insert.
-    // Null keys never match under plain equality (null-key updates land
-    // as inserts, null-key existing rows untouched) — the semi/anti
-    // joins below reproduce exactly that, and the null-safe variant
-    // flips to <=> consistently with the rewrite.
-    // with the change feed on, the candidate-file scan feeds TWO jobs
-    // (feed write, then the rewrite) — persist it so the second pays a
-    // cache read, not a parquet re-scan + re-decode (ADVICE r7)
-    val existing: DataFrame =
-      if (candidates.isEmpty) null
-      else {
-        val e = scanFiles(spark, p, candidates, headMeta, mergeSchema,
-          pinned)
-        if (changeFeed)
-          e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else e
-      }
-    try {
-      lazy val changes: DataFrame =
-        if (candidates.isEmpty) u.withColumn(ChangeTypeCol, lit("insert"))
-        else {
-          val keys = u.select(keyCols.map(col): _*).distinct()
-          val existingKeys =
-            existing.select(keyCols.map(col): _*).distinct()
-          def keyJoin(l: DataFrame, r: DataFrame, how: String): DataFrame =
-            if (!nullSafeKeys) l.join(r.toDF(keyCols.map(k => s"__k_$k"): _*),
-              keyCols.map(k => l(k) === col(s"__k_$k")).reduce(_ && _), how)
-            else l.join(r.toDF(keyCols.map(k => s"__k_$k"): _*),
-              keyCols.map(k => l(k) <=> col(s"__k_$k")).reduce(_ && _), how)
-          keyJoin(existing, keys, "left_semi")
-            .withColumn(ChangeTypeCol, lit("update_preimage"))
-            .unionByName(keyJoin(u, existingKeys, "left_semi")
-              .withColumn(ChangeTypeCol, lit("update_postimage")),
-              allowMissingColumns = mergeSchema)
-            .unionByName(keyJoin(u, existingKeys, "left_anti")
-              .withColumn(ChangeTypeCol, lit("insert")),
-              allowMissingColumns = mergeSchema)
-        }
-      val cdfMeta =
-        if (changeFeed) writeChangeData(fs, p, changes)
-        else Map.empty[String, String]
-      val newData =
-        if (candidates.isEmpty) u
-        else {
-          val keys = u.select(keyCols.map(col): _*).distinct()
-          val joined =
-            if (!nullSafeKeys) existing.join(keys, keyCols, "left_anti")
-            else existing.join(keys.toDF(keyCols.map(k => s"__u_$k"): _*),
-              keyCols.map(k => existing(k) <=> col(s"__u_$k")).reduce(_ && _),
-              "left_anti")
-          joined.unionByName(u, allowMissingColumns = mergeSchema)
-        }
-      commit(spark, path, newData, "replace",
-        (base, _) => base.filterNot(l => candidatePaths.contains(pathOf(l))),
-        layout, meta ++ cdfMeta, requirePresent = candidatePaths,
-        guard = guard)
-    } finally if (changeFeed && existing != null)
-      existing.unpersist(blocking = false)
-  }
+            checkUniqueKeys: Boolean = true): Long =
+    keyedRewrite(spark, path, "merge", updates, keyCols,
+      KeyedClauses(upsert = true), partitionCols, mergeSchema, schema,
+      meta, guard, changeFeed, nullSafeKeys = nullSafeKeys,
+      checkUniqueKeys = checkUniqueKeys)
 
   /** Source-column reference for [[mergeInto]] clause expressions: the
     * joined row exposes target columns under their own names and
@@ -2467,26 +2311,15 @@ object TxTable {
     *    merges belong in replication jobs, not hot upsert paths.
     *
     * Conditions evaluate over the target row joined with its matching
-    * source row (source columns prefixed `src_` — no collisions by
-    * construction). NULL conditions are false (SQL WHERE semantics);
+    * source row (source columns prefixed `src_` — a target column named
+    * `src_*` or `__m` is refused, since it would make clause expressions
+    * ambiguous). NULL conditions are false (SQL WHERE semantics);
     * null keys never match (plain equality), so null-key source rows
     * can only INSERT. Each source key should match at most one clause
     * application per target row; duplicate source keys are rejected
     * (Delta's multiple-matches error) because "which source row
-    * updates the target" would be nondeterministic.
-    *
-    * Scale shape: one grouped aggregate over the source keys yields the
-    * duplicate-key check, emptiness and the key bounds. The rewrite is
-    * bounded by those bounds (stats + partition pruning, as in
-    * [[merge]]); untouched files are carried verbatim. The candidate
-    * files are FULL OUTER JOINed to the source once, and every joined
-    * row is classified once (delete / update / carry / insert, Delta's
-    * MERGE shape). Both writes are single projections of that join:
-    * the new files, and the row-level change feed (delete /
-    * update_preimage / update_postimage / insert, one explode over each
-    * row's images). With the feed on, the join is persisted for the two
-    * writes, so each reads it exactly once. One atomic replace commit
-    * lands both.
+    * updates the target" would be nondeterministic. Runs on
+    * [[keyedRewrite]] (see there for the scale shape).
     */
   def mergeInto(spark: SparkSession, path: String, source: DataFrame,
                 keyCols: Seq[String],
@@ -2505,30 +2338,145 @@ object TxTable {
                 meta: Map[String, String] = Map.empty,
                 guard: Map[String, Long] = Map.empty,
                 changeFeed: Boolean = true): Long = {
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions.{array, col, lit, max, min, when}
-    import org.apache.spark.sql.types.StructField
-    require(keyCols.nonEmpty, "mergeInto needs at least one key column")
     require(updateWhen.isEmpty || updateSet.nonEmpty,
       "updateWhen needs a non-empty updateSet")
-    // Delta's `WHEN MATCHED THEN UPDATE` with no AND-condition is an
-    // UNCONDITIONAL update — an updateSet without updateWhen means
-    // lit(true), never a silently ignored clause
-    val updWhen =
-      if (updateWhen.isEmpty && updateSet.nonEmpty) Some(lit(true))
-      else updateWhen
     require(updateBySourceWhen.isEmpty || updateBySourceSet.nonEmpty,
       "updateBySourceWhen needs a non-empty updateBySourceSet")
-    val updBySrcWhen =
-      if (updateBySourceWhen.isEmpty && updateBySourceSet.nonEmpty)
-        Some(lit(true))
-      else updateBySourceWhen
-    // any by-source clause disables key-bounds pruning and the
-    // empty-source fast path below
-    val hasBySource = deleteBySourceWhen.nonEmpty || updBySrcWhen.nonEmpty
-    require(updWhen.nonEmpty || deleteWhen.nonEmpty || insertUnmatched ||
-        hasBySource,
+    // Delta's `WHEN MATCHED THEN UPDATE` with no AND-condition is an
+    // UNCONDITIONAL update — a SET without its condition means
+    // lit(true), never a silently ignored clause
+    def orTrue(when: Option[Column], set: Map[String, Column]) =
+      if (when.isEmpty && set.nonEmpty) Some(lit(true)) else when
+    val c = KeyedClauses(updateWhen = orTrue(updateWhen, updateSet),
+      updateSet = updateSet, deleteWhen = deleteWhen,
+      insertWhen = insertWhen, insertUnmatched = insertUnmatched,
+      deleteBySourceWhen = deleteBySourceWhen,
+      updateBySourceWhen = orTrue(updateBySourceWhen, updateBySourceSet),
+      updateBySourceSet = updateBySourceSet)
+    require(c.updateWhen.nonEmpty || deleteWhen.nonEmpty || insertUnmatched ||
+        c.bySource,
       "mergeInto with no clauses would be a no-op — give it one")
+    keyedRewrite(spark, path, "mergeInto", source, keyCols, c,
+      partitionCols, mergeSchema, schema, meta, guard, changeFeed)
+  }
+
+  /** Apply a keyed CHANGE SET — upserts plus deletes — as ONE atomic
+    * commit: rows of `upserts` replace existing rows with equal key
+    * tuples (insert otherwise, exactly [[merge]]: duplicate upsert keys
+    * are rejected), and existing rows whose keys appear in `deleteKeys` are
+    * removed — all in the same copy-on-write replace version, so a
+    * crash can never land the upserts without the deletes. This is the
+    * APPLY side of the change feed: a follower that reduced
+    * [[readChanges]] output to final per-key actions materializes them
+    * here with one commit per consumed increment
+    * ([[graft.streaming.TxFollower.processChanges]]).
+    *
+    * The change set goes to [[keyedRewrite]] as one source: the
+    * upserts, plus the delete keys no upsert names, flagged as deletes
+    * (a flagged row deletes its match and never inserts). So a key that
+    * is both upserted and deleted is upserted, in the data and in the
+    * commit's own change feed — the feed never claims a delete for a
+    * key the data kept, or a downstream replica diverges. The data
+    * keeps the upserts' column types, however wide the delete keys'
+    * are. Null keys never match under the default SQL equality
+    * (null-key upserts insert, null-key deletes are no-ops);
+    * `nullSafeKeys = true` makes a null key a real key, as in [[merge]].
+    * An empty change set commits metadata only (offset advance),
+    * honoring `guard` — same contract as [[merge]]'s empty-update path.
+    */
+  def applyChanges(spark: SparkSession, path: String, upserts: DataFrame,
+                   deleteKeys: DataFrame, keyCols: Seq[String],
+                   partitionCols: Seq[String] = Nil,
+                   mergeSchema: Boolean = false,
+                   schema: Option[StructType] = None,
+                   meta: Map[String, String] = Map.empty,
+                   guard: Map[String, Long] = Map.empty,
+                   changeFeed: Boolean = true,
+                   nullSafeKeys: Boolean = false): Long = {
+    require(keyCols.nonEmpty, "applyChanges needs at least one key column")
+    val upsertKeys = upserts.select(keyCols.map(col): _*)
+      .toDF(keyCols.map(k => s"__u_$k"): _*)
+    val dk = deleteKeys.select(keyCols.map(col): _*).distinct()
+    val deletes = dk.join(upsertKeys, keyCols.map(k =>
+        if (nullSafeKeys) dk(k) <=> col(s"__u_$k")
+        else dk(k) === col(s"__u_$k")).reduce(_ && _), "left_anti")
+    // under SQL equality a null delete key matches nothing; dropping it
+    // keeps it from posing as a duplicate of a null-key upsert
+    val matchable =
+      if (nullSafeKeys) deletes
+      else deletes.where(keyCols.map(col(_).isNotNull).reduce(_ && _))
+    val flag = graft.util.Cols.fresh(upserts, "__del")
+    keyedRewrite(spark, path, "applyChanges",
+      upserts.unionByName(matchable.withColumn(flag, lit(true)),
+        allowMissingColumns = true),
+      keyCols, KeyedClauses(upsert = true, insertWhen = Some(col(flag).isNull)),
+      partitionCols, mergeSchema, schema, meta, guard, changeFeed,
+      dataCols = Some(upserts), nullSafeKeys = nullSafeKeys)
+  }
+
+  /** The clauses of one [[keyedRewrite]], as [[mergeInto]] names them;
+    * a SET's condition is already defaulted to `lit(true)`. `upsert` is
+    * the shape of [[merge]] and [[applyChanges]]: a matched row becomes
+    * its source row when that row passes `insertWhen`, and is deleted
+    * otherwise; the other clauses are unused.
+    */
+  private final case class KeyedClauses(
+      upsert: Boolean = false,
+      updateWhen: Option[Column] = None,
+      updateSet: Map[String, Column] = Map.empty,
+      deleteWhen: Option[Column] = None,
+      insertWhen: Option[Column] = None,
+      insertUnmatched: Boolean = true,
+      deleteBySourceWhen: Option[Column] = None,
+      updateBySourceWhen: Option[Column] = None,
+      updateBySourceSet: Map[String, Column] = Map.empty) {
+    def bySource: Boolean =
+      deleteBySourceWhen.nonEmpty || updateBySourceWhen.nonEmpty
+  }
+
+  /** The one keyed-rewrite pipeline behind [[merge]], [[mergeInto]] and
+    * [[applyChanges]]: join the head snapshot's candidate files with
+    * `source` on `keyCols`, apply `c` to every joined row, and commit
+    * the result as one atomic replace version.
+    *
+    * Scale shape: `source` is pinned once (localCheckpoint), so a
+    * nondeterministic plan is evaluated once. One aggregate over it —
+    * grouped by key under `checkUniqueKeys` — yields the duplicate-key
+    * check, emptiness, the key bounds and the null-key flags. Only files
+    * whose key stats intersect those bounds are rewritten (stats and
+    * partition pruning, as in [[delete]]); under `nullSafeKeys` a null
+    * source key also keeps every file whose null counts do not prove
+    * zero null keys, and a by-source clause keeps every file. Untouched
+    * files carry over verbatim. The candidate files are FULL OUTER
+    * JOINed to the source once (`===`, or `<=>` under `nullSafeKeys`),
+    * and every joined row is classified once (delete / update / carry /
+    * insert, Delta's MERGE shape). Both writes are single projections of
+    * that join: the new files, and the row-level change feed (delete /
+    * update_preimage / update_postimage / insert, one explode over each
+    * row's images). With the feed on, the join is persisted for the two
+    * writes, so each reads it exactly once. One atomic replace commit
+    * lands both.
+    *
+    * `dataCols` gives the source's data columns and their types when
+    * the source carries more ([[applyChanges]]' delete flag and delete
+    * keys); the new files and the feed take their shape from it. `op`
+    * names the caller in error messages.
+    */
+  private def keyedRewrite(spark: SparkSession, path: String, op: String,
+                           source: DataFrame, keyCols: Seq[String],
+                           c: KeyedClauses,
+                           partitionCols: Seq[String],
+                           mergeSchema: Boolean,
+                           schema: Option[StructType],
+                           meta: Map[String, String],
+                           guard: Map[String, Long],
+                           changeFeed: Boolean,
+                           dataCols: Option[DataFrame] = None,
+                           nullSafeKeys: Boolean = false,
+                           checkUniqueKeys: Boolean = true): Long = {
+    import org.apache.spark.sql.functions.{array, max, min}
+    import org.apache.spark.sql.types.StructField
+    require(keyCols.nonEmpty, s"$op needs at least one key column")
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val (fs, p) = fsFor(spark, path)
@@ -2537,60 +2485,76 @@ object TxTable {
     val pinned = schema.orElse(declaredSchemaOf(headMeta))
     val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
     val s0 = source.localCheckpoint()
-    // ONE aggregate over the GROUPED source keys yields duplicate-key
-    // detection, emptiness and the key bounds together (as in merge).
-    // Duplicate source keys would make "which row wins" arbitrary; the
-    // offending key is looked up only on the failure path
+    val data = dataCols.getOrElse(s0)
+    // the probe: one aggregate yields the key bounds, the null-key flags
+    // and emptiness (a null max count) — over the source GROUPED by key
+    // under checkUniqueKeys, where the max count is the duplicate-key
+    // check too; the offending key is looked up only on the failure path
     val cnt = graft.util.Cols.fresh(s0, "__cnt")
-    val grouped = s0.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as(cnt))
-    val probeAggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k)))) :+
-      max(col(cnt))
-    val probe = grouped.agg(probeAggs.head, probeAggs.tail: _*).head()
+    val keys = keyCols.map(col)
+    val counted =
+      if (checkUniqueKeys) s0.groupBy(keys: _*).agg(count(lit(1)).as(cnt))
+      else s0.select(keys :+ lit(1L).as(cnt): _*)
+    val probeAggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k)))) ++
+      keyCols.map(k => max(col(k).isNull.cast("int"))) :+ max(col(cnt))
+    val probe = counted.agg(probeAggs.head, probeAggs.tail: _*).head()
     val sourceEmpty = probe.isNullAt(probeAggs.size - 1)
     require(sourceEmpty || probe.getLong(probeAggs.size - 1) == 1,
-      "mergeInto source has duplicate key " +
-      s"${grouped.where(col(cnt) > 1).limit(1).collect().headOption}" +
-      " — aggregate the source first (Delta's multiple-matches error)")
-    val inserts0 =
-      if (!insertUnmatched) s0.where(lit(false))
-      else insertWhen.fold(s0)(s0.where(_))
-    if (lines.isEmpty)
-      return commit(spark, path, inserts0, "replace", (_, _) => Seq.empty,
-        layout, meta ++ (if (changeFeed)
-          writeChangeData(fs, p,
-            inserts0.withColumn(ChangeTypeCol, lit("insert")))
+      s"$op source has duplicate key " +
+      s"${counted.where(col(cnt) > 1).limit(1).collect().headOption}" +
+      " — aggregate it first so one row per key remains (Delta's" +
+      " multiple-matches error)")
+    // a commit of the inserts alone, in the data columns' shape
+    def insertOnly(baseKeep: (Seq[String], Seq[String]) => Seq[String]) = {
+      val kept =
+        if (!c.insertUnmatched) s0.where(lit(false))
+        else c.insertWhen.fold(s0)(s0.where(_))
+      val inserts = kept.select(data.schema.fields.toIndexedSeq.map(f =>
+        col(f.name).cast(f.dataType).as(f.name)): _*)
+      commit(spark, path, inserts, "replace", baseKeep, layout,
+        meta ++ (if (changeFeed) writeChangeData(fs, p,
+          inserts.withColumn(ChangeTypeCol, lit("insert")))
         else Map.empty[String, String]), guard = guard)
+    }
+    // nothing to rewrite, but meta (e.g. a consumer offset) must still
+    // land durably: a metadata-only commit — silently dropping it would
+    // stall incremental consumers on empty increments. A guard must be
+    // evaluated through the claim loop too, never skipped: a guard-only
+    // caller is asking "did a concurrent committer beat me"
+    def metaOnly(): Long =
+      if (meta.isEmpty && guard.isEmpty) vs.last
+      else commitLines(spark, path, "append", Seq.empty,
+        (base, _) => base, meta + (ChangeDataMetaKey -> "0"), guard = guard)
+    if (lines.isEmpty) return insertOnly((_, _) => Seq.empty)
     // an empty source is NOT a no-op under a by-source clause: every
     // target row is then unmatched and subject to the by-source clauses
-    if (sourceEmpty && !hasBySource)
-      return if (meta.isEmpty && guard.isEmpty) vs.last
-      else commitLines(spark, path, "append", Seq.empty,
-        (base, _) => base, meta + (ChangeDataMetaKey -> "0"),
-        guard = guard)
+    if (sourceEmpty && !c.bySource) return metaOnly()
 
     // SET keys validated against the TARGET's columns up front:
-    // applyClauses projects over existing.columns and silently skips a
+    // afterClauses projects over existing.columns and silently skips a
     // key that matches no target column, so a typo'd SET (through the
-    // SQL surface too) would commit a version that changed nothing
-    // and report success. Checked after the bootstrap path — an empty
-    // table has no target schema to validate against, and its commit
-    // never runs the clauses.
-    val setKeys = updateSet.keySet ++ updateBySourceSet.keySet
+    // SQL surface too) would commit a version that changed nothing and
+    // report success. Checked after the bootstrap path — an empty table
+    // has no target schema to validate against, and its commit never
+    // runs the clauses.
+    val setKeys = c.updateSet.keySet ++ c.updateBySourceSet.keySet
     if (setKeys.nonEmpty) {
       val targetCols = pinned.map(_.fieldNames.toSeq)
         .getOrElse(read(spark, path, mergeSchema).columns.toSeq)
       val unknownSet = setKeys -- targetCols
       require(unknownSet.isEmpty,
-        s"mergeInto SET columns not in the target: " +
-        unknownSet.mkString(", "))
+        s"$op SET columns not in the target: " + unknownSet.mkString(", "))
     }
 
-    // key-bounds pruning, as in merge (null source keys never match,
-    // so they constrain nothing). A by-source clause DISABLES pruning:
-    // any file may hold source-unmatched rows, so every file is a
-    // candidate (see scaladoc) and the probe's bounds go unused
+    // key-bounds pruning; a null bound (all-null keys) constrains
+    // nothing. Under null-safe matching a null source key may match in
+    // any file whose null-count stats do not PROVE zero null keys
+    // (pre-null-count manifests have no counts and stay candidates). A
+    // by-source clause disables pruning: any file may hold
+    // source-unmatched rows, so every file is a candidate. The null-key
+    // flags are null when the source is empty
     val cs =
-      if (hasBySource)
+      if (c.bySource)
         Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
       else {
         val boundPreds = keyCols.zipWithIndex.flatMap { case (k, i) =>
@@ -2603,39 +2567,47 @@ object TxTable {
         else resolveConjuncts(spark, p, lines, headMeta,
           boundPreds.reduce(_ && _), mergeSchema, pinned)
       }
-    val (candidates, _) = lines.partition { l =>
+    val anyNullKey = nullSafeKeys && keyCols.indices.map(2 * keyCols.size + _)
+      .exists(i => !probe.isNullAt(i) && probe.getInt(i) == 1)
+    def mayHoldNullKey(st: Map[String, ColStats]): Boolean =
+      keyCols.exists(k => st.get(k).flatMap(_.nulls).forall(_ > 0))
+    val candidates = lines.filter { l =>
       lazy val st = statsOf(l) ++ partitionStats(pathOf(l))
-      cs.isEmpty || cs.forall(mayMatch(st, _))
+      cs.forall(mayMatch(st, _)) || (anyNullKey && mayHoldNullKey(st))
     }
-    val candidatePaths = candidates.map(pathOf).toSet
-    // nothing can match and inserts are off → the whole statement is a
-    // no-op (meta/guard still honored, like the empty-source path)
-    if (candidates.isEmpty && !insertUnmatched)
-      return if (meta.isEmpty && guard.isEmpty) vs.last
-      else commitLines(spark, path, "append", Seq.empty,
-        (base, _) => base, meta + (ChangeDataMetaKey -> "0"),
-        guard = guard)
     // no candidate file can hold a match: every passing source row is an
-    // insert and nothing is rewritten
+    // insert and nothing is rewritten; with inserts off the statement is
+    // a no-op (meta/guard still honored)
     if (candidates.isEmpty)
-      return commit(spark, path, inserts0, "replace", (base, _) => base,
-        layout, meta ++ (if (changeFeed)
-          writeChangeData(fs, p,
-            inserts0.withColumn(ChangeTypeCol, lit("insert")))
-        else Map.empty[String, String]), guard = guard)
+      return if (c.insertUnmatched) insertOnly((base, _) => base)
+      else metaOnly()
+    // see rewriteMatching: drop exactly the rewritten files, so a racing
+    // append between analysis and claim is never lost
+    val candidatePaths = candidates.map(pathOf).toSet
     val existing = scanFiles(spark, p, candidates, headMeta, mergeSchema,
       pinned)
-    // the joined frame: target columns by name, source as src_<name>,
-    // plus a match marker (null-safe "did a source row join here").
-    // Guard the namespace: a target column that already looks like a
-    // source reference (or the marker) would make clause expressions
-    // silently ambiguous — refuse loudly instead
-    val clash = existing.columns.filter(c =>
-      c == "__m" || c.startsWith("src_"))
-    require(clash.isEmpty,
-      s"mergeInto cannot run against target columns named " +
-      s"${clash.mkString(", ")} — the src_ prefix and __m are " +
-      "reserved for clause-expression scoping")
+    // the joined frame: target columns by name, source columns under a
+    // prefix, plus a match marker (null-safe "did a source row join
+    // here"). mergeInto's clause expressions name source columns
+    // src_<name>, so there a target column that looks like one (or the
+    // marker) would make them silently ambiguous — refuse loudly. The
+    // upsert shape has no clause expressions and takes fresh names, so
+    // any target column name works
+    val (pre, mark) =
+      if (c.upsert) {
+        val taken = (existing.columns ++ s0.columns).toSet
+        val pre = Iterator.from(0).map(i => s"__s${i}_")
+          .find(pr => s0.columns.forall(n => !taken(pr + n))).get
+        (pre, graft.util.Cols.fresh(taken, "__m"))
+      } else {
+        val clash = existing.columns.filter(n =>
+          n == "__m" || n.startsWith("src_"))
+        require(clash.isEmpty,
+          s"mergeInto cannot run against target columns named " +
+          s"${clash.mkString(", ")} — the src_ prefix and __m are " +
+          "reserved for clause-expression scoping")
+        ("src_", "__m")
+      }
     // ONE full outer join classifies every row once: target rows carry
     // a target marker, source rows the match marker and their insert
     // flag (insertWhen over the source's own columns). Both writes are
@@ -2645,26 +2617,30 @@ object TxTable {
     val iFlag = graft.util.Cols.fresh(existing.columns ++ s0.columns, "__i")
     val tgt = existing.withColumn(tMark, lit(true))
     val srcFlagged = s0.withColumn(iFlag,
-      if (!insertUnmatched) lit(false)
-      else coalesce(insertWhen.getOrElse(lit(true)), lit(false)))
-      .toDF(s0.columns.map(c => s"src_$c") :+ iFlag: _*)
-      .withColumn("__m", lit(true))
-    val joined = tgt.join(srcFlagged,
-      keyCols.map(k => tgt(k) === col(s"src_$k")).reduce(_ && _),
+      if (!c.insertUnmatched) lit(false)
+      else coalesce(c.insertWhen.getOrElse(lit(true)), lit(false)))
+      .toDF(s0.columns.map(pre + _) :+ iFlag: _*)
+      .withColumn(mark, lit(true))
+    val joined = tgt.join(srcFlagged, keyCols.map(k =>
+        if (nullSafeKeys) tgt(k) <=> col(pre + k)
+        else tgt(k) === col(pre + k)).reduce(_ && _),
       "full_outer")
+    def holds(cond: Option[Column]): Column =
+      coalesce(cond.getOrElse(lit(false)), lit(false))
     val isTarget = col(tMark).isNotNull
-    val matched = isTarget && coalesce(col("__m"), lit(false))
+    val matched = isTarget && coalesce(col(mark), lit(false))
+    // an upsert replaces a matched row by its source row, or deletes it
+    // when the source row is not kept
     val delCond = matched &&
-      coalesce(deleteWhen.getOrElse(lit(false)), lit(false))
+      (if (c.upsert) !col(iFlag) else holds(c.deleteWhen))
     // by-source clauses: target rows with NO source match; conditions
     // and SET values see the target row alone (source columns are all
     // null here). Delete evaluated first, mirroring the matched side.
-    val bySrcDel = isTarget && !matched &&
-      coalesce(deleteBySourceWhen.getOrElse(lit(false)), lit(false))
+    val bySrcDel = isTarget && !matched && holds(c.deleteBySourceWhen)
     val updCond = matched && !delCond &&
-      coalesce(updWhen.getOrElse(lit(false)), lit(false))
+      (if (c.upsert) lit(true) else holds(c.updateWhen))
     val bySrcUpdCond = isTarget && !matched && !bySrcDel &&
-      coalesce(updBySrcWhen.getOrElse(lit(false)), lit(false))
+      holds(c.updateBySourceWhen)
     val removed = delCond || bySrcDel
     val updated = updCond || bySrcUpdCond
     val inserted = !isTarget && col(iFlag)
@@ -2675,9 +2651,9 @@ object TxTable {
     // row
     def afterClauses(name: String): Column = {
       val branches =
-        updateSet.get(name).filter(_ => updWhen.isDefined)
+        c.updateSet.get(name).filter(_ => c.updateWhen.isDefined)
           .map(e => (updCond, e)).toSeq ++
-        updateBySourceSet.get(name).filter(_ => updBySrcWhen.isDefined)
+        c.updateBySourceSet.get(name).filter(_ => c.updateBySourceWhen.isDefined)
           .map(e => (bySrcUpdCond, e))
       branches match {
         case Seq() => col(name)
@@ -2696,8 +2672,10 @@ object TxTable {
     def union(a: DataFrame, b: DataFrame): DataFrame =
       a.unionByName(b, allowMissingColumns = mergeSchema)
     def withInserts(df: DataFrame, srcSide: DataFrame): DataFrame =
-      if (insertUnmatched) union(df, srcSide) else df
-    val post = joined.select(tgtCols.map(c => afterClauses(c).as(c)): _*)
+      if (c.insertUnmatched) union(df, srcSide) else df
+    val post =
+      if (c.upsert) existing
+      else joined.select(tgtCols.map(n => afterClauses(n).as(n)): _*)
     val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
     type Side = StructField => Column
     def side(names: Seq[String], expr: String => Column): Side = f =>
@@ -2705,13 +2683,15 @@ object TxTable {
         else n.equalsIgnoreCase(f.name))
         .map(expr).getOrElse(lit(null)).cast(f.dataType)
     val preImage = side(tgtCols, col)
-    val postImage = side(tgtCols, afterClauses)
-    val srcImage = side(s0.columns.toSeq, c => col(s"src_$c"))
+    val srcImage = side(data.columns.toSeq, n => col(pre + n))
+    val postImage: Side =
+      if (c.upsert) f => when(updated, srcImage(f)).otherwise(preImage(f))
+      else side(tgtCols, afterClauses)
     val newData = {
-      val shape = withInserts(post, s0).schema
+      val shape = withInserts(post, data).schema
       joined.where((isTarget && !removed) || inserted)
         .select(shape.fields.toIndexedSeq.map(f =>
-          (if (insertUnmatched) when(isTarget, postImage(f))
+          (if (c.insertUnmatched) when(isTarget, postImage(f))
             .otherwise(srcImage(f))
           else postImage(f)).as(f.name)): _*)
     }
@@ -2720,7 +2700,7 @@ object TxTable {
     val changes = if (!changeFeed) None else Some {
       def tagged(df: DataFrame) = df.withColumn(ChangeTypeCol, lit(""))
       val shape =
-        withInserts(union(tagged(existing), tagged(post)), tagged(s0)).schema
+        withInserts(union(tagged(existing), tagged(post)), tagged(data)).schema
       def image(cond: Column, img: Side, tag: String) =
         when(cond, struct(shape.fields.toIndexedSeq.map(f =>
           (if (f.name == ChangeTypeCol) lit(tag) else img(f))
@@ -2728,7 +2708,7 @@ object TxTable {
       val images = Seq(image(removed, preImage, "delete"),
         image(updated, preImage, "update_preimage"),
         image(updated, postImage, "update_postimage")) ++
-        (if (insertUnmatched) Seq(image(inserted, srcImage, "insert"))
+        (if (c.insertUnmatched) Seq(image(inserted, srcImage, "insert"))
         else Nil)
       joined.select(explode(array(images: _*)).as("image"))
         .where(col("image").isNotNull).select("image.*")
@@ -2744,140 +2724,6 @@ object TxTable {
         writeChangeData(fs, p, _)),
       requirePresent = candidatePaths, guard = guard)
     finally if (changeFeed) joined.unpersist(blocking = false)
-  }
-
-  /** Apply a keyed CHANGE SET — upserts plus deletes — as ONE atomic
-    * commit: rows of `upserts` replace existing rows with equal key
-    * tuples (insert otherwise, exactly [[merge]]), and existing rows
-    * whose keys appear in `deleteKeys` are removed — all in the same
-    * copy-on-write replace version, so a crash can never land the
-    * upserts without the deletes. This is the APPLY side of the change
-    * feed: a follower that reduced [[readChanges]] output to final
-    * per-key actions materializes them here with one commit per
-    * consumed increment ([[graft.streaming.TxFollower.processChanges]]).
-    *
-    * The rewrite set is bounded like [[merge]]: only files whose key
-    * stats intersect the observed bounds of the CHANGED keys (upserts
-    * and deletes together) are rewritten; everything else carries over
-    * verbatim. Null keys never match under the default SQL equality
-    * (null-key upserts insert, null-key deletes are no-ops);
-    * `nullSafeKeys = true` switches every key comparison to `<=>` so
-    * a null key is a real key — what an aggregate-view maintainer
-    * needs (a null GROUP is a group) — at the cost of disabling file
-    * pruning when the change set actually carries a null key (stats
-    * say nothing about null presence; same trade as [[merge]]). An
-    * empty change set commits metadata only (offset advance),
-    * honoring `guard` — same contract as [[merge]]'s
-    * empty-update path.
-    */
-  def applyChanges(spark: SparkSession, path: String, upserts: DataFrame,
-                   deleteKeys: DataFrame, keyCols: Seq[String],
-                   partitionCols: Seq[String] = Nil,
-                   mergeSchema: Boolean = false,
-                   schema: Option[StructType] = None,
-                   meta: Map[String, String] = Map.empty,
-                   guard: Map[String, Long] = Map.empty,
-                   changeFeed: Boolean = true,
-                   nullSafeKeys: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    require(keyCols.nonEmpty, "applyChanges needs at least one key column")
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val (headLine, lines) = readManifest(fs, p, vs.last)
-    val headMeta = parseMeta(headLine)
-    val pinned = schema.orElse(declaredSchemaOf(headMeta))
-    val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
-    val u = upserts.localCheckpoint()
-    val dk = deleteKeys.select(keyCols.map(col): _*).distinct()
-      .localCheckpoint()
-    if (lines.isEmpty) {
-      val cdfMeta =
-        if (changeFeed) writeChangeData(fs, p,
-          u.withColumn(ChangeTypeCol, lit("insert")))
-        else Map.empty[String, String]
-      return commit(spark, path, u, "replace", (_, _) => Seq.empty,
-        layout, meta ++ cdfMeta, guard = guard)
-    }
-    if (u.isEmpty && dk.isEmpty)
-      return if (meta.isEmpty && guard.isEmpty) vs.last
-      else commitLines(spark, path, "append", Seq.empty,
-        (base, _) => base, meta + (ChangeDataMetaKey -> "0"),
-        guard = guard)
-    // prune by the union of changed keys: a file can hold an affected
-    // row only if every key column's [min,max] intersects the bounds.
-    // Under null-safe keys an actual null key disables pruning: stats
-    // carry no null-presence information, and a pruned file could hold
-    // the null-key row this change set must replace.
-    val allKeys = u.select(keyCols.map(col): _*).unionByName(dk)
-    val hasNullKey = nullSafeKeys &&
-      !allKeys.where(keyCols.map(k => col(k).isNull).reduce(_ || _)).isEmpty
-    val aggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k))))
-    val row = allKeys.agg(aggs.head, aggs.tail: _*).head()
-    val boundPreds = keyCols.zipWithIndex.flatMap { case (k, i) =>
-      if (row.isNullAt(2 * i) || row.isNullAt(2 * i + 1)) None
-      else Some(col(k).between(lit(row.get(2 * i)), lit(row.get(2 * i + 1))))
-    }
-    val cs =
-      if (boundPreds.isEmpty || hasNullKey)
-        Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
-      else resolveConjuncts(spark, p, lines, headMeta,
-        boundPreds.reduce(_ && _), mergeSchema, pinned)
-    val (candidates, _) = lines.partition { l =>
-      lazy val st = statsOf(l) ++ partitionStats(pathOf(l))
-      cs.isEmpty || cs.forall(mayMatch(st, _))
-    }
-    val candidatePaths = candidates.map(pathOf).toSet
-    // this commit writes its OWN change feed (like merge/delete), so a
-    // replica-of-a-replica consumer sees row-level changes, never the
-    // rewritten files' carried-row churn. Upsert and delete key sets
-    // SHOULD be disjoint (processChanges reduces to one final action
-    // per key); on overlap the upsert wins in the DATA (anti-join then
-    // union), so the delete-side FEED drops overlapping keys — the
-    // feed must never claim a delete for a key the data kept, or a
-    // downstream replica diverges (ADVICE r7).
-    def keyJoin(l: DataFrame, r: DataFrame, how: String): DataFrame =
-      l.join(r.toDF(keyCols.map(k => s"__c_$k"): _*),
-        keyCols.map(k =>
-          if (nullSafeKeys) l(k) <=> col(s"__c_$k")
-          else l(k) === col(s"__c_$k")).reduce(_ && _), how)
-    val (newData, changes, cached) =
-      if (candidates.isEmpty)
-        (u, u.withColumn(ChangeTypeCol, lit("insert")), null: DataFrame)
-      else {
-        val existing = scanFiles(spark, p, candidates, headMeta,
-          mergeSchema, pinned)
-        if (changeFeed)
-          existing.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val uKeys = u.select(keyCols.map(col): _*).distinct()
-        val existingKeys = existing.select(keyCols.map(col): _*).distinct()
-        // one anti-join drops both the upserted and the deleted keys;
-        // the union then re-adds the upserts' new images only
-        val data = keyJoin(existing, allKeys.distinct(), "left_anti")
-          .unionByName(u, allowMissingColumns = mergeSchema)
-        val dkReal = keyJoin(keyJoin(dk, uKeys, "left_anti"),
-          existingKeys, "left_semi")
-        val ch = keyJoin(existing, uKeys, "left_semi")
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(keyJoin(existing, dkReal, "left_semi")
-            .withColumn(ChangeTypeCol, lit("delete")),
-            allowMissingColumns = mergeSchema)
-          .unionByName(keyJoin(u, existingKeys, "left_semi")
-            .withColumn(ChangeTypeCol, lit("update_postimage")),
-            allowMissingColumns = mergeSchema)
-          .unionByName(keyJoin(u, existingKeys, "left_anti")
-            .withColumn(ChangeTypeCol, lit("insert")),
-            allowMissingColumns = mergeSchema)
-        (data, ch, existing)
-      }
-    val cdfMeta =
-      if (changeFeed) writeChangeData(fs, p, changes)
-      else Map.empty[String, String]
-    try commit(spark, path, newData, "replace",
-      (base, _) => base.filterNot(l => candidatePaths.contains(pathOf(l))),
-      layout, meta ++ cdfMeta, requirePresent = candidatePaths,
-      guard = guard)
-    finally if (changeFeed && cached != null) cached.unpersist(blocking = false)
   }
 
   /** `ANALYZE TABLE`: refresh the head manifest's per-file statistics

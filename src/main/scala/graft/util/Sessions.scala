@@ -2,9 +2,9 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** One session-builder for the three harness mains — same master,
-  * shuffle partitions, timezone, and UI setting everywhere, so a plan
-  * audited by ExplainAudit is the plan Bench times and Verify dumps.
+/** One session-builder for the harness mains and perfbench — same
+  * master, shuffle partitions, timezone, and UI setting everywhere, so
+  * the plan Bench and perfbench time is the plan Verify dumps.
   */
 object Sessions {
 

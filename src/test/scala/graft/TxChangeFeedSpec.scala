@@ -281,32 +281,36 @@ class TxChangeFeedSpec extends SparkSpec {
   test("null-safe merge prunes zero-null-key files, rewrites null holders") {
     val s = spark
     import s.implicits._
-    val dir = tmp()
-    // file A: keys 0-9 (no nulls); file B: a null key + 100-109;
-    // file C: keys 200-209 (no nulls, far outside the update bounds)
-    TxTable.append(spark, dir,
-      (0L until 10L).map(i => (Some(i), i)).toDF("k", "v").coalesce(1))
-    TxTable.append(spark, dir,
-      ((100L until 110L).map(i => (Some(i), i)) :+ ((None: Option[Long], -7L)))
-        .toDF("k", "v").coalesce(1))
-    TxTable.append(spark, dir,
-      (200L until 210L).map(i => (Some(i), i)).toDF("k", "v").coalesce(1))
-    val before = TxTable.read(spark, dir).inputFiles.toSet
-    // null-safe merge: one null-key update (the null group is a group)
-    // and one in-bounds update
-    TxTable.merge(spark, dir,
-      Seq((Some(5L), -5L), (None: Option[Long], -1L)).toDF("k", "v"),
-      Seq("k"), nullSafeKeys = true)
-    val after = TxTable.read(spark, dir).inputFiles.toSet
-    // file C can hold neither key 5 nor a null key → carried verbatim
-    assert((before intersect after).size == 1,
-      s"zero-null-key file outside bounds must carry: before=$before after=$after")
-    val got = TxTable.read(spark, dir).collect()
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        r.getLong(1))).toMap
-    assert(got(Some(5L)) == -5L && got(None) == -1L,
-      "null-safe merge replaced both the null group and key 5")
-    assert(got.size == 31, "no duplicates, no lost rows")
+    for (apply <- Seq(false, true)) withClue(s"applyChanges=$apply: ") {
+      val dir = tmp()
+      // file A: keys 0-9 (no nulls); file B: a null key + 100-109;
+      // file C: keys 200-209 (no nulls, far outside the update bounds)
+      TxTable.append(spark, dir,
+        (0L until 10L).map(i => (Some(i), i)).toDF("k", "v").coalesce(1))
+      TxTable.append(spark, dir,
+        ((100L until 110L).map(i => (Some(i), i)) :+ ((None: Option[Long], -7L)))
+          .toDF("k", "v").coalesce(1))
+      TxTable.append(spark, dir,
+        (200L until 210L).map(i => (Some(i), i)).toDF("k", "v").coalesce(1))
+      val before = TxTable.read(spark, dir).inputFiles.toSet
+      // null-safe merge: one null-key update (the null group is a group)
+      // and one in-bounds update
+      val updates =
+        Seq((Some(5L), -5L), (None: Option[Long], -1L)).toDF("k", "v")
+      if (apply) TxTable.applyChanges(spark, dir, updates,
+        Seq(Tuple1(Some(7L))).toDF("k"), Seq("k"), nullSafeKeys = true)
+      else TxTable.merge(spark, dir, updates, Seq("k"), nullSafeKeys = true)
+      val after = TxTable.read(spark, dir).inputFiles.toSet
+      // file C can hold neither key 5 nor a null key → carried verbatim
+      assert((before intersect after).size == 1,
+        s"zero-null-key file outside bounds must carry: before=$before after=$after")
+      val got = TxTable.read(spark, dir).collect()
+        .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
+          r.getLong(1))).toMap
+      assert(got(Some(5L)) == -5L && got(None) == -1L,
+        "null-safe merge replaced both the null group and key 5")
+      assert(got.size == (if (apply) 30 else 31), "no duplicates, no lost rows")
+    }
   }
 
   test("changeFeed=false skips capture; readers fall back to file-granular") {

@@ -335,10 +335,13 @@ class TxMergeIntoSpec extends SparkSpec {
   test("a change-feed merge on a flat table starts at most 9 jobs") {
     val s = spark
     import s.implicits._
-    val dir = tmp()
-    TxTable.append(spark, dir, (1L to 100L).map(i =>
-      (i, if (i % 7 == 0) "closed" else "open", i)).toDF("id", "status", "x")
-      .coalesce(1))
+    def flat(): String = {
+      val dir = tmp()
+      TxTable.append(spark, dir, (1L to 100L).map(i =>
+        (i, if (i % 7 == 0) "closed" else "open", i)).toDF("id", "status", "x")
+        .coalesce(1))
+      dir
+    }
     val source = (95L to 105L).map(i => (i, "new", -i))
       .toDF("id", "status", "x")
     val jobs = new AtomicInteger
@@ -347,18 +350,34 @@ class TxMergeIntoSpec extends SparkSpec {
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-      jobs.set(0)
-      TxTable.mergeInto(spark, dir, source, Seq("id"),
-        updateSet = Map("x" -> TxTable.src("x")),
-        deleteWhen = Some(col("status") === "closed"))
-      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-      // 1 source checkpoint, 3 probe, 4 change write, 1 rewrite
-      assert(jobs.get <= 9, s"mergeInto started ${jobs.get} jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val v = TxTable.versions(spark, dir).last
-    assert(TxTable.readChanges(spark, dir, v - 1, v).count() == 1 + 5 * 2 + 5)
+    /** Jobs `body` starts on `dir`, and the rows of its change feed. */
+    def run(body: String => Long): (Int, Long) = {
+      val dir = flat()
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        jobs.set(0)
+        body(dir)
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val v = TxTable.versions(spark, dir).last
+      (jobs.get, TxTable.readChanges(spark, dir, v - 1, v).count())
+    }
+    // 1 source checkpoint, 3 probe, 4 change write, 1 rewrite
+    val (intoJobs, intoRows) = run(TxTable.mergeInto(spark, _, source,
+      Seq("id"), updateSet = Map("x" -> TxTable.src("x")),
+      deleteWhen = Some(col("status") === "closed")))
+    assert(intoJobs <= 9, s"mergeInto started $intoJobs jobs")
+    assert(intoRows == 1 + 5 * 2 + 5)
+    val (mergeJobs, mergeRows) = run(TxTable.merge(spark, _, source,
+      Seq("id")))
+    assert(mergeJobs <= 9, s"merge started $mergeJobs jobs")
+    assert(mergeRows == 6 * 2 + 5)
+    // the change set's checkpoint also runs the delete keys' anti join
+    val (applyJobs, applyRows) = run(TxTable.applyChanges(spark, _, source,
+      Seq(Tuple1(90L), Tuple1(95L)).toDF("id"), Seq("id")))
+    info(s"jobs: mergeInto $intoJobs, merge $mergeJobs, applyChanges $applyJobs")
+    assert(applyJobs <= 12, s"applyChanges started $applyJobs jobs")
+    assert(applyRows == 1 + 6 * 2 + 5)
   }
 }
