@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -9,12 +10,19 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * The reference resolves named tables through the AWS Glue catalog and
   * converts DynamicFrame→DataFrame (`aws-job-landing-to-bronze/
   * aws-job-landing-to-bronze.py:22-43`). Our engine reads parquet paths
-  * directly into DataFrames — schema-on-read, no catalog round-trip.
+  * directly into DataFrames, no catalog round-trip.
   *
-  * Scale note (100 TB): `spark.read.parquet` on a directory of many files
-  * gives Catalyst full pushdown (PushedFilters / ReadSchema pruning) and
-  * partition pruning when the layout is hive-partitioned. Single-file
-  * test tables here are the degenerate case of the same code path.
+  * Schema: every read is pinned with the schema of the one footer
+  * Spark's inference would pick ([[GraftParquetSchema.of]]), read on
+  * the driver — so building a frame starts no Spark job, where
+  * inference would start one per read.
+  *
+  * Scale note (100 TB): a pinned read of a directory of many files
+  * still gives Catalyst full pushdown (PushedFilters / ReadSchema
+  * pruning) and partition pruning when the layout is hive-partitioned;
+  * the schema costs one footer read, however many files there are.
+  * Single-file test tables here are the degenerate case of the same
+  * code path.
   */
 object Sources {
 
@@ -69,7 +77,15 @@ object Sources {
 
   private def direct(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir) else
-      spark.read.parquet(s"$dir/$name.parquet")
+      pinnedParquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` pinned with the footer schema inference
+    * would find, so no inference job runs.
+    */
+  private[graft] def pinnedParquet(spark: SparkSession, path: String): DataFrame = {
+    val r = spark.read
+    GraftParquetSchema.of(spark, path).fold(r)(r.schema).parquet(path)
+  }
 
   /** The `events` table's `ts` encoding has varied across harness
     * fixture regenerations; normalize every observed encoding to a
@@ -95,16 +111,17 @@ object Sources {
     // restore the session's prior conf afterwards: leaking nanosAsLong=true
     // would silently change every LATER nanos-parquet read in the session.
     // Version-sensitivity, pinned by test ("nanosAsLong conf scope"):
-    // this relies on the conf being captured into the relation when
-    // spark.read.parquet RESOLVES the scan (so executing the returned —
-    // lazy — frame after the restore still works). That holds in Spark
+    // the footer schema is decoded under the conf, and this relies on
+    // the conf being captured into the relation when the read RESOLVES
+    // the scan (so executing the returned — lazy — frame after the
+    // restore still works). That holds in Spark
     // 4.1; if an upgrade moves the capture to action time, the pinning
     // test fails loudly rather than this silently breaking downstream.
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val prior = spark.conf.getOption(key)
     spark.conf.set(key, "true")
     try {
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val raw = pinnedParquet(spark, s"$dir/events.parquet")
       raw.schema("ts").dataType match {
         case LongType =>
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
 import org.apache.spark.sql.functions.{abs, coalesce, col, collect_set, count, explode, expr, from_json, input_file_name, lit, not, pmod, sequence, struct, sum, to_json, when, xxhash64}
 import org.apache.spark.sql.types.StructType
 
@@ -454,15 +455,21 @@ object TxTable {
   // prefix makes every later commit carry them forward), enforced on
   // EVERY data commit. SQL semantics: a row violates iff the
   // expression evaluates to FALSE — NULL passes, exactly like SQL
-  // CHECK. Enforcement validates the freshly WRITTEN parquet files
-  // (the exact bytes the manifest would reference) before the slot
-  // claim: one aggregate job over the new files only — O(commit), not
-  // O(table) — with predicate evaluation pushed into a columnar scan,
-  // and no re-evaluation of a possibly nondeterministic input frame.
-  // A violating commit deletes its data dir and throws; nothing is
-  // ever visible to readers. Constraints observed are those of the
-  // head AT WRITE TIME: a constraint added while a commit is in
-  // flight applies to commits that start after it lands.
+  // CHECK. [[commit]] counts violations INSIDE its write job, as
+  // Delta checks constraints inside the write plan: the frame is
+  // written through `Dataset.observe` with one FALSE-count per
+  // constraint ([[violationCounts]]), so the rows counted are exactly
+  // the rows written — no second job, no re-evaluation of a possibly
+  // nondeterministic input frame. Each constraint sees the frame
+  // projected to the table's declared schema, as a read of the written
+  // files would. After the write, before the slot claim, a violating
+  // commit deletes its data dir and throws; nothing is ever visible to
+  // readers. Constraints checked are those of the head when the commit
+  // starts; the claim loop's constraint fingerprint aborts a commit
+  // whose constraint set moved before its claim. Files a commit did not
+  // write — existing rows under ADD CONSTRAINT, copied-in files,
+  // streaming-file commits — are counted by the same observed counter
+  // over one `noop` scan: one job, no shuffle.
 
   private[ops] val ConstraintMetaPrefix = "graft.constraint."
 
@@ -524,7 +531,8 @@ object TxTable {
         org.apache.spark.sql.types.BooleanType,
         s"CHECK expression must be boolean, got " +
           s"${checked.schema.head.dataType.simpleString}: $checkExpr")
-      val bad = checked.where(col("ok") === false).count()
+      val bad = violationCounts(snapshot, Seq(name -> checkExpr), None)(
+        noopScan).head
       require(bad == 0L,
         s"cannot add CHECK constraint $name to $path: $bad existing " +
           s"rows violate ($checkExpr)")
@@ -553,36 +561,95 @@ object TxTable {
       Map(ConstraintMetaPrefix + name -> ""))
   }
 
-  /** Enforcement: one aggregate over `newLines` counting violations
-    * per active constraint; on any violation delete `cleanupDir` (the
-    * uncommitted data dir) and throw. Reads with the declared schema
-    * when present so a constraint on an evolved column sees nulls
-    * (which PASS) rather than an analysis error; otherwise with the
-    * schema record `recordMeta` holds for the lines' id, if any.
+  /** Enforcement for files a commit did not write itself (copied-in
+    * files, streaming-file commits): counts violations per active
+    * constraint over `newLines` with [[violationCounts]] on one `noop`
+    * scan, and throws on any. Reads with the declared schema when
+    * present so a constraint on an evolved column sees nulls (which
+    * PASS) rather than an analysis error.
     */
   private def enforceConstraints(spark: SparkSession, path: String,
                                  fs: FileSystem, p: Path,
                                  newLines: Seq[String],
-                                 recordMeta: Map[String, String],
-                                 cleanupDir: Option[String],
                                  constraints: Map[String, String]): Unit = {
-    if (newLines.isEmpty) return
     val cons = constraints.toSeq.sortBy(_._1)
-    if (cons.isEmpty) return
+    if (newLines.isEmpty || cons.isEmpty) return
     val pinned = versions(spark, path).lastOption
       .flatMap(v => declaredSchemaAt(fs, p, v))
-    val written = scanFiles(spark, p, newLines, recordMeta,
+    val written = scanFiles(spark, p, newLines, Map.empty,
       mergeSchema = false, pinned)
-    val flags = cons.zipWithIndex.map { case ((_, e), i) =>
+    rejectViolations(path, cons,
+      violationCounts(written, cons, None)(noopScan))(())
+  }
+
+  /** How long [[violationCounts]] waits, once its action returned, for
+    * the observed counts. They reach the [[org.apache.spark.sql.Observation]]
+    * through the session's query-execution listener, asynchronously —
+    * normally within milliseconds; the bound only keeps a lost event
+    * from hanging the caller.
+    */
+  private val ObservedCountsWait = scala.concurrent.duration.Duration(60, "s")
+
+  /** Rows of `df` on which each constraint of `cons` (name -> SQL
+    * expression) evaluates to FALSE, counted by `Dataset.observe` while
+    * `run` executes the observed frame — inside that action's job, with
+    * no job of its own. `run` gets `df`'s own columns. With `schema`,
+    * each constraint instead sees `df` projected to it, as a read of the
+    * written files pinned to `schema` would: a column `df` lacks is a
+    * typed null, a column it has is cast to the schema's type.
+    */
+  private def violationCounts(df: DataFrame, cons: Seq[(String, String)],
+                              schema: Option[StructType])
+                             (run: DataFrame => Unit): Seq[Long] = {
+    val obs = org.apache.spark.sql.Observation()
+    val counts = cons.zipWithIndex.map { case ((_, e), i) =>
       sum(when(expr(e) === false, 1L).otherwise(0L)).as(s"c$i")
     }
-    val r = written.agg(flags.head, flags.tail: _*).head()
-    val viols = cons.zipWithIndex.collect {
-      case ((n, e), i) if !r.isNullAt(i) && r.getLong(i) > 0 =>
-        s"$n ($e): ${r.getLong(i)} rows"
+    val observed = schema match {
+      case None => df.observe(obs, counts.head, counts.tail: _*)
+      case Some(s) =>
+        // df's columns ride under fresh names beside the projection,
+        // and get their own names back above the observation
+        val names = df.columns.toIndexedSeq
+        val hidden = names.foldLeft(Vector.empty[String])((acc, _) =>
+          acc :+ graft.util.Cols.fresh(names ++ s.fieldNames ++ acc, "__w"))
+        val caseSensitive =
+          df.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
+        val projected = s.fields.toIndexedSeq.map { f =>
+          names.indexWhere(n =>
+            if (caseSensitive) n == f.name else n.equalsIgnoreCase(f.name))
+          match {
+            case -1 => lit(null).cast(f.dataType).as(f.name)
+            case i => col(hidden(i)).cast(f.dataType).as(f.name)
+          }
+        }
+        df.toDF(hidden: _*).select(hidden.map(col) ++ projected: _*)
+          .observe(obs, counts.head, counts.tail: _*)
+          .select(hidden.map(col): _*).toDF(names: _*)
+    }
+    run(observed)
+    val r = scala.concurrent.Await.result(obs.future, ObservedCountsWait)
+    cons.indices.map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
+  }
+
+  /** Executes a frame for its side effects only — the action an
+    * observed count rides on when nothing is written. Above the
+    * observation no column is needed, so the scan reads only the
+    * columns the constraints reference.
+    */
+  private def noopScan(df: DataFrame): Unit =
+    df.select().write.format("noop").mode("overwrite").save()
+
+  /** Throws, after `cleanup`, naming each constraint of `cons` whose
+    * count in `counts` is non-zero and its row count.
+    */
+  private def rejectViolations(path: String, cons: Seq[(String, String)],
+                               counts: Seq[Long])(cleanup: => Unit): Unit = {
+    val viols = cons.zip(counts).collect {
+      case ((n, e), c) if c > 0 => s"$n ($e): $c rows"
     }
     if (viols.nonEmpty) {
-      cleanupDir.foreach(d => fs.delete(new Path(p, d), true))
+      cleanup
       throw new IllegalStateException(
         s"commit to $path rejected — CHECK constraint violation: " +
           viols.mkString("; "))
@@ -2012,7 +2079,7 @@ object TxTable {
       meta.get(ChangeDataMetaKey) match {
         case Some("0") => None // row-change-free commit
         case Some(uuid) =>
-          Some(stamped(spark.read.parquet(
+          Some(stamped(Sources.pinnedParquet(spark,
             new Path(p, s"$ChangesDir/$uuid").toString), v, tsMs))
         case None =>
           // v-1 vacuumed (v is the earliest retained version): under a
@@ -3085,8 +3152,7 @@ object TxTable {
       // don't delete on failure, just refuse the commit (the thrown
       // error fails the batch and the checkpoint retries)
       val activeConstraints = headConstraints(spark, path)
-      enforceConstraints(spark, path, fs, p, relFiles, Map.empty, None,
-        activeConstraints)
+      enforceConstraints(spark, path, fs, p, relFiles, activeConstraints)
       val newLines = statsLines(spark, fs, p, path, relFiles)
       val layoutMeta =
         if (partitionCols.isEmpty) Map.empty[String, String]
@@ -3536,18 +3602,27 @@ object TxTable {
     val (skipped, fresh) = targets.partition(t => existing.contains(t._2))
     if (fresh.isEmpty)
       return (head.getOrElse(0L), Seq.empty, skipped.size)
-    // schema gate BEFORE any linking: name→type equality with the
-    // table's read schema (nullability aside)
-    val incoming = spark.read.parquet(
-      fresh.map(f => sfs.makeQualified(f._1).toString): _*).schema
-    head.foreach { _ =>
-      val have = read(spark, path).schema
-        .map(f => f.name -> f.dataType).toMap
-      val got = incoming.map(f => f.name -> f.dataType).toMap
-      require(have == got,
-        s"COPY INTO schema mismatch for $path: table reads " +
-        s"${have.toSeq.sortBy(_._1).mkString(", ")} but the files carry " +
-        s"${got.toSeq.sortBy(_._1).mkString(", ")}")
+    // schema gate BEFORE any linking: EVERY fresh file's footer schema
+    // must equal, name→type (nullability aside), the table's read
+    // schema — or, on a bootstrap, the first file's. Reading them as one
+    // frame would infer from one footer and let a disagreeing file in
+    def shape(st: StructType) =
+      st.map(f => f.name -> f.dataType).toMap
+    def render(m: Map[String, org.apache.spark.sql.types.DataType]) =
+      m.toSeq.sortBy(_._1).mkString(", ")
+    val incoming = fresh.map { case (src, _) =>
+      val q = sfs.makeQualified(src).toString
+      q -> shape(GraftParquetSchema.of(spark, q)
+        .getOrElse(sys.error(s"COPY INTO: $q has no parquet footer")))
+    }
+    val (wantFrom, want) = head match {
+      case Some(_) => (s"table $path reads", shape(read(spark, path).schema))
+      case None => (s"${incoming.head._1} carries", incoming.head._2)
+    }
+    incoming.foreach { case (q, got) =>
+      require(got == want,
+        s"COPY INTO schema mismatch for $path: $wantFrom ${render(want)} " +
+          s"but $q carries ${render(got)}")
     }
     fresh.foreach { case (src, rel) =>
       val dstF = new Path(p, rel)
@@ -3566,8 +3641,7 @@ object TxTable {
     // later read. Unreferenced files are invisible to readers, a retry
     // REUSES them via the exists-check above (the failure cost is
     // already paid), and vacuum's orphan grace collects genuine debris.
-    enforceConstraints(spark, path, fs, p, freshRels, Map.empty, None,
-      activeConstraints)
+    enforceConstraints(spark, path, fs, p, freshRels, activeConstraints)
     val newLines = statsLines(spark, fs, p, path, freshRels)
     val freshSet = freshRels.toSet
     val v = commitLines(spark, path, "copyinto", newLines,
@@ -3654,11 +3728,24 @@ object TxTable {
                      allowZeroParts: Boolean = false): Long = {
     val (fs, p) = fsFor(spark, path)
     val dataDir = s"data/${java.util.UUID.randomUUID()}"
-    sizedWrite(spark) {
-      val w = df.write
+    // CHECK constraints are counted inside the write job, over the head's
+    // constraint set read before it; a violating commit cleans up and
+    // throws, invisible to readers. The set's fingerprint rides into the
+    // claim loop, so a concurrent ADD/DROP CONSTRAINT aborts this commit
+    // instead of letting unvalidated data slip past the new rules
+    val headMeta = versions(spark, path).lastOption
+      .map(v => parseMeta(readManifest(fs, p, v)._1)).getOrElse(Map.empty)
+    val activeConstraints = effectiveConstraints(headMeta)
+    def write(frame: DataFrame): Unit = sizedWrite(spark) {
+      val w = frame.write
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(new Path(p, dataDir).toString)
     }
+    val cons = activeConstraints.toSeq.sortBy(_._1)
+    if (cons.isEmpty) write(df)
+    else rejectViolations(path, cons,
+      violationCounts(df, cons, declaredSchemaOf(headMeta))(write))(
+      fs.delete(new Path(p, dataDir), true))
     val allParts = {
       val it = fs.listFiles(new Path(p, dataDir), true)
       val buf = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -3704,15 +3791,6 @@ object TxTable {
     val schemaId = rowSchema.map(schemaIdFor)
     val recordMeta = schemaId.zip(rowSchema)
       .map { case (id, json) => SchemaRecordPrefix + id -> enc(json) }.toMap
-    // CHECK constraints validate the freshly written files before any
-    // claim — a violating commit cleans up and throws, invisible to
-    // readers; the validated set's fingerprint rides into the claim
-    // loop so a concurrent ADD/DROP CONSTRAINT aborts this commit
-    // instead of letting unvalidated data slip past the new rules
-    val activeConstraints = headConstraints(spark, path)
-    enforceConstraints(spark, path, fs, p,
-      newFiles.map(withSchemaId(_, schemaId)), recordMeta, Some(dataDir),
-      activeConstraints)
     // footer min/max (+ declared blooms — including one declared by
     // THIS commit's meta) per new file ride in the manifest line;
     // failures degrade to stats-less lines

@@ -111,12 +111,12 @@ private[sources] object GraftResolve {
       }
       // data schema from the declaration when present (footer-written
       // files may predate an evolution), else the recorded one, else
-      // from one footer (partition values live in dir names, never in
-      // the files)
+      // from one footer, read on the driver (partition values live in
+      // dir names, never in the files)
       val dataSchema = declared
         .map(s => StructType(s.filterNot(f => colNames.contains(f.name))))
         .orElse(recorded)
-        .getOrElse(spark.read.parquet(files.head).schema)
+        .getOrElse(graft.ops.Sources.pinnedParquet(spark, files.head).schema)
       GraftResolved(name, idx,
         StructType(dataSchema.fields ++ partSchema.fields), dataSchema,
         colNames)

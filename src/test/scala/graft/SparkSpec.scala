@@ -30,4 +30,25 @@ abstract class SparkSpec extends AnyFunSuite {
     import s.implicits._
     rows.toDF()
   }
+
+  /** Spark jobs started while `body` runs, counted by a listener; the
+    * listener bus is drained before and after `body`, so the count
+    * holds exactly the jobs `body` started.
+    */
+  def jobsStartedBy(body: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }

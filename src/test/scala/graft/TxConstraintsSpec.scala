@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.ops.TxTable
 
 /** Table-level CHECK constraints: declared as carried manifest meta,
-  * enforced on every data commit against the freshly written files —
-  * a violating commit must throw, clean up, and leave the table
-  * exactly as it was. SQL semantics throughout: NULL passes, only
-  * FALSE violates.
+  * enforced on every data commit, counted inside its write job — a
+  * violating commit must throw, clean up, and leave the table exactly
+  * as it was. SQL semantics throughout: NULL passes, only FALSE
+  * violates.
   */
 class TxConstraintsSpec extends SparkSpec {
 
@@ -210,5 +210,112 @@ class TxConstraintsSpec extends SparkSpec {
     assert(TxTable.constraints(spark, dir) === Map.empty)
     spark.sql(s"INSERT INTO graft.`$dir` VALUES (9, -1)")
     assert(TxTable.read(spark, dir).count() === 3)
+  }
+
+  test("constraints are counted inside the write job; ADD CONSTRAINT is one job") {
+    val s = spark
+    import s.implicits._
+    val plain = tmp(); seed(plain)
+    val checked = tmp(); seed(checked)
+    TxTable.addConstraint(spark, checked, "qty_pos", "qty > 0")
+    TxTable.addConstraint(spark, checked, "id_pos", "id > 0")
+    val rows = Seq((3L, 30L), (4L, 40L)).toDF("id", "qty").coalesce(1)
+    val plainJobs = jobsStartedBy(TxTable.append(spark, plain, rows))
+    val checkedJobs = jobsStartedBy(TxTable.append(spark, checked, rows))
+    assert(checkedJobs === plainJobs)
+    assert(TxTable.read(spark, checked).count() === 4)
+    val fresh = tmp(); seed(fresh)
+    assert(jobsStartedBy(
+      TxTable.addConstraint(spark, fresh, "qty_pos", "qty > 0")) === 1)
+  }
+
+  test("the violation message names each violated constraint and its rows") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp()
+    seed(dir)
+    TxTable.addConstraint(spark, dir, "qty_pos", "qty > 0")
+    TxTable.addConstraint(spark, dir, "id_small", "id < 100")
+    TxTable.addConstraint(spark, dir, "qty_small", "qty < 1000")
+    val head = TxTable.versions(spark, dir).last
+    val e = intercept[IllegalStateException] {
+      TxTable.append(spark, dir,
+        Seq((3L, -1L), (4L, -2L), (200L, 5L), (5L, 6L)).toDF("id", "qty"))
+    }
+    assert(e.getMessage.contains("qty_pos (qty > 0): 2 rows"), e.getMessage)
+    assert(e.getMessage.contains("id_small (id < 100): 1 rows"), e.getMessage)
+    assert(!e.getMessage.contains("qty_small"), e.getMessage)
+    assert(TxTable.versions(spark, dir).last === head)
+    // the rejected commit's data dir is gone
+    val dataDirs = java.nio.file.Files.list(
+      java.nio.file.Paths.get(dir, "data")).count()
+    assert(dataDirs === 1L)
+  }
+
+  test("constraints see the frame in the declared schema, as a read-back does") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.types._
+    val dir = tmp()
+    TxTable.create(spark, dir, StructType(Seq(
+      StructField("id", LongType), StructField("qty", LongType),
+      StructField("note", StringType))))
+    // true only of a bigint qty and a string-typed (null) note — what a
+    // read of the written files pinned to the declared schema sees
+    TxTable.addConstraint(spark, dir, "qty_long", "typeof(qty) = 'bigint'")
+    TxTable.addConstraint(spark, dir, "note_typed", "typeof(note) = 'string'")
+    TxTable.addConstraint(spark, dir, "qty_pos", "qty > 0")
+    // an int qty and no note: the declared projection casts and nulls
+    TxTable.append(spark, dir, Seq((1L, 5)).toDF("id", "qty"))
+    assert(TxTable.read(spark, dir).count() === 1)
+    val e = intercept[IllegalStateException] {
+      TxTable.append(spark, dir, Seq((2L, -5), (3L, 7)).toDF("id", "qty"))
+    }
+    assert(e.getMessage.contains("qty_pos (qty > 0): 1 rows"), e.getMessage)
+    assert(!e.getMessage.contains("qty_long"), e.getMessage)
+    // the read-back agrees on the rows that did land
+    assert(TxTable.read(spark, dir)
+      .where(expr("typeof(qty) = 'bigint' AND typeof(note) = 'string'"))
+      .count() === 1)
+  }
+
+  test("constrained appends of empty frames finish promptly") {
+    val s = spark
+    import s.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = tmp()
+    seed(dir)
+    TxTable.addConstraint(spark, dir, "qty_pos", "qty > 0")
+    val frames = Seq(Seq.empty[(Long, Long)].toDF("id", "qty"),
+      Seq((9L, -9L)).toDF("id", "qty").where(lit(false)))
+    frames.foreach { f =>
+      val v = Await.result(Future(TxTable.append(spark, dir, f)), 60.seconds)
+      assert(v === TxTable.versions(spark, dir).last)
+    }
+    assert(TxTable.read(spark, dir).count() === 2)
+  }
+
+  test("a partitioned constrained append is checked the same way") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp()
+    TxTable.append(spark, dir,
+      Seq((1L, 10L, 1), (2L, 20L, 2)).toDF("id", "qty", "day"), Seq("day"))
+    TxTable.addConstraint(spark, dir, "qty_pos", "qty > 0")
+    TxTable.addConstraint(spark, dir, "day_pos", "day > 0")
+    val head = TxTable.versions(spark, dir).last
+    val e = intercept[IllegalStateException] {
+      TxTable.append(spark, dir,
+        Seq((3L, -1L, 1), (4L, 5L, 0), (5L, -3L, 3)).toDF("id", "qty", "day"),
+        Seq("day"))
+    }
+    assert(e.getMessage.contains("qty_pos (qty > 0): 2 rows"), e.getMessage)
+    assert(e.getMessage.contains("day_pos (day > 0): 1 rows"), e.getMessage)
+    assert(TxTable.versions(spark, dir).last === head)
+    TxTable.append(spark, dir,
+      Seq((6L, 60L, 1), (7L, 70L, 3)).toDF("id", "qty", "day"), Seq("day"))
+    assert(TxTable.read(spark, dir).count() === 4)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.ops.TxTable
@@ -20,8 +22,13 @@ class TxCopyIntoSpec extends SparkSpec {
   private def land(dir: String, name: String, rows: Seq[(Long, String)]): Unit = {
     val s = spark
     import s.implicits._
+    landFrame(dir, name, rows.toDF("id", "v"))
+  }
+
+  private def landFrame(dir: String, name: String,
+                        df: org.apache.spark.sql.DataFrame): Unit = {
     val stage = Files.createTempDirectory("graft_stage").toString
-    rows.toDF("id", "v").coalesce(1).write.mode("overwrite").parquet(stage)
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
     val part = Files.list(Paths.get(stage)).toArray
       .map(_.asInstanceOf[java.nio.file.Path])
       .find(_.toString.endsWith(".parquet")).get
@@ -83,6 +90,40 @@ class TxCopyIntoSpec extends SparkSpec {
       TxTable.copyInto(spark, ptbl, landing)
     }
     assert(e2.getMessage.contains("partitioned"))
+  }
+
+  test("a batch whose files disagree on schema is refused before linking") {
+    val s = spark
+    import s.implicits._
+    val root = tmp()
+    val landing = s"$root/landing"
+    landFrame(landing, "a.parquet", Seq((1L, 10L)).toDF("id", "qty"))
+    landFrame(landing, "b.parquet", Seq((2L, "x")).toDF("id", "qty"))
+    def linked(tbl: String): Boolean =
+      Files.exists(Paths.get(tbl, "data")) &&
+        Files.list(Paths.get(tbl, "data")).iterator().asScala
+          .exists(_.getFileName.toString.startsWith("copyin_"))
+    // into an existing bigint table: b's string qty is refused
+    val tbl = s"$root/t"
+    TxTable.overwrite(spark, tbl, Seq((0L, 0L)).toDF("id", "qty"))
+    val e = intercept[IllegalArgumentException] {
+      TxTable.copyInto(spark, tbl, landing)
+    }
+    assert(e.getMessage.contains("schema mismatch") &&
+      e.getMessage.contains("b.parquet"), e.getMessage)
+    assert(TxTable.versions(spark, tbl) === Seq(1L) && !linked(tbl))
+    assert(TxTable.read(spark, tbl).count() === 1)
+    // a bootstrap gates the files against each other
+    val boot = s"$root/boot"
+    val e2 = intercept[IllegalArgumentException] {
+      TxTable.copyInto(spark, boot, landing)
+    }
+    assert(e2.getMessage.contains("schema mismatch"), e2.getMessage)
+    assert(TxTable.versions(spark, boot).isEmpty && !linked(boot))
+    // the agreeing file alone still loads
+    val (_, loaded, _) = TxTable.copyInto(spark, boot, landing,
+      pattern = "a.parquet")
+    assert(loaded.size === 1 && TxTable.read(spark, boot).count() === 1)
   }
 
   test("CHECK constraints gate copied-in files") {

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -344,24 +343,12 @@ class TxMergeIntoSpec extends SparkSpec {
     }
     val source = (95L to 105L).map(i => (i, "new", -i))
       .toDF("id", "status", "x")
-    val jobs = new AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     /** Jobs `body` starts on `dir`, and the rows of its change feed. */
     def run(body: String => Long): (Int, Long) = {
       val dir = flat()
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-        jobs.set(0)
-        body(dir)
-        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val jobs = jobsStartedBy(body(dir))
       val v = TxTable.versions(spark, dir).last
-      (jobs.get, TxTable.readChanges(spark, dir, v - 1, v).count())
+      (jobs, TxTable.readChanges(spark, dir, v - 1, v).count())
     }
     // 1 source checkpoint, 3 probe, 4 change write, 1 rewrite
     val (intoJobs, intoRows) = run(TxTable.mergeInto(spark, _, source,

@@ -2,12 +2,13 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetSchema, ParquetFileFormat}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,6 +22,10 @@ import graft.ops.TxTable
   * "Inference" is the same table with the record stripped from every
   * manifest: the shape of a manifest written before the record
   * existed, which must keep reading as it always did.
+  *
+  * Reads with no record take their schema from one footer on the
+  * driver ([[GraftParquetSchema.of]]), which must be the schema Spark's
+  * own inference gives.
   */
 class TxSchemaRecordSpec extends SparkSpec {
 
@@ -222,14 +227,6 @@ class TxSchemaRecordSpec extends SparkSpec {
   }
 
   test("building snapshot frames starts no Spark job") {
-    val s = spark
-    import s.implicits._
-    val jobs = new AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val flat = tmp() + "/t"
     TxTable.append(spark, flat, people)
     TxTable.append(spark, flat, people.filter(col("id") > 2))
@@ -237,32 +234,138 @@ class TxSchemaRecordSpec extends SparkSpec {
     TxTable.append(spark, parted, people, Seq("day"))
     TxTable.append(spark, parted, people.filter(col("id") > 2), Seq("day"))
     val ts1 = TxTable.commitTimestamp(spark, flat, 1L)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def noJobs(what: String)(build: => DataFrame): Unit = {
-        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-        jobs.set(0)
-        val df = build
-        df.schema
-        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-        assert(jobs.get === 0, s"$what started ${jobs.get} job(s)")
-      }
-      Seq(flat, parted).foreach { t =>
-        noJobs(s"read $t")(TxTable.read(spark, t))
-        noJobs(s"readVersion $t")(TxTable.readVersion(spark, t, 1L))
-        noJobs(s"load $t")(spark.read.format("graft").load(t))
-        noJobs(s"versionAsOf $t")(
-          spark.read.format("graft").option("versionAsOf", 1L).load(t))
-      }
-      noJobs("timestampAsOf")(
-        spark.read.format("graft").option("timestampAsOf", ts1).load(flat))
-      // the control: the same table without its record infers (a job)
-      val bare = stripped(flat)
-      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-      jobs.set(0)
-      TxTable.read(spark, bare).schema
-      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-      assert(jobs.get > 0, "an unrecorded read infers its schema")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    def noJobs(what: String)(build: => DataFrame): Unit = {
+      val jobs = jobsStartedBy(build.schema)
+      assert(jobs === 0, s"$what started $jobs job(s)")
+    }
+    Seq(flat, parted).foreach { t =>
+      noJobs(s"read $t")(TxTable.read(spark, t))
+      noJobs(s"readVersion $t")(TxTable.readVersion(spark, t, 1L))
+      noJobs(s"load $t")(spark.read.format("graft").load(t))
+      noJobs(s"versionAsOf $t")(
+        spark.read.format("graft").option("versionAsOf", 1L).load(t))
+    }
+    noJobs("timestampAsOf")(
+      spark.read.format("graft").option("timestampAsOf", ts1).load(flat))
+    // the control: the same table without its record infers (a job)
+    val bare = stripped(flat)
+    assert(jobsStartedBy(TxTable.read(spark, bare).schema) > 0,
+      "an unrecorded read infers its schema")
+  }
+
+  // ---- the footer schema read on the driver, for reads with no record
+
+  private val harness = "perfbench/testdata/sf0.001"
+
+  private def withConf[T](kvs: Map[String, String])(body: => T): T = {
+    val prior = kvs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The footer schema of `path` is Spark's own inference: the raw data
+    * schema inference gives over the files Spark lists (nullability and
+    * metadata included), and a read pinned with it has the inferred
+    * read's schema.
+    */
+  private def sameAsFooterInference(path: String): StructType = {
+    val footer = GraftParquetSchema.of(spark, path)
+    val files = spark.read.parquet(path).inputFiles.toSeq.map { f =>
+      val q = new Path(f)
+      q.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(q)
+    }
+    val inferred = new ParquetFileFormat().inferSchema(spark, Map.empty, files)
+    assert(footer.isDefined && footer === inferred, path)
+    assert(footer.get.json === inferred.get.json, s"$path metadata")
+    val pinned = spark.read.schema(footer.get).parquet(path).schema
+    assert(pinned === spark.read.parquet(path).schema, s"$path pinned read")
+    footer.get
+  }
+
+  test("the footer schema is the schema Spark infers, under the session conf") {
+    val confs = Seq(Map.empty[String, String],
+      Map("spark.sql.parquet.binaryAsString" -> "true"),
+      Map("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false"))
+    val nanos = Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    val files =
+      graft.ops.Sources.tableNames.map(n => s"$harness/$n.parquet") ++
+        Seq("micros_ntz", "micros_utc")
+          .map(e => s"src/test/resources/events-enc/$e/events.parquet")
+    confs.foreach { c =>
+      withConf(c)(files.foreach(sameAsFooterInference))
+      withConf(c ++ nanos)(sameAsFooterInference(
+        "src/test/resources/events-enc/nanos/events.parquet"))
+    }
+    // the confs reach the decoder: NTZ only while inference is on
+    def tsType(c: Map[String, String]) = withConf(c)(GraftParquetSchema.of(
+      spark, "src/test/resources/events-enc/micros_ntz/events.parquet")
+      .get("ts").dataType)
+    assert(tsType(Map.empty) === TimestampNTZType)
+    assert(tsType(confs(2)) === TimestampType)
+  }
+
+  test("a directory's footer schema comes from its first data file") {
+    val s = spark
+    import s.implicits._
+    val flat = tmp() + "/d"
+    Seq((1L, "a")).toDF("id", "v").write.parquet(flat)
+    Seq((2L, 2.5, "b")).toDF("id", "w", "v").write.mode("append")
+      .parquet(flat)
+    // hidden files sort first but are never data
+    val other = tmp() + "/o"
+    Seq(Tuple1("z")).toDF("z").coalesce(1).write.parquet(other)
+    val part = Files.list(Paths.get(other)).iterator().asScala
+      .find(_.toString.endsWith(".parquet")).get
+    Files.copy(part, Paths.get(flat, "_hidden.parquet"))
+    Files.copy(part, Paths.get(flat, ".hidden.parquet"))
+    val data = Files.list(Paths.get(flat)).iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      .toSeq.sorted
+    val perFile = data.map(n =>
+      GraftParquetSchema.of(spark, s"$flat/$n").get.fieldNames.toSeq)
+    assert(perFile.distinct.size === 2, "the files disagree")
+    assert(sameAsFooterInference(flat).fieldNames.toSeq === perFile.head)
+    // hive-partitioned: the first file under the first partition dir
+    val parted = tmp() + "/p"
+    Seq((1L, "a", 2)).toDF("id", "v", "day").write.partitionBy("day")
+      .parquet(parted)
+    Seq((2L, 2.5, 1)).toDF("id", "w", "day").write.partitionBy("day")
+      .mode("append").parquet(parted)
+    assert(sameAsFooterInference(parted).fieldNames.toSeq === Seq("id", "w"))
+    // a change-data directory
+    val t = tmp() + "/t"
+    TxTable.append(spark, t, people)
+    TxTable.update(spark, t, col("id") === 1L, Map("score" -> lit(9.0)))
+    val changeDirs = Files.list(Paths.get(t, "_changes")).iterator().asScala
+      .toSeq
+    assert(changeDirs.nonEmpty)
+    changeDirs.foreach(d => sameAsFooterInference(d.toString))
+    assert(GraftParquetSchema.of(spark, tmp() + "/missing").isEmpty)
+  }
+
+  test("Sources, an unrecorded partitioned load and readChanges start no job") {
+    graft.ops.Sources.tableNames.foreach { n =>
+      val jobs = jobsStartedBy(graft.ops.Sources.table(spark, harness, n).schema)
+      assert(jobs === 0, s"Sources.table $n started $jobs job(s)")
+    }
+    assert(jobsStartedBy(graft.ops.Sources.registerAll(spark, harness)) === 0)
+    val parted = tmp() + "/t"
+    TxTable.append(spark, parted, people, Seq("day"))
+    val bare = stripped(parted)
+    assert(TxTable.recordedSchema(spark, bare, 1L).isEmpty)
+    assert(jobsStartedBy(spark.read.format("graft").load(bare).schema) === 0,
+      "GraftResolve reads the data schema from one footer")
+    sameRead("unrecorded partitioned load",
+      spark.read.format("graft").load(bare),
+      spark.read.format("graft").load(parted))
+    TxTable.update(spark, parted, col("id") === 1L, Map("score" -> lit(9.0)))
+    val v = TxTable.versions(spark, parted).last
+    assert(jobsStartedBy(TxTable.readChanges(spark, parted, v - 1, v).schema)
+      === 0, "readChanges pins each change-data directory")
   }
 }
