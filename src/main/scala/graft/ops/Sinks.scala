@@ -279,20 +279,18 @@ object Sinks {
     // like-for-like. (Also skips the footer-sampling schema inference
     // pass entirely.)
     // tx conflict scope, listed BEFORE the snapshot read: the files
-    // this merge reads in the affected partitions must be unchanged at
-    // the claim — a racing append into one of them would otherwise be
-    // silently dropped by the partition replace. The known set comes
-    // from the MANIFEST pruned by the same partition predicate, NOT
-    // from DataFrame.inputFiles: inputFiles surfaces the relation's
-    // whole FileIndex (the .filter below never reaches it), which
-    // would widen the conflict scope to the entire table and spuriously
-    // abort every partition-disjoint concurrent merge. Listing known
-    // FIRST makes the race window safe in the conservative direction —
-    // a commit landing between this listing and the read makes the
-    // claim-time compare fail (abort + retry), never a silent drop.
-    // (A racing append into a partition that had no files yet is the
-    // remaining corner — Delta closes it with full partition-level
-    // conflict detection.)
+    // this merge reads in the affected partitions are its read set — the
+    // partition replace may drop only those, so a racing append into an
+    // affected partition (even one that had no files yet) aborts the
+    // claim instead of being silently dropped. The known set comes from
+    // the MANIFEST pruned by the same partition predicate, NOT from
+    // DataFrame.inputFiles: inputFiles surfaces the relation's whole
+    // FileIndex (the .filter below never reaches it), which would widen
+    // the conflict scope to the entire table and spuriously abort every
+    // partition-disjoint concurrent merge. Listing known FIRST makes the
+    // race window safe in the conservative direction — a commit landing
+    // between this listing and the read fails the claim-time check
+    // (abort + retry), never a silent drop.
     val knownRelTx =
       if (tx) TxTable.headFilesMatching(spark, path, Some(prune)).toSet
       else Set.empty[String]
@@ -304,9 +302,8 @@ object Sinks {
     val merged = existing.join(keys, cond, "left_anti").unionByName(up)
 
     if (tx) {
-      val affectedDirs = knownRelTx.map(TxTable.partitionDirOf)
       TxTable.replacePartitions(spark, path, merged, partitionCols,
-        expectUnchanged = Some((affectedDirs, knownRelTx)))
+        expectUnchanged = Some(knownRelTx))
       return
     }
     val tmp = new Path(p.getParent,

@@ -184,19 +184,23 @@ object TxTable {
 
   private def declaredPartitionColsAt(fs: FileSystem, p: Path,
                                       v: Long): Option[Seq[String]] =
-    parseMeta(readManifest(fs, p, v)._1).get(PartitionsMetaKey)
+    declaredPartitionColsOf(parseMeta(readManifest(fs, p, v)._1))
+
+  private def declaredPartitionColsOf(
+      meta: Map[String, String]): Option[Seq[String]] =
+    meta.get(PartitionsMetaKey)
       .map(s => dec(s).split(',').toSeq.filter(_.nonEmpty))
 
   /** The layout a REWRITE must preserve: the caller's explicit columns,
-    * else whatever the head manifest declares — so SQL DML and
+    * else whatever the head's `meta` declares — so SQL DML and
     * maintenance statements on a partitioned table keep its layout
     * without being told the columns (a flat rewrite of a hive layout
     * would break directory pruning and replacePartitions semantics).
     */
-  private def layoutOrDeclared(fs: FileSystem, p: Path, v: Long,
+  private def layoutOrDeclared(meta: Map[String, String],
                                partitionCols: Seq[String]): Seq[String] =
     if (partitionCols.nonEmpty) partitionCols
-    else declaredPartitionColsAt(fs, p, v).getOrElse(Nil)
+    else declaredPartitionColsOf(meta).getOrElse(Nil)
 
   /** Create an EMPTY table as a metadata-only commit carrying the
     * declared schema (and partition columns): no data file is written —
@@ -212,15 +216,15 @@ object TxTable {
     require(missing.isEmpty,
       s"partition columns ${missing.mkString(",")} not in schema " +
         schema.simpleString)
-    // firstCommitOnly: the require above is check-then-act — of two
+    // pinned to version 0: the require above is check-then-act — of two
     // concurrent creators, the loser's claim-loop retry would land its
     // "create" as v2, silently replacing the winner's declared schema.
-    // Restricting the claim to slot v1 makes the loser fail as
-    // "already exists", which is what the catalog/SQL surfaces promise.
-    commitLines(spark, path, "create", Seq.empty, (base, _) => base,
+    // The pin makes the loser fail as "already exists", which is what
+    // the catalog/SQL surfaces promise.
+    metaCommit(spark, path, "create",
       Map(SchemaMetaKey -> enc(schema.json),
         PartitionsMetaKey -> enc(partitionCols.mkString(","))),
-      firstCommitOnly = true)
+      ReadSet(version = Some(0L)))
   }
 
   /** Widen the table's declared schema as a metadata-only commit —
@@ -260,7 +264,7 @@ object TxTable {
       f => require(f.nullable,
         s"added column ${f.name} must be nullable (existing rows have " +
         "no value for it)"))
-    commitLines(spark, path, "evolve", Seq.empty, (base, _) => base,
+    metaCommit(spark, path, "evolve",
       Map(SchemaMetaKey -> enc(newSchema.json)))
   }
 
@@ -298,67 +302,8 @@ object TxTable {
 
   def renameColumn(spark: SparkSession, path: String,
                    from: String, to: String): Long = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     require(from != to, "rename to the same name is a no-op — refusing")
-    val schema0 = declaredSchema(spark, path).getOrElse(
-      read(spark, path, mergeSchema = true).schema)
-    require(schema0.fieldNames.contains(from),
-      s"no column '$from' in $path (has ${schema0.fieldNames.mkString(", ")})")
-    require(!schema0.fieldNames.contains(to),
-      s"column '$to' already exists in $path")
-    val parts = declaredPartitionCols(spark, path).getOrElse(Nil)
-    require(!parts.contains(from),
-      s"'$from' is a partition column — renaming it relayouts every " +
-        "file path; do that as an explicit overwrite")
-    constraints(spark, path).foreach { case (n, e) =>
-      require(!constraintReferences(e, from),
-        s"CHECK constraint $n references '$from' — drop it before renaming")
-    }
-    bloomConfigOf(commitMeta(spark, path, vs.last))
-      .filter(_._1.contains(from)).foreach { case (cols, bits, k) =>
-        commitLines(spark, path, "setbloom", Seq.empty, (base, _) => base,
-          Map(BloomMetaKey -> enc(
-            s"${cols.map(c => if (c == from) to else c).mkString(",")}:$bits:$k")))
-      }
-    // same crash-safe pre-rename for a clustering declaration
-    val cl = clusteringColumns(spark, path)
-    if (cl.contains(from))
-      commitLines(spark, path, "cluster", Seq.empty, (base, _) => base,
-        Map(ClusterMetaKey -> enc(
-          cl.map(c => if (c == from) to else c).mkString(","))))
-    // HEAD-PINNED rewrite (the addConstraint pattern): the snapshot is
-    // read at an explicit version AFTER the config pre-commits, and the
-    // final commit requires the head still BE that version at claim
-    // time. Without the pin, a concurrent append landing between the
-    // snapshot read and the claim would be silently dropped — the
-    // rewrite's baseKeep discards every base line, and the claim-loop
-    // retry rebuilds from the stale snapshot. Schema facts are
-    // re-derived at the pinned version for the same reason (a
-    // concurrent evolve/rename would otherwise be erased).
-    val v0 = versions(spark, path).last
-    val snapshot = readVersion(spark, path, v0, mergeSchema = true)
-    val schema = declaredSchema(spark, path, v0).getOrElse(snapshot.schema)
-    require(schema.fieldNames.contains(from) &&
-        !schema.fieldNames.contains(to),
-      s"schema of $path changed concurrently — retry the rename")
-    // the LAYOUT must be re-derived at the pin too: a concurrent
-    // layout-changing commit landing before v0 would otherwise have
-    // its declaration silently overwritten by the stale early read
-    // (flattening a hive layout — directory pruning and
-    // replacePartitions break) and could slip `from` past the
-    // partition-column refusal above
-    val (fs0, p0) = fsFor(spark, path)
-    val parts0 = declaredPartitionColsAt(fs0, p0, v0).getOrElse(Nil)
-    require(!parts0.contains(from),
-      s"'$from' became a partition column concurrently — retry")
-    val newSchema = StructType(schema.fields.map(f =>
-      if (f.name == from) f.copy(name = to) else f))
-    commit(spark, path, snapshot.withColumnRenamed(from, to), "rename",
-      (_, _) => Seq.empty, parts0,
-      meta = Map(SchemaMetaKey -> enc(newSchema.json),
-        ChangeDataMetaKey -> "0"),
-      requireHeadVersion = Some(v0))
+    rewriteColumn(spark, path, from, Some(to))
   }
 
   /** Drop a data column — [[renameColumn]]'s sibling with the same
@@ -379,73 +324,95 @@ object TxTable {
     * a config over the remaining columns is valid at every
     * intermediate state.
     */
-  def dropColumn(spark: SparkSession, path: String, name: String): Long = {
+  def dropColumn(spark: SparkSession, path: String, name: String): Long =
+    rewriteColumn(spark, path, name, None)
+
+  /** The shared core of [[renameColumn]] (`to` = the new name) and
+    * [[dropColumn]] (`to` = None): refuse, rename or drop `name` in the
+    * bloom and clustering configs, then rewrite the head-pinned snapshot
+    * as one `cdf=0` commit.
+    */
+  private def rewriteColumn(spark: SparkSession, path: String, name: String,
+                            to: Option[String]): Long = {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val schema0 = declaredSchema(spark, path).getOrElse(
       read(spark, path, mergeSchema = true).schema)
     require(schema0.fieldNames.contains(name),
       s"no column '$name' in $path (has ${schema0.fieldNames.mkString(", ")})")
+    to.foreach(t => require(!schema0.fieldNames.contains(t),
+      s"column '$t' already exists in $path"))
     val parts = declaredPartitionCols(spark, path).getOrElse(Nil)
     require(!parts.contains(name),
-      s"'$name' is a partition column — dropping it relayouts every " +
-        "file path; do that as an explicit overwrite")
-    // at least one NON-partition column must remain: partition values
-    // live in the path, so a table of only partition columns has no
-    // bytes to write (Spark refuses all-columns-as-partitions with an
+      s"'$name' is a partition column — " +
+        (if (to.isDefined) "renaming" else "dropping") +
+        " it relayouts every file path; do that as an explicit overwrite")
+    // a drop must leave at least one NON-partition column: partition
+    // values live in the path, so a table of only partition columns has
+    // no bytes to write (Spark refuses all-columns-as-partitions with an
     // opaque error deep in the write — refuse here with the real one)
-    require(schema0.fields.exists(f =>
-        f.name != name && !parts.contains(f.name)),
+    def keepsDataColumn(schema: StructType, parts: Seq[String]): Boolean =
+      to.isDefined ||
+        schema.fields.exists(f => f.name != name && !parts.contains(f.name))
+    require(keepsDataColumn(schema0, parts),
       s"cannot drop '$name' of $path: it is the last data " +
         "(non-partition) column")
     constraints(spark, path).foreach { case (n, e) =>
       require(!constraintReferences(e, name),
         s"CHECK constraint $n references '$name' — drop it before " +
-          "dropping the column")
+          (if (to.isDefined) "renaming" else "dropping the column"))
     }
+    // a bloom or clustering config naming the column follows it FIRST,
+    // each as its own metadata commit (an emptied config is dropped) —
+    // crash-safe, since a config naming a column no file carries is inert
+    def renamed(cols: Seq[String]): Seq[String] =
+      cols.flatMap(c => if (c == name) to.toSeq else Seq(c))
     bloomConfigOf(commitMeta(spark, path, vs.last))
       .filter(_._1.contains(name)).foreach { case (cols, bits, k) =>
-        val rest = cols.filterNot(_ == name)
-        commitLines(spark, path, "setbloom", Seq.empty, (base, _) => base,
-          Map(BloomMetaKey ->
-            (if (rest.isEmpty) "" else enc(s"${rest.mkString(",")}:$bits:$k"))))
+        val rest = renamed(cols)
+        metaCommit(spark, path, "setbloom", Map(BloomMetaKey ->
+          (if (rest.isEmpty) "" else enc(s"${rest.mkString(",")}:$bits:$k"))))
       }
     val cl = clusteringColumns(spark, path)
     if (cl.contains(name)) {
-      val rest = cl.filterNot(_ == name)
-      commitLines(spark, path, "cluster", Seq.empty, (base, _) => base,
-        Map(ClusterMetaKey ->
-          (if (rest.isEmpty) "" else enc(rest.mkString(",")))))
+      val rest = renamed(cl)
+      metaCommit(spark, path, "cluster", Map(ClusterMetaKey ->
+        (if (rest.isEmpty) "" else enc(rest.mkString(",")))))
     }
-    // head-pinned rewrite — see [[renameColumn]] for the race this
-    // closes (concurrent appends silently erased by the full rewrite)
+    // HEAD-PINNED rewrite (the addConstraint pattern): the snapshot is
+    // read at an explicit version AFTER the config pre-commits, and the
+    // final commit's read set pins the head to that version. Without the
+    // pin, a concurrent append landing between the snapshot read and the
+    // claim would be silently dropped — the rewrite's baseKeep discards
+    // every base line, and the claim-loop retry rebuilds from the stale
+    // snapshot. Schema and LAYOUT facts are re-derived at the pin for the
+    // same reason: a concurrent evolve/rename would otherwise be erased,
+    // a concurrently declared layout overwritten by the stale early read
+    // (flattening a hive layout), `name` slipped past the
+    // partition-column refusal, or — after a concurrent drop — the final
+    // non-partition column removed
     val v0 = versions(spark, path).last
     val snapshot = readVersion(spark, path, v0, mergeSchema = true)
     val schema = declaredSchema(spark, path, v0).getOrElse(snapshot.schema)
-    require(schema.fieldNames.contains(name),
-      s"schema of $path changed concurrently — retry the drop")
-    // layout re-derived at the pin — see [[renameColumn]]: a stale
-    // early read would overwrite a concurrently declared layout and
-    // could slip `name` past the partition-column refusal
+    require(schema.fieldNames.contains(name) &&
+        to.forall(t => !schema.fieldNames.contains(t)),
+      s"schema of $path changed concurrently — retry the " +
+        (if (to.isDefined) "rename" else "drop"))
     val (fs0, p0) = fsFor(spark, path)
     val parts0 = declaredPartitionColsAt(fs0, p0, v0).getOrElse(Nil)
     require(!parts0.contains(name),
       s"'$name' became a partition column concurrently — retry")
-    // the last-data-column invariant re-asserted against the PINNED
-    // schema/layout: a concurrent drop landing between the early check
-    // and the pin could otherwise make this drop remove the final
-    // non-partition column, failing later with the opaque write error
-    // this guard exists to pre-empt
-    require(schema.fields.exists(f =>
-        f.name != name && !parts0.contains(f.name)),
+    require(keepsDataColumn(schema, parts0),
       s"cannot drop '$name' of $path: it is the last data " +
         "(non-partition) column (a concurrent drop landed — retry)")
-    val newSchema = StructType(schema.fields.filterNot(_.name == name))
-    commit(spark, path, snapshot.drop(name), "dropcol",
-      (_, _) => Seq.empty, parts0,
+    val newSchema = StructType(schema.fields.flatMap(f =>
+      if (f.name == name) to.map(t => f.copy(name = t)) else Some(f)))
+    commit(spark, path,
+      to.fold(snapshot.drop(name))(snapshot.withColumnRenamed(name, _)),
+      if (to.isDefined) "rename" else "dropcol", (_, _) => Seq.empty, parts0,
       meta = Map(SchemaMetaKey -> enc(newSchema.json),
         ChangeDataMetaKey -> "0"),
-      requireHeadVersion = Some(v0))
+      read = ReadSet(version = Some(v0)))
   }
 
   // ------------------------------------------------------ CHECK constraints
@@ -465,8 +432,8 @@ object TxTable {
   // files would. After the write, before the slot claim, a violating
   // commit deletes its data dir and throws; nothing is ever visible to
   // readers. Constraints checked are those of the head when the commit
-  // starts; the claim loop's constraint fingerprint aborts a commit
-  // whose constraint set moved before its claim. Files a commit did not
+  // starts; that set rides in the commit's read set, so a commit whose
+  // constraint set moved before its claim aborts. Files a commit did not
   // write — existing rows under ADD CONSTRAINT, copied-in files,
   // streaming-file commits — are counted by the same observed counter
   // over one `noop` scan: one job, no shuffle.
@@ -496,13 +463,6 @@ object TxTable {
         k.stripPrefix(ConstraintMetaPrefix) -> dec(v)
     }
 
-  /** Canonical fingerprint of a constraint set for the claim-loop
-    * conflict check — order-independent, collision-free for
-    * identifier names.
-    */
-  private def constraintFingerprint(cons: Map[String, String]): String =
-    cons.toSeq.sorted.map { case (k, v) => s"$k=${enc(v)}" }.mkString(";")
-
   /** Declare a CHECK constraint as a metadata-only commit. EXISTING
     * rows must already satisfy it (one validation scan of the head
     * snapshot — Delta's `ADD CONSTRAINT` contract: a constraint is a
@@ -519,7 +479,7 @@ object TxTable {
     // aborts if any commit landed during validation (its rows would
     // have escaped the scan), and we re-validate against the new head
     // — the two-sided closure of the races the data-commit side's
-    // constraint-fingerprint check can't see. Bounded retries: under
+    // constraint-set check can't see. Bounded retries: under
     // sustained write pressure adding a constraint loses, loudly.
     var attempt = 0
     while (true) {
@@ -537,10 +497,9 @@ object TxTable {
         s"cannot add CHECK constraint $name to $path: $bad existing " +
           s"rows violate ($checkExpr)")
       try {
-        return commitLines(spark, path, "constraint", Seq.empty,
-          (base, _) => base,
+        return metaCommit(spark, path, "constraint",
           Map(ConstraintMetaPrefix + name -> enc(checkExpr)),
-          requireHeadVersion = Some(v0))
+          ReadSet(version = Some(v0)))
       } catch {
         case e: java.util.ConcurrentModificationException =>
           if (attempt >= 5) throw e // sustained racing writes
@@ -557,7 +516,7 @@ object TxTable {
                      name: String): Long = {
     require(constraints(spark, path).contains(name),
       s"no CHECK constraint named $name on $path")
-    commitLines(spark, path, "constraint", Seq.empty, (base, _) => base,
+    metaCommit(spark, path, "constraint",
       Map(ConstraintMetaPrefix + name -> ""))
   }
 
@@ -583,10 +542,9 @@ object TxTable {
   }
 
   /** How long [[violationCounts]] waits, once its action returned, for
-    * the observed counts. They reach the [[org.apache.spark.sql.Observation]]
-    * through the session's query-execution listener, asynchronously —
-    * normally within milliseconds; the bound only keeps a lost event
-    * from hanging the caller.
+    * the observed counts. They reach its query-execution listener
+    * asynchronously — normally within milliseconds; the bound only keeps
+    * a lost event from hanging the caller.
     */
   private val ObservedCountsWait = scala.concurrent.duration.Duration(60, "s")
 
@@ -597,11 +555,20 @@ object TxTable {
     * each constraint instead sees `df` projected to it, as a read of the
     * written files pinned to `schema` would: a column `df` lacks is a
     * typed null, a column it has is cast to the schema's type.
+    *
+    * The counts are read by a query-execution listener registered for
+    * this call only. It reads the metrics only of a successful query
+    * carrying this call's own observation: reading them of a failed
+    * query would plan it a second time. (Spark's `Observation` instead
+    * leaves a listener on the session that does so for every failed
+    * query, for good.)
     */
   private def violationCounts(df: DataFrame, cons: Seq[(String, String)],
                               schema: Option[StructType])
                              (run: DataFrame => Unit): Seq[Long] = {
-    val obs = org.apache.spark.sql.Observation()
+    import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+    import org.apache.spark.sql.execution.QueryExecution
+    val obs = s"graft_violations_${java.util.UUID.randomUUID()}"
     val counts = cons.zipWithIndex.map { case ((_, e), i) =>
       sum(when(expr(e) === false, 1L).otherwise(0L)).as(s"c$i")
     }
@@ -627,9 +594,24 @@ object TxTable {
           .observe(obs, counts.head, counts.tail: _*)
           .select(hidden.map(col): _*).toDF(names: _*)
     }
-    run(observed)
-    val r = scala.concurrent.Await.result(obs.future, ObservedCountsWait)
-    cons.indices.map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
+    val got = scala.concurrent.Promise[org.apache.spark.sql.Row]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.exists {
+              case c: CollectMetrics => c.name == obs
+              case _ => false
+            })
+          qe.observedMetrics.get(obs).foreach(got.trySuccess)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    val listeners = df.sparkSession.listenerManager
+    listeners.register(listener)
+    try {
+      run(observed)
+      val r = scala.concurrent.Await.result(got.future, ObservedCountsWait)
+      cons.indices.map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
+    } finally listeners.unregister(listener)
   }
 
   /** Executes a frame for its side effects only — the action an
@@ -1115,7 +1097,7 @@ object TxTable {
     require(cols.intersect(parts).isEmpty,
       s"bloom on partition columns is pointless — partition-value " +
         s"pseudo-stats already prune them exactly: ${cols.intersect(parts)}")
-    commitLines(spark, path, "setbloom", Seq.empty, (base, _) => base,
+    metaCommit(spark, path, "setbloom",
       Map(BloomMetaKey -> enc(s"${cols.mkString(",")}:$bits:$hashes")))
   }
 
@@ -1152,8 +1134,7 @@ object TxTable {
     * keep pruning — they are still TRUE statements about their files.
     */
   def dropBloomFilters(spark: SparkSession, path: String): Long =
-    commitLines(spark, path, "setbloom", Seq.empty, (base, _) => base,
-      Map(BloomMetaKey -> ""))
+    metaCommit(spark, path, "setbloom", Map(BloomMetaKey -> ""))
 
   /** The double-hashing position columns: pos_i = (h1 + i·h2) mod m
     * with h1 = xxhash64(v) mod m and h2 = xxhash64(v, 1) mod (m−1) + 1
@@ -1607,7 +1588,7 @@ object TxTable {
       case Like(a, Literal(p, org.apache.spark.sql.types.StringType), esc)
           if nameOf(a).isDefined && p != null && esc == '\\' =>
         likePrefix(p.toString).forall(testPrefix(a, _))
-      // boolean combinators: resolveConjuncts only splits TOP-LEVEL
+      // boolean combinators: mayMatchLines only splits TOP-LEVEL
       // ANDs, so a disjunctive predicate (`day = 1 OR day = 2`, or the
       // per-partition prune `(a=1 AND b=2) OR (a=3 AND b=4)`) arrives
       // here whole — a file may match an OR iff SOME branch may match,
@@ -1619,30 +1600,44 @@ object TxTable {
     }
   }
 
-  /** Resolve `predicate` by analyzing a filter over the snapshot
-    * relation and split the typed condition into top-level AND
-    * conjuncts. A Spark 4 Column is a ColumnNode tree, not a Catalyst
-    * expression; analysis both resolves it and types the literals into
-    * their internal representations (dates → days, timestamps →
-    * micros), which is what [[mayMatch]] compares stats against. Empty
-    * when no Filter node survives analysis (e.g. `lit(true)`).
+  /** The manifest `lines` that may hold a row matching `predicate`
+    * (all of them when None) — the one file-pruning filter every
+    * predicate-scoped read, rewrite and conflict scope shares.
+    * Conservative: a line is dropped only when its footer stats,
+    * partition-path pseudo-stats or bloom tokens PROVE that some
+    * top-level AND conjunct of the predicate cannot match (bloom tokens
+    * exist only for data columns, so they never prune a partition-column
+    * predicate); `orKeep` keeps a pruned line anyway. `predicate` is
+    * resolved by analyzing a filter over the snapshot relation: a
+    * Spark 4 Column is a ColumnNode tree, not a Catalyst expression,
+    * and analysis both resolves it and types the literals into their
+    * internal representations (dates → days, timestamps → micros),
+    * which is what [[mayMatch]] compares stats against. A predicate
+    * with no Filter left after analysis (e.g. `lit(true)`) prunes
+    * nothing.
     */
-  private def resolveConjuncts(spark: SparkSession, p: Path,
-                               lines: Seq[String],
-                               meta: Map[String, String],
-                               predicate: org.apache.spark.sql.Column,
-                               mergeSchema: Boolean,
-                               schema: Option[StructType]): Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+  private def mayMatchLines(spark: SparkSession, p: Path, lines: Seq[String],
+                            meta: Map[String, String],
+                            predicate: Option[org.apache.spark.sql.Column],
+                            mergeSchema: Boolean,
+                            schema: Option[StructType],
+                            orKeep: Map[String, ColStats] => Boolean =
+                              _ => false): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{And, Expression}
     def split(e: Expression): Seq[Expression] = e match {
       case And(l, r) => split(l) ++ split(r)
       case other => Seq(other)
     }
-    scanFiles(spark, p, lines, meta, mergeSchema, schema)
-      .where(predicate).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          split(f.condition)
-      }.getOrElse(Seq.empty)
+    val cs = predicate.filter(_ => lines.nonEmpty).toSeq.flatMap(pred =>
+      scanFiles(spark, p, lines, meta, mergeSchema, schema)
+        .where(pred).queryExecution.analyzed.collectFirst {
+          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+            split(f.condition)
+        }.getOrElse(Seq.empty))
+    lines.filter { l =>
+      val st = statsOf(l) ++ partitionStats(pathOf(l))
+      cs.forall(c => mayMatch(st, c) && bloomMayMatch(st, c)) || orKeep(st)
+    }
   }
 
   /** Predicate-pruned snapshot read: drops every file whose manifest
@@ -1663,18 +1658,8 @@ object TxTable {
     val (head, lines) = readManifest(fs, p, vs.last)
     val meta = parseMeta(head)
     val pinned = schema.orElse(declaredSchemaOf(meta))
-    val cs =
-      if (lines.isEmpty)
-        Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
-      else resolveConjuncts(spark, p, lines, meta, predicate, mergeSchema,
-        pinned)
-    val kept = lines.filter { l =>
-      // footer stats + partition-value pseudo-stats: a partition-column
-      // predicate prunes from the manifest path alone (no footer I/O);
-      // bloom tokens additionally prune = / IN on high-cardinality cols
-      val st = statsOf(l) ++ partitionStats(pathOf(l))
-      cs.forall(c => mayMatch(st, c) && bloomMayMatch(st, c))
-    }
+    val kept = mayMatchLines(spark, p, lines, meta, Some(predicate),
+      mergeSchema, pinned)
     if (lines.isEmpty) pinned match {
       case Some(s) => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
@@ -2164,17 +2149,17 @@ object TxTable {
              schema: Option[StructType] = None,
              changeFeed: Boolean = true,
              meta: Map[String, String] = Map.empty,
-             guard: Map[String, Long] = Map.empty): Option[Long] =
-    rewriteMatching(spark, path, predicate, partitionCols, mergeSchema,
-      schema, changeFeed, meta, guard)(
-      rewrite = { (candidateRows, pred) =>
-        // keep rows where the predicate is FALSE or NULL (SQL DELETE)
-        candidateRows.where(not(coalesce(pred, lit(false))))
-      },
-      changesOf = { (candidateRows, pred) =>
-        candidateRows.where(coalesce(pred, lit(false)))
-          .withColumn(ChangeTypeCol, lit("delete"))
-      })
+             guard: Map[String, Long] = Map.empty): Option[Long] = {
+    val hit = coalesce(predicate, lit(false))
+    val files = headFilesMatching(spark, path, Some(predicate), mergeSchema,
+      schema)
+    if (files.isEmpty) None
+    else Some(rewriteFiles(spark, path, files, partitionCols, mergeSchema,
+      schema, meta, guard, Option.when(changeFeed)(
+        _.where(hit).withColumn(ChangeTypeCol, lit("delete"))))(
+      // keep rows where the predicate is FALSE or NULL (SQL DELETE)
+      _.where(not(hit))))
+  }
 
   /** Row-level UPDATE, copy-on-write: in files that may hold matching
     * rows (stats-pruned like [[delete]]), each `set` column becomes
@@ -2208,95 +2193,27 @@ object TxTable {
     // sequential fold would let SET a = b, b = a read the updated a)
     def applySet(rows: DataFrame): DataFrame =
       rows.select(rows.columns.map { name =>
-        set.get(name).map(_.as(name))
-          .getOrElse(org.apache.spark.sql.functions.col(name))
+        set.get(name).map(_.as(name)).getOrElse(col(name))
       }.toIndexedSeq: _*)
-    rewriteMatching(spark, path, predicate, partitionCols, mergeSchema,
-      schema, changeFeed)(
-      rewrite = { (candidateRows, pred) =>
-        val unknown = set.keySet -- candidateRows.columns
-        require(unknown.isEmpty,
-          s"SET columns not in the table: ${unknown.mkString(", ")}")
-        candidateRows.select(candidateRows.columns.map { name =>
-          set.get(name) match {
-            case Some(expr) =>
-              org.apache.spark.sql.functions.when(coalesce(pred, lit(false)), expr)
-                .otherwise(org.apache.spark.sql.functions.col(name)).as(name)
-            case None => org.apache.spark.sql.functions.col(name)
-          }
-        }.toIndexedSeq: _*)
-      },
-      changesOf = { (candidateRows, pred) =>
-        val matched = candidateRows.where(coalesce(pred, lit(false)))
+    val hit = coalesce(predicate, lit(false))
+    val files = headFilesMatching(spark, path, Some(predicate), mergeSchema,
+      schema)
+    if (files.isEmpty) None
+    else Some(rewriteFiles(spark, path, files, partitionCols, mergeSchema,
+      schema, changes = Option.when(changeFeed) { rows =>
+        val matched = rows.where(hit)
         matched.withColumn(ChangeTypeCol, lit("update_preimage"))
           .unionByName(applySet(matched)
             .withColumn(ChangeTypeCol, lit("update_postimage")))
-      })
-  }
-
-  /** Shared copy-on-write core of [[delete]]/[[update]]: stats-prune
-    * the head snapshot's files against `predicate`, hand the candidate
-    * rows (and the predicate) to `rewrite`, and commit its result plus
-    * the untouched files as one atomic replace version. `changesOf`
-    * produces the commit's row-level change feed (see
-    * [[ChangeDataMetaKey]]) — one extra bounded job over the candidate
-    * files only, written before the claim so the winning manifest
-    * atomically references it.
-    */
-  private def rewriteMatching(spark: SparkSession, path: String,
-                              predicate: org.apache.spark.sql.Column,
-                              partitionCols: Seq[String],
-                              mergeSchema: Boolean,
-                              schema: Option[StructType],
-                              changeFeed: Boolean = true,
-                              meta: Map[String, String] = Map.empty,
-                              guard: Map[String, Long] = Map.empty)
-                             (rewrite: (DataFrame, org.apache.spark.sql.Column) => DataFrame,
-                              changesOf: (DataFrame, org.apache.spark.sql.Column) => DataFrame): Option[Long] = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val (headLine, lines) = readManifest(fs, p, vs.last)
-    if (lines.isEmpty) return None
-    val headMeta = parseMeta(headLine)
-    val pinned = schema.orElse(declaredSchemaOf(headMeta))
-    val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
-    val cs = resolveConjuncts(spark, p, lines, headMeta, predicate,
-      mergeSchema, pinned)
-    // footer stats + partition-path pseudo-stats: a DELETE/UPDATE whose
-    // predicate names a partition column rewrites only that partition's
-    // files — pruned from the manifest alone, same as readWhere
-    val (candidates, _) = lines.partition { l =>
-      val st = statsOf(l) ++ partitionStats(pathOf(l))
-      cs.forall(c => mayMatch(st, c) && bloomMayMatch(st, c))
-    }
-    if (candidates.isEmpty) return None
-    // drop exactly the files being rewritten; everything else survives —
-    // including files a RACING writer appends between this analysis and
-    // the slot claim (the commit retry re-reads the new head, and a
-    // keep-only-the-analyzed-set filter would silently drop them)
-    val candidatePaths = candidates.map(pathOf).toSet
-    val candidateRows =
-      scanFiles(spark, p, candidates, headMeta, mergeSchema, pinned)
-    // build the rewrite plan FIRST: its eager validations (unknown SET
-    // columns, …) must fail before any change file hits disk
-    val rewritten = rewrite(candidateRows, predicate)
-    // changeFeed=false skips the capture job AND the meta token, so
-    // readers fall back to file-granular capture (honest coarseness,
-    // never a false "no changes" claim)
-    val cdfMeta =
-      if (changeFeed) writeChangeData(fs, p, changesOf(candidateRows, predicate))
-      else Map.empty[String, String]
-    // a rewrite that empties every candidate while NON-candidate files
-    // survive needs no schema-carrier part: the snapshot keeps real
-    // files (a racing delete of those survivors would leave a
-    // file-less snapshot — the metadata-only-commit situation
-    // readVersion already handles via a pinned/declared schema)
-    val survivorsExist = lines.exists(l => !candidatePaths.contains(pathOf(l)))
-    Some(commit(spark, path, rewritten, "replace",
-      (base, _) => base.filterNot(l => candidatePaths.contains(pathOf(l))),
-      layout, meta = cdfMeta ++ meta, requirePresent = candidatePaths,
-      guard = guard, allowZeroParts = survivorsExist))
+      }) { rows =>
+      val unknown = set.keySet -- rows.columns
+      require(unknown.isEmpty,
+        s"SET columns not in the table: ${unknown.mkString(", ")}")
+      rows.select(rows.columns.map { name =>
+        set.get(name).fold(col(name))(e =>
+          when(hit, e).otherwise(col(name)).as(name))
+      }.toIndexedSeq: _*)
+    })
   }
 
   /** Keyed MERGE (upsert), copy-on-write: each row of `updates`
@@ -2550,7 +2467,7 @@ object TxTable {
     val (headLine, lines) = readManifest(fs, p, vs.last)
     val headMeta = parseMeta(headLine)
     val pinned = schema.orElse(declaredSchemaOf(headMeta))
-    val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
+    val layout = layoutOrDeclared(headMeta, partitionCols)
     val s0 = source.localCheckpoint()
     val data = dataCols.getOrElse(s0)
     // the probe: one aggregate yields the key bounds, the null-key flags
@@ -2571,17 +2488,18 @@ object TxTable {
       s"${counted.where(col(cnt) > 1).limit(1).collect().headOption}" +
       " — aggregate it first so one row per key remains (Delta's" +
       " multiple-matches error)")
-    // a commit of the inserts alone, in the data columns' shape
-    def insertOnly(baseKeep: (Seq[String], Seq[String]) => Seq[String]) = {
+    // a commit of the inserts alone, in the data columns' shape; it
+    // removes no file, so every head file survives, racing ones too
+    def insertOnly() = {
       val kept =
         if (!c.insertUnmatched) s0.where(lit(false))
         else c.insertWhen.fold(s0)(s0.where(_))
       val inserts = kept.select(data.schema.fields.toIndexedSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*)
-      commit(spark, path, inserts, "replace", baseKeep, layout,
+      commit(spark, path, inserts, "replace", (base, _) => base, layout,
         meta ++ (if (changeFeed) writeChangeData(fs, p,
           inserts.withColumn(ChangeTypeCol, lit("insert")))
-        else Map.empty[String, String]), guard = guard)
+        else Map.empty[String, String]), ReadSet(guard = guard))
     }
     // nothing to rewrite, but meta (e.g. a consumer offset) must still
     // land durably: a metadata-only commit — silently dropping it would
@@ -2590,9 +2508,9 @@ object TxTable {
     // caller is asking "did a concurrent committer beat me"
     def metaOnly(): Long =
       if (meta.isEmpty && guard.isEmpty) vs.last
-      else commitLines(spark, path, "append", Seq.empty,
-        (base, _) => base, meta + (ChangeDataMetaKey -> "0"), guard = guard)
-    if (lines.isEmpty) return insertOnly((_, _) => Seq.empty)
+      else metaCommit(spark, path, "append", meta + (ChangeDataMetaKey -> "0"),
+        ReadSet(guard = guard))
+    if (lines.isEmpty) return insertOnly()
     // an empty source is NOT a no-op under a by-source clause: every
     // target row is then unmatched and subject to the by-source clauses
     if (sourceEmpty && !c.bySource) return metaOnly()
@@ -2620,36 +2538,24 @@ object TxTable {
     // by-source clause disables pruning: any file may hold
     // source-unmatched rows, so every file is a candidate. The null-key
     // flags are null when the source is empty
-    val cs =
-      if (c.bySource)
-        Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
-      else {
-        val boundPreds = keyCols.zipWithIndex.flatMap { case (k, i) =>
-          if (probe.isNullAt(2 * i) || probe.isNullAt(2 * i + 1)) None
-          else Some(col(k).between(lit(probe.get(2 * i)),
-            lit(probe.get(2 * i + 1))))
-        }
-        if (boundPreds.isEmpty)
-          Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
-        else resolveConjuncts(spark, p, lines, headMeta,
-          boundPreds.reduce(_ && _), mergeSchema, pinned)
-      }
+    val bounds = keyCols.zipWithIndex.flatMap { case (k, i) =>
+      if (c.bySource || probe.isNullAt(2 * i) || probe.isNullAt(2 * i + 1))
+        None
+      else Some(col(k).between(lit(probe.get(2 * i)),
+        lit(probe.get(2 * i + 1))))
+    }.reduceOption(_ && _)
     val anyNullKey = nullSafeKeys && keyCols.indices.map(2 * keyCols.size + _)
       .exists(i => !probe.isNullAt(i) && probe.getInt(i) == 1)
-    def mayHoldNullKey(st: Map[String, ColStats]): Boolean =
-      keyCols.exists(k => st.get(k).flatMap(_.nulls).forall(_ > 0))
-    val candidates = lines.filter { l =>
-      lazy val st = statsOf(l) ++ partitionStats(pathOf(l))
-      cs.forall(mayMatch(st, _)) || (anyNullKey && mayHoldNullKey(st))
-    }
+    val candidates = mayMatchLines(spark, p, lines, headMeta, bounds,
+      mergeSchema, pinned, orKeep = st => anyNullKey &&
+        keyCols.exists(k => st.get(k).flatMap(_.nulls).forall(_ > 0)))
     // no candidate file can hold a match: every passing source row is an
     // insert and nothing is rewritten; with inserts off the statement is
     // a no-op (meta/guard still honored)
     if (candidates.isEmpty)
-      return if (c.insertUnmatched) insertOnly((base, _) => base)
-      else metaOnly()
-    // see rewriteMatching: drop exactly the rewritten files, so a racing
-    // append between analysis and claim is never lost
+      return if (c.insertUnmatched) insertOnly() else metaOnly()
+    // drop exactly the rewritten files (see [[rewriteFiles]]), so a
+    // racing append between analysis and claim is never lost
     val candidatePaths = candidates.map(pathOf).toSet
     val existing = scanFiles(spark, p, candidates, headMeta, mergeSchema,
       pinned)
@@ -2785,11 +2691,10 @@ object TxTable {
     // plan when it executes
     if (changeFeed)
       joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try commit(spark, path, newData, "replace",
-      (base, _) => base.filterNot(l => candidatePaths.contains(pathOf(l))),
+    try commit(spark, path, newData, "replace", allBut(candidatePaths),
       layout, meta ++ changes.fold(Map.empty[String, String])(
         writeChangeData(fs, p, _)),
-      requirePresent = candidatePaths, guard = guard)
+      ReadSet(files = Some(candidatePaths), guard = guard))
     finally if (changeFeed) joined.unpersist(blocking = false)
   }
 
@@ -2807,8 +2712,8 @@ object TxTable {
     *    conservatively kept on every point probe — after ANALYZE they
     *    prune like post-config files.
     *
-    * Concurrency: `requirePresent` pins every refreshed file into the
-    * claim, so a racing DML that removed one aborts this commit
+    * Concurrency: every refreshed file is in the commit's read set, so
+    * a racing DML that removed one aborts this commit
     * instead of letting it resurrect dead rows. Already-complete
     * tables are a no-op (head version returned, no commit). Cost: one
     * footer read per incomplete file + (blooms only) one bounded scan
@@ -2818,8 +2723,8 @@ object TxTable {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, vs.last)._2
-    val bloomCfg = bloomConfigOf(parseMeta(readManifest(fs, p, vs.last)._1))
+    val (head, lines) = readManifest(fs, p, vs.last)
+    val bloomCfg = bloomConfigOf(parseMeta(head))
     def complete(l: String): Boolean = {
       val st = statsOf(l)
       val hasStats = st.exists(_._2.rows.isDefined)
@@ -2844,9 +2749,8 @@ object TxTable {
     }
     if (kept.sorted == todo.sorted) return vs.last // nothing computable
     val todoPaths = todo.map(pathOf).toSet
-    commitLines(spark, path, "analyze", kept,
-      (base, _) => base.filterNot(l => todoPaths.contains(pathOf(l))),
-      requirePresent = todoPaths)
+    commitLines(spark, path, "analyze", kept, allBut(todoPaths),
+      read = ReadSet(files = Some(todoPaths)))
   }
 
   /** Carried meta key declaring the table's standing CLUSTERING intent
@@ -2880,14 +2784,13 @@ object TxTable {
     val parts = declaredPartitionCols(spark, path).getOrElse(Nil)
     require(cols.intersect(parts).isEmpty,
       s"clustering on partition columns is redundant: ${cols.intersect(parts)}")
-    commitLines(spark, path, "cluster", Seq.empty, (base, _) => base,
+    metaCommit(spark, path, "cluster",
       Map(ClusterMetaKey -> enc(cols.mkString(","))))
   }
 
   /** Remove the clustering declaration (tombstoned empty). */
   def dropClusteringColumns(spark: SparkSession, path: String): Long =
-    commitLines(spark, path, "cluster", Seq.empty, (base, _) => base,
-      Map(ClusterMetaKey -> ""))
+    metaCommit(spark, path, "cluster", Map(ClusterMetaKey -> ""))
 
   /** Rewrite the head snapshot Z-order-clustered on `zorderCols`
     * (Delta's `OPTIMIZE ... ZORDER BY`, as a log commit): rows with
@@ -2947,8 +2850,11 @@ object TxTable {
                                mergeSchema: Boolean): Long = {
     val numFiles =
       math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    rewriteFiles(spark, path, relFiles, layout, mergeSchema,
-      None) { snapshot =>
+    // data-identical by construction: the commit declares zero change
+    // rows, so change-feed readers skip it instead of seeing the whole
+    // scope churn as delete+insert
+    rewriteFiles(spark, path, relFiles, layout, mergeSchema, None,
+      meta = Map(ChangeDataMetaKey -> "0")) { snapshot =>
       // ONE clustering column = a plain range cluster: the 1-D
       // "z-order" is exactly a sort, it works for ANY orderable type
       // (bit interleaving needs numeric bounds — a string sort key
@@ -3160,8 +3066,8 @@ object TxTable {
       try Some(commitLines(spark, path, "append", newLines,
         (base, _) => base,
         meta = layoutMeta + (key -> epochId.toString),
-        guard = Map(key -> epochId),
-        requireConstraints = Some(constraintFingerprint(activeConstraints))))
+        read = ReadSet(constraints = Some(activeConstraints),
+          guard = Map(key -> epochId))))
       catch {
         case cme: java.util.ConcurrentModificationException =>
           // a CME here is EITHER the claim-loop txn guard (a racing
@@ -3169,7 +3075,7 @@ object TxTable {
           // discard ours) OR an unrelated conflict (the constraint
           // set changed under us). Only the first maps to None:
           // the caller deletes the epoch's data files on None, so
-          // answering None to a constraint-fingerprint CME would
+          // answering None to a constraint-set CME would
           // silently DROP the micro-batch. Re-check durability and
           // rethrow anything that isn't actually a replay — the
           // thrown error fails the batch and the checkpoint retries.
@@ -3225,34 +3131,26 @@ object TxTable {
   }
 
   /** The head snapshot's manifest-relative files that may hold rows
-    * matching `where` (all of them when None) — stats + partition-path
-    * pruned, conservative. The manifest-only (no data I/O) way for a
-    * partition-bounded writer to learn its conflict scope.
+    * matching `where` (all of them when None) — stats, partition-path
+    * and bloom pruned, conservative. The manifest-only (no data I/O) way
+    * for a rewrite to pick its files and for a partition-bounded writer
+    * to learn its conflict scope. `schema` pins the read the predicate
+    * is resolved against (the declared schema when None).
     */
   private[ops] def headFilesMatching(spark: SparkSession, path: String,
                                      where: Option[org.apache.spark.sql.Column],
-                                     mergeSchema: Boolean = false): Seq[String] = {
+                                     mergeSchema: Boolean = false,
+                                     schema: Option[StructType] = None)
+      : Seq[String] = {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val (fs, p) = fsFor(spark, path)
     val (head, lines) = readManifest(fs, p, vs.last)
     require(lines.nonEmpty || where.isDefined,
       s"nothing to rewrite: head of $path is empty")
-    val kept = where match {
-      case None => lines
-      case Some(pred) =>
-        if (lines.isEmpty) Seq.empty
-        else {
-          val meta = parseMeta(head)
-          val cs = resolveConjuncts(spark, p, lines, meta, pred,
-            mergeSchema, declaredSchemaOf(meta))
-          lines.filter { l =>
-            val st = statsOf(l) ++ partitionStats(pathOf(l))
-            cs.forall(mayMatch(st, _))
-          }
-        }
-    }
-    kept.map(pathOf)
+    val meta = parseMeta(head)
+    mayMatchLines(spark, p, lines, meta, where, mergeSchema,
+      schema.orElse(declaredSchemaOf(meta))).map(pathOf)
   }
 
   /** ceil(live snapshot bytes / targetBytes) — the file count a layout
@@ -3283,35 +3181,39 @@ object TxTable {
   def rewriteSnapshot(spark: SparkSession, path: String,
                       partitionCols: Seq[String] = Nil,
                       mergeSchema: Boolean = false,
-                      schema: Option[StructType] = None,
-                      dataChange: Boolean = true)
-                     (transform: DataFrame => DataFrame): Long = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, vs.last)._2
-    require(lines.nonEmpty, s"nothing to rewrite: head of $path is empty")
-    val layout = layoutOrDeclared(fs, p, vs.last, partitionCols)
-    rewriteFiles(spark, path, lines.map(pathOf), layout, mergeSchema,
-      schema, dataChange)(transform)
-  }
+                      schema: Option[StructType] = None)
+                     (transform: DataFrame => DataFrame): Long =
+    rewriteFiles(spark, path, headFilesMatching(spark, path, None),
+      partitionCols, mergeSchema, schema)(transform)
 
-  /** The maintenance core shared by [[rewriteSnapshot]] (whole head)
-    * and the scoped [[compact]]/[[optimize]] (candidate files only):
-    * rewrite EXACTLY `relFiles` through `transform`, keep every other
-    * head file verbatim, commit one atomic replace. Racing APPENDS are
-    * kept; a conflicting DML that removed one of the read files aborts
-    * (requirePresent) instead of resurrecting its rows.
+  /** The one copy-on-write core — [[delete]], [[update]], [[compact]],
+    * [[optimize]] and [[rewriteSnapshot]] all run on it: rewrite EXACTLY
+    * `relFiles` of the head through `transform`, keep every other head
+    * file verbatim, and commit one atomic replace carrying `meta` and
+    * `guard`. The read set is `relFiles`: racing APPENDS are kept, and a
+    * conflicting commit that removed one of them aborts this one instead
+    * of resurrecting its rows. `changes` derives the commit's row-level
+    * change feed from the rows read (see [[ChangeDataMetaKey]]) — one
+    * bounded job, written before the claim so the winning manifest
+    * references it; None writes no feed. `partitionCols` is the layout
+    * to keep, the declared one when empty. `schema` pins the read
+    * (notably hive-partition column types, which directory-string
+    * re-inference would otherwise silently retype — a string day "07"
+    * re-landing as int 7).
     */
   private def rewriteFiles(spark: SparkSession, path: String,
                            relFiles: Seq[String],
-                           layout: Seq[String],
+                           partitionCols: Seq[String],
                            mergeSchema: Boolean,
                            schema: Option[StructType],
-                           dataChange: Boolean = false)
+                           meta: Map[String, String] = Map.empty,
+                           guard: Map[String, Long] = Map.empty,
+                           changes: Option[DataFrame => DataFrame] = None)
                           (transform: DataFrame => DataFrame): Long = {
-    val vs = versions(spark, path)
     val (fs, p) = fsFor(spark, path)
+    val (head, lines) = readManifest(fs, p, versions(spark, path).last)
+    val headMeta = parseMeta(head)
+    val layout = layoutOrDeclared(headMeta, partitionCols)
     // a hive-partitioned file set MUST be rewritten with its layout, or
     // the flat rewrite breaks directory pruning and a later
     // replacePartitions would keep (and so duplicate) the old rows;
@@ -3320,26 +3222,27 @@ object TxTable {
       !relFiles.exists(f => partitionDirOf(f).nonEmpty),
       s"$path is hive-partitioned — pass partitionCols so the rewrite " +
       "preserves the partition layout")
-    val rewritten = relFiles.toSet
-    val (head, lines) = readManifest(fs, p, vs.last)
-    val meta = parseMeta(head)
+    val read = relFiles.toSet
     // the head's lines for relFiles carry their schema ids; a file the
-    // head no longer lists scans bare (the claim's requirePresent
+    // head no longer lists scans bare (the claim's read-set check
     // aborts that commit anyway)
     val lineOf = lines.map(l => pathOf(l) -> l).toMap
     val snapshot = scanFiles(spark, p,
-      relFiles.map(f => lineOf.getOrElse(f, f)), meta, mergeSchema,
-      schema.orElse(declaredSchemaOf(meta)))
-    // dataChange=false (OPTIMIZE/compact): the transform is
-    // data-identical by contract, so the commit declares zero change
-    // rows — change-feed readers skip it instead of seeing the whole
-    // snapshot churn as delete+insert
-    val cdfMeta =
-      if (dataChange) Map.empty[String, String]
-      else Map(ChangeDataMetaKey -> "0")
-    commit(spark, path, transform(snapshot), "replace",
-      (base, _) => base.filterNot(l => rewritten.contains(pathOf(l))),
-      layout, cdfMeta, requirePresent = rewritten)
+      relFiles.map(f => lineOf.getOrElse(f, f)), headMeta, mergeSchema,
+      schema.orElse(declaredSchemaOf(headMeta)))
+    // build the rewrite plan FIRST: its eager validations (unknown SET
+    // columns, …) must fail before any change file hits disk
+    val rewritten = transform(snapshot)
+    val feed = changes.fold(Map.empty[String, String])(f =>
+      writeChangeData(fs, p, f(snapshot)))
+    // a rewrite that empties every file it read while OTHER files
+    // survive needs no schema-carrier part: the snapshot keeps real
+    // files (a racing delete of those survivors would leave a file-less
+    // snapshot — the metadata-only-commit situation readVersion already
+    // handles via a pinned/declared schema)
+    commit(spark, path, rewritten, "replace", allBut(read), layout,
+      feed ++ meta, ReadSet(files = Some(read), guard = guard),
+      allowZeroParts = lines.exists(l => !read(pathOf(l))))
   }
 
   /** Roll the table back (or forward) to EXACTLY the snapshot of
@@ -3520,7 +3423,7 @@ object TxTable {
     }
     val carried = parseMeta(headLine).filter(_._1.startsWith("graft."))
     commitLines(spark, dstPath, "clone", lines, (_, _) => Seq.empty,
-      carried, firstCommitOnly = true)
+      carried, ReadSet(version = Some(0L)))
   }
 
   /** Hard-link `src` to `dst` when both sides are the local FS (zero
@@ -3644,9 +3547,8 @@ object TxTable {
     enforceConstraints(spark, path, fs, p, freshRels, activeConstraints)
     val newLines = statsLines(spark, fs, p, path, freshRels)
     val freshSet = freshRels.toSet
-    val v = commitLines(spark, path, "copyinto", newLines,
-      (base, _) => base.filterNot(b => freshSet.contains(pathOf(b))),
-      requireConstraints = Some(constraintFingerprint(activeConstraints)))
+    val v = commitLines(spark, path, "copyinto", newLines, allBut(freshSet),
+      read = ReadSet(constraints = Some(activeConstraints)))
     (v, freshRels, skipped.size)
   }
 
@@ -3669,7 +3571,7 @@ object TxTable {
              meta: Map[String, String] = Map.empty,
              guard: Map[String, Long] = Map.empty): Long =
     commit(spark, path, df, "append", (base, _) => base, partitionCols, meta,
-      guard = guard)
+      ReadSet(guard = guard))
 
   /** Replace-commit: next version = the head's files that survive
     * `keepExisting` + this write's files. The partition-bounded publish
@@ -3692,47 +3594,125 @@ object TxTable {
     * untouched partitions keep their exact existing files (never
     * rewritten, never even read), replaced partitions swap atomically
     * with the manifest claim.
+    *
+    * `expectUnchanged`: the head files the caller read — every file of
+    * the partitions it replaces. The commit then aborts
+    * (ConcurrentModificationException) when the replace would drop a
+    * file outside that set, such as a racing append into a replaced
+    * partition (even one that had no files when it was read), or when
+    * one of the read files is gone. None is a blind replace.
     */
   def replacePartitions(spark: SparkSession, path: String, df: DataFrame,
                         partitionCols: Seq[String],
-                        expectUnchanged: Option[(Set[String], Set[String])] = None): Long =
+                        expectUnchanged: Option[Set[String]] = None): Long =
     commit(spark, path, df, "replace", (base, newFiles) => {
       val replaced = newFiles.map(f => partitionDirOf(pathOf(f))).toSet
       base.filterNot(f => replaced.contains(partitionDirOf(pathOf(f))))
-    }, partitionCols, requireUnchangedUnder = expectUnchanged)
+    }, partitionCols, read = ReadSet(files = expectUnchanged))
 
   /** `data/<uuid>/day=10/part-x.parquet` → `day=10` (nested partitions
     * keep all `key=value` segments; unpartitioned files → ""). Writer
     * dir names are hive-escaped on BOTH sides, so string equality is
     * value equality.
     */
-  private[ops] def partitionDirOf(rel: String): String =
+  private def partitionDirOf(rel: String): String =
     rel.split('/').drop(2).dropRight(1).mkString("/")
+
+  /** What a commit read of the table, checked against the head at every
+    * claim attempt — Delta's optimistic-concurrency check, reduced to
+    * the facts a commit here can depend on:
+    *
+    *  - `files`: the head files the commit read. Every file the commit
+    *    removes from the head (`base` minus `baseKeep(base, new)`) must
+    *    be one of them, and each must still be live. So a concurrent
+    *    commit that removed a file this one rewrote, or added a file
+    *    this one would drop, aborts it; racing appends it keeps do not.
+    *    None is a blind write (overwrite, `replace`, restore, clone, a
+    *    metadata-only commit): nothing is checked.
+    *  - `version`: the head version the commit is pinned to; any other
+    *    head aborts it. `Some(0)` means the table must not exist yet
+    *    (a create), and a lost race says "already exists".
+    *  - `constraints`: the CHECK-constraint set the commit's data was
+    *    validated against; a different set at the head aborts it.
+    *  - `guard`: carried-meta preconditions — the head must not carry a
+    *    key at a value >= its guard's (a concurrent committer of the
+    *    same logical transaction won; see [[commitLines]]).
+    */
+  private final case class ReadSet(
+      files: Option[Set[String]] = None,
+      version: Option[Long] = None,
+      constraints: Option[Map[String, String]] = None,
+      guard: Map[String, Long] = Map.empty)
+
+  /** Throws when the head a claim would build on breaks `read`: `head`
+    * is its version, `headLine`/`base` its manifest, `kept` what the
+    * commit keeps of `base`. The exception names what moved.
+    */
+  private def checkReadSet(path: String, read: ReadSet, head: Option[Long],
+                           headLine: String, base: Seq[String],
+                           kept: Seq[String]): Unit = {
+    def conflict(what: String): Nothing =
+      throw new java.util.ConcurrentModificationException(
+        s"conflicting commit on $path: $what (retry the operation)")
+    read.version.foreach { v0 =>
+      if (v0 == 0L && head.isDefined)
+        throw new IllegalArgumentException(
+          s"graft table $path already exists (concurrent create)")
+      if (head.getOrElse(0L) != v0)
+        conflict(s"head advanced past $v0 while this operation was " +
+          "pinned to it")
+    }
+    read.files.foreach { files =>
+      val live = base.map(pathOf).toSet
+      val moved = (live -- kept.map(pathOf) -- files) ++ (files -- live)
+      if (moved.nonEmpty)
+        conflict("files this commit read changed concurrently: " +
+          moved.take(3).mkString(", "))
+    }
+    val headMeta = parseMeta(headLine)
+    read.constraints.foreach { cons =>
+      if (effectiveConstraints(headMeta) != cons)
+        conflict("CHECK constraints changed concurrently (this write was " +
+          "validated against the old set)")
+    }
+    read.guard.foreach { case (k, v) =>
+      headMeta.get(k).flatMap(s => scala.util.Try(s.toLong).toOption)
+        .filter(_ >= v).foreach { cur =>
+          throw new java.util.ConcurrentModificationException(
+            s"transaction guard on $path: $k already at $cur >= $v " +
+            "— a concurrent committer applied this increment first")
+        }
+    }
+  }
+
+  /** baseKeep of a rewrite that replaces exactly `files`: every other
+    * head file survives, including files racing commits add.
+    */
+  private def allBut(files: Set[String])
+      : (Seq[String], Seq[String]) => Seq[String] =
+    (base, _) => base.filterNot(l => files(pathOf(l)))
 
   /** Write `df` into a fresh immutable data dir and commit a manifest of
     * `baseKeep(head's files, this write's files) ++ the new files` under
-    * the next version. The slot claim loop is lock-free optimistic
-    * concurrency: losers recompute against the new head and retry, so no
-    * committed version is ever lost (see [[claimSlot]] for the
-    * atomicity argument).
+    * the next version — through [[commitLines]]' claim loop, whose
+    * read-set rule decides every conflict (see [[ReadSet]]). `read` is
+    * what the caller read; the CHECK-constraint set this commit counts
+    * its rows against joins it. `allowZeroParts`: see below.
     */
   private def commit(spark: SparkSession, path: String, df: DataFrame,
                      action: String,
                      baseKeep: (Seq[String], Seq[String]) => Seq[String],
                      partitionCols: Seq[String] = Nil,
                      meta: Map[String, String] = Map.empty,
-                     requirePresent: Set[String] = Set.empty,
-                     guard: Map[String, Long] = Map.empty,
-                     requireUnchangedUnder: Option[(Set[String], Set[String])] = None,
-                     requireHeadVersion: Option[Long] = None,
+                     read: ReadSet = ReadSet(),
                      allowZeroParts: Boolean = false): Long = {
     val (fs, p) = fsFor(spark, path)
     val dataDir = s"data/${java.util.UUID.randomUUID()}"
     // CHECK constraints are counted inside the write job, over the head's
     // constraint set read before it; a violating commit cleans up and
-    // throws, invisible to readers. The set's fingerprint rides into the
-    // claim loop, so a concurrent ADD/DROP CONSTRAINT aborts this commit
-    // instead of letting unvalidated data slip past the new rules
+    // throws, invisible to readers. The set rides in the read set, so a
+    // concurrent ADD/DROP CONSTRAINT aborts this commit instead of
+    // letting unvalidated data slip past the new rules
     val headMeta = versions(spark, path).lastOption
       .map(v => parseMeta(readManifest(fs, p, v)._1)).getOrElse(Map.empty)
     val activeConstraints = effectiveConstraints(headMeta)
@@ -3811,27 +3791,9 @@ object TxTable {
       else Map.empty[String, String]
     commitLines(spark, path, action, newLines, baseKeep,
       layoutMeta ++ recordMeta ++ meta,
-      requirePresent, guard, requireUnchangedUnder,
-      requireConstraints = Some(constraintFingerprint(activeConstraints)),
-      requireHeadVersion = requireHeadVersion)
+      read.copy(constraints = Some(activeConstraints)))
   }
 
-  /** The claim loop of [[commit]], usable on its own for METADATA-ONLY
-    * commits (`newLines` empty, baseKeep identity): the snapshot's file
-    * set is unchanged but the head manifest records new meta — how an
-    * incremental consumer durably advances its offset over an empty
-    * increment without writing a zero-row data file.
-    *
-    * `guard`: carried-meta preconditions revalidated on EVERY retry
-    * against the current head — if the head already carries `key` at a
-    * value >= the guard's, a concurrent committer for the same logical
-    * transaction won the race and this commit aborts
-    * (ConcurrentModificationException) instead of applying its work a
-    * second time. This is what makes "check processedVersion, then
-    * commit" safe under concurrent same-app writers: the check alone is
-    * check-then-act; the guard closes the window because claims are
-    * serialized by the slot.
-    */
   /** Metadata-only commit updating carried `graft.*` meta keys — the
     * internal primitive behind config/stats refreshes. Bloom filters,
     * clustering and constraints have bespoke public wrappers with
@@ -3849,20 +3811,44 @@ object TxTable {
         s"contract): ${meta.keys.filterNot(_.startsWith("graft."))}")
     require(versions(spark, path).nonEmpty,
       s"$path is not a TxTable (no $LogDir manifests)")
-    commitLines(spark, path, "setmeta", Seq.empty, (base, _) => base,
-      meta, guard = guard)
+    metaCommit(spark, path, "setmeta", meta, ReadSet(guard = guard))
   }
 
+  /** A metadata-only commit: the head's files unchanged, `meta`
+    * recorded, `read` checked.
+    */
+  private def metaCommit(spark: SparkSession, path: String, action: String,
+                         meta: Map[String, String],
+                         read: ReadSet = ReadSet()): Long =
+    commitLines(spark, path, action, Seq.empty, (base, _) => base, meta, read)
+
+  /** The claim loop of [[commit]], usable on its own for commits whose
+    * lines are already in hand — and for METADATA-ONLY commits
+    * (`newLines` empty, baseKeep identity): the snapshot's file set is
+    * unchanged but the head manifest records new meta — how an
+    * incremental consumer durably advances its offset over an empty
+    * increment without writing a zero-row data file.
+    *
+    * Every attempt reads the current head and checks `read` against it
+    * (see [[ReadSet]]) before claiming the next slot: the files the
+    * commit removes must be files it read, and each of those must still
+    * be live; a pinned version must still be the head; the validated
+    * constraint set must still be the head's; and no guarded key may
+    * have reached its guard. A failed check aborts with
+    * ConcurrentModificationException (IllegalArgumentException
+    * "already exists" for a create) — a conflicting commit won. A lost
+    * claim with no conflict retries against the NEW head, so an append
+    * or replace rebuilt there includes the winner's files. The guard
+    * is what makes "check processedVersion, then commit" safe under
+    * concurrent same-app writers: the check alone is check-then-act;
+    * the guard closes the window because claims are serialized by the
+    * slot.
+    */
   private def commitLines(spark: SparkSession, path: String, action: String,
                           newLines: Seq[String],
                           baseKeep: (Seq[String], Seq[String]) => Seq[String],
                           meta: Map[String, String] = Map.empty,
-                          requirePresent: Set[String] = Set.empty,
-                          guard: Map[String, Long] = Map.empty,
-                          requireUnchangedUnder: Option[(Set[String], Set[String])] = None,
-                          firstCommitOnly: Boolean = false,
-                          requireConstraints: Option[String] = None,
-                          requireHeadVersion: Option[Long] = None): Long = {
+                          read: ReadSet = ReadSet()): Long = {
     require(meta.forall { case (k, v) =>
       k.nonEmpty && !k.contains('=') &&
         !(k + v).exists(c => c == ' ' || c == '\n')
@@ -3874,88 +3860,17 @@ object TxTable {
     var committed = -1L
     while (committed < 0) {
       val head = versions(spark, path).lastOption
-      // a first-commit-only claim (CREATE) may only land as v1: a lost
-      // race means another creator won — surface "already exists"
-      // instead of silently replacing its declared metadata as v2
-      if (firstCommitOnly && head.isDefined)
-        throw new IllegalArgumentException(
-          s"graft table $path already exists (concurrent create)")
       val (prevHead, base) = head
         .map(v => readManifest(fs, p, v))
         .getOrElse(("", Seq.empty[String]))
-      // copy-on-write conflict check: if a concurrent commit removed a
-      // file THIS operation rewrote (another delete/update/merge or an
-      // overwrite won the race), committing our rewrite of its stale
-      // rows would duplicate or resurrect them — fail loudly instead
-      // (Delta's ConcurrentDeleteReadException). Racing APPENDS leave
-      // the required files in place and proceed safely.
-      if (requirePresent.nonEmpty) {
-        val basePaths = base.map(pathOf).toSet
-        val gone = requirePresent -- basePaths
-        if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"conflicting commit on $path: files this rewrite read were " +
-          s"removed by a concurrent commit (retry the operation): " +
-          gone.take(3).mkString(", "))
-      }
-      // partition-scope conflict check: the files under the given
-      // partition dirs must be EXACTLY the set this operation read —
-      // a racing append INTO a replaced partition would otherwise be
-      // silently dropped by the replace (requirePresent only catches
-      // removals, not additions)
-      requireUnchangedUnder.foreach { case (dirs, known) =>
-        val cur = base.map(pathOf)
-          .filter(f => dirs.contains(partitionDirOf(f))).toSet
-        if (cur != known)
-          throw new java.util.ConcurrentModificationException(
-            s"conflicting commit on $path: partitions this rewrite " +
-            s"replaces changed concurrently (retry the operation): " +
-            ((cur -- known) ++ (known -- cur)).take(3).mkString(", "))
-      }
-      // transaction guard: abort if a concurrent committer already
-      // advanced this key to (at least) the value we are claiming —
-      // Delta's ConcurrentTransactionException, for same-app races
-      if (guard.nonEmpty) {
-        val prevMeta = parseMeta(prevHead)
-        guard.foreach { case (k, v) =>
-          prevMeta.get(k).flatMap(s => scala.util.Try(s.toLong).toOption)
-            .filter(_ >= v).foreach { cur =>
-              throw new java.util.ConcurrentModificationException(
-                s"transaction guard on $path: $k already at $cur >= $v " +
-                "— a concurrent committer applied this increment first")
-            }
-        }
-      }
-      // constraint-set conflict check (Delta's metadata-changed
-      // semantics): this DATA commit was validated against a specific
-      // CHECK-constraint set; if a concurrent ADD/DROP CONSTRAINT
-      // moved the head's set since, committing unvalidated data would
-      // silently break the new constraint's whole-table promise —
-      // abort and let the caller retry under the new rules
-      requireConstraints.foreach { fp =>
-        val cur = constraintFingerprint(effectiveConstraints(
-          parseMeta(prevHead)))
-        if (cur != fp)
-          throw new java.util.ConcurrentModificationException(
-            s"conflicting commit on $path: CHECK constraints changed " +
-            "concurrently (this write was validated against the old " +
-            "set) — retry the operation")
-      }
-      // head-version pin: ADD CONSTRAINT validated — and the DDL
-      // rewrites (RENAME/DROP COLUMN) snapshotted — a specific
-      // version; anything committed since would escape that
-      // validation or be erased by the rewrite
-      requireHeadVersion.foreach { v0 =>
-        if (head.getOrElse(0L) != v0)
-          throw new java.util.ConcurrentModificationException(
-            s"conflicting commit on $path: head advanced past $v0 " +
-            "while this operation was pinned to it (retry)")
-      }
+      val kept = baseKeep(base, newLines)
+      checkReadSet(path, read, head, prevHead, base, kept)
       val next = head.getOrElse(0L) + 1
       val nonce = java.util.UUID.randomUUID().toString
       // carried keys survive manifest pruning: re-emit the previous
       // head's txn.*/graft.* tokens, this commit's own meta winning on
       // conflict; the ts stamp is per-commit and never carried
-      val lines = baseKeep(base, newLines) ++ newLines
+      val lines = kept ++ newLines
       // ... except schema records no live line uses any more
       val liveIds = lines.flatMap(schemaIdOf).toSet
       val carried = (parseMeta(prevHead)

@@ -1,0 +1,46 @@
+package graft
+
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+
+/** The local filesystem under the `racefs` scheme, with one hook: the
+  * body given to [[RaceFs.beforeNextManifest]] runs, once, when the next
+  * manifest tmp file (`.tmp_*`) is created — inside a commit's slot
+  * claim, after its conflict checks passed. A racing commit run there
+  * lands deterministically between a committer's checks and its claim.
+  * Register with `fs.racefs.impl`; not being the `file` scheme, TxTable
+  * claims through its rename path.
+  */
+class RaceFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("racefs:///")
+  override def getScheme: String = "racefs"
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    RaceFs.fire(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    RaceFs.fire(f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+}
+
+object RaceFs {
+  private var hook: Option[() => Unit] = None
+
+  def beforeNextManifest(body: => Unit): Unit =
+    synchronized { hook = Some(() => body) }
+
+  private def fire(f: Path): Unit =
+    if (f.getName.startsWith(".tmp_")) {
+      val h = synchronized { val h = hook; hook = None; h }
+      h.foreach(_())
+    }
+}

@@ -318,4 +318,72 @@ class TxConstraintsSpec extends SparkSpec {
       Seq((6L, 60L, 1), (7L, 70L, 3)).toDF("id", "qty", "day"), Seq("day"))
     assert(TxTable.read(spark, dir).count() === 4)
   }
+
+  test("counting violations leaves no query listener on the session") {
+    // a listener left registered re-plans every later FAILED query of
+    // the session to read its observed metrics, and the listener bus
+    // logs that second failure as an ERROR
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val s = spark
+    import s.implicits._
+    val dir = tmp()
+    seed(dir)
+    TxTable.addConstraint(spark, dir, "qty_pos", "qty > 0")
+    TxTable.append(spark, dir, Seq((3L, 30L)).toDF("id", "qty"))
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("listener-bus-errors", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.ERROR &&
+            e.getLoggerName.endsWith("ExecutionListenerBus"))
+          errors.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.ERROR, null)
+    ctx.updateLoggers()
+    try {
+      // TIMESTAMP(NANOS) without nanosAsLong fails while the query runs
+      intercept[Exception] {
+        spark.read.parquet("src/test/resources/events-enc/nanos/events.parquet")
+          .collect()
+      }
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    } finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(errors.isEmpty, s"listener bus logged: ${errors.peek()}")
+  }
+
+  test("a constraint set changing between validation and claim aborts the write") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp()
+    seed(dir)
+    // a CHECK constraint over a UDF is the hook inside the append's write
+    // job: its first call lets a racing ADD CONSTRAINT commit first
+    spark.udf.register("check_race_gate", (_: Long) => RaceState.pauseOnce())
+    RaceState.fired.set(true) // validating the constraint passes through
+    TxTable.addConstraint(spark, dir, "gate", "check_race_gate(id)")
+    RaceState.reset()
+    val racer = new Thread(() => {
+      RaceState.started.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      TxTable.addConstraint(spark, dir, "qty_pos", "qty > 0")
+      RaceState.appended.countDown()
+    })
+    racer.start()
+    val e = try intercept[java.util.ConcurrentModificationException] {
+      TxTable.append(spark, dir, Seq((3L, -30L)).toDF("id", "qty"))
+    } finally racer.join(30000)
+    assert(e.getMessage.contains("CHECK constraints changed concurrently"),
+      e.getMessage)
+    assert(TxTable.constraints(spark, dir).keySet == Set("gate", "qty_pos"))
+    assert(TxTable.read(spark, dir).count() === 2, "nothing unvalidated landed")
+  }
 }

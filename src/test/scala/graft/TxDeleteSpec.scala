@@ -48,7 +48,7 @@ class TxDeleteSpec extends SparkSpec {
   }
 
   test("an OR predicate prunes per branch: only the two matching files rewritten") {
-    // resolveConjuncts keeps a disjunction whole; the Or/And recursion
+    // mayMatchLines keeps a disjunction whole; the Or/And recursion
     // in mayMatch must still skip the file neither branch can match
     val dir = tmp()
     threeCommits(dir) // three files: ids 0-9, 10-19, 20-29
@@ -482,6 +482,27 @@ class TxDmlEdgeSpec extends SparkSpec {
     assert(TxTable.read(spark, dir).collect().map(_.getLong(0)).sorted.toSeq ==
       (0L until 9L))
   }
+
+  test("change-feed delete, update and compact on a flat table start 3 jobs each") {
+    val s = spark
+    import s.implicits._
+    def flat(): String = {
+      val dir =
+        java.nio.file.Files.createTempDirectory("graft_e").toString + "/t"
+      TxTable.append(spark, dir, (1L to 100L).map(i => (i, s"v$i", i))
+        .toDF("id", "v", "x").coalesce(1))
+      dir
+    }
+    val deleteJobs = jobsStartedBy(
+      TxTable.delete(spark, flat(), col("id") === 50L))
+    val updateJobs = jobsStartedBy(TxTable.update(spark, flat(),
+      col("id") === 50L, Map("x" -> lit(-1L))))
+    val compactJobs = jobsStartedBy(TxTable.compact(spark, flat()))
+    info(s"jobs: delete $deleteJobs, update $updateJobs, compact $compactJobs")
+    assert(deleteJobs == 3, s"delete started $deleteJobs jobs")
+    assert(updateJobs == 3, s"update started $updateJobs jobs")
+    assert(compactJobs == 3, s"compact started $compactJobs jobs")
+  }
 }
 
 /** Latches for the delete-vs-append race test; top-level so the UDF
@@ -496,5 +517,16 @@ object RaceState {
     started = new java.util.concurrent.CountDownLatch(1)
     appended = new java.util.concurrent.CountDownLatch(1)
     fired.set(false)
+  }
+  /** The first call after [[reset]] opens `started` and waits for
+    * `appended`; every other call passes straight through. True, so a
+    * CHECK constraint over it always holds.
+    */
+  def pauseOnce(): Boolean = {
+    if (fired.compareAndSet(false, true)) {
+      started.countDown()
+      appended.await(30, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    true
   }
 }

@@ -199,4 +199,32 @@ class TxRenameSpec extends SparkSpec {
     assert(spark.sql(s"SELECT label FROM graft.`$dir`")
       .collect().map(_.getString(0)).toSeq === Seq("a"))
   }
+
+  test("a commit landing past the rename's pinned head aborts the rename") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp()
+    TxTable.append(spark, dir, Seq((1L, "a")).toDF("id", "v").coalesce(1))
+    // a CHECK constraint over a UDF is the hook inside the rename's write
+    // job: its first call lets a racing append commit, then returns
+    spark.udf.register("rename_race_gate", (_: Long) => RaceState.pauseOnce())
+    RaceState.fired.set(true) // validating the constraint passes through
+    TxTable.addConstraint(spark, dir, "gate", "rename_race_gate(id)")
+    val pinned = TxTable.versions(spark, dir).last
+    RaceState.reset()
+    val racer = new Thread(() => {
+      RaceState.started.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      TxTable.append(spark, dir, Seq((2L, "b")).toDF("id", "v"))
+      RaceState.appended.countDown()
+    })
+    racer.start()
+    val e = try intercept[java.util.ConcurrentModificationException] {
+      TxTable.renameColumn(spark, dir, "v", "w")
+    } finally racer.join(30000)
+    assert(e.getMessage.contains(s"head advanced past $pinned"), e.getMessage)
+    // the racer's row survives and the column keeps its name
+    assert(TxTable.read(spark, dir).select("id", "v").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "a", 2L -> "b"))
+  }
 }

@@ -55,7 +55,7 @@ class TxSinksSpec extends SparkSpec {
     val e = intercept[java.util.ConcurrentModificationException] {
       TxTable.replacePartitions(spark, dir,
         Seq(("mon", 10L)).toDF("day", "x"), Seq("day"),
-        expectUnchanged = Some((Set("day=mon"), Set("stale/file"))))
+        expectUnchanged = Some(Set("stale/file")))
     }
     assert(e.getMessage.contains("changed concurrently"))
     // with the true current file set the replace proceeds
@@ -64,7 +64,7 @@ class TxSinksSpec extends SparkSpec {
       .map(f => f.substring(f.indexOf("/data/") + 1)).toSet
     TxTable.replacePartitions(spark, dir,
       Seq(("mon", 10L)).toDF("day", "x"), Seq("day"),
-      expectUnchanged = Some((Set("day=mon"), known)))
+      expectUnchanged = Some(known))
     val out = TxTable.read(spark, dir,
       schema = Some(Seq(("a", 1L)).toDF("day", "x").schema))
       .select("day", "x").collect()
@@ -247,5 +247,30 @@ class TxSinksSpec extends SparkSpec {
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
     assert(out == Map(1L -> "a", 2L -> "B2", 3L -> "c"),
       "id=1 in day=07 must survive an upsert that touches day=07")
+  }
+
+  test("replacePartitions aborts when a racing append lands in a replaced partition that had no files") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpTable("graft_tx_rp_new")
+    TxTable.append(spark, dir, Seq(("mon", 1L)).toDF("day", "x"),
+      partitionCols = Seq("day"))
+    // the files a mon+wed replace reads: mon's only, wed has none yet
+    val known = TxTable.read(spark, dir).inputFiles
+      .map(f => f.substring(f.indexOf("/data/") + 1)).toSet
+    // a racing append into wed lands after that read
+    TxTable.append(spark, dir, Seq(("wed", 9L)).toDF("day", "x"),
+      partitionCols = Seq("day"))
+    val e = intercept[java.util.ConcurrentModificationException] {
+      TxTable.replacePartitions(spark, dir,
+        Seq(("mon", 10L), ("wed", 10L)).toDF("day", "x"), Seq("day"),
+        expectUnchanged = Some(known))
+    }
+    assert(e.getMessage.contains("changed concurrently"))
+    val out = TxTable.read(spark, dir,
+      schema = Some(Seq(("a", 1L)).toDF("day", "x").schema))
+      .select("day", "x").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(out == Map("mon" -> 1L, "wed" -> 9L), "the racing row survives")
   }
 }

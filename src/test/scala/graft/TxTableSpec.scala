@@ -308,4 +308,22 @@ class TxTableSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("different schemas"))
   }
+
+  test("a create that loses its claim to a concurrent create fails as already exists") {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.racefs.impl", classOf[RaceFs].getName)
+    val dir = "racefs://" +
+      java.nio.file.Files.createTempDirectory("graft_create").toString + "/t"
+    val schema = StructType(Seq(StructField("id", LongType)))
+    // the racer's create runs inside this create's claim, after its
+    // existence check passed
+    RaceFs.beforeNextManifest(TxTable.create(spark, dir, schema))
+    val e = intercept[IllegalArgumentException] {
+      TxTable.create(spark, dir, schema)
+    }
+    assert(e.getMessage.contains("already exists (concurrent create)"),
+      e.getMessage)
+    assert(TxTable.versions(spark, dir) == Seq(1L))
+  }
 }
