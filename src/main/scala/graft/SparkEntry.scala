@@ -1741,7 +1741,7 @@ object SparkEntry {
         .orderBy("doc_id")),
 
     // Gopher-style repetition filters: duplicate-token share, top-token
-    // dominance, duplicate-3-gram share — all per-row array HOFs
+    // dominance, duplicate-3-gram share — all per-row array kernels
     "q_x_text_repetition" -> ((s, dir) =>
       TextAnalysis.withRepetitionSignals(
           t(s, dir, "documents").select("doc_id", "text"), "text", ngram = 3)
@@ -1920,7 +1920,7 @@ object SparkEntry {
 
     "q_x_text_winnow" -> ((s, dir) =>
       TextAnalysis.winnowFingerprints(t(s, dir, "documents"), "text", "fp",
-          k = 8, w = 4, hash = TextAnalysis.md5Hash60)
+          k = 8, w = 4, hash = graft.functions.GramHash.Md5Hash60)
         .select(col("doc_id"), size(col("fp")).as("n_fingerprints"),
           array_min(col("fp")).as("fp_min"), array_max(col("fp")).as("fp_max"))
         .orderBy("doc_id")),

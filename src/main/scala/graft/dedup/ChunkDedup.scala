@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * chunks the same way.
   *
   * Scale shape (100 TB-safe):
-  *  - one narrow pass tokenizes and chunks (pure array HOFs, codegen);
+  *  - one narrow pass tokenizes and chunks (native kernels inside
+  *    whole-stage codegen, [[graft.functions.TextKernels]]);
   *  - first-occurrence election is a window over the chunk's md5
   *    FINGERPRINT — one shuffle keyed by a 128-bit digest (bounded key
   *    width no matter how long chunks get), per-group state is one row;
@@ -34,15 +35,9 @@ object ChunkDedup {
     require(chunkTokens > 0, "chunkTokens must be positive")
     val c = chunkTokens
     val toks = graft.text.TextAnalysis.tokens(col(textCol))
-    // ceil(len/c) without floating point; sequence() would descend on an
-    // empty doc, so guard it to an empty chunk list explicitly
     val nChunks = ((size(toks) + lit(c - 1)) / lit(c)).cast("int")
-    val chunks = when(size(toks) === 0, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), nChunks - 1),
-        i => concat_ws(" ", slice(toks, i * c + 1, lit(c)))))
-
     val base = df.select(col(idCol), nChunks.as("n_chunks"),
-      chunks.as("__chunks"))
+      graft.text.TextAnalysis.tokenWindows(toks, c, c).as("__chunks"))
     val exploded = base
       .select(col(idCol), posexplode(col("__chunks")).as(Seq("__idx", "__chunk")))
       .withColumn("__fp", md5(col("__chunk")))

@@ -153,18 +153,14 @@ object SpanDedup {
     val spark = corpus.sparkSession
     val k = windowTokens
     val toks = graft.text.TextAnalysis.tokens(col(textCol))
-    // distinct eval windows as token arrays, keyed by the SAME
-    // fingerprint construction windowOcc uses
+    // distinct eval windows, built and keyed exactly as windowOcc
+    // builds and keys the corpus's
     val evalWins = evalSet
-      .select(toks.as("__toks"))
-      .select(explode(when(size(col("__toks")) < k,
-          array().cast("array<array<string>>"))
-        .otherwise(transform(sequence(lit(0), size(col("__toks")) - k),
-          i => slice(col("__toks"), i + 1, lit(k))))).as("__wt"))
-      .select(md5(concat_ws(" ", col("__wt"))).as("__wfp"), col("__wt"))
-      .dropDuplicates("__wfp")
-    val evalTok = evalWins
-      .select(col("__wfp"), explode(array_distinct(col("__wt"))).as("token"))
+      .select(explode(graft.text.TextAnalysis.tokenWindows(toks, k, 1)).as("__w"))
+      .select(windowFp(col("__w")) :+ col("__w"): _*)
+      .dropDuplicates("__fp1", "__fp2")
+    val evalTok = evalWins.select(col("__fp1"), col("__fp2"),
+      explode(array_distinct(graft.text.TextAnalysis.tokens(col("__w")))).as("token"))
     val postings = graft.ops.TxTable.read(spark, indexPath)
     val dfTok = postings
       .join(evalTok.select("token").distinct(), Seq("token"), "left_semi")
@@ -173,7 +169,7 @@ object SpanDedup {
     // filter drops unmatched windows and the survivor's field IS the
     // rarest present token, ties broken lexicographically
     val rare = evalTok.join(dfTok, Seq("token"), "left")
-      .groupBy(col("__wfp"))
+      .groupBy(col("__fp1"), col("__fp2"))
       .agg(min(struct(coalesce(col("__df"), lit(0L)).as("d"),
         col("token").as("t"))).as("__m"))
       .filter(col("__m").getField("d") > 0)
@@ -229,18 +225,16 @@ object SpanDedup {
     val base = graft.util.Scale.spreadForFanOut(df)
       .select(col(idCol), toks.as("__toks"),
         size(toks).cast("int").as("n_tokens"))
-    val wins = base.select(col(idCol),
-      when(col("n_tokens") < k, array().cast("array<string>"))
-        .otherwise(transform(sequence(lit(0), col("n_tokens") - k),
-          i => concat_ws(" ", slice(col("__toks"), i + 1, lit(k)))))
-        .as("__wins"))
-    val occ = wins
-      .select(col(idCol), posexplode(col("__wins")).as(Seq("__pos", "__w")))
-      .select(col(idCol), col("__pos"),
-        xxhash64(col("__w")).as("__fp1"),
-        xxhash64(lit("graft.span.fp2"), col("__w")).as("__fp2"))
+    val occ = base
+      .select(col(idCol), posexplode(
+        graft.text.TextAnalysis.tokenWindows(col("__toks"), k, 1)).as(Seq("__pos", "__w")))
+      .select(col(idCol) +: col("__pos") +: windowFp(col("__w")): _*)
     (base, occ)
   }
+
+  /** A window string's 128-bit fingerprint `(__fp1, __fp2)`. */
+  private def windowFp(w: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] =
+    Seq(xxhash64(w).as("__fp1"), xxhash64(lit("graft.span.fp2"), w).as("__fp2"))
 
   /** Shared coverage→islands→reassembly tail: mask every token covered
     * by a window starting at one of `starts` (idCol, __pos).

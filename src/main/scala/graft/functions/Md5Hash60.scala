@@ -41,11 +41,14 @@ object Md5Hash60Expr {
     ThreadLocal.withInitial[java.security.MessageDigest](() =>
       java.security.MessageDigest.getInstance("MD5"))
 
-  def hash(s: UTF8String): Long = {
+  def hash(s: UTF8String): Long = hash(s.getBytes, 0, s.numBytes)
+
+  /** [[hash]] of `len` bytes of `bytes` from `off`. */
+  def hash(bytes: Array[Byte], off: Int, len: Int): Long = {
     val md = digest.get()
     md.reset()
-    val d = md.digest(s.getBytes)
+    md.update(bytes, off, len)
     // first 8 bytes big-endian, dropped low nibble = hex chars 1..15
-    java.nio.ByteBuffer.wrap(d).getLong >>> 4
+    java.nio.ByteBuffer.wrap(md.digest()).getLong >>> 4
   }
 }

@@ -290,9 +290,12 @@ object Sinks {
     // partition-disjoint concurrent merge. Listing known FIRST makes the
     // race window safe in the conservative direction — a commit landing
     // between this listing and the read fails the claim-time check
-    // (abort + retry), never a silent drop.
+    // (abort + retry), never a silent drop. The prune resolves against
+    // the same pinned schema as the read, so a string partition stays
+    // a string there too.
     val knownRelTx =
-      if (tx) TxTable.headFilesMatching(spark, path, Some(prune)).toSet
+      if (tx) TxTable.headFilesMatching(spark, path, Some(prune),
+        schema = Some(up.schema)).toSet
       else Set.empty[String]
     val existing =
       (if (tx) TxTable.read(spark, path, schema = Some(up.schema))

@@ -969,18 +969,19 @@ object TxTable {
 
   /** Pseudo-stats for a partitioned file's PARTITION columns, parsed
     * from the hive `k=v` segments of its manifest path: min = max =
-    * the partition value, tagged numeric when the value parses as a
+    * the partition value, tagged string for the `stringCols` the read
+    * resolves as strings, else numeric when the value parses as a
     * number and string otherwise. Partition values never appear in
     * parquet footers, so without this a partition-column predicate
     * could never skip a file; with it [[readWhere]] prunes whole
     * partitions from the MANIFEST alone — zero footer or data I/O for
     * partitions the predicate cannot match. Tag/type mismatches
-    * (string-typed columns with numeric-looking values, casts in the
-    * predicate) fall through [[mayMatch]]'s conservative keep — a
-    * missed skip, never a wrong prune. The hive null marker gets no
-    * stats (conservative keep).
+    * (casts in the predicate) fall through [[mayMatch]]'s conservative
+    * keep — a missed skip, never a wrong prune. The hive null marker
+    * gets no stats (conservative keep).
     */
-  private def partitionStats(rel: String): Map[String, ColStats] =
+  private def partitionStats(rel: String,
+                             stringCols: Set[String] = Set.empty): Map[String, ColStats] =
     rel.split('/').drop(2).dropRight(1).filter(_.contains('='))
       .flatMap { seg =>
         val i = seg.indexOf('=')
@@ -992,7 +993,8 @@ object TxTable {
           Some(k -> ColStats("x", "", "", knownAllNull = true))
         else {
           val tag =
-            if (scala.util.Try(BigDecimal(v)).isSuccess) "n" else "s"
+            if (!stringCols(k) && scala.util.Try(BigDecimal(v)).isSuccess) "n"
+            else "s"
           // a non-null partition value means ZERO nulls in this file's
           // partition column — `IS NULL` prunes it from the path alone
           Some(k -> ColStats(tag, v, v, nulls = Some(0L)))
@@ -1628,14 +1630,19 @@ object TxTable {
       case And(l, r) => split(l) ++ split(r)
       case other => Seq(other)
     }
-    val cs = predicate.filter(_ => lines.nonEmpty).toSeq.flatMap(pred =>
+    // the conjuncts, and the columns the scan resolves as strings: a
+    // string partition value that looks numeric (`day=01`) must
+    // compare as a string
+    val (cs, stringCols) = predicate.filter(_ => lines.nonEmpty).flatMap(pred =>
       scanFiles(spark, p, lines, meta, mergeSchema, schema)
         .where(pred).queryExecution.analyzed.collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            split(f.condition)
-        }.getOrElse(Seq.empty))
+            (split(f.condition), f.child.output.collect {
+              case a if a.dataType.isInstanceOf[org.apache.spark.sql.types.StringType] => a.name
+            }.toSet)
+        }).getOrElse((Seq.empty, Set.empty[String]))
     lines.filter { l =>
-      val st = statsOf(l) ++ partitionStats(pathOf(l))
+      val st = statsOf(l) ++ partitionStats(pathOf(l), stringCols)
       cs.forall(c => mayMatch(st, c) && bloomMayMatch(st, c)) || orKeep(st)
     }
   }

@@ -30,10 +30,9 @@ object Collocations {
     // tokens MATERIALIZED into a column first: referencing the
     // tokens(text) EXPRESSION inside the lambda would re-inline the
     // whole tokenization per token position (the slice(toks, ...)
-    // reference) — O(tokens²) re-tokenization per document, the
-    // anti-pattern TextAnalysis.winnowFingerprints documents and this
-    // file previously committed. A plain column reference inside the
-    // lambda is free.
+    // reference) — O(tokens²) re-tokenization per document (Catalyst
+    // does no common-subexpression elimination across lambdas). A plain
+    // column reference inside the lambda is free.
     val toked = df.select(TextAnalysis.tokens(col(textCol)).as("__tk"))
     val toks = col("__tk")
     // element at 0-based i pairs with the next `window` tokens:

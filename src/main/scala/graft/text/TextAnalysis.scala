@@ -1,29 +1,46 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftShim}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions.col
+
+import graft.functions.{CharGramHashes, GramHash, MaxMultiplicity, TokenWindows, Tokens, Winnow}
 
 /** Text-analysis column functions for large-scale training-data pipelines
   * (north-star extension beyond the reference surface — the reference has
   * no text ops at all, SURVEY.md §2.8).
   *
-  * Everything here is a pure `Column` expression built from
-  * `org.apache.spark.sql.functions` — no UDFs — so the whole pipeline
-  * stays inside whole-stage codegen and scales linearly with input: at
-  * 100 TB these run as a single narrow map stage over the parquet scan,
-  * no shuffle.
+  * Everything here is a `Column` expression — no UDFs — and each op is
+  * one narrow map over its input, no shuffle. Tokenizing, token windows,
+  * char-gram hashes, winnowing and the top-token count are native
+  * kernels ([[graft.functions.TextKernels]]) that compile into
+  * whole-stage codegen. The remaining higher-order functions
+  * (`transform`, `filter`, `aggregate`: the stopword counts and the
+  * line/paragraph rules) are `CodegenFallback`, so a projection holding
+  * one is interpreted row by row outside whole-stage codegen.
   */
 object TextAnalysis {
 
+  private def kernel(e: Expression): Column = GraftShim.toColumn(e)
+  private def expr(c: Column): Expression = GraftShim.toExpression(c)
+
   /** Non-empty whitespace-separated tokens. Splits on whitespace RUNS
-    * (`\s+`), so tabs and newlines separate tokens too — multi-line
-    * documents tokenize the same as their single-line normal forms,
-    * which is what every downstream consumer (shingles, simhash,
-    * langId, stopword ratios) assumes.
+    * (Java regex `\s`: space, tab, newline, vertical tab, form feed,
+    * carriage return), so multi-line documents tokenize the same as
+    * their single-line normal forms, which is what every downstream
+    * consumer (shingles, simhash, langId, stopword ratios) assumes.
+    * Native ([[graft.functions.Tokens]]): the same tokens as
+    * `filter(split(text, "\\s+"), _ =!= "")`.
     */
-  def tokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => t =!= lit(""))
+  def tokens(text: Column): Column = kernel(Tokens(expr(text.cast("string"))))
+
+  /** Space-joined windows of `n` tokens of a token array: `step` 1
+    * slides (every full window; none below `n` tokens), `step` n tiles
+    * (a short last chunk). Null for a null array.
+    */
+  def tokenWindows(toks: Column, n: Int, step: Int): Column =
+    kernel(TokenWindows(expr(toks), n, step))
 
   /** Token count (whitespace tokenization). */
   def tokenCount(text: Column): Column = size(tokens(text))
@@ -198,16 +215,14 @@ object TextAnalysis {
     * grams ARE the signal. Empty below n tokens.
     */
   def rawNgramsFromTokens(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - lit(n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
+    coalesce(tokenWindows(toks, n, 1), array().cast("array<string>"))
 
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1 "repetition
     * filters", re-expressed over whitespace tokens): documents that loop
     * the same words/phrases are low-quality for LM training no matter
-    * how clean each sentence looks. All three are per-row array HOFs —
-    * narrow, codegen'd, no shuffle, no UDFs.
+    * how clean each sentence looks. All three are per-row array
+    * functions and native kernels — narrow, inside whole-stage codegen,
+    * no shuffle, no UDFs.
     *
     * Fraction of tokens that are repeats of an earlier token; 0.0 for
     * empty docs.
@@ -219,13 +234,12 @@ object TextAnalysis {
 
   /** Share of tokens taken by the single most frequent token (Gopher's
     * "fraction of characters in the most common word", token form);
-    * 0.0 for empty docs. Per-row cost is O(distinct · n) field reads —
-    * bounded by document length, still narrow.
+    * 0.0 for empty docs. One hash-count pass per row
+    * ([[graft.functions.MaxMultiplicity]]).
     */
   def topTokenFraction(toks: Column): Column =
     when(size(toks) === 0, lit(0.0)).otherwise(
-      array_max(transform(array_distinct(toks),
-          t => size(filter(toks, x => x === t)))).cast("double") /
+      kernel(MaxMultiplicity(expr(toks))).cast("double") /
         size(toks).cast("double"))
 
   /** Fraction of word n-grams that are repeats of an earlier n-gram;
@@ -286,7 +300,7 @@ object TextAnalysis {
                             textCol: String, ngram: Int = 3):
       org.apache.spark.sql.DataFrame = {
     val tokCol = graft.util.Cols.fresh(df, "__tk")
-    // tokenize + three HOF scans per row is heavy narrow work — spread
+    // tokenize + three array scans per row is heavy narrow work — spread
     // an under-partitioned scan first (guide §2.6; identity at
     // production partition counts)
     graft.util.Scale.spreadForFanOut(df)
@@ -298,105 +312,60 @@ object TextAnalysis {
       .drop(tokCol)
   }
 
-  /** Rolling-hash values of every char k-gram (xxhash64; one per
-    * position). Empty for texts shorter than k. (Spark's `sequence(1, 0)`
-    * is DESCENDING `[1, 0]`, not empty — the short-text case must be
-    * guarded explicitly.)
+  /** Hash of every char k-gram, one per code-point position, in one
+    * pass over the bytes ([[graft.functions.CharGramHashes]]). Empty for
+    * texts shorter than k. `hash` is one of the library's two
+    * deterministic hashes: `xxhash64` (seed 42) by default, or
+    * [[md5Hash60]] where an oracle must reproduce the values.
     */
   def rollingHashes(text: Column, k: Int,
-                    hash: Column => Column = xxhash64(_)): Column =
-    when(length(text) < k, array().cast("array<bigint>"))
-      .otherwise(transform(
-        sequence(lit(1), length(text) - lit(k - 1)),
-        i => hash(text.substr(i, lit(k)))))
+                    hash: GramHash = GramHash.Xxhash64): Column =
+    kernel(CharGramHashes(expr(text.cast("string")), k, hash))
 
   /** Winnowing fingerprint (Schleimer et al., SIGMOD'03): the distinct
-    * minima of every `w`-wide window over the k-gram rolling hashes.
-    * Guarantees any shared substring of length >= k+w-1 contributes a
-    * shared fingerprint — the standard scalable document-fingerprint for
+    * minima of every `w`-wide window over the k-gram rolling hashes, in
+    * first-occurrence order ([[graft.functions.Winnow]]). Guarantees any
+    * shared substring of length >= k+w-1 contributes a shared
+    * fingerprint — the standard scalable document-fingerprint for
     * near-dup/plagiarism detection.
-    *
-    * ⚠ This single-Column form embeds the rolling-hash array inside the
-    * per-window lambda; Catalyst does NOT common-subexpression-eliminate
-    * across lambda boundaries, so every window re-hashes the whole
-    * document — O(chars²) per doc (measured 1060 s for one sf0.1 query).
-    * Use it only on short strings / in tests; pipelines must use
-    * [[winnowFingerprints]], which materializes the hashes once per row.
     */
   def winnowFingerprint(text: Column, k: Int, w: Int,
-                        hash: Column => Column = xxhash64(_)): Column =
-    winnowFromHashes(rollingHashes(text, k, hash), w)
-
-  private def winnowFromHashes(hs: Column, w: Int): Column = {
-    val m = size(hs)
-    when(m === 0, array().cast("array<bigint>"))
-      .when(m <= w, array(array_min(hs)))
-      .otherwise(array_distinct(
-        transform(sequence(lit(1), m - lit(w - 1)),
-          // least over w element_at lookups, not array_min(slice(...)):
-          // slice allocates a w-element array per window position.
-          j => least((0 until w).map(i => element_at(hs, (j + lit(i)).cast("int"))): _*))))
-  }
+                        hash: GramHash = GramHash.Xxhash64): Column =
+    kernel(Winnow(expr(rollingHashes(text, k, hash)), w))
 
   /** Scale form of [[winnowFingerprint]]: adds `outCol` with the
-    * fingerprint array. The rolling hashes land in their own projection
-    * (a named column), so they are computed ONCE per row and the window
-    * pass is O(chars × w) — CollapseProject keeps the split because the
-    * hash expression is non-cheap and referenced repeatedly.
+    * fingerprint array after spreading an under-partitioned input.
     */
   def winnowFingerprints(df: org.apache.spark.sql.DataFrame, textCol: String,
                          outCol: String, k: Int, w: Int,
-                         hash: Column => Column = xxhash64(_)): org.apache.spark.sql.DataFrame = {
-    val hsCol = graft.util.Cols.fresh(df, "__wh")
-    // one rolling hash per char position is heavy per-row work — an
+                         hash: GramHash = GramHash.Xxhash64): org.apache.spark.sql.DataFrame =
+    // one hash per char position is heavy per-row work — an
     // under-partitioned scan would run the whole corpus on its few
     // tasks (guide §2.6; identity at production partition counts)
     graft.util.Scale.spreadForFanOut(df)
-      .withColumn(hsCol, rollingHashes(col(textCol), k, hash))
-      .withColumn(outCol, winnowFromHashes(col(hsCol), w))
-      .drop(hsCol)
-  }
+      .withColumn(outCol, winnowFingerprint(col(textCol), k, w, hash))
 
   /** Distinct word n-gram shingles (space-joined), for Jaccard / MinHash
     * dedup. Documents shorter than `n` tokens yield an empty array.
-    *
-    * ⚠ `tokens(text)` is referenced inside the transform lambda; Catalyst
-    * re-inlines it per shingle position (no CSE across lambda
-    * boundaries), so this Column form is O(tokens²) per document. Fine
-    * for short strings and tests; pipelines should tokenize into a
-    * column first ([[withShingles]] / [[shinglesFromTokens]]).
     */
   def wordShingles(text: Column, n: Int): Column =
     shinglesFromTokens(tokens(text), n)
 
-  /** Shingles over an already-materialized token array column — when
-    * `toks` is a plain column reference the per-position lambda work is
-    * O(n) row-field reads, not a re-tokenization.
-    */
-  def shinglesFromTokens(toks: Column, n: Int): Column = {
-    val cnt = size(toks)
-    array_distinct(
-      when(cnt >= n,
-        transform(sequence(lit(1), cnt - lit(n - 1)),
-          i => array_join(slice(toks, i, lit(n)), " ")))
-        .otherwise(array().cast("array<string>")))
-  }
+  /** Shingles over a token array column. */
+  def shinglesFromTokens(toks: Column, n: Int): Column =
+    array_distinct(rawNgramsFromTokens(toks, n))
 
-  /** Scale form: adds `outCol` with the shingle array, tokenizing each
-    * row exactly once in its own projection.
+  /** Scale form: adds `outCol` with the shingle array after spreading
+    * an under-partitioned input.
     */
   def withShingles(df: org.apache.spark.sql.DataFrame, textCol: String,
-                   outCol: String, n: Int): org.apache.spark.sql.DataFrame = {
-    val tokCol = graft.util.Cols.fresh(df, "__tk")
+                   outCol: String, n: Int): org.apache.spark.sql.DataFrame =
     // building one shingle string per token position is heavy per-row
-    // work in interpreted higher-order functions — spread an
-    // under-partitioned scan first (guide §2.6; measured: jaccardPairs'
-    // doc-size side ran 4.0 s single-task inside a broadcast build)
+    // work — spread an under-partitioned scan first (guide §2.6;
+    // measured: jaccardPairs' doc-size side ran 4.0 s single-task inside
+    // a broadcast build)
     graft.util.Scale.spreadForFanOut(df)
-      .withColumn(tokCol, tokens(col(textCol)))
-      .withColumn(outCol, shinglesFromTokens(col(tokCol), n))
-      .drop(tokCol)
-  }
+      .withColumn(outCol, wordShingles(col(textCol), n))
 
   /** Concordance (KWIC): one row per occurrence of `term` —
     * (idCol, pos, context) with `pos` the 0-based token index and
@@ -405,7 +374,7 @@ object TextAnalysis {
     * every use of X in context" without shipping whole documents.
     *
     * Scale shape: tokenize + posexplode + equality filter + slice —
-    * one narrow codegen pass, output proportional to match count, no
+    * one narrow whole-stage-codegen pass, output proportional to match count, no
     * shuffle at all.
     */
   def concordance(df: org.apache.spark.sql.DataFrame, idCol: String,

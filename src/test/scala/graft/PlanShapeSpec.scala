@@ -161,6 +161,50 @@ class PlanShapeSpec extends SparkSpec {
         s"split — non-candidates may never reach a Generate:\n$plan")
   } }
 
+  test("text fan-outs: tokenize/window/hash projections hold no higher-order function and run in whole-stage codegen") { noAqe {
+    // a higher-order function is CodegenFallback: the projection holding
+    // it leaves whole-stage codegen and is interpreted row by row
+    import graft.dedup.{ChunkDedup, SpanDedup}
+    import graft.text.TextAnalysis
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec, WholeStageCodegenExec}
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_plantext").toString + "/docs"
+    (1L to 40L).map(i => (i, s"w$i alpha beta w${i % 3} gamma delta alpha beta epsilon"))
+      .toDF("doc_id", "text").write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val fanOuts = Seq(
+      "withRepetitionSignals" -> TextAnalysis.withRepetitionSignals(docs, "text"),
+      "winnowFingerprints" -> TextAnalysis.winnowFingerprints(docs, "text", "fp", 8, 4),
+      "dedupChunks" -> ChunkDedup.dedupChunks(docs, "doc_id", "text", 8),
+      "maskContaminatedSpans" -> SpanDedup.maskContaminatedSpans(docs,
+        docs.filter(col("doc_id") < 5), "doc_id", "text", 8))
+    // the nodes of one codegen stage: its subtree down to its inputs
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(stage)
+    }
+    for ((name, out) <- fanOuts) {
+      val plan = out.queryExecution.executedPlan
+      val codegen = plan.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+      // the fan-out: every projection or generator that reads the text
+      // or evaluates one of the library's native expressions
+      val fanOut = plan.collect {
+        case n @ (_: ProjectExec | _: GenerateExec) if n.expressions.exists(e =>
+            e.references.exists(_.name == "text") ||
+              e.exists(_.getClass.getName.startsWith("graft.functions."))) => n
+      }
+      assert(fanOut.nonEmpty, s"$name: no fan-out projection found:\n$plan")
+      fanOut.foreach { n =>
+        assert(!n.expressions.exists(_.exists(_.isInstanceOf[HigherOrderFunction])),
+          s"$name: a higher-order function in the fan-out:\n$n\n$plan")
+        assert(codegen.exists(_ eq n),
+          s"$name: a fan-out node outside whole-stage codegen:\n$n\n$plan")
+      }
+    }
+  } }
+
   test("served IVF: no Lloyd (aggregate) stages in the serve-time plan") { noAqe {
     val rnd = new scala.util.Random(41)
     val vecs = (0L until 30L).map(i =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -10,11 +10,19 @@ import org.apache.hadoop.util.Progressable
   * claim, after its conflict checks passed. A racing commit run there
   * lands deterministically between a committer's checks and its claim.
   * Register with `fs.racefs.impl`; not being the `file` scheme, TxTable
-  * claims through its rename path.
+  * claims through its rename path. Statuses carry default permissions:
+  * the local one loads them through a `file:` URI, which a `racefs:`
+  * path is not.
   */
 class RaceFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("racefs:///")
   override def getScheme: String = "racefs"
+
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(RaceFs.plain)
+
+  override def getFileStatus(f: Path): FileStatus =
+    RaceFs.plain(super.getFileStatus(f))
 
   override def create(f: Path, overwrite: Boolean, bufferSize: Int,
                       replication: Short, blockSize: Long,
@@ -37,6 +45,10 @@ object RaceFs {
 
   def beforeNextManifest(body: => Unit): Unit =
     synchronized { hook = Some(() => body) }
+
+  private def plain(s: FileStatus): FileStatus =
+    new FileStatus(s.getLen, s.isDirectory, s.getReplication, s.getBlockSize,
+      s.getModificationTime, s.getPath)
 
   private def fire(f: Path): Unit =
     if (f.getName.startsWith(".tmp_")) {

@@ -273,4 +273,44 @@ class TxSinksSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(out == Map("mon" -> 1L, "wed" -> 9L), "the racing row survives")
   }
+
+  test("string partition values that look numeric prune as strings") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = tmpTable("graft_tx_strpart")
+    TxTable.append(spark, dir,
+      Seq((1L, "01"), (2L, "02"), (3L, "x")).toDF("id", "day"),
+      partitionCols = Seq("day"))
+    def filesFor(day: String): Set[String] =
+      TxTable.readWhere(spark, dir, col("day") <=> day).inputFiles.toSet
+    val all = TxTable.read(spark, dir).inputFiles.toSet
+    for (day <- Seq("01", "02", "x")) {
+      val kept = filesFor(day)
+      assert(kept.nonEmpty && kept.forall(_.contains(s"day=$day/")),
+        s"day <=> '$day' must keep only day=$day's files, kept $kept")
+      assert(all.count(_.contains(s"day=$day/")) == kept.size)
+    }
+  }
+
+  test("tx upsertPartitioned into day=01 and day=02 of a string-partitioned table both commit") {
+    val s = spark
+    import s.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.racefs.impl", classOf[RaceFs].getName)
+    val dir = "racefs://" + tmpTable("graft_tx_strpart_race")
+    def upsert(id: Long, day: String, v: String): Unit =
+      Sinks.upsertPartitioned(spark, dir, Seq((id, day, v)).toDF("id", "day", "v"),
+        Seq("id", "day"), Seq("day"), tx = true)
+    Seq((1L, "01", "a"), (2L, "02", "b"), (3L, "x", "c"))
+      .foreach { case (id, day, v) => upsert(id, day, v) }
+    // the day=02 upsert commits inside the day=01 upsert's claim, after
+    // the latter's conflict scope (day=01's files alone) was read
+    RaceFs.beforeNextManifest(upsert(2L, "02", "B"))
+    upsert(1L, "01", "A")
+    assert(TxTable.versions(spark, dir).size == 5)
+    val out = TxTable.read(spark, dir).select("id", "v").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(out == Map(1L -> "A", 2L -> "B", 3L -> "c"))
+  }
 }
