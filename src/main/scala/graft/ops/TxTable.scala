@@ -47,11 +47,15 @@ import java.nio.charset.StandardCharsets
   * FileAlreadyExistsException). On HDFS it is `rename` (atomic, fails
   * when the destination exists) followed by a nonce read-back as
   * defense in depth against filesystems whose rename clobbers.
-  * Concurrency is optimistic: a lost claim retries against the NEW head
-  * (append re-reads the head's file list, so no appended files are
-  * lost; concurrent overwrites are last-committer-wins). On stores with
-  * neither primitive (S3 proper) a real deployment swaps step 3 for a
-  * conditional PUT.
+  * Concurrency is optimistic (Delta's protocol): every operation reads
+  * ONE snapshot of the log at its start — one `_txlog` listing, one
+  * manifest read — builds its commit on it and claims the snapshot's
+  * version + 1 straight away. Claims are serialized by the slot, so a
+  * won claim proves the snapshot was still the head. Only a lost claim
+  * reads the log again and rebuilds on the NEW head (an append keeps
+  * the winner's files; concurrent overwrites are last-committer-wins).
+  * On stores with neither primitive (S3 proper) a real deployment swaps
+  * step 3 for a conditional PUT.
   *
   * At 100 TB the manifest stays small (file paths, not data) and the
   * driver-side log I/O is O(files per snapshot) — the same order as the
@@ -97,6 +101,42 @@ object TxTable {
     (lines.head, lines.tail)
   }
 
+  /** One read of the log, taken once at the start of an operation and
+    * passed down so no layer lists `_txlog` or reads the manifest again:
+    * the version it is (None for a path with no commits yet), its
+    * manifest's head line, parsed meta, and file lines.
+    */
+  private final case class Snapshot(spark: SparkSession, path: String,
+                                    fs: FileSystem, root: Path,
+                                    version: Option[Long], headLine: String,
+                                    lines: Seq[String]) {
+    lazy val meta: Map[String, String] = parseMeta(headLine)
+    /** The version, 0 before the first commit. */
+    def v: Long = version.getOrElse(0L)
+    def declaredSchema: Option[StructType] = declaredSchemaOf(meta)
+    def partitionCols: Option[Seq[String]] = declaredPartitionColsOf(meta)
+    def constraints: Map[String, String] = effectiveConstraints(meta)
+  }
+
+  /** The snapshot of version `at`, or of the head — the one `_txlog`
+    * listing and manifest read an operation makes. Refuses a path with
+    * no commits unless `orEmpty`, which gives the empty snapshot a first
+    * commit builds on.
+    */
+  private def snapshot(spark: SparkSession, path: String,
+                       at: Option[Long] = None,
+                       orEmpty: Boolean = false): Snapshot = {
+    val (fs, p) = fsFor(spark, path)
+    val v = at.orElse(versions(spark, path).lastOption)
+    require(v.isDefined || orEmpty,
+      s"$path is not a TxTable (no $LogDir manifests)")
+    val (head, lines) = v.fold(("", Seq.empty[String]))(readManifest(fs, p, _))
+    Snapshot(spark, path, fs, p, v, head, lines)
+  }
+
+  /** A public version argument: `v >= 0` is that version, else the head. */
+  private def at(v: Long): Option[Long] = Option.when(v >= 0)(v)
+
   /** Metadata tokens of version `v`'s commit: the `key=value` pairs its
     * writer embedded in the manifest head line (empty for commits written
     * without metadata). Used by
@@ -105,31 +145,26 @@ object TxTable {
     * same atomic unit as the file list, so a replayed micro-batch is
     * detected no matter where the previous attempt crashed.
     */
-  def commitMeta(spark: SparkSession, path: String, v: Long): Map[String, String] = {
-    val (fs, p) = fsFor(spark, path)
-    parseMeta(readManifest(fs, p, v)._1)
-  }
+  def commitMeta(spark: SparkSession, path: String, v: Long): Map[String, String] =
+    snapshot(spark, path, Some(v)).meta
 
   /** Epoch-millis commit time of version `v`: the `ts` token its
     * committer stamped into the head line. Manifests written before
     * timestamps existed fall back to the manifest FILE's modification
     * time — the same degraded resolution Delta applies to its log.
     */
-  def commitTimestamp(spark: SparkSession, path: String, v: Long): Long = {
-    val (fs, p) = fsFor(spark, path)
-    commitTimestampOf(fs, p, v, parseMeta(readManifest(fs, p, v)._1))
-  }
+  def commitTimestamp(spark: SparkSession, path: String, v: Long): Long =
+    commitTimestampOf(snapshot(spark, path, Some(v)))
 
-  /** [[commitTimestamp]] over ALREADY-PARSED meta — for loops that
-    * hold the manifest in hand (e.g. [[readChanges]]), so stamping a
-    * version doesn't re-read and re-parse the manifest it just read.
+  /** [[commitTimestamp]] of a snapshot in hand — for loops that hold
+    * the manifest (e.g. [[readChanges]]), so stamping a version doesn't
+    * re-read and re-parse the manifest it just read.
     */
-  private def commitTimestampOf(fs: FileSystem, p: Path, v: Long,
-                                meta: Map[String, String]): Long =
-    meta.get(TimestampMetaKey)
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(fs.getFileStatus(
-        new Path(new Path(p, LogDir), manifestName(v))).getModificationTime)
+  private def commitTimestampOf(s: Snapshot): Long =
+    s.meta.get(TimestampMetaKey)
+      .flatMap(t => scala.util.Try(t.toLong).toOption)
+      .getOrElse(s.fs.getFileStatus(new Path(new Path(s.root, LogDir),
+        manifestName(s.v))).getModificationTime)
 
   /** `TIMESTAMP AS OF` resolution: the newest retained version whose
     * commit time is <= `tsMillis`. Errors when the timestamp predates
@@ -142,11 +177,12 @@ object TxTable {
                            tsMillis: Long): Long = {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    vs.reverseIterator
-      .find(v => commitTimestamp(spark, path, v) <= tsMillis)
-      .getOrElse(sys.error(
-        s"timestamp $tsMillis predates the earliest retained commit of " +
-        s"$path (v${vs.head} at ${commitTimestamp(spark, path, vs.head)})"))
+    // newest first, each manifest read once: the error names the oldest
+    // commit's time, which the exhausted search already read
+    val times = LazyList.from(vs.reverse).map(v => v -> commitTimestamp(spark, path, v))
+    times.find(_._2 <= tsMillis).map(_._1).getOrElse(sys.error(
+      s"timestamp $tsMillis predates the earliest retained commit of " +
+      s"$path (v${vs.head} at ${times.last._2})"))
   }
 
   /** The DECLARED logical schema carried in version `v`'s manifest
@@ -154,26 +190,16 @@ object TxTable {
     * has run; None for tables whose schema lives only in footers.
     */
   def declaredSchema(spark: SparkSession, path: String,
-                     v: Long = -1L): Option[StructType] = {
-    val (fs, p) = fsFor(spark, path)
-    val at = if (v < 0) versions(spark, path).lastOption else Some(v)
-    at.flatMap(declaredSchemaAt(fs, p, _))
-  }
+                     v: Long = -1L): Option[StructType] =
+    snapshot(spark, path, at(v), orEmpty = true).declaredSchema
 
   /** The partition columns version `v`'s manifest declares (head when
     * `v < 0`): `Some(Nil)` = declared flat, `None` = no declaration
     * (pre-declaration table — resolve the layout from file paths).
     */
   def declaredPartitionCols(spark: SparkSession, path: String,
-                            v: Long = -1L): Option[Seq[String]] = {
-    val (fs, p) = fsFor(spark, path)
-    val at = if (v < 0) versions(spark, path).lastOption else Some(v)
-    at.flatMap(declaredPartitionColsAt(fs, p, _))
-  }
-
-  private def declaredSchemaAt(fs: FileSystem, p: Path,
-                               v: Long): Option[StructType] =
-    declaredSchemaOf(parseMeta(readManifest(fs, p, v)._1))
+                            v: Long = -1L): Option[Seq[String]] =
+    snapshot(spark, path, at(v), orEmpty = true).partitionCols
 
   private def declaredSchemaOf(meta: Map[String, String]): Option[StructType] =
     meta.get(SchemaMetaKey).map(j => schemaFromJson(dec(j)))
@@ -181,10 +207,6 @@ object TxTable {
   private def schemaFromJson(json: String): StructType =
     org.apache.spark.sql.types.DataType.fromJson(json)
       .asInstanceOf[StructType]
-
-  private def declaredPartitionColsAt(fs: FileSystem, p: Path,
-                                      v: Long): Option[Seq[String]] =
-    declaredPartitionColsOf(parseMeta(readManifest(fs, p, v)._1))
 
   private def declaredPartitionColsOf(
       meta: Map[String, String]): Option[Seq[String]] =
@@ -211,7 +233,8 @@ object TxTable {
     */
   def create(spark: SparkSession, path: String, schema: StructType,
              partitionCols: Seq[String] = Nil): Long = {
-    require(!exists(spark, path), s"graft table $path already exists")
+    val s = snapshot(spark, path, orEmpty = true)
+    require(s.version.isEmpty, s"graft table $path already exists")
     val missing = partitionCols.filterNot(schema.fieldNames.contains)
     require(missing.isEmpty,
       s"partition columns ${missing.mkString(",")} not in schema " +
@@ -221,7 +244,7 @@ object TxTable {
     // "create" as v2, silently replacing the winner's declared schema.
     // The pin makes the loser fail as "already exists", which is what
     // the catalog/SQL surfaces promise.
-    metaCommit(spark, path, "create",
+    metaCommit(s, "create",
       Map(SchemaMetaKey -> enc(schema.json),
         PartitionsMetaKey -> enc(partitionCols.mkString(","))),
       ReadSet(version = Some(0L)))
@@ -239,10 +262,8 @@ object TxTable {
     */
   def evolveSchema(spark: SparkSession, path: String,
                    newSchema: StructType): Long = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val current = declaredSchema(spark, path).getOrElse(
-      read(spark, path, mergeSchema = true).schema)
+    val s = snapshot(spark, path)
+    val current = tableSchema(s)
     val byName = newSchema.fields.map(f => f.name -> f).toMap
     current.fields.foreach { f =>
       val n = byName.getOrElse(f.name, sys.error(
@@ -264,8 +285,7 @@ object TxTable {
       f => require(f.nullable,
         s"added column ${f.name} must be nullable (existing rows have " +
         "no value for it)"))
-    metaCommit(spark, path, "evolve",
-      Map(SchemaMetaKey -> enc(newSchema.json)))
+    metaCommit(s, "evolve", Map(SchemaMetaKey -> enc(newSchema.json)))
   }
 
   /** Rename a data column — the honest no-column-mapping semantics:
@@ -282,9 +302,8 @@ object TxTable {
     * explicitly), a `to` that already exists, and a rename out from
     * under a CHECK constraint that references the column (drop it
     * first — silently rewriting constraint SQL is how wrong data gets
-    * committed). A bloom config naming the column is renamed FIRST as
-    * its own metadata commit — crash-safe, since a config naming a
-    * column no file carries is simply inert.
+    * committed). A bloom or clustering config naming the column is
+    * renamed in the same commit.
     */
   /** Does a CHECK expression reference `colName`, bare or
     * backtick-quoted? NO backtick in the lookarounds: a quoted
@@ -318,31 +337,30 @@ object TxTable {
     * Refuses: partition columns (relayout — do it as an explicit
     * overwrite), the last remaining column, and a drop out from under
     * a CHECK constraint referencing the column bare or backtick-quoted
-    * (the [[renameColumn]] guard). A bloom config naming the column
-    * loses it FIRST as its own metadata commit (an emptied set drops
-    * the config); a clustering declaration likewise — both crash-safe:
-    * a config over the remaining columns is valid at every
-    * intermediate state.
+    * (the [[renameColumn]] guard). A bloom or clustering config naming
+    * the column loses it in the same commit (an emptied config is
+    * dropped).
     */
   def dropColumn(spark: SparkSession, path: String, name: String): Long =
     rewriteColumn(spark, path, name, None)
 
   /** The shared core of [[renameColumn]] (`to` = the new name) and
-    * [[dropColumn]] (`to` = None): refuse, rename or drop `name` in the
-    * bloom and clustering configs, then rewrite the head-pinned snapshot
-    * as one `cdf=0` commit.
+    * [[dropColumn]] (`to` = None): refuse, then rewrite the snapshot as
+    * one `cdf=0` commit pinned to it, with `name` renamed or dropped in
+    * the bloom and clustering configs too. The pin matters: the rewrite
+    * keeps no base line, so a concurrent commit landing before the
+    * claim would otherwise be dropped (or its schema or layout erased).
     */
   private def rewriteColumn(spark: SparkSession, path: String, name: String,
                             to: Option[String]): Long = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val schema0 = declaredSchema(spark, path).getOrElse(
-      read(spark, path, mergeSchema = true).schema)
-    require(schema0.fieldNames.contains(name),
-      s"no column '$name' in $path (has ${schema0.fieldNames.mkString(", ")})")
-    to.foreach(t => require(!schema0.fieldNames.contains(t),
+    val s = snapshot(spark, path)
+    val rows = readSnapshot(s, mergeSchema = true)
+    val schema = s.declaredSchema.getOrElse(rows.schema)
+    require(schema.fieldNames.contains(name),
+      s"no column '$name' in $path (has ${schema.fieldNames.mkString(", ")})")
+    to.foreach(t => require(!schema.fieldNames.contains(t),
       s"column '$t' already exists in $path"))
-    val parts = declaredPartitionCols(spark, path).getOrElse(Nil)
+    val parts = s.partitionCols.getOrElse(Nil)
     require(!parts.contains(name),
       s"'$name' is a partition column — " +
         (if (to.isDefined) "renaming" else "dropping") +
@@ -351,68 +369,31 @@ object TxTable {
     // values live in the path, so a table of only partition columns has
     // no bytes to write (Spark refuses all-columns-as-partitions with an
     // opaque error deep in the write — refuse here with the real one)
-    def keepsDataColumn(schema: StructType, parts: Seq[String]): Boolean =
-      to.isDefined ||
-        schema.fields.exists(f => f.name != name && !parts.contains(f.name))
-    require(keepsDataColumn(schema0, parts),
+    require(to.isDefined ||
+        schema.fields.exists(f => f.name != name && !parts.contains(f.name)),
       s"cannot drop '$name' of $path: it is the last data " +
         "(non-partition) column")
-    constraints(spark, path).foreach { case (n, e) =>
+    s.constraints.foreach { case (n, e) =>
       require(!constraintReferences(e, name),
         s"CHECK constraint $n references '$name' — drop it before " +
           (if (to.isDefined) "renaming" else "dropping the column"))
     }
-    // a bloom or clustering config naming the column follows it FIRST,
-    // each as its own metadata commit (an emptied config is dropped) —
-    // crash-safe, since a config naming a column no file carries is inert
-    def renamed(cols: Seq[String]): Seq[String] =
-      cols.flatMap(c => if (c == name) to.toSeq else Seq(c))
-    bloomConfigOf(commitMeta(spark, path, vs.last))
-      .filter(_._1.contains(name)).foreach { case (cols, bits, k) =>
-        val rest = renamed(cols)
-        metaCommit(spark, path, "setbloom", Map(BloomMetaKey ->
-          (if (rest.isEmpty) "" else enc(s"${rest.mkString(",")}:$bits:$k"))))
-      }
-    val cl = clusteringColumns(spark, path)
-    if (cl.contains(name)) {
-      val rest = renamed(cl)
-      metaCommit(spark, path, "cluster", Map(ClusterMetaKey ->
-        (if (rest.isEmpty) "" else enc(rest.mkString(",")))))
+    // a config naming the column follows it; an emptied one is dropped
+    def renamed(cols: Seq[String], key: String, suffix: String) = {
+      val rest = cols.flatMap(c => if (c == name) to.toSeq else Seq(c))
+      Option.when(cols.contains(name))(key ->
+        (if (rest.isEmpty) "" else enc(rest.mkString(",") + suffix)))
     }
-    // HEAD-PINNED rewrite (the addConstraint pattern): the snapshot is
-    // read at an explicit version AFTER the config pre-commits, and the
-    // final commit's read set pins the head to that version. Without the
-    // pin, a concurrent append landing between the snapshot read and the
-    // claim would be silently dropped — the rewrite's baseKeep discards
-    // every base line, and the claim-loop retry rebuilds from the stale
-    // snapshot. Schema and LAYOUT facts are re-derived at the pin for the
-    // same reason: a concurrent evolve/rename would otherwise be erased,
-    // a concurrently declared layout overwritten by the stale early read
-    // (flattening a hive layout), `name` slipped past the
-    // partition-column refusal, or — after a concurrent drop — the final
-    // non-partition column removed
-    val v0 = versions(spark, path).last
-    val snapshot = readVersion(spark, path, v0, mergeSchema = true)
-    val schema = declaredSchema(spark, path, v0).getOrElse(snapshot.schema)
-    require(schema.fieldNames.contains(name) &&
-        to.forall(t => !schema.fieldNames.contains(t)),
-      s"schema of $path changed concurrently — retry the " +
-        (if (to.isDefined) "rename" else "drop"))
-    val (fs0, p0) = fsFor(spark, path)
-    val parts0 = declaredPartitionColsAt(fs0, p0, v0).getOrElse(Nil)
-    require(!parts0.contains(name),
-      s"'$name' became a partition column concurrently — retry")
-    require(keepsDataColumn(schema, parts0),
-      s"cannot drop '$name' of $path: it is the last data " +
-        "(non-partition) column (a concurrent drop landed — retry)")
+    val configs = bloomConfigOf(s.meta).flatMap { case (cols, bits, k) =>
+      renamed(cols, BloomMetaKey, s":$bits:$k") } ++
+      renamed(clusteringOf(s.meta), ClusterMetaKey, "")
     val newSchema = StructType(schema.fields.flatMap(f =>
       if (f.name == name) to.map(t => f.copy(name = t)) else Some(f)))
-    commit(spark, path,
-      to.fold(snapshot.drop(name))(snapshot.withColumnRenamed(name, _)),
-      if (to.isDefined) "rename" else "dropcol", (_, _) => Seq.empty, parts0,
-      meta = Map(SchemaMetaKey -> enc(newSchema.json),
+    commit(s, to.fold(rows.drop(name))(rows.withColumnRenamed(name, _)),
+      if (to.isDefined) "rename" else "dropcol", (_, _) => Seq.empty, parts,
+      meta = configs.toMap ++ Map(SchemaMetaKey -> enc(newSchema.json),
         ChangeDataMetaKey -> "0"),
-      read = ReadSet(version = Some(v0)))
+      read = ReadSet(version = s.version))
   }
 
   // ------------------------------------------------------ CHECK constraints
@@ -441,17 +422,8 @@ object TxTable {
   private[ops] val ConstraintMetaPrefix = "graft.constraint."
 
   /** The table's active CHECK constraints, name → SQL expression. */
-  def constraints(spark: SparkSession, path: String): Map[String, String] = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    headConstraints(spark, path)
-  }
-
-  /** Tolerant form for the commit path: empty for a first commit. */
-  private def headConstraints(spark: SparkSession,
-                              path: String): Map[String, String] =
-    versions(spark, path).lastOption.map(v =>
-      effectiveConstraints(commitMeta(spark, path, v))).getOrElse(Map.empty)
+  def constraints(spark: SparkSession, path: String): Map[String, String] =
+    snapshot(spark, path).constraints
 
   /** The ACTIVE constraint set carried in a head's meta tokens
     * (tombstoned = dropped = absent), decoded name -> expression.
@@ -473,9 +445,7 @@ object TxTable {
                     checkExpr: String): Long = {
     require(name.matches("[A-Za-z][A-Za-z0-9_]*"),
       s"constraint name must be an identifier, got: $name")
-    require(versions(spark, path).nonEmpty,
-      s"$path is not a TxTable (no $LogDir manifests)")
-    // validate-then-claim, PINNED to the validated head: the claim
+    // validate-then-claim, PINNED to the validated snapshot: the claim
     // aborts if any commit landed during validation (its rows would
     // have escaped the scan), and we re-validate against the new head
     // — the two-sided closure of the races the data-commit side's
@@ -484,22 +454,22 @@ object TxTable {
     var attempt = 0
     while (true) {
       attempt += 1
-      val v0 = versions(spark, path).last
-      val snapshot = readVersion(spark, path, v0, mergeSchema = true)
-      val checked = snapshot.select(expr(checkExpr).as("ok"))
+      val s = snapshot(spark, path)
+      val rows = readSnapshot(s, mergeSchema = true)
+      val checked = rows.select(expr(checkExpr).as("ok"))
       require(checked.schema.head.dataType ==
         org.apache.spark.sql.types.BooleanType,
         s"CHECK expression must be boolean, got " +
           s"${checked.schema.head.dataType.simpleString}: $checkExpr")
-      val bad = violationCounts(snapshot, Seq(name -> checkExpr), None)(
+      val bad = violationCounts(rows, Seq(name -> checkExpr), None)(
         noopScan).head
       require(bad == 0L,
         s"cannot add CHECK constraint $name to $path: $bad existing " +
           s"rows violate ($checkExpr)")
       try {
-        return metaCommit(spark, path, "constraint",
+        return metaCommit(s, "constraint",
           Map(ConstraintMetaPrefix + name -> enc(checkExpr)),
-          ReadSet(version = Some(v0)))
+          ReadSet(version = s.version))
       } catch {
         case e: java.util.ConcurrentModificationException =>
           if (attempt >= 5) throw e // sustained racing writes
@@ -514,30 +484,24 @@ object TxTable {
     */
   def dropConstraint(spark: SparkSession, path: String,
                      name: String): Long = {
-    require(constraints(spark, path).contains(name),
+    val s = snapshot(spark, path)
+    require(s.constraints.contains(name),
       s"no CHECK constraint named $name on $path")
-    metaCommit(spark, path, "constraint",
-      Map(ConstraintMetaPrefix + name -> ""))
+    metaCommit(s, "constraint", Map(ConstraintMetaPrefix + name -> ""))
   }
 
   /** Enforcement for files a commit did not write itself (copied-in
-    * files, streaming-file commits): counts violations per active
-    * constraint over `newLines` with [[violationCounts]] on one `noop`
-    * scan, and throws on any. Reads with the declared schema when
+    * files, streaming-file commits): counts violations per constraint
+    * of snapshot `s` over `newLines` with [[violationCounts]] on one
+    * `noop` scan, and throws on any. Reads with the declared schema when
     * present so a constraint on an evolved column sees nulls (which
     * PASS) rather than an analysis error.
     */
-  private def enforceConstraints(spark: SparkSession, path: String,
-                                 fs: FileSystem, p: Path,
-                                 newLines: Seq[String],
-                                 constraints: Map[String, String]): Unit = {
-    val cons = constraints.toSeq.sortBy(_._1)
+  private def enforceConstraints(s: Snapshot, newLines: Seq[String]): Unit = {
+    val cons = s.constraints.toSeq.sortBy(_._1)
     if (newLines.isEmpty || cons.isEmpty) return
-    val pinned = versions(spark, path).lastOption
-      .flatMap(v => declaredSchemaAt(fs, p, v))
-    val written = scanFiles(spark, p, newLines, Map.empty,
-      mergeSchema = false, pinned)
-    rejectViolations(path, cons,
+    val written = scanFiles(s, newLines, mergeSchema = false, s.declaredSchema)
+    rejectViolations(s.path, cons,
       violationCounts(written, cons, None)(noopScan))(())
   }
 
@@ -658,11 +622,9 @@ object TxTable {
     */
   private[graft] def historyDetailed(spark: SparkSession, path: String)
       : Seq[(Long, Long, String, Map[String, String])] = {
-    val (fs, p) = fsFor(spark, path)
     versions(spark, path).map { v =>
-      val head = readManifest(fs, p, v)._1
-      val meta = parseMeta(head)
-      (v, commitTimestampOf(fs, p, v, meta), head.split(' ').head, meta)
+      val s = snapshot(spark, path, Some(v))
+      (v, commitTimestampOf(s), s.headLine.split(' ').head, s.meta)
     }
   }
 
@@ -715,9 +677,10 @@ object TxTable {
     */
   def lastTxnVersion(spark: SparkSession, path: String,
                      txnApp: String): Option[Long] =
-    versions(spark, path).lastOption.flatMap(v =>
-      commitMeta(spark, path, v).get(CarriedMetaPrefixes.head + txnApp)
-        .map(_.toLong))
+    lastTxnOf(snapshot(spark, path, orEmpty = true), txnApp)
+
+  private def lastTxnOf(s: Snapshot, txnApp: String): Option[Long] =
+    s.meta.get(CarriedMetaPrefixes.head + txnApp).map(_.toLong)
 
   /** The (meta, guard) pair an idempotent writer attaches for
     * micro-batch `batchId` of `txnApp` — commit-atomic claim of the
@@ -747,8 +710,8 @@ object TxTable {
                              txn: Option[(String, Long)])
       (doAppend: (Map[String, String], Map[String, Long]) => Long): Long = {
     txn.foreach { case (app, batchId) =>
-      if (lastTxnVersion(spark, path, app).exists(_ >= batchId))
-        return versions(spark, path).last
+      val s = snapshot(spark, path, orEmpty = true)
+      if (lastTxnOf(s, app).exists(_ >= batchId)) return s.v
     }
     val (meta, guard) = txn.map { case (app, batchId) =>
       txnClaim(app, batchId)
@@ -832,10 +795,11 @@ object TxTable {
     }
   }
 
-  private def writeChangeData(fs: FileSystem, p: Path,
+  private def writeChangeData(s: Snapshot,
                               changes: DataFrame): Map[String, String] = {
+    val fs = s.fs
     val uuid = java.util.UUID.randomUUID().toString
-    val dir = new Path(p, s"$ChangesDir/$uuid")
+    val dir = new Path(s.root, s"$ChangesDir/$uuid")
     sizedWrite(changes.sparkSession) {
       changes.write.parquet(dir.toString)
     }
@@ -925,10 +889,9 @@ object TxTable {
     */
   private[graft] def recordedSchema(spark: SparkSession, path: String,
                                     v: Long): Option[StructType] = {
-    val (fs, p) = fsFor(spark, path)
-    val (head, lines) = readManifest(fs, p, v)
-    recordedSchemaOf(parseMeta(head), lines).map(s =>
-      org.apache.spark.sql.GraftShim.nullable(s).asInstanceOf[StructType])
+    val s = snapshot(spark, path, Some(v))
+    recordedSchemaOf(s.meta, s.lines).map(r =>
+      org.apache.spark.sql.GraftShim.nullable(r).asInstanceOf[StructType])
   }
 
   /** Manifest file line → relative path (stats suffix stripped). */
@@ -1083,9 +1046,8 @@ object TxTable {
     require(bits >= 64 && bits <= (1 << 24) && bits % 64 == 0,
       s"bits must be in [64, 2^24] and a multiple of 64, got $bits")
     require(hashes >= 1 && hashes <= 16, s"hashes must be in [1,16], got $hashes")
-    require(versions(spark, path).nonEmpty,
-      s"$path is not a TxTable (no $LogDir manifests)")
-    val schema = read(spark, path, mergeSchema = true).schema
+    val s = snapshot(spark, path)
+    val schema = tableSchema(s)
     import org.apache.spark.sql.types._
     cols.foreach { c =>
       val f = schema.find(_.name == c).getOrElse(
@@ -1095,11 +1057,11 @@ object TxTable {
         s"bloom filters support integral and string columns; '$c' is " +
           f.dataType.simpleString)
     }
-    val parts = declaredPartitionCols(spark, path).getOrElse(Nil)
+    val parts = s.partitionCols.getOrElse(Nil)
     require(cols.intersect(parts).isEmpty,
       s"bloom on partition columns is pointless — partition-value " +
         s"pseudo-stats already prune them exactly: ${cols.intersect(parts)}")
-    metaCommit(spark, path, "setbloom",
+    metaCommit(s, "setbloom",
       Map(BloomMetaKey -> enc(s"${cols.mkString(",")}:$bits:$hashes")))
   }
 
@@ -1128,15 +1090,15 @@ object TxTable {
     * declared. */
   def bloomFilterConfig(spark: SparkSession,
                         path: String): Option[(Seq[String], Int, Int)] =
-    versions(spark, path).lastOption
-      .flatMap(v => bloomConfigOf(commitMeta(spark, path, v)))
+    bloomConfigOf(snapshot(spark, path, orEmpty = true).meta)
 
   /** Remove the bloom configuration (tombstoned empty, like a dropped
     * constraint). Existing per-file tokens stay in the manifest and
     * keep pruning — they are still TRUE statements about their files.
     */
   def dropBloomFilters(spark: SparkSession, path: String): Long =
-    metaCommit(spark, path, "setbloom", Map(BloomMetaKey -> ""))
+    metaCommit(snapshot(spark, path, orEmpty = true), "setbloom",
+      Map(BloomMetaKey -> ""))
 
   /** The double-hashing position columns: pos_i = (h1 + i·h2) mod m
     * with h1 = xxhash64(v) mod m and h2 = xxhash64(v, 1) mod (m−1) + 1
@@ -1171,16 +1133,16 @@ object TxTable {
     * <k:bits>` — older parsers see an extra pseudo-column whose name
     * can never collide with a real attribute.
     */
-  private def bloomTokens(spark: SparkSession, fs: FileSystem, p: Path,
-                          relFiles: Seq[String], cols: Seq[String],
-                          bits: Int, k: Int,
+  private def bloomTokens(s: Snapshot, relFiles: Seq[String],
+                          cols: Seq[String], bits: Int, k: Int,
                           rowSchema: Option[StructType]): Map[String, String] =
     if (relFiles.isEmpty) Map.empty
     else try {
+      val (fs, p) = (s.fs, s.root)
       val qualOf = relFiles.map { r =>
         fs.makeQualified(new Path(p, r)).toUri.getPath -> r
       }.toMap
-      val reader = spark.read
+      val reader = s.spark.read
       val df = rowSchema.fold(reader)(reader.schema).parquet(
         relFiles.map(r => fs.makeQualified(new Path(p, r)).toString): _*)
       val present = cols.filter(df.columns.contains)
@@ -1272,27 +1234,22 @@ object TxTable {
   }
 
   /** Stats-bearing manifest lines for freshly written files: footer
-    * min/max plus (when the table declares them) per-column bloom
+    * min/max plus (when snapshot `s` declares them) per-column bloom
     * tokens — the single formatting path every data commit shares.
-    */
-  /** `pendingMeta`: the meta of the commit IN FLIGHT — a bloom config
+    * `pendingMeta`: the meta of the commit IN FLIGHT — a bloom config
     * declared there (see [[bloomDeclarationMeta]]) applies to this
-    * commit's own files, overriding the head's carried config.
+    * commit's own files, overriding the snapshot's carried config.
     * `rowSchema`: the files' recorded schema, pinning the bloom scan.
     */
-  private def statsLines(spark: SparkSession, fs: FileSystem, p: Path,
-                         path: String, relFiles: Seq[String],
+  private def statsLines(s: Snapshot, relFiles: Seq[String],
                          pendingMeta: Map[String, String] = Map.empty,
                          precomputed: Option[Map[String, String]] = None,
                          rowSchema: Option[StructType] = None)
       : Seq[String] = {
-    val stats = precomputed.getOrElse(footerStats(fs, p, relFiles))
-    val headMeta = versions(spark, path).lastOption
-      .map(v => parseMeta(readManifest(fs, p, v)._1))
-      .getOrElse(Map.empty[String, String])
-    val blooms = bloomConfigOf(headMeta ++ pendingMeta)
+    val stats = precomputed.getOrElse(footerStats(s.fs, s.root, relFiles))
+    val blooms = bloomConfigOf(s.meta ++ pendingMeta)
       .map { case (cols, bits, k) =>
-        bloomTokens(spark, fs, p, relFiles, cols, bits, k, rowSchema) }
+        bloomTokens(s, relFiles, cols, bits, k, rowSchema) }
       .getOrElse(Map.empty[String, String])
     relFiles.map { f =>
       val toks = Seq(stats.get(f), blooms.get(f)).flatten
@@ -1618,8 +1575,7 @@ object TxTable {
     * with no Filter left after analysis (e.g. `lit(true)`) prunes
     * nothing.
     */
-  private def mayMatchLines(spark: SparkSession, p: Path, lines: Seq[String],
-                            meta: Map[String, String],
+  private def mayMatchLines(s: Snapshot, lines: Seq[String],
                             predicate: Option[org.apache.spark.sql.Column],
                             mergeSchema: Boolean,
                             schema: Option[StructType],
@@ -1634,7 +1590,7 @@ object TxTable {
     // string partition value that looks numeric (`day=01`) must
     // compare as a string
     val (cs, stringCols) = predicate.filter(_ => lines.nonEmpty).flatMap(pred =>
-      scanFiles(spark, p, lines, meta, mergeSchema, schema)
+      scanFiles(s, lines, mergeSchema, schema)
         .where(pred).queryExecution.analyzed.collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
             (split(f.condition), f.child.output.collect {
@@ -1659,28 +1615,11 @@ object TxTable {
                 predicate: org.apache.spark.sql.Column,
                 mergeSchema: Boolean = false,
                 schema: Option[StructType] = None): DataFrame = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val (head, lines) = readManifest(fs, p, vs.last)
-    val meta = parseMeta(head)
-    val pinned = schema.orElse(declaredSchemaOf(meta))
-    val kept = mayMatchLines(spark, p, lines, meta, Some(predicate),
-      mergeSchema, pinned)
-    if (lines.isEmpty) pinned match {
-      case Some(s) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => sys.error(
-        s"head of $path is an empty snapshot with no files — " +
-        "pass an explicit schema to read it as an empty frame")
-    }
-    else if (kept.isEmpty)
-      // no file can match: Catalyst folds Filter(false) to an empty
-      // relation, so this reads nothing while keeping the snapshot schema
-      scanFiles(spark, p, lines, meta, mergeSchema, pinned)
-        .where(lit(false))
-    else scanFiles(spark, p, kept, meta, mergeSchema, pinned)
-      .where(predicate)
+    val s = snapshot(spark, path)
+    val kept = mayMatchLines(s, s.lines, Some(predicate), mergeSchema,
+      schema.orElse(s.declaredSchema))
+    val df = scanSnapshot(s, kept, mergeSchema, schema, s"head of $path")
+    if (kept.isEmpty) df else df.where(predicate)
   }
 
   /** Snapshot read of the newest committed version. `mergeSchema` unions
@@ -1689,11 +1628,8 @@ object TxTable {
     */
   def read(spark: SparkSession, path: String,
            mergeSchema: Boolean = false,
-           schema: Option[StructType] = None): DataFrame = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    readVersion(spark, path, vs.last, mergeSchema, schema)
-  }
+           schema: Option[StructType] = None): DataFrame =
+    readSnapshot(snapshot(spark, path), mergeSchema, schema)
 
   /** Time travel: snapshot read of an exact committed version.
     *
@@ -1713,35 +1649,49 @@ object TxTable {
     */
   def readVersion(spark: SparkSession, path: String, v: Long,
                   mergeSchema: Boolean = false,
-                  schema: Option[StructType] = None): DataFrame = {
-    val (fs, p) = fsFor(spark, path)
-    val (head, files) = readManifest(fs, p, v)
-    val meta = parseMeta(head)
-    // an explicit caller pin wins; otherwise the schema the manifest
-    // itself declares (create/evolveSchema) pins the read — files
-    // written before an evolution surface the added columns as null
-    val pinned = schema.orElse(declaredSchemaOf(meta))
-    if (files.isEmpty) pinned match {
-      // an empty snapshot has no parquet footer to infer from — a
-      // pinned or declared schema reads it as an empty frame (same
-      // contract as readWhere/readAppended), otherwise fail loudly
-      case Some(s) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => sys.error(
-        s"version $v of $path is an empty snapshot with no files — " +
+                  schema: Option[StructType] = None): DataFrame =
+    readSnapshot(snapshot(spark, path, Some(v)), mergeSchema, schema)
+
+  /** Every file of snapshot `s`, scanned as one frame. */
+  private def readSnapshot(s: Snapshot, mergeSchema: Boolean = false,
+                           schema: Option[StructType] = None): DataFrame =
+    scanSnapshot(s, s.lines, mergeSchema, schema, s"version ${s.v} of ${s.path}")
+
+  /** The declared schema of snapshot `s`, else its files' union schema. */
+  private def tableSchema(s: Snapshot): StructType =
+    s.declaredSchema.getOrElse(readSnapshot(s, mergeSchema = true).schema)
+
+  /** `lines` of snapshot `s` scanned as one frame. An explicit caller
+    * pin wins; otherwise the schema the manifest itself declares
+    * (create/evolveSchema) pins the read — files written before an
+    * evolution surface the added columns as null. With no line selected
+    * the frame is empty with the snapshot's schema: Catalyst folds
+    * Filter(false) to an empty relation, so nothing is read. An empty
+    * snapshot has no parquet footer to infer from — a pinned or
+    * declared schema reads it as an empty frame, otherwise the read
+    * fails naming `what`.
+    */
+  private def scanSnapshot(s: Snapshot, lines: Seq[String],
+                           mergeSchema: Boolean, schema: Option[StructType],
+                           what: => String): DataFrame = {
+    val pinned = schema.orElse(s.declaredSchema)
+    if (lines.nonEmpty) scanFiles(s, lines, mergeSchema, pinned)
+    else if (s.lines.nonEmpty)
+      scanFiles(s, s.lines, mergeSchema, pinned).where(lit(false))
+    else pinned match {
+      case Some(sc) => s.spark.createDataFrame(
+        s.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
+      case None => sys.error(s"$what is an empty snapshot with no files — " +
         "pass an explicit schema to read it as an empty frame")
     }
-    else scanFiles(spark, p, files, meta, mergeSchema, pinned)
   }
 
   /** Absolute data-file paths of version `v`'s snapshot — the
     * file-list surface external readers (the `graft` DataSource V2
     * provider, [[graft.sources.GraftTableProvider]]) build on.
     */
-  def snapshotFiles(spark: SparkSession, path: String, v: Long): Seq[String] = {
-    val (fs, p) = fsFor(spark, path)
-    readManifest(fs, p, v)._2.map(l => new Path(p, pathOf(l)).toString)
-  }
+  def snapshotFiles(spark: SparkSession, path: String, v: Long): Seq[String] =
+    snapshotWithMeta(spark, path, v)._2
 
   /** Version `v`'s parsed meta AND qualified snapshot files from ONE
     * manifest read — for per-version loops (streaming sources) that
@@ -1751,9 +1701,8 @@ object TxTable {
   private[graft] def snapshotWithMeta(spark: SparkSession, path: String,
                                       v: Long)
       : (Map[String, String], Seq[String]) = {
-    val (fs, p) = fsFor(spark, path)
-    val (head, lines) = readManifest(fs, p, v)
-    (parseMeta(head), lines.map(l => new Path(p, pathOf(l)).toString))
+    val s = snapshot(spark, path, Some(v))
+    (s.meta, s.lines.map(l => new Path(s.root, pathOf(l)).toString))
   }
 
   // ----------------------------------------------- metadata-only aggregates
@@ -1772,13 +1721,19 @@ object TxTable {
     * lacks one.
     */
   def metaRowCount(spark: SparkSession, path: String,
-                   version: Long = -1L): Option[Long] = {
-    val (fs, p) = fsFor(spark, path)
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed versions at $path")
-    val v = if (version >= 0) version else vs.last
-    require(vs.contains(v), s"version $v of $path does not exist")
-    metaRowCountOfLines(readManifest(fs, p, v)._2)
+                   version: Long = -1L): Option[Long] =
+    metaRowCountOfLines(metaSnapshot(spark, path, version).lines)
+
+  /** The snapshot a metadata aggregate answers from: the head, or
+    * `version` when >= 0.
+    */
+  private def metaSnapshot(spark: SparkSession, path: String,
+                           version: Long): Snapshot = {
+    val s = try snapshot(spark, path, at(version), orEmpty = true)
+      catch { case e: java.io.FileNotFoundException =>
+        require(false, s"version $version of $path does not exist"); throw e }
+    require(s.version.nonEmpty, s"no committed versions at $path")
+    s
   }
 
   private[graft] def metaRowCountOfLines(lines: Seq[String]): Option[Long] = {
@@ -1793,14 +1748,8 @@ object TxTable {
     * contribution.
     */
   def metaColumnCount(spark: SparkSession, path: String,
-                      column: String, version: Long = -1L): Option[Long] = {
-    val (fs, p) = fsFor(spark, path)
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed versions at $path")
-    val v = if (version >= 0) version else vs.last
-    require(vs.contains(v), s"version $v of $path does not exist")
-    metaColumnCountOfLines(readManifest(fs, p, v)._2, column)
-  }
+                      column: String, version: Long = -1L): Option[Long] =
+    metaColumnCountOfLines(metaSnapshot(spark, path, version).lines, column)
 
   private[graft] def metaColumnCountOfLines(lines: Seq[String],
                                             column: String): Option[Long] = {
@@ -1836,14 +1785,9 @@ object TxTable {
   def metaMinMax(spark: SparkSession, path: String,
                  column: String, version: Long = -1L,
                  stringOrdered: Boolean = false)
-      : Option[(String, String)] = {
-    val (fs, p) = fsFor(spark, path)
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no committed versions at $path")
-    val v = if (version >= 0) version else vs.last
-    require(vs.contains(v), s"version $v of $path does not exist")
-    metaMinMaxOfLines(readManifest(fs, p, v)._2, column, stringOrdered)
-  }
+      : Option[(String, String)] =
+    metaMinMaxOfLines(metaSnapshot(spark, path, version).lines, column,
+      stringOrdered)
 
   private[graft] def metaMinMaxOfLines(lines: Seq[String], column: String,
                                        stringOrdered: Boolean)
@@ -1884,13 +1828,11 @@ object TxTable {
   private[graft] def metaPartitionLines(spark: SparkSession, path: String,
                                         v: Long)
       : Option[Seq[(Map[String, Option[String]], Seq[String])]] = {
-    val (fs, p) = fsFor(spark, path)
-    val vs = versions(spark, path)
-    if (!vs.contains(v)) return None
-    val partCols = declaredPartitionColsAt(fs, p, v).getOrElse(Nil)
+    val s = try snapshot(spark, path, Some(v))
+      catch { case _: java.io.FileNotFoundException => return None }
+    val partCols = s.partitionCols.getOrElse(Nil)
     if (partCols.isEmpty) return None
-    val lines = readManifest(fs, p, v)._2
-    val grouped = lines.groupBy(l => partitionDirOf(pathOf(l))).toSeq
+    val grouped = s.lines.groupBy(l => partitionDirOf(pathOf(l))).toSeq
     val parsed = grouped.map { case (dir, ls) =>
       val segs = dir.split('/').filter(_.contains('=')).map { seg =>
         val i = seg.indexOf('=')
@@ -1933,19 +1875,18 @@ object TxTable {
     *
     * Each branch's schema is `schema` (the caller's or the declared
     * one) when given, else the schema recorded for the branch's lines
-    * in `meta` — the head meta of the manifest the lines come from.
-    * Only a branch with neither leaves Spark to infer its schema from
-    * a footer, which costs a job.
+    * in the meta of `s` — the snapshot the lines come from. Only a
+    * branch with neither leaves Spark to infer its schema from a
+    * footer, which costs a job.
     */
-  private def scanFiles(spark: SparkSession, p: Path, lines: Seq[String],
-                        meta: Map[String, String],
+  private def scanFiles(s: Snapshot, lines: Seq[String],
                         mergeSchema: Boolean,
                         schema: Option[StructType]): DataFrame = {
     def scan(group: Seq[String]): DataFrame = {
-      val r = spark.read.option("mergeSchema", mergeSchema.toString)
-        .option("basePath", p.toString)
-      schema.orElse(recordedSchemaOf(meta, group)).fold(r)(r.schema)
-        .parquet(group.map(l => new Path(p, pathOf(l)).toString): _*)
+      val r = s.spark.read.option("mergeSchema", mergeSchema.toString)
+        .option("basePath", s.root.toString)
+      schema.orElse(recordedSchemaOf(s.meta, group)).fold(r)(r.schema)
+        .parquet(group.map(l => new Path(s.root, pathOf(l)).toString): _*)
     }
     val out = lines.groupBy(pathOf(_).split('/').take(2).mkString("/")).toSeq
       .sortBy(_._1).map(g => scan(g._2))
@@ -1956,9 +1897,8 @@ object TxTable {
     // of the pinned schema's order — project back to the declared order
     // so pinned reads are column-order-stable (and empty-snapshot reads,
     // built straight from the schema, agree with non-empty ones)
-    schema.fold(out)(s =>
-      out.select(s.fieldNames.toIndexedSeq.map(
-        org.apache.spark.sql.functions.col): _*))
+    schema.fold(out)(sc =>
+      out.select(sc.fieldNames.toIndexedSeq.map(col): _*))
   }
 
   /** Manifest-relative data files added and removed between two
@@ -1995,28 +1935,13 @@ object TxTable {
                    toV: Long = -1L,
                    mergeSchema: Boolean = false,
                    schema: Option[StructType] = None): DataFrame = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val hi = if (toV < 0) vs.last else toV
-    val (fs, p) = fsFor(spark, path)
+    val s = snapshot(spark, path, at(toV))
     val base =
       if (fromV <= 0) Set.empty[String]
-      else readManifest(fs, p, fromV)._2.map(pathOf).toSet
-    val (head, snapshot) = readManifest(fs, p, hi)
-    val meta = parseMeta(head)
-    val pinned = schema.orElse(declaredSchemaOf(meta))
-    val added = snapshot.filterNot(l => base(pathOf(l)))
-    if (added.nonEmpty) scanFiles(spark, p, added, meta, mergeSchema, pinned)
-    else if (snapshot.nonEmpty) // no new files: empty frame, snapshot schema
-      scanFiles(spark, p, snapshot, meta, mergeSchema, pinned)
-        .where(lit(false))
-    else pinned match { // empty snapshot: no footer anywhere to infer from
-      case Some(s) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => sys.error(
-        s"version $hi of $path is an empty snapshot with no files — " +
-        "pass an explicit schema to read it as an empty frame")
-    }
+      else readManifest(s.fs, s.root, fromV)._2.map(pathOf).toSet
+    // no new files: an empty frame with the snapshot's schema
+    scanSnapshot(s, s.lines.filterNot(l => base(pathOf(l))), mergeSchema,
+      schema, s"version ${s.v} of $path")
   }
 
   /** Change-data-capture frame over the commits in `(fromV, toV]`, one
@@ -2050,6 +1975,9 @@ object TxTable {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
     val hi = if (toV < 0) vs.last else toV
+    // every manifest is read at most once, even a fallback's baseline
+    val snaps = scala.collection.mutable.Map.empty[Long, Snapshot]
+    def snap(v: Long) = snaps.getOrElseUpdate(v, snapshot(spark, path, Some(v)))
     // every version in (fromV, hi] must be retained — a vacuumed gap
     // would silently skip its changes (fromV itself is only needed by
     // the file-granular fallback, checked lazily below: a row-level
@@ -2057,60 +1985,51 @@ object TxTable {
     require(fromV == 0 || fromV + 1 >= vs.head,
       s"changes in ($fromV, ${vs.head - 1}] of $path were vacuumed — " +
       "incremental change reads cannot resume from it")
-    val (fs, p) = fsFor(spark, path)
     val range = vs.filter(v => v > fromV && v <= hi)
-    def stamped(df: DataFrame, v: Long, tsMs: Long): DataFrame =
-      df.withColumn(CommitVersionCol, lit(v))
-        .withColumn(CommitTimestampCol, lit(new java.sql.Timestamp(tsMs)))
+    def stamped(df: DataFrame, s: Snapshot): DataFrame =
+      df.withColumn(CommitVersionCol, lit(s.v)).withColumn(CommitTimestampCol,
+        lit(new java.sql.Timestamp(commitTimestampOf(s))))
     val frames = range.flatMap { v =>
-      // ONE manifest read per version: the ts stamp comes from the
-      // meta already in hand, not a second commitTimestamp read
-      val (head, cur) = readManifest(fs, p, v)
-      val meta = parseMeta(head)
-      val tsMs = commitTimestampOf(fs, p, v, meta)
-      meta.get(ChangeDataMetaKey) match {
+      val cur = snap(v)
+      cur.meta.get(ChangeDataMetaKey) match {
         case Some("0") => None // row-change-free commit
         case Some(uuid) =>
           Some(stamped(Sources.pinnedParquet(spark,
-            new Path(p, s"$ChangesDir/$uuid").toString), v, tsMs))
+            new Path(cur.root, s"$ChangesDir/$uuid").toString), cur))
         case None =>
           // v-1 vacuumed (v is the earliest retained version): under a
           // full-history read (fromV=0) the cumulative snapshot IS the
           // insert set — exact. A mid-history consumer has no baseline
           // to diff against: fail loudly, never double-ingest.
-          val (prevHead, prev) =
-            if (v - 1 <= 0) ("", Seq.empty[String])
+          val prev =
+            if (v - 1 <= 0) cur.copy(lines = Nil)
             else if (!vs.contains(v - 1)) {
-              if (fromV == 0) ("", Seq.empty[String])
+              if (fromV == 0) cur.copy(lines = Nil)
               else sys.error(
                 s"version ${v - 1} of $path was vacuumed — file-granular " +
                 s"change capture for v$v has no baseline to diff against")
             }
-            else readManifest(fs, p, v - 1)
-          val prevPaths = prev.map(pathOf).toSet
-          val curPaths = cur.map(pathOf).toSet
-          val added = cur.filterNot(l => prevPaths(pathOf(l)))
-          val removed = prev.filterNot(l => curPaths(pathOf(l)))
+            else snap(v - 1)
+          val prevPaths = prev.lines.map(pathOf).toSet
+          val curPaths = cur.lines.map(pathOf).toSet
+          val added = cur.lines.filterNot(l => prevPaths(pathOf(l)))
+          val removed = prev.lines.filterNot(l => curPaths(pathOf(l)))
             .sortBy(pathOf)
-          val pinned = schema.orElse(declaredSchemaOf(meta))
+          val pinned = schema.orElse(cur.declaredSchema)
           // each side's schema record lives in its own manifest's head
-          def tagged(lines: Seq[String], linesMeta: Map[String, String],
+          def tagged(side: Snapshot, lines: Seq[String],
                      tag: String): Option[DataFrame] =
-            if (lines.isEmpty) None
-            else Some(scanFiles(spark, p, lines, linesMeta, mergeSchema,
+            Option.when(lines.nonEmpty)(scanFiles(side, lines, mergeSchema,
               pinned).withColumn(ChangeTypeCol, lit(tag)))
-          (tagged(added, meta, "insert") ++
-            tagged(removed, parseMeta(prevHead), "delete"))
+          (tagged(cur, added, "insert") ++ tagged(prev, removed, "delete"))
             .reduceOption(_.unionByName(_,
               allowMissingColumns = mergeSchema))
-            .map(stamped(_, v, tsMs))
+            .map(stamped(_, cur))
       }
     }
     frames.reduceOption(_.unionByName(_, allowMissingColumns = mergeSchema))
-      .getOrElse(stamped(
-        readVersion(spark, path, hi, mergeSchema, schema)
-          .withColumn(ChangeTypeCol, lit("insert")), hi,
-        commitTimestamp(spark, path, hi)).where(lit(false)))
+      .getOrElse(stamped(readSnapshot(snap(hi), mergeSchema, schema)
+        .withColumn(ChangeTypeCol, lit("insert")), snap(hi)).where(lit(false)))
   }
 
   /** Row-level DELETE, copy-on-write: rewrite ONLY the files whose
@@ -2158,10 +2077,10 @@ object TxTable {
              meta: Map[String, String] = Map.empty,
              guard: Map[String, Long] = Map.empty): Option[Long] = {
     val hit = coalesce(predicate, lit(false))
-    val files = headFilesMatching(spark, path, Some(predicate), mergeSchema,
-      schema)
+    val s = snapshot(spark, path)
+    val files = filesMatching(s, Some(predicate), mergeSchema, schema)
     if (files.isEmpty) None
-    else Some(rewriteFiles(spark, path, files, partitionCols, mergeSchema,
+    else Some(rewriteFiles(s, files, partitionCols, mergeSchema,
       schema, meta, guard, Option.when(changeFeed)(
         _.where(hit).withColumn(ChangeTypeCol, lit("delete"))))(
       // keep rows where the predicate is FALSE or NULL (SQL DELETE)
@@ -2188,9 +2107,9 @@ object TxTable {
     // key that matches no column, so a typo'd SET would otherwise
     // no-op (or, when pruning removes every file, skip the rewrite's
     // own check entirely) and the caller would believe the row changed
-    val tableCols = schema.map(_.fieldNames.toSeq)
-      .orElse(declaredSchema(spark, path).map(_.fieldNames.toSeq))
-      .getOrElse(read(spark, path, mergeSchema).columns.toSeq)
+    val s = snapshot(spark, path)
+    val tableCols = schema.orElse(s.declaredSchema).map(_.fieldNames.toSeq)
+      .getOrElse(readSnapshot(s, mergeSchema).columns.toSeq)
     val unknownSet = set.keySet -- tableCols
     require(unknownSet.isEmpty,
       s"SET columns not in the table: ${unknownSet.mkString(", ")}")
@@ -2203,10 +2122,9 @@ object TxTable {
         set.get(name).map(_.as(name)).getOrElse(col(name))
       }.toIndexedSeq: _*)
     val hit = coalesce(predicate, lit(false))
-    val files = headFilesMatching(spark, path, Some(predicate), mergeSchema,
-      schema)
+    val files = filesMatching(s, Some(predicate), mergeSchema, schema)
     if (files.isEmpty) None
-    else Some(rewriteFiles(spark, path, files, partitionCols, mergeSchema,
+    else Some(rewriteFiles(s, files, partitionCols, mergeSchema,
       schema, changes = Option.when(changeFeed) { rows =>
         val matched = rows.where(hit)
         matched.withColumn(ChangeTypeCol, lit("update_preimage"))
@@ -2468,13 +2386,9 @@ object TxTable {
     import org.apache.spark.sql.functions.{array, max, min}
     import org.apache.spark.sql.types.StructField
     require(keyCols.nonEmpty, s"$op needs at least one key column")
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val (headLine, lines) = readManifest(fs, p, vs.last)
-    val headMeta = parseMeta(headLine)
-    val pinned = schema.orElse(declaredSchemaOf(headMeta))
-    val layout = layoutOrDeclared(headMeta, partitionCols)
+    val s = snapshot(spark, path)
+    val pinned = schema.orElse(s.declaredSchema)
+    val layout = layoutOrDeclared(s.meta, partitionCols)
     val s0 = source.localCheckpoint()
     val data = dataCols.getOrElse(s0)
     // the probe: one aggregate yields the key bounds, the null-key flags
@@ -2503,8 +2417,8 @@ object TxTable {
         else c.insertWhen.fold(s0)(s0.where(_))
       val inserts = kept.select(data.schema.fields.toIndexedSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*)
-      commit(spark, path, inserts, "replace", (base, _) => base, layout,
-        meta ++ (if (changeFeed) writeChangeData(fs, p,
+      commit(s, inserts, "replace", (base, _) => base, layout,
+        meta ++ (if (changeFeed) writeChangeData(s,
           inserts.withColumn(ChangeTypeCol, lit("insert")))
         else Map.empty[String, String]), ReadSet(guard = guard))
     }
@@ -2514,10 +2428,10 @@ object TxTable {
     // evaluated through the claim loop too, never skipped: a guard-only
     // caller is asking "did a concurrent committer beat me"
     def metaOnly(): Long =
-      if (meta.isEmpty && guard.isEmpty) vs.last
-      else metaCommit(spark, path, "append", meta + (ChangeDataMetaKey -> "0"),
+      if (meta.isEmpty && guard.isEmpty) s.v
+      else metaCommit(s, "append", meta + (ChangeDataMetaKey -> "0"),
         ReadSet(guard = guard))
-    if (lines.isEmpty) return insertOnly()
+    if (s.lines.isEmpty) return insertOnly()
     // an empty source is NOT a no-op under a by-source clause: every
     // target row is then unmatched and subject to the by-source clauses
     if (sourceEmpty && !c.bySource) return metaOnly()
@@ -2532,7 +2446,7 @@ object TxTable {
     val setKeys = c.updateSet.keySet ++ c.updateBySourceSet.keySet
     if (setKeys.nonEmpty) {
       val targetCols = pinned.map(_.fieldNames.toSeq)
-        .getOrElse(read(spark, path, mergeSchema).columns.toSeq)
+        .getOrElse(readSnapshot(s, mergeSchema).columns.toSeq)
       val unknownSet = setKeys -- targetCols
       require(unknownSet.isEmpty,
         s"$op SET columns not in the target: " + unknownSet.mkString(", "))
@@ -2553,7 +2467,7 @@ object TxTable {
     }.reduceOption(_ && _)
     val anyNullKey = nullSafeKeys && keyCols.indices.map(2 * keyCols.size + _)
       .exists(i => !probe.isNullAt(i) && probe.getInt(i) == 1)
-    val candidates = mayMatchLines(spark, p, lines, headMeta, bounds,
+    val candidates = mayMatchLines(s, s.lines, bounds,
       mergeSchema, pinned, orKeep = st => anyNullKey &&
         keyCols.exists(k => st.get(k).flatMap(_.nulls).forall(_ > 0)))
     // no candidate file can hold a match: every passing source row is an
@@ -2564,8 +2478,7 @@ object TxTable {
     // drop exactly the rewritten files (see [[rewriteFiles]]), so a
     // racing append between analysis and claim is never lost
     val candidatePaths = candidates.map(pathOf).toSet
-    val existing = scanFiles(spark, p, candidates, headMeta, mergeSchema,
-      pinned)
+    val existing = scanFiles(s, candidates, mergeSchema, pinned)
     // the joined frame: target columns by name, source columns under a
     // prefix, plus a match marker (null-safe "did a source row join
     // here"). mergeInto's clause expressions name source columns
@@ -2698,9 +2611,9 @@ object TxTable {
     // plan when it executes
     if (changeFeed)
       joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try commit(spark, path, newData, "replace", allBut(candidatePaths),
+    try commit(s, newData, "replace", allBut(candidatePaths),
       layout, meta ++ changes.fold(Map.empty[String, String])(
-        writeChangeData(fs, p, _)),
+        writeChangeData(s, _)),
       ReadSet(files = Some(candidatePaths), guard = guard))
     finally if (changeFeed) joined.unpersist(blocking = false)
   }
@@ -2727,11 +2640,8 @@ object TxTable {
     * of those files.
     */
   def analyze(spark: SparkSession, path: String): Long = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val (head, lines) = readManifest(fs, p, vs.last)
-    val bloomCfg = bloomConfigOf(parseMeta(head))
+    val s = snapshot(spark, path)
+    val bloomCfg = bloomConfigOf(s.meta)
     def complete(l: String): Boolean = {
       val st = statsOf(l)
       val hasStats = st.exists(_._2.rows.isDefined)
@@ -2740,9 +2650,9 @@ object TxTable {
       }
       hasStats && hasBlooms
     }
-    val todo = lines.filterNot(complete)
-    if (todo.isEmpty) return vs.last
-    val refreshed = statsLines(spark, fs, p, path, todo.map(pathOf))
+    val todo = s.lines.filterNot(complete)
+    if (todo.isEmpty) return s.v
+    val refreshed = statsLines(s, todo.map(pathOf))
     // a FAILED recompute (a transient footer read error makes
     // footerStats yield nothing, so the refreshed line is a bare
     // path) must never replace a line that already carries partial
@@ -2754,9 +2664,9 @@ object TxTable {
       if (!l.contains('\t') && orig.contains('\t')) orig
       else withSchemaId(l, schemaIdOf(orig))
     }
-    if (kept.sorted == todo.sorted) return vs.last // nothing computable
+    if (kept.sorted == todo.sorted) return s.v // nothing computable
     val todoPaths = todo.map(pathOf).toSet
-    commitLines(spark, path, "analyze", kept, allBut(todoPaths),
+    commitLines(s, "analyze", kept, allBut(todoPaths),
       read = ReadSet(files = Some(todoPaths)))
   }
 
@@ -2770,9 +2680,10 @@ object TxTable {
 
   /** The declared clustering columns (empty when none). */
   def clusteringColumns(spark: SparkSession, path: String): Seq[String] =
-    versions(spark, path).lastOption
-      .map(v => commitMeta(spark, path, v)).toSeq
-      .flatMap(_.get(ClusterMetaKey)).map(dec).filter(_.nonEmpty)
+    clusteringOf(snapshot(spark, path, orEmpty = true).meta)
+
+  private def clusteringOf(meta: Map[String, String]): Seq[String] =
+    meta.get(ClusterMetaKey).toSeq.map(dec)
       .flatMap(_.split(',').toSeq).filter(_.nonEmpty)
 
   /** Declare clustering columns (metadata-only commit; carried
@@ -2783,21 +2694,20 @@ object TxTable {
   def setClusteringColumns(spark: SparkSession, path: String,
                            cols: Seq[String]): Long = {
     require(cols.nonEmpty, "setClusteringColumns needs at least one column")
-    require(versions(spark, path).nonEmpty,
-      s"$path is not a TxTable (no $LogDir manifests)")
-    val schema = read(spark, path, mergeSchema = true).schema
+    val s = snapshot(spark, path)
+    val schema = tableSchema(s)
     cols.foreach(c => require(schema.fieldNames.contains(c),
       s"setClusteringColumns: no column '$c' in $path"))
-    val parts = declaredPartitionCols(spark, path).getOrElse(Nil)
+    val parts = s.partitionCols.getOrElse(Nil)
     require(cols.intersect(parts).isEmpty,
       s"clustering on partition columns is redundant: ${cols.intersect(parts)}")
-    metaCommit(spark, path, "cluster",
-      Map(ClusterMetaKey -> enc(cols.mkString(","))))
+    metaCommit(s, "cluster", Map(ClusterMetaKey -> enc(cols.mkString(","))))
   }
 
   /** Remove the clustering declaration (tombstoned empty). */
   def dropClusteringColumns(spark: SparkSession, path: String): Long =
-    metaCommit(spark, path, "cluster", Map(ClusterMetaKey -> ""))
+    metaCommit(snapshot(spark, path, orEmpty = true), "cluster",
+      Map(ClusterMetaKey -> ""))
 
   /** Rewrite the head snapshot Z-order-clustered on `zorderCols`
     * (Delta's `OPTIMIZE ... ZORDER BY`, as a log commit): rows with
@@ -2829,18 +2739,14 @@ object TxTable {
                where: Option[org.apache.spark.sql.Column] = None): Long = {
     // explicit columns win; otherwise the table's declared clustering
     // intent (CLUSTER BY) is the standing default
-    val zc =
-      if (zorderCols.nonEmpty) zorderCols
-      else clusteringColumns(spark, path)
+    val s = snapshot(spark, path)
+    val zc = if (zorderCols.nonEmpty) zorderCols else clusteringOf(s.meta)
     require(zc.nonEmpty, "optimize needs z-order columns — pass them " +
       "explicitly or declare them with setClusteringColumns/CLUSTER BY")
-    val layout =
-      if (partitionCols.nonEmpty) partitionCols
-      else declaredPartitionCols(spark, path).getOrElse(Nil)
-    val (files, bytes) = scopedHeadFiles(spark, path, where, mergeSchema)
-    if (files.isEmpty) return versions(spark, path).last
-    rewriteClustered(spark, path, files, bytes, zc, targetBytes,
-      bitsPerCol, layout, mergeSchema)
+    val (files, bytes) = scopedFiles(s, where, mergeSchema)
+    if (files.isEmpty) return s.v
+    rewriteClustered(s, files, bytes, zc, targetBytes, bitsPerCol,
+      partitionCols, mergeSchema)
   }
 
   /** The clustered-rewrite core shared by [[optimize]] (whole/WHERE
@@ -2849,18 +2755,20 @@ object TxTable {
     * ceil(bytes/targetBytes) files clustered on `zc` — or bin-packed
     * with no clustering when `zc` is empty (the [[compact]] layout,
     * for tables whose serve path has no range key to restore).
+    * `partitionCols` is the layout to keep, the declared one when empty.
     */
-  private def rewriteClustered(spark: SparkSession, path: String,
-                               relFiles: Seq[String], bytes: Long,
-                               zc: Seq[String], targetBytes: Long,
-                               bitsPerCol: Int, layout: Seq[String],
+  private def rewriteClustered(s: Snapshot, relFiles: Seq[String],
+                               bytes: Long, zc: Seq[String],
+                               targetBytes: Long, bitsPerCol: Int,
+                               partitionCols: Seq[String],
                                mergeSchema: Boolean): Long = {
     val numFiles =
       math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+    val layout = layoutOrDeclared(s.meta, partitionCols)
     // data-identical by construction: the commit declares zero change
     // rows, so change-feed readers skip it instead of seeing the whole
     // scope churn as delete+insert
-    rewriteFiles(spark, path, relFiles, layout, mergeSchema, None,
+    rewriteFiles(s, relFiles, layout, mergeSchema, None,
       meta = Map(ChangeDataMetaKey -> "0")) { snapshot =>
       // ONE clustering column = a plain range cluster: the 1-D
       // "z-order" is exactly a sort, it works for ANY orderable type
@@ -3005,11 +2913,9 @@ object TxTable {
     require(maxFiles > 0, "maxFiles must be positive")
     require(excessFactor >= 1.0,
       "excessFactor < 1 would re-optimize a freshly optimized table")
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val sized = readManifest(fs, p, vs.last)._2.map(pathOf)
-      .map(f => (f, fs.getFileStatus(new Path(p, f)).getLen))
+    val s = snapshot(spark, path)
+    val sized = s.lines.map(pathOf)
+      .map(f => (f, s.fs.getFileStatus(new Path(s.root, f)).getLen))
     if (sized.isEmpty) return None
     val bytes = sized.map(_._2).sum
     val healthy =
@@ -3017,22 +2923,17 @@ object TxTable {
     val threshold =
       math.max(maxFiles.toLong, math.ceil(excessFactor * healthy).toLong)
     if (sized.size < threshold) return None
-    val zc =
-      if (zorderCols.nonEmpty) zorderCols
-      else clusteringColumns(spark, path)
-    val layout =
-      if (partitionCols.nonEmpty) partitionCols
-      else declaredPartitionCols(spark, path).getOrElse(Nil)
+    val zc = if (zorderCols.nonEmpty) zorderCols else clusteringOf(s.meta)
     val frags = sized.filter(_._2 < targetBytes / 2)
     val fragBytes = frags.map(_._2).sum
     val projected = (sized.size - frags.size) +
       math.max(1, math.ceil(fragBytes.toDouble / targetBytes).toInt)
     if (frags.nonEmpty && projected < threshold)
-      Some(rewriteClustered(spark, path, frags.map(_._1), fragBytes,
-        zc, targetBytes, bitsPerCol = 8, layout, mergeSchema))
+      Some(rewriteClustered(s, frags.map(_._1), fragBytes,
+        zc, targetBytes, bitsPerCol = 8, partitionCols, mergeSchema))
     else
-      Some(rewriteClustered(spark, path, sized.map(_._1), bytes,
-        zc, targetBytes, bitsPerCol = 8, layout, mergeSchema))
+      Some(rewriteClustered(s, sized.map(_._1), bytes,
+        zc, targetBytes, bitsPerCol = 8, partitionCols, mergeSchema))
   }
 
   /** Commit pre-written data files as one streaming micro-batch append
@@ -3053,27 +2954,25 @@ object TxTable {
                                           epochId: Long,
                                           partitionCols: Seq[String] = Nil)
       : Option[Long] = {
-    val (fs, p) = fsFor(spark, path)
     val key = CarriedMetaPrefixes.head + txnApp
-    val already = versions(spark, path).lastOption.exists(v =>
-      parseMeta(readManifest(fs, p, v)._1).get(key)
-        .flatMap(s => scala.util.Try(s.toLong).toOption).exists(_ >= epochId))
-    if (already) None
+    def landed(s: Snapshot): Boolean = s.meta.get(key)
+      .flatMap(v => scala.util.Try(v.toLong).toOption).exists(_ >= epochId)
+    val s = snapshot(spark, path, orEmpty = true)
+    if (landed(s)) None
     else {
       // same CHECK enforcement as batch commits; the micro-batch's
       // files belong to the stream's epoch dir, which the sink owns —
       // don't delete on failure, just refuse the commit (the thrown
       // error fails the batch and the checkpoint retries)
-      val activeConstraints = headConstraints(spark, path)
-      enforceConstraints(spark, path, fs, p, relFiles, activeConstraints)
-      val newLines = statsLines(spark, fs, p, path, relFiles)
+      enforceConstraints(s, relFiles)
+      val newLines = statsLines(s, relFiles)
       val layoutMeta =
         if (partitionCols.isEmpty) Map.empty[String, String]
         else Map(PartitionsMetaKey -> enc(partitionCols.mkString(",")))
-      try Some(commitLines(spark, path, "append", newLines,
+      try Some(commitLines(s, "append", newLines,
         (base, _) => base,
         meta = layoutMeta + (key -> epochId.toString),
-        read = ReadSet(constraints = Some(activeConstraints),
+        read = ReadSet(constraints = Some(s.constraints),
           guard = Map(key -> epochId))))
       catch {
         case cme: java.util.ConcurrentModificationException =>
@@ -3086,11 +2985,8 @@ object TxTable {
           // silently DROP the micro-batch. Re-check durability and
           // rethrow anything that isn't actually a replay — the
           // thrown error fails the batch and the checkpoint retries.
-          val durable = versions(spark, path).lastOption.exists(v =>
-            parseMeta(readManifest(fs, p, v)._1).get(key)
-              .flatMap(s => scala.util.Try(s.toLong).toOption)
-              .exists(_ >= epochId))
-          if (durable) None else throw cme
+          if (landed(snapshot(spark, path, orEmpty = true))) None
+          else throw cme
       }
     }
   }
@@ -3108,34 +3004,32 @@ object TxTable {
               partitionCols: Seq[String] = Nil,
               mergeSchema: Boolean = false,
               where: Option[org.apache.spark.sql.Column] = None): Long = {
-    val layout =
-      if (partitionCols.nonEmpty) partitionCols
-      else declaredPartitionCols(spark, path).getOrElse(Nil)
-    val (files, bytes) = scopedHeadFiles(spark, path, where, mergeSchema)
-    if (files.isEmpty) return versions(spark, path).last
+    val s = snapshot(spark, path)
+    val (files, bytes) = scopedFiles(s, where, mergeSchema)
+    if (files.isEmpty) return s.v
     // zc = Nil → rewriteClustered's bin-pack branch; when partitioned
     // it distributes BY the partition columns so each task holds whole
     // partitions — the per-dir writer then emits ~one file per
     // partition instead of (tasks × partitions) shards
-    rewriteClustered(spark, path, files, bytes, Nil, targetBytes,
-      bitsPerCol = 8, layout, mergeSchema)
+    rewriteClustered(s, files, bytes, Nil, targetBytes, bitsPerCol = 8,
+      partitionCols, mergeSchema)
   }
 
-  /** The head snapshot's manifest-relative files that may match
-    * `where` (all of them when None), plus their total bytes — the
+  /** Snapshot `s`'s manifest-relative files that may match `where`
+    * (all of them when None), plus their total bytes — the
     * scope-selection half of [[compact]]/[[optimize]]'s `WHERE`
     * support. Pure driver metadata: stats + partition-path pruning,
     * one `getFileStatus` per kept file.
     */
-  private def scopedHeadFiles(spark: SparkSession, path: String,
-                              where: Option[org.apache.spark.sql.Column],
-                              mergeSchema: Boolean): (Seq[String], Long) = {
-    val kept = headFilesMatching(spark, path, where, mergeSchema)
-    val (fs, p) = fsFor(spark, path)
-    val bytes = kept.map(f =>
-      fs.getFileStatus(new Path(p, f)).getLen).sum
-    (kept, bytes)
+  private def scopedFiles(s: Snapshot,
+                          where: Option[org.apache.spark.sql.Column],
+                          mergeSchema: Boolean): (Seq[String], Long) = {
+    val kept = filesMatching(s, where, mergeSchema)
+    (kept, bytesOf(s, kept))
   }
+
+  private def bytesOf(s: Snapshot, relFiles: Seq[String]): Long =
+    relFiles.map(f => s.fs.getFileStatus(new Path(s.root, f)).getLen).sum
 
   /** The head snapshot's manifest-relative files that may hold rows
     * matching `where` (all of them when None) — stats, partition-path
@@ -3148,16 +3042,17 @@ object TxTable {
                                      where: Option[org.apache.spark.sql.Column],
                                      mergeSchema: Boolean = false,
                                      schema: Option[StructType] = None)
-      : Seq[String] = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val (head, lines) = readManifest(fs, p, vs.last)
-    require(lines.nonEmpty || where.isDefined,
-      s"nothing to rewrite: head of $path is empty")
-    val meta = parseMeta(head)
-    mayMatchLines(spark, p, lines, meta, where, mergeSchema,
-      schema.orElse(declaredSchemaOf(meta))).map(pathOf)
+      : Seq[String] =
+    filesMatching(snapshot(spark, path), where, mergeSchema, schema)
+
+  private def filesMatching(s: Snapshot,
+                            where: Option[org.apache.spark.sql.Column],
+                            mergeSchema: Boolean = false,
+                            schema: Option[StructType] = None): Seq[String] = {
+    require(s.lines.nonEmpty || where.isDefined,
+      s"nothing to rewrite: head of ${s.path} is empty")
+    mayMatchLines(s, s.lines, where, mergeSchema,
+      schema.orElse(s.declaredSchema)).map(pathOf)
   }
 
   /** ceil(live snapshot bytes / targetBytes) — the file count a layout
@@ -3165,12 +3060,8 @@ object TxTable {
     */
   def headFileCountFor(spark: SparkSession, path: String,
                        targetBytes: Long): Int = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, vs.last)._2
-    val liveBytes = lines.map(l =>
-      fs.getFileStatus(new Path(p, pathOf(l))).getLen).sum
+    val s = snapshot(spark, path)
+    val liveBytes = bytesOf(s, s.lines.map(pathOf))
     math.max(1, math.ceil(liveBytes.toDouble / targetBytes).toInt)
   }
 
@@ -3189,13 +3080,15 @@ object TxTable {
                       partitionCols: Seq[String] = Nil,
                       mergeSchema: Boolean = false,
                       schema: Option[StructType] = None)
-                     (transform: DataFrame => DataFrame): Long =
-    rewriteFiles(spark, path, headFilesMatching(spark, path, None),
-      partitionCols, mergeSchema, schema)(transform)
+                     (transform: DataFrame => DataFrame): Long = {
+    val s = snapshot(spark, path)
+    rewriteFiles(s, filesMatching(s, None), partitionCols, mergeSchema,
+      schema)(transform)
+  }
 
   /** The one copy-on-write core — [[delete]], [[update]], [[compact]],
     * [[optimize]] and [[rewriteSnapshot]] all run on it: rewrite EXACTLY
-    * `relFiles` of the head through `transform`, keep every other head
+    * `relFiles` of snapshot `s` through `transform`, keep every other
     * file verbatim, and commit one atomic replace carrying `meta` and
     * `guard`. The read set is `relFiles`: racing APPENDS are kept, and a
     * conflicting commit that removed one of them aborts this one instead
@@ -3208,8 +3101,7 @@ object TxTable {
     * re-inference would otherwise silently retype — a string day "07"
     * re-landing as int 7).
     */
-  private def rewriteFiles(spark: SparkSession, path: String,
-                           relFiles: Seq[String],
+  private def rewriteFiles(s: Snapshot, relFiles: Seq[String],
                            partitionCols: Seq[String],
                            mergeSchema: Boolean,
                            schema: Option[StructType],
@@ -3217,39 +3109,32 @@ object TxTable {
                            guard: Map[String, Long] = Map.empty,
                            changes: Option[DataFrame => DataFrame] = None)
                           (transform: DataFrame => DataFrame): Long = {
-    val (fs, p) = fsFor(spark, path)
-    val (head, lines) = readManifest(fs, p, versions(spark, path).last)
-    val headMeta = parseMeta(head)
-    val layout = layoutOrDeclared(headMeta, partitionCols)
+    val layout = layoutOrDeclared(s.meta, partitionCols)
     // a hive-partitioned file set MUST be rewritten with its layout, or
     // the flat rewrite breaks directory pruning and a later
     // replacePartitions would keep (and so duplicate) the old rows;
     // tables with a manifest-declared layout resolve it automatically
     require(layout.nonEmpty ||
       !relFiles.exists(f => partitionDirOf(f).nonEmpty),
-      s"$path is hive-partitioned — pass partitionCols so the rewrite " +
+      s"${s.path} is hive-partitioned — pass partitionCols so the rewrite " +
       "preserves the partition layout")
     val read = relFiles.toSet
-    // the head's lines for relFiles carry their schema ids; a file the
-    // head no longer lists scans bare (the claim's read-set check
-    // aborts that commit anyway)
-    val lineOf = lines.map(l => pathOf(l) -> l).toMap
-    val snapshot = scanFiles(spark, p,
-      relFiles.map(f => lineOf.getOrElse(f, f)), headMeta, mergeSchema,
-      schema.orElse(declaredSchemaOf(headMeta)))
+    // the snapshot's lines for relFiles carry their schema ids
+    val snapshot = scanFiles(s, s.lines.filter(l => read(pathOf(l))),
+      mergeSchema, schema.orElse(s.declaredSchema))
     // build the rewrite plan FIRST: its eager validations (unknown SET
     // columns, …) must fail before any change file hits disk
     val rewritten = transform(snapshot)
     val feed = changes.fold(Map.empty[String, String])(f =>
-      writeChangeData(fs, p, f(snapshot)))
+      writeChangeData(s, f(snapshot)))
     // a rewrite that empties every file it read while OTHER files
     // survive needs no schema-carrier part: the snapshot keeps real
     // files (a racing delete of those survivors would leave a file-less
     // snapshot — the metadata-only-commit situation readVersion already
     // handles via a pinned/declared schema)
-    commit(spark, path, rewritten, "replace", allBut(read), layout,
+    commit(s, rewritten, "replace", allBut(read), layout,
       feed ++ meta, ReadSet(files = Some(read), guard = guard),
-      allowZeroParts = lines.exists(l => !read(pathOf(l))))
+      allowZeroParts = s.lines.exists(l => !read(pathOf(l))))
   }
 
   /** Roll the table back (or forward) to EXACTLY the snapshot of
@@ -3268,12 +3153,12 @@ object TxTable {
     require(vs.contains(v),
       s"version $v of $path does not exist or was vacuumed " +
       s"(retained: ${vs.headOption.getOrElse(-1L)}..${vs.lastOption.getOrElse(-1L)})")
-    val (fs, p) = fsFor(spark, path)
-    val (head, lines) = readManifest(fs, p, v)
+    val target = snapshot(spark, path, Some(v))
     // v's schema records travel with its lines (the head may have
     // pruned them since)
-    commitLines(spark, path, "restore", lines, (_, _) => Seq.empty,
-      parseMeta(head).filter(_._1.startsWith(SchemaRecordPrefix)))
+    commitLines(snapshot(spark, path, Some(vs.last)), "restore",
+      target.lines, (_, _) => Seq.empty,
+      target.meta.filter(_._1.startsWith(SchemaRecordPrefix)))
   }
 
   /** Multiset row-level diff between two committed snapshots — the
@@ -3412,14 +3297,14 @@ object TxTable {
     require(vs.contains(v),
       s"version $v of $srcPath does not exist or was vacuumed " +
       s"(retained: ${vs.head}..${vs.last})")
-    require(!exists(spark, dstPath),
+    val dst = snapshot(spark, dstPath, orEmpty = true)
+    require(dst.version.isEmpty,
       s"graft table $dstPath already exists — clone targets a fresh path")
-    val (sfs, sp) = fsFor(spark, srcPath)
-    val (dfs, dp) = fsFor(spark, dstPath)
+    val src = snapshot(spark, srcPath, Some(v))
+    val (sfs, sp, dfs, dp) = (src.fs, src.root, dst.fs, dst.root)
     require(sfs.makeQualified(sp) != dfs.makeQualified(dp),
       "cannot clone a table onto itself")
-    val (headLine, lines) = readManifest(sfs, sp, v)
-    lines.map(pathOf).distinct.foreach { rel =>
+    src.lines.map(pathOf).distinct.foreach { rel =>
       val srcF = new Path(sp, rel)
       val dstF = new Path(dp, rel)
       dfs.mkdirs(dstF.getParent)
@@ -3428,9 +3313,8 @@ object TxTable {
       if (dfs.exists(dstF)) dfs.delete(dstF, false)
       linkOrCopy(spark, sfs, srcF, dfs, dstF)
     }
-    val carried = parseMeta(headLine).filter(_._1.startsWith("graft."))
-    commitLines(spark, dstPath, "clone", lines, (_, _) => Seq.empty,
-      carried, ReadSet(version = Some(0L)))
+    commitLines(dst, "clone", src.lines, (_, _) => Seq.empty,
+      src.meta.filter(_._1.startsWith("graft.")), ReadSet(version = Some(0L)))
   }
 
   /** Hard-link `src` to `dst` when both sides are the local FS (zero
@@ -3488,20 +3372,16 @@ object TxTable {
     */
   def copyInto(spark: SparkSession, path: String, sourceDir: String,
                pattern: String = "*.parquet"): (Long, Seq[String], Int) = {
-    val (fs, p) = fsFor(spark, path)
+    val s = snapshot(spark, path, orEmpty = true)
+    val (fs, p) = (s.fs, s.root)
     val sq = new Path(sourceDir)
     val sfs = FileSystem.get(sq.toUri, spark.sparkContext.hadoopConfiguration)
     val srcs = Option(sfs.globStatus(new Path(sq, pattern))).toSeq.flatten
       .filter(_.isFile).sortBy(_.getPath.toString)
-    val head = versions(spark, path).lastOption
-    head.foreach { v =>
-      require(declaredPartitionColsAt(fs, p, v).forall(_.isEmpty),
-        s"COPY INTO a partitioned table is not supported ($path declares " +
-        "partition columns; copied-in files carry no partition segments)")
-    }
-    val existing = head
-      .map(v => readManifest(fs, p, v)._2.map(pathOf).toSet)
-      .getOrElse(Set.empty)
+    require(s.partitionCols.forall(_.isEmpty),
+      s"COPY INTO a partitioned table is not supported ($path declares " +
+      "partition columns; copied-in files carry no partition segments)")
+    val existing = s.lines.map(pathOf).toSet
     val targets = srcs.map { st =>
       val id = java.security.MessageDigest.getInstance("MD5")
         .digest(s"${sfs.makeQualified(st.getPath)}|${st.getModificationTime}|${st.getLen}"
@@ -3510,8 +3390,7 @@ object TxTable {
       (st.getPath, s"data/copyin_$id/${st.getPath.getName}")
     }
     val (skipped, fresh) = targets.partition(t => existing.contains(t._2))
-    if (fresh.isEmpty)
-      return (head.getOrElse(0L), Seq.empty, skipped.size)
+    if (fresh.isEmpty) return (s.v, Seq.empty, skipped.size)
     // schema gate BEFORE any linking: EVERY fresh file's footer schema
     // must equal, name→type (nullability aside), the table's read
     // schema — or, on a bootstrap, the first file's. Reading them as one
@@ -3525,8 +3404,8 @@ object TxTable {
       q -> shape(GraftParquetSchema.of(spark, q)
         .getOrElse(sys.error(s"COPY INTO: $q has no parquet footer")))
     }
-    val (wantFrom, want) = head match {
-      case Some(_) => (s"table $path reads", shape(read(spark, path).schema))
+    val (wantFrom, want) = s.version match {
+      case Some(_) => (s"table $path reads", shape(readSnapshot(s).schema))
       case None => (s"${incoming.head._1} carries", incoming.head._2)
     }
     incoming.foreach { case (q, got) =>
@@ -3543,7 +3422,6 @@ object TxTable {
       if (!fs.exists(dstF)) linkOrCopy(spark, sfs, src, fs, dstF)
     }
     val freshRels = fresh.map(_._2)
-    val activeConstraints = headConstraints(spark, path)
     // NO cleanup on failure, deliberately: the deterministic names are
     // SHARED across racing loaders of the same source, so "my" fresh
     // file may be exactly the file a racer just linked and committed —
@@ -3551,11 +3429,9 @@ object TxTable {
     // later read. Unreferenced files are invisible to readers, a retry
     // REUSES them via the exists-check above (the failure cost is
     // already paid), and vacuum's orphan grace collects genuine debris.
-    enforceConstraints(spark, path, fs, p, freshRels, activeConstraints)
-    val newLines = statsLines(spark, fs, p, path, freshRels)
-    val freshSet = freshRels.toSet
-    val v = commitLines(spark, path, "copyinto", newLines, allBut(freshSet),
-      read = ReadSet(constraints = Some(activeConstraints)))
+    enforceConstraints(s, freshRels)
+    val v = commitLines(s, "copyinto", statsLines(s, freshRels),
+      allBut(freshRels.toSet), read = ReadSet(constraints = Some(s.constraints)))
     (v, freshRels, skipped.size)
   }
 
@@ -3565,8 +3441,8 @@ object TxTable {
   def overwrite(spark: SparkSession, path: String, df: DataFrame,
                 partitionCols: Seq[String] = Nil,
                 meta: Map[String, String] = Map.empty): Long =
-    commit(spark, path, df, "overwrite", (_, _) => Seq.empty, partitionCols,
-      meta)
+    commit(snapshot(spark, path, orEmpty = true), df, "overwrite",
+      (_, _) => Seq.empty, partitionCols, meta)
 
   /** Append-commit `df`: next version = head's files + this write's.
     * `guard` — see [[commitLines]]: per-key carried-meta preconditions
@@ -3577,8 +3453,8 @@ object TxTable {
              partitionCols: Seq[String] = Nil,
              meta: Map[String, String] = Map.empty,
              guard: Map[String, Long] = Map.empty): Long =
-    commit(spark, path, df, "append", (base, _) => base, partitionCols, meta,
-      ReadSet(guard = guard))
+    commit(snapshot(spark, path, orEmpty = true), df, "append",
+      (base, _) => base, partitionCols, meta, ReadSet(guard = guard))
 
   /** Replace-commit: next version = the head's files that survive
     * `keepExisting` + this write's files. The partition-bounded publish
@@ -3589,7 +3465,7 @@ object TxTable {
   def replace(spark: SparkSession, path: String, df: DataFrame,
               partitionCols: Seq[String],
               keepExisting: String => Boolean): Long =
-    commit(spark, path, df, "replace",
+    commit(snapshot(spark, path, orEmpty = true), df, "replace",
       (base, _) => base.filter(l => keepExisting(pathOf(l))),
       partitionCols)
 
@@ -3612,10 +3488,11 @@ object TxTable {
   def replacePartitions(spark: SparkSession, path: String, df: DataFrame,
                         partitionCols: Seq[String],
                         expectUnchanged: Option[Set[String]] = None): Long =
-    commit(spark, path, df, "replace", (base, newFiles) => {
-      val replaced = newFiles.map(f => partitionDirOf(pathOf(f))).toSet
-      base.filterNot(f => replaced.contains(partitionDirOf(pathOf(f))))
-    }, partitionCols, read = ReadSet(files = expectUnchanged))
+    commit(snapshot(spark, path, orEmpty = true), df, "replace",
+      (base, newFiles) => {
+        val replaced = newFiles.map(f => partitionDirOf(pathOf(f))).toSet
+        base.filterNot(f => replaced.contains(partitionDirOf(pathOf(f))))
+      }, partitionCols, read = ReadSet(files = expectUnchanged))
 
   /** `data/<uuid>/day=10/part-x.parquet` → `day=10` (nested partitions
     * keep all `key=value` segments; unpartitioned files → ""). Writer
@@ -3625,9 +3502,10 @@ object TxTable {
   private def partitionDirOf(rel: String): String =
     rel.split('/').drop(2).dropRight(1).mkString("/")
 
-  /** What a commit read of the table, checked against the head at every
-    * claim attempt — Delta's optimistic-concurrency check, reduced to
-    * the facts a commit here can depend on:
+  /** What a commit read of the table, checked against the snapshot each
+    * claim attempt builds on (the operation's own snapshot first, the
+    * log's new head after a lost claim) — Delta's optimistic-concurrency
+    * check, reduced to the facts a commit here can depend on:
     *
     *  - `files`: the head files the commit read. Every file the commit
     *    removes from the head (`base` minus `baseKeep(base, new)`) must
@@ -3651,42 +3529,40 @@ object TxTable {
       constraints: Option[Map[String, String]] = None,
       guard: Map[String, Long] = Map.empty)
 
-  /** Throws when the head a claim would build on breaks `read`: `head`
-    * is its version, `headLine`/`base` its manifest, `kept` what the
-    * commit keeps of `base`. The exception names what moved.
+  /** Throws when snapshot `s`, which a claim would build on, breaks
+    * `read`; `kept` is what the commit keeps of its lines. The exception
+    * names what moved.
     */
-  private def checkReadSet(path: String, read: ReadSet, head: Option[Long],
-                           headLine: String, base: Seq[String],
+  private def checkReadSet(read: ReadSet, s: Snapshot,
                            kept: Seq[String]): Unit = {
     def conflict(what: String): Nothing =
       throw new java.util.ConcurrentModificationException(
-        s"conflicting commit on $path: $what (retry the operation)")
+        s"conflicting commit on ${s.path}: $what (retry the operation)")
     read.version.foreach { v0 =>
-      if (v0 == 0L && head.isDefined)
+      if (v0 == 0L && s.version.isDefined)
         throw new IllegalArgumentException(
-          s"graft table $path already exists (concurrent create)")
-      if (head.getOrElse(0L) != v0)
+          s"graft table ${s.path} already exists (concurrent create)")
+      if (s.v != v0)
         conflict(s"head advanced past $v0 while this operation was " +
           "pinned to it")
     }
     read.files.foreach { files =>
-      val live = base.map(pathOf).toSet
+      val live = s.lines.map(pathOf).toSet
       val moved = (live -- kept.map(pathOf) -- files) ++ (files -- live)
       if (moved.nonEmpty)
         conflict("files this commit read changed concurrently: " +
           moved.take(3).mkString(", "))
     }
-    val headMeta = parseMeta(headLine)
     read.constraints.foreach { cons =>
-      if (effectiveConstraints(headMeta) != cons)
+      if (s.constraints != cons)
         conflict("CHECK constraints changed concurrently (this write was " +
           "validated against the old set)")
     }
     read.guard.foreach { case (k, v) =>
-      headMeta.get(k).flatMap(s => scala.util.Try(s.toLong).toOption)
+      s.meta.get(k).flatMap(x => scala.util.Try(x.toLong).toOption)
         .filter(_ >= v).foreach { cur =>
           throw new java.util.ConcurrentModificationException(
-            s"transaction guard on $path: $k already at $cur >= $v " +
+            s"transaction guard on ${s.path}: $k already at $cur >= $v " +
             "— a concurrent committer applied this increment first")
         }
     }
@@ -3700,38 +3576,36 @@ object TxTable {
     (base, _) => base.filterNot(l => files(pathOf(l)))
 
   /** Write `df` into a fresh immutable data dir and commit a manifest of
-    * `baseKeep(head's files, this write's files) ++ the new files` under
-    * the next version — through [[commitLines]]' claim loop, whose
-    * read-set rule decides every conflict (see [[ReadSet]]). `read` is
-    * what the caller read; the CHECK-constraint set this commit counts
-    * its rows against joins it. `allowZeroParts`: see below.
+    * `baseKeep(snapshot's files, this write's files) ++ the new files`
+    * under the next version — through [[commitLines]]' claim loop, whose
+    * read-set rule decides every conflict (see [[ReadSet]]). `s` is the
+    * operation's snapshot and `read` what the caller read of it; the
+    * CHECK-constraint set this commit counts its rows against joins it.
+    * `allowZeroParts`: see below.
     */
-  private def commit(spark: SparkSession, path: String, df: DataFrame,
-                     action: String,
+  private def commit(s: Snapshot, df: DataFrame, action: String,
                      baseKeep: (Seq[String], Seq[String]) => Seq[String],
                      partitionCols: Seq[String] = Nil,
                      meta: Map[String, String] = Map.empty,
                      read: ReadSet = ReadSet(),
                      allowZeroParts: Boolean = false): Long = {
-    val (fs, p) = fsFor(spark, path)
+    val (fs, p) = (s.fs, s.root)
     val dataDir = s"data/${java.util.UUID.randomUUID()}"
-    // CHECK constraints are counted inside the write job, over the head's
-    // constraint set read before it; a violating commit cleans up and
+    // CHECK constraints are counted inside the write job, over the
+    // snapshot's constraint set; a violating commit cleans up and
     // throws, invisible to readers. The set rides in the read set, so a
     // concurrent ADD/DROP CONSTRAINT aborts this commit instead of
     // letting unvalidated data slip past the new rules
-    val headMeta = versions(spark, path).lastOption
-      .map(v => parseMeta(readManifest(fs, p, v)._1)).getOrElse(Map.empty)
-    val activeConstraints = effectiveConstraints(headMeta)
-    def write(frame: DataFrame): Unit = sizedWrite(spark) {
+    val activeConstraints = s.constraints
+    def write(frame: DataFrame): Unit = sizedWrite(s.spark) {
       val w = frame.write
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(new Path(p, dataDir).toString)
     }
     val cons = activeConstraints.toSeq.sortBy(_._1)
     if (cons.isEmpty) write(df)
-    else rejectViolations(path, cons,
-      violationCounts(df, cons, declaredSchemaOf(headMeta))(write))(
+    else rejectViolations(s.path, cons,
+      violationCounts(df, cons, s.declaredSchema)(write))(
       fs.delete(new Path(p, dataDir), true))
     val allParts = {
       val it = fs.listFiles(new Path(p, dataDir), true)
@@ -3768,20 +3642,29 @@ object TxTable {
       else if (allowZeroParts) Seq.empty
       else allParts.take(1)
     }
-    // the dir's schema record: the row schema every new footer carries,
-    // or none when one lacks it or they disagree
+    // the dir's schema record: the row schema every new footer carries
+    // (none when one lacks it or they disagree), then the string
+    // partition columns, which no footer holds. Inference from the
+    // paths re-types a string's values (`07` reads as the number 7) and
+    // can split one column's type across commit dirs (`01` a number,
+    // `x` a string); it reads other partition types' values unchanged
     val rowSchema =
       newFiles.map(info.get(_).flatMap(_.rowSchema)).distinct match {
         case Seq(Some(json)) => Some(json)
         case _ => None
       }
-    val schemaId = rowSchema.map(schemaIdFor)
-    val recordMeta = schemaId.zip(rowSchema)
+    val partFields = partitionCols.flatMap(c => df.schema.find(_.name == c))
+      .filter(_.dataType.isInstanceOf[org.apache.spark.sql.types.StringType])
+      .map(f => org.apache.spark.sql.types.StructField(f.name, f.dataType))
+    val record = rowSchema.map(json => if (partFields.isEmpty) json
+      else StructType(schemaFromJson(json).fields ++ partFields).json)
+    val schemaId = record.map(schemaIdFor)
+    val recordMeta = schemaId.zip(record)
       .map { case (id, json) => SchemaRecordPrefix + id -> enc(json) }.toMap
     // footer min/max (+ declared blooms — including one declared by
     // THIS commit's meta) per new file ride in the manifest line;
     // failures degrade to stats-less lines
-    val newLines = statsLines(spark, fs, p, path, newFiles, meta,
+    val newLines = statsLines(s, newFiles, meta,
       precomputed = Some(info.collect {
         case (rel, f) if f.stats.nonEmpty => rel -> f.stats }),
       rowSchema = rowSchema.map(schemaFromJson))
@@ -3796,7 +3679,7 @@ object TxTable {
       if (partitionCols.nonEmpty || action == "overwrite")
         Map(PartitionsMetaKey -> enc(partitionCols.mkString(",")))
       else Map.empty[String, String]
-    commitLines(spark, path, action, newLines, baseKeep,
+    commitLines(s, action, newLines, baseKeep,
       layoutMeta ++ recordMeta ++ meta,
       read.copy(constraints = Some(activeConstraints)))
   }
@@ -3816,18 +3699,16 @@ object TxTable {
     require(meta.keys.forall(_.startsWith("graft.")),
       s"carried meta keys must be graft.-prefixed (carry-forward " +
         s"contract): ${meta.keys.filterNot(_.startsWith("graft."))}")
-    require(versions(spark, path).nonEmpty,
-      s"$path is not a TxTable (no $LogDir manifests)")
-    metaCommit(spark, path, "setmeta", meta, ReadSet(guard = guard))
+    metaCommit(snapshot(spark, path), "setmeta", meta, ReadSet(guard = guard))
   }
 
-  /** A metadata-only commit: the head's files unchanged, `meta`
+  /** A metadata-only commit on snapshot `s`: its files unchanged, `meta`
     * recorded, `read` checked.
     */
-  private def metaCommit(spark: SparkSession, path: String, action: String,
+  private def metaCommit(s: Snapshot, action: String,
                          meta: Map[String, String],
                          read: ReadSet = ReadSet()): Long =
-    commitLines(spark, path, action, Seq.empty, (base, _) => base, meta, read)
+    commitLines(s, action, Seq.empty, (base, _) => base, meta, read)
 
   /** The claim loop of [[commit]], usable on its own for commits whose
     * lines are already in hand — and for METADATA-ONLY commits
@@ -3836,22 +3717,24 @@ object TxTable {
     * incremental consumer durably advances its offset over an empty
     * increment without writing a zero-row data file.
     *
-    * Every attempt reads the current head and checks `read` against it
-    * (see [[ReadSet]]) before claiming the next slot: the files the
-    * commit removes must be files it read, and each of those must still
-    * be live; a pinned version must still be the head; the validated
-    * constraint set must still be the head's; and no guarded key may
-    * have reached its guard. A failed check aborts with
-    * ConcurrentModificationException (IllegalArgumentException
-    * "already exists" for a create) — a conflicting commit won. A lost
-    * claim with no conflict retries against the NEW head, so an append
-    * or replace rebuilt there includes the winner's files. The guard
-    * is what makes "check processedVersion, then commit" safe under
-    * concurrent same-app writers: the check alone is check-then-act;
-    * the guard closes the window because claims are serialized by the
-    * slot.
+    * The first attempt builds on the operation's snapshot `s0` and
+    * claims its version + 1 straight away; claims are serialized by the
+    * slot, so a won claim proves `s0` was still the head. Every attempt
+    * first checks `read` against the snapshot it builds on (see
+    * [[ReadSet]]): the files the commit removes must be files it read,
+    * and each of those must still be live; a pinned version must still
+    * be the head; the validated constraint set must still be the head's;
+    * and no guarded key may have reached its guard. A failed check
+    * aborts with ConcurrentModificationException (IllegalArgumentException
+    * "already exists" for a create) — a conflicting commit won. Only a
+    * lost claim reads the log again: the next attempt rebuilds on the
+    * NEW head and rechecks `read`, so an append or replace rebuilt there
+    * includes the winner's files. The guard is what makes "check
+    * processedVersion, then commit" safe under concurrent same-app
+    * writers: the check alone is check-then-act; the guard closes the
+    * window because claims are serialized by the slot.
     */
-  private def commitLines(spark: SparkSession, path: String, action: String,
+  private def commitLines(s0: Snapshot, action: String,
                           newLines: Seq[String],
                           baseKeep: (Seq[String], Seq[String]) => Seq[String],
                           meta: Map[String, String] = Map.empty,
@@ -3861,26 +3744,21 @@ object TxTable {
         !(k + v).exists(c => c == ' ' || c == '\n')
     }, "metadata keys must be nonempty and '='-free; keys and values " +
        "must not contain spaces or newlines (they live in the head line)")
-    val (fs, p) = fsFor(spark, path)
-    fs.mkdirs(new Path(p, LogDir))
-
+    s0.fs.mkdirs(new Path(s0.root, LogDir))
+    var s = s0
     var committed = -1L
     while (committed < 0) {
-      val head = versions(spark, path).lastOption
-      val (prevHead, base) = head
-        .map(v => readManifest(fs, p, v))
-        .getOrElse(("", Seq.empty[String]))
-      val kept = baseKeep(base, newLines)
-      checkReadSet(path, read, head, prevHead, base, kept)
-      val next = head.getOrElse(0L) + 1
+      val kept = baseKeep(s.lines, newLines)
+      checkReadSet(read, s, kept)
+      val next = s.v + 1
       val nonce = java.util.UUID.randomUUID().toString
-      // carried keys survive manifest pruning: re-emit the previous
-      // head's txn.*/graft.* tokens, this commit's own meta winning on
+      // carried keys survive manifest pruning: re-emit the snapshot's
+      // txn.*/graft.* tokens, this commit's own meta winning on
       // conflict; the ts stamp is per-commit and never carried
       val lines = kept ++ newLines
       // ... except schema records no live line uses any more
       val liveIds = lines.flatMap(schemaIdOf).toSet
-      val carried = (parseMeta(prevHead)
+      val carried = (s.meta
         .filter(kv => CarriedMetaPrefixes.exists(kv._1.startsWith)) ++ meta)
         .filter { case (k, _) => !k.startsWith(SchemaRecordPrefix) ||
           liveIds(k.stripPrefix(SchemaRecordPrefix)) }
@@ -3889,10 +3767,11 @@ object TxTable {
       val allTokens = stamped.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
       val headLine = (action +: allTokens :+ nonce).mkString(" ")
       val body = (headLine +: lines).mkString("", "\n", "\n")
-      val slot = new Path(new Path(p, LogDir), manifestName(next))
-      if (claimSlot(fs, slot, body, nonce)) committed = next
-      // lost the race: loop re-reads the NEW head, so an append/replace
-      // rebuilt here includes the winner's files — nothing is dropped
+      val slot = new Path(new Path(s.root, LogDir), manifestName(next))
+      if (claimSlot(s.fs, slot, body, nonce)) committed = next
+      // lost the race: only now read the log again — an append/replace
+      // rebuilt on the NEW head includes the winner's files
+      else s = snapshot(s.spark, s.path, orEmpty = true)
     }
     committed
   }
@@ -3947,19 +3826,13 @@ object TxTable {
     */
   def detail(spark: SparkSession, path: String)
       : (Long, Long, Long, Seq[String], StructType) = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"$path is not a TxTable (no $LogDir manifests)")
-    val (fs, p) = fsFor(spark, path)
-    val lines = readManifest(fs, p, vs.last)._2
-    val bytes = lines.map(l =>
-      fs.getFileStatus(new Path(p, pathOf(l))).getLen).sum
-    val schema = declaredSchemaAt(fs, p, vs.last)
-      .getOrElse(read(spark, path, mergeSchema = true).schema)
-    val parts = declaredPartitionColsAt(fs, p, vs.last).getOrElse(
-      lines.headOption.map(l => partitionDirOf(pathOf(l)).split('/')
+    val s = snapshot(spark, path)
+    val parts = s.partitionCols.getOrElse(
+      s.lines.headOption.map(l => partitionDirOf(pathOf(l)).split('/')
         .filter(_.contains('=')).map(_.takeWhile(_ != '=')).toSeq)
         .getOrElse(Nil))
-    (vs.last, lines.size.toLong, bytes, parts, schema)
+    (s.v, s.lines.size.toLong, bytesOf(s, s.lines.map(pathOf)), parts,
+      tableSchema(s))
   }
 
   /** Drop all but the newest `keepVersions` manifests and delete every
@@ -3993,10 +3866,14 @@ object TxTable {
       if (!dryRun) { fs.delete(target, recursive); () }
     }
     // drop may be empty — orphan-dir cleanup below still runs (vacuum's
-    // job includes reclaiming failed-commit debris past the grace)
-    val (drop, keep) = vs.splitAt(math.max(0, vs.size - keepVersions))
-    val live = keep.flatMap(v => readManifest(fs, p, v)._2.map(pathOf)).toSet
-    val dropped = drop.flatMap(v => readManifest(fs, p, v)._2.map(pathOf)).toSet
+    // job includes reclaiming failed-commit debris past the grace). Each
+    // manifest is read once, for its files and its change-data dir
+    val (drop, keep) = vs.map(v => v -> readManifest(fs, p, v))
+      .splitAt(math.max(0, vs.size - keepVersions))
+    def filesOf(ms: Seq[(Long, (String, Seq[String]))]): Set[String] =
+      ms.flatMap(_._2._2.map(pathOf)).toSet
+    val live = filesOf(keep)
+    val dropped = filesOf(drop)
     val dataRoot = new Path(p, "data")
     val now = System.currentTimeMillis()
     // delete whole commit dirs whose files are all dead (files of one
@@ -4013,9 +3890,9 @@ object TxTable {
     // manifest → live; referenced only by dropped manifests → reclaim
     // now; referenced by nothing (a DML that lost its commit race) →
     // reclaim past the grace period
-    def cdfOf(vsSet: Seq[Long]): Set[String] = vsSet.flatMap(v =>
-      parseMeta(readManifest(fs, p, v)._1).get(ChangeDataMetaKey))
-      .filter(_ != "0").toSet
+    def cdfOf(ms: Seq[(Long, (String, Seq[String]))]): Set[String] =
+      ms.flatMap(m => parseMeta(m._2._1).get(ChangeDataMetaKey))
+        .filter(_ != "0").toSet
     val liveCdf = cdfOf(keep)
     val droppedCdf = cdfOf(drop)
     val changesRoot = new Path(p, ChangesDir)
@@ -4025,9 +3902,10 @@ object TxTable {
           now - d.getModificationTime > orphanGraceMs))
         remove(s"$ChangesDir/$name", d.getPath, recursive = true)
     }
-    drop.foreach(v =>
+    drop.foreach { case (v, _) =>
       remove(s"$LogDir/${manifestName(v)}",
-        new Path(new Path(p, LogDir), manifestName(v)), recursive = false))
+        new Path(new Path(p, LogDir), manifestName(v)), recursive = false)
+    }
     removed.result().sorted
   }
 }

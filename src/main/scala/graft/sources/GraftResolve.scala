@@ -102,20 +102,21 @@ private[sources] object GraftResolve {
         }
         .groupBy(_._1.toString).map(_._2.head).toSeq.sortBy(_._1.toString)
       val (idx, partSchema) = declared match {
-        // declared partition types win over directory-string inference
+        // declared partition types win over directory-string inference,
+        // and so do the string types the commits recorded
         case Some(s) => org.apache.spark.sql.GraftPartitionShim
           .snapshotIndex(spark, absFiles, dirs,
             StructType(colNames.map(c => s(c))))
         case None => org.apache.spark.sql.GraftPartitionShim
-          .snapshotIndex(spark, absFiles, dirs, colNames)
+          .snapshotIndex(spark, absFiles, dirs, colNames, recorded.toSeq
+            .flatMap(_.fields).map(f => f.name -> f.dataType).toMap)
       }
       // data schema from the declaration when present (footer-written
       // files may predate an evolution), else the recorded one, else
       // from one footer, read on the driver (partition values live in
       // dir names, never in the files)
-      val dataSchema = declared
+      val dataSchema = declared.orElse(recorded)
         .map(s => StructType(s.filterNot(f => colNames.contains(f.name))))
-        .orElse(recorded)
         .getOrElse(graft.ops.Sources.pinnedParquet(spark, files.head).schema)
       GraftResolved(name, idx,
         StructType(dataSchema.fields ++ partSchema.fields), dataSchema,

@@ -30,14 +30,16 @@ object GraftPartitionShim {
     * every distinct partition DIRECTORY (absolute, fs-qualified — the
     * parent of each file) to its decoded partition values in
     * `colNames` order. Returns the index plus the typed partition
-    * schema (types resolved across all values with Spark's inference
-    * lattice: int → long → double → date → string).
+    * schema: a column's type from `known` when it holds one, else
+    * resolved across all values with Spark's inference lattice: int →
+    * long → double → date → string.
     */
   def snapshotIndex(spark: SparkSession, files: Seq[Path],
                     dirs: Seq[(Path, Seq[String])],
-                    colNames: Seq[String])
+                    colNames: Seq[String], known: Map[String, DataType])
       : (PartitioningAwareFileIndex, StructType) = {
-    val types = colNames.indices.map(i => commonType(dirs.map(_._2(i))))
+    val types = colNames.indices.map(i => known.getOrElse(colNames(i),
+      commonType(dirs.map(_._2(i)))))
     val schema = StructType(colNames.zip(types).map { case (n, t) =>
       StructField(n, t, nullable = true)
     })

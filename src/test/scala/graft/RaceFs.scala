@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -12,14 +12,28 @@ import org.apache.hadoop.util.Progressable
   * Register with `fs.racefs.impl`; not being the `file` scheme, TxTable
   * claims through its rename path. Statuses carry default permissions:
   * the local one loads them through a `file:` URI, which a `racefs:`
-  * path is not.
+  * path is not. `listStatus`, `open` and `rename` calls are counted per
+  * path ([[RaceFs.calls]]).
   */
 class RaceFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("racefs:///")
   override def getScheme: String = "racefs"
 
-  override def listStatus(f: Path): Array[FileStatus] =
+  override def listStatus(f: Path): Array[FileStatus] = {
+    RaceFs.count("listStatus", f)
     super.listStatus(f).map(RaceFs.plain)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    RaceFs.count("open", f)
+    super.open(f, bufferSize)
+  }
+
+  /** Counted by its destination. */
+  override def rename(src: Path, dst: Path): Boolean = {
+    RaceFs.count("rename", dst)
+    super.rename(src, dst)
+  }
 
   override def getFileStatus(f: Path): FileStatus =
     RaceFs.plain(super.getFileStatus(f))
@@ -42,6 +56,21 @@ class RaceFs extends RawLocalFileSystem {
 
 object RaceFs {
   private var hook: Option[() => Unit] = None
+  private val counts =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
+
+  private def count(op: String, f: Path): Unit =
+    counts.merge((op, f.toUri.getPath), 1L, _ + _)
+
+  /** Calls of `op` (`listStatus`, `open` or `rename`) since the last
+    * [[resetCalls]] on paths that satisfy `path`.
+    */
+  def calls(op: String)(path: String => Boolean): Long = {
+    import scala.jdk.CollectionConverters._
+    counts.asScala.collect { case ((o, p), n) if o == op && path(p) => n }.sum
+  }
+
+  def resetCalls(): Unit = counts.clear()
 
   def beforeNextManifest(body: => Unit): Unit =
     synchronized { hook = Some(() => body) }

@@ -483,6 +483,30 @@ class TxDmlEdgeSpec extends SparkSpec {
       (0L until 9L))
   }
 
+  test("a mergeInto that loses its claim to a delete of a file it read aborts") {
+    val s = spark
+    import s.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.racefs.impl", classOf[RaceFs].getName)
+    val dir = "racefs://" +
+      java.nio.file.Files.createTempDirectory("graft_e").toString + "/t"
+    TxTable.append(spark, dir,
+      (0L until 10L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1))
+    // the delete rewrites the merge's one candidate file inside the
+    // merge's claim, after the merge built its manifest on v1
+    RaceFs.beforeNextManifest(TxTable.delete(spark, dir, col("id") === 9L))
+    val e = intercept[java.util.ConcurrentModificationException] {
+      TxTable.mergeInto(spark, dir, Seq((1L, "new")).toDF("id", "v"),
+        Seq("id"), updateSet = Map("v" -> TxTable.src("v")))
+    }
+    assert(e.getMessage.contains("changed concurrently"), e.getMessage)
+    assert(TxTable.versions(spark, dir) == Seq(1L, 2L))
+    // the delete landed, and the merge neither updated nor resurrected
+    assert(TxTable.read(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq ==
+      (0L until 9L).map(i => (i, s"v$i")))
+  }
+
   test("change-feed delete, update and compact on a flat table start 3 jobs each") {
     val s = spark
     import s.implicits._

@@ -17,7 +17,10 @@ import graft.ops.TxTable
 /** The per-dir schema record in the manifest: a read pinned by it must
   * be exactly the read Spark's footer inference gives — schema (names,
   * order, types, nullability, metadata) and rows — for every table
-  * shape, and building a snapshot frame must start no Spark job.
+  * shape, and building a snapshot frame must start no Spark job. The
+  * one deliberate difference: the record also holds the string
+  * partition columns as written, which inference re-types from the
+  * directory names (a string "07" reads as the int 7).
   *
   * "Inference" is the same table with the record stripped from every
   * manifest: the shape of a manifest written before the record
@@ -90,22 +93,35 @@ class TxSchemaRecordSpec extends SparkSpec {
     }
   }
 
-  /** Every version of `dir`, read every way a snapshot is read. */
-  private def assertSameAsInference(dir: String): Unit = {
+  /** Every version of `dir`, read every way a snapshot is read. The
+    * `written` partition columns are not compared with inference: every
+    * read of `dir` must type them as they were written.
+    */
+  private def assertSameAsInference(dir: String,
+                                    written: Seq[(String, DataType)] = Nil): Unit = {
     val bare = stripped(dir)
+    val parts = written.map(_._1)
+    def same(what: String, pinned: => DataFrame, inferred: => DataFrame) = {
+      sameRead(what, pinned.drop(parts: _*), inferred.drop(parts: _*))
+      if (written.nonEmpty) {
+        val types = pinned.schema.map(f => f.name -> f.dataType).toMap
+        assert(written.forall { case (n, t) => types.get(n).contains(t) },
+          s"$what partition types: ${pinned.schema.simpleString}")
+      }
+    }
     TxTable.versions(spark, dir).foreach { v =>
       Seq(false, true).foreach { ms =>
-        sameRead(s"readVersion($v, mergeSchema=$ms)",
+        same(s"readVersion($v, mergeSchema=$ms)",
           TxTable.readVersion(spark, dir, v, mergeSchema = ms),
           TxTable.readVersion(spark, bare, v, mergeSchema = ms))
       }
-      sameRead(s"format(graft) versionAsOf $v",
+      same(s"format(graft) versionAsOf $v",
         spark.read.format("graft").option("versionAsOf", v).load(dir),
         spark.read.format("graft").option("versionAsOf", v).load(bare))
     }
     sameRead("readChanges",
-      TxTable.readChanges(spark, dir, 0L, mergeSchema = true),
-      TxTable.readChanges(spark, bare, 0L, mergeSchema = true))
+      TxTable.readChanges(spark, dir, 0L, mergeSchema = true).drop(parts: _*),
+      TxTable.readChanges(spark, bare, 0L, mergeSchema = true).drop(parts: _*))
   }
 
   private def recordIds(dir: String): Set[String] =
@@ -139,14 +155,16 @@ class TxSchemaRecordSpec extends SparkSpec {
     val dir = tmp() + "/t"
     TxTable.append(spark, dir, people.filter(col("id") <= 2), Seq("day"))
     TxTable.append(spark, dir, people.filter(col("id") > 2), Seq("day"))
-    // "7" and "07" both infer as the int 7
+    // "7" and "07" both infer as the int 7; the record keeps them apart
     TxTable.append(spark, dir,
       people.withColumn("day", lit("7")).filter(col("id") === 1), Seq("day"))
     assert(TxTable.recordedSchema(spark, dir, 3L).isDefined)
-    assertSameAsInference(dir)
+    assertSameAsInference(dir, Seq("day" -> StringType))
+    assert(TxTable.read(spark, dir).select("day").distinct().collect()
+      .map(_.getString(0)).toSet === Set("07", "11", "7"))
     val two = tmp() + "/t"
     TxTable.overwrite(spark, two, people, Seq("day", "score"))
-    assertSameAsInference(two)
+    assertSameAsInference(two, Seq("day" -> StringType))
   }
 
   test("overwrite and merge / mergeInto / update / delete rewrites") {
@@ -360,9 +378,13 @@ class TxSchemaRecordSpec extends SparkSpec {
     assert(TxTable.recordedSchema(spark, bare, 1L).isEmpty)
     assert(jobsStartedBy(spark.read.format("graft").load(bare).schema) === 0,
       "GraftResolve reads the data schema from one footer")
+    // the record types the partition column as written ("07"); the
+    // unrecorded load re-infers it from the directory names (7)
     sameRead("unrecorded partitioned load",
-      spark.read.format("graft").load(bare),
-      spark.read.format("graft").load(parted))
+      spark.read.format("graft").load(bare).drop("day"),
+      spark.read.format("graft").load(parted).drop("day"))
+    assert(spark.read.format("graft").load(parted).schema("day").dataType ===
+      StringType)
     TxTable.update(spark, parted, col("id") === 1L, Map("score" -> lit(9.0)))
     val v = TxTable.versions(spark, parted).last
     assert(jobsStartedBy(TxTable.readChanges(spark, parted, v - 1, v).schema)

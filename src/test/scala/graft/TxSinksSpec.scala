@@ -313,4 +313,26 @@ class TxSinksSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out == Map(1L -> "A", 2L -> "B", 3L -> "c"))
   }
+
+  test("a string partition column whose values each land in their own tx commit reads back as a string") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = tmpTable("graft_tx_strpart_types")
+    Seq((1L, "01", "a"), (2L, "02", "b"), (3L, "x", "c")).foreach {
+      case (id, day, v) => Sinks.upsertPartitioned(spark, dir,
+        Seq((id, day, v)).toDF("id", "day", "v"), Seq("id", "day"),
+        Seq("day"), tx = true)
+    }
+    val out = TxTable.read(spark, dir)
+    assert(out.schema("day").dataType ==
+      org.apache.spark.sql.types.StringType, out.schema.simpleString)
+    assert(out.select("id", "day").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "01", 2L -> "02", 3L -> "x"))
+    // an unpinned predicate read prunes day=01 as a string
+    val kept = TxTable.readWhere(spark, dir, col("day") <=> "01").inputFiles
+    assert(kept.nonEmpty && kept.forall(_.contains("day=01/")),
+      kept.mkString(", "))
+  }
 }

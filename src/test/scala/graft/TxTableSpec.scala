@@ -326,4 +326,66 @@ class TxTableSpec extends SparkSpec {
       e.getMessage)
     assert(TxTable.versions(spark, dir) == Seq(1L))
   }
+
+  /** A fresh table under the counting `racefs` scheme. */
+  private def raceTable(prefix: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.racefs.impl", classOf[RaceFs].getName)
+    "racefs://" +
+      java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+  }
+
+  test("an append that loses its claim to a racing append rebuilds on the new head") {
+    val s = spark
+    import s.implicits._
+    val dir = raceTable("graft_lost_claim")
+    TxTable.append(spark, dir, Seq((1L, "a")).toDF("id", "v"))
+    // the racer commits v2 inside this append's claim, after it built
+    // its manifest on v1
+    RaceFs.beforeNextManifest(
+      TxTable.append(spark, dir, Seq((2L, "raced")).toDF("id", "v")))
+    assert(TxTable.append(spark, dir, Seq((3L, "c")).toDF("id", "v")) == 3L)
+    assert(TxTable.versions(spark, dir) == Seq(1L, 2L, 3L))
+    assert(TxTable.read(spark, dir).collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(1L, 2L, 3L), "both writers' rows survive")
+  }
+
+  test("each operation lists the log once and reads its head manifest once") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = raceTable("graft_log_traffic")
+    val log = dir.stripPrefix("racefs://") + "/_txlog"
+    def rows(lo: Long) = (lo until lo + 20L).map(i => (i, s"v$i"))
+      .toDF("id", "v").repartition(2)
+    // (`_txlog` listings, manifest opens) of `op`; the rename claim's
+    // read-back of the slot it just claimed is not counted
+    def traffic(op: => Any): (Long, Long) = {
+      RaceFs.resetCalls()
+      op
+      def manifest(p: String) = p.startsWith(log + "/") && p.endsWith(".manifest")
+      (RaceFs.calls("listStatus")(_ == log),
+        RaceFs.calls("open")(manifest) - RaceFs.calls("rename")(manifest))
+    }
+    TxTable.append(spark, dir, rows(0L))
+    TxTable.append(spark, dir, rows(100L))
+    val appendAtV2 = traffic(TxTable.append(spark, dir, rows(200L)))
+    val counts = Seq(
+      "read(...).count()" -> traffic(TxTable.read(spark, dir).count()),
+      "mergeInto" -> traffic(TxTable.mergeInto(spark, dir,
+        Seq((5L, "m"), (999L, "new")).toDF("id", "v"), Seq("id"),
+        updateSet = Map("v" -> TxTable.src("v")))),
+      "delete" -> traffic(TxTable.delete(spark, dir, col("id") === 7L)),
+      "update" -> traffic(TxTable.update(spark, dir, col("id") === 8L,
+        Map("v" -> lit("u")))))
+    (TxTable.versions(spark, dir).last until 52L).foreach(i =>
+      TxTable.setCarriedMeta(spark, dir, Map("graft.probe" -> i.toString)))
+    assert(TxTable.versions(spark, dir).last == 52L)
+    val appendAtV52 = traffic(TxTable.append(spark, dir, rows(300L)))
+    info(s"append at v2 $appendAtV2, at v52 $appendAtV52, " +
+      counts.map { case (op, c) => s"$op $c" }.mkString(", "))
+    assert(appendAtV2 == ((1L, 1L)))
+    assert(appendAtV52 == appendAtV2)
+    counts.foreach { case (op, c) => assert(c == ((1L, 1L)), s"$op: $c") }
+  }
 }
