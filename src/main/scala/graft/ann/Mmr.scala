@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 
 /** Maximal Marginal Relevance reranking (Carbonell & Goldstein, SIGIR
@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * [[graft.text.HybridSearch]]), never the corpus — so the rerank costs
   * the same at any corpus size (the [[RankingMetrics]] posture). Each
   * greedy step is one per-query-key window over an equi-join; the
-  * selected set is localCheckpointed per step so the plan stays linear
-  * in k (k is required ≤ 20).
+  * selected set is pinned per step, and the step it supersedes
+  * released, so the plan stays linear in k (k is required ≤ 20).
   *
   * Determinism, cross-engine: cosines fold in array order ([[
   * Similarity.dotHof]]); the running max over selected is
@@ -44,12 +44,11 @@ object Mmr {
     require(k > 0 && k <= 20, "k must be in [1, 20] (one plan step each)")
     require(lambda >= 0.0 && lambda <= 1.0, "lambda must be in [0, 1]")
     val q = col(queryCol); val id = col(idCol)
-    val cand = candidates
+    val cand = GraftShim.pin(candidates
       .select(q, id, col(relCol).cast("double").as("__rel"),
         col(vecCol).as("__v"))
       .withColumn("__n", Similarity.norm(col("__v")))
-      .filter(col("__n") > 0)
-      .localCheckpoint()
+      .filter(col("__n") > 0))
     // step 1: no selected set yet — maxsim is 0, the pick is pure
     // relevance (λ·rel), ties on id
     def pick(scored: DataFrame, step: Int): DataFrame =
@@ -57,8 +56,8 @@ object Mmr {
           Seq(col("__mmr").desc, id.asc), 1, rankCol = "__r")
         .select(q, lit(step).as("mmr_rank"), id,
           col("__mmr").as("mmr_score"), col("__v"), col("__n"))
-    var selected = pick(cand.withColumn("__mmr", lit(lambda) * col("__rel")),
-      1).localCheckpoint()
+    var selected = GraftShim.pin(
+      pick(cand.withColumn("__mmr", lit(lambda) * col("__rel")), 1))
     var step = 2
     var exhausted = false
     while (step <= k && !exhausted) {
@@ -73,15 +72,21 @@ object Mmr {
       val scored = rem.join(sim, Seq(queryCol, idCol))
         .withColumn("__mmr", lit(lambda) * col("__rel")
           - lit(1.0 - lambda) * col("__maxsim"))
-      val picked = pick(scored, step).localCheckpoint()
+      val picked = GraftShim.pin(pick(scored, step))
       // every query out of candidates → the remaining rounds would be
-      // k − step empty join+window+checkpoint jobs each picking
-      // nothing; the step already materialized, so isEmpty is a
-      // metadata check, not a recompute
+      // k − step empty join+window+pin jobs each picking nothing; the
+      // step already materialized, so isEmpty is a metadata check, not
+      // a recompute
       if (picked.isEmpty) exhausted = true
-      else selected = selected.unionByName(picked).localCheckpoint()
+      else {
+        val next = GraftShim.pin(selected.unionByName(picked))
+        GraftShim.unpin(selected)
+        selected = next
+      }
+      GraftShim.unpin(picked)
       step += 1
     }
+    GraftShim.unpin(cand)
     selected.select(q, col("mmr_rank"), id, col("mmr_score"))
   }
 }

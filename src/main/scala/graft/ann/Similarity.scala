@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`array<float>`) — north-star
@@ -114,11 +114,11 @@ object Similarity {
       "need 0 < refineFraction <= 1")
     // Centroids come from the zero-norm-FILTERED corpus (a NaN-cosine
     // centroid would attract every row — NaN sorts first under desc)
-    // and are materialized ONCE (localCheckpoint): the frame is
+    // and are materialized ONCE (pinned): the frame is
     // referenced from two independent broadcast subplans, and a
     // re-evaluated monotonically_increasing_id could number centroids
     // differently on each side, silently mismatching lists and probes.
-    val seeds = corpus
+    val seeds = GraftShim.pin(corpus
       .select(col(idCol), col(vecCol))
       .filter(norm(col(vecCol)) > 0)
       // id asc as the tiebreaker: under an xxhash64 collision at the
@@ -130,21 +130,24 @@ object Similarity {
       .limit(numLists)
       .select(monotonically_increasing_id().as("list_id"),
         col(vecCol).cast("array<double>").as("centroid"),
-        norm(col(vecCol)).as("cent_n"))
-      .localCheckpoint()
+        norm(col(vecCol)).as("cent_n")))
     val ptsAll = corpus.select(col(idCol), col(vecCol),
       norm(col(vecCol)).as("__n")).filter(col("__n") > 0)
-    // The sample is materialized once (localCheckpoint), so EVERY Lloyd
-    // iteration re-scans the small cached sample, not the corpus scan +
-    // filter lineage.
+    // The sample is pinned once, so EVERY Lloyd iteration re-scans the
+    // small pinned sample, not the corpus scan + filter lineage; each
+    // iteration's centroids are released once the next supersede them.
+    val sampled = refineFraction < 1.0 && kmeansIters > 0
     val pts =
-      if (refineFraction >= 1.0 || kmeansIters == 0) ptsAll
-      else graft.ops.Sampling
-        .consistentSample(ptsAll, idCol, refineFraction)
-        .localCheckpoint()
-    (1 to kmeansIters).foldLeft(seeds) { (c, _) =>
-      lloydStep(pts, c, idCol, vecCol).localCheckpoint()
+      if (!sampled) ptsAll
+      else GraftShim.pin(graft.ops.Sampling
+        .consistentSample(ptsAll, idCol, refineFraction))
+    val index = (1 to kmeansIters).foldLeft(seeds) { (c, _) =>
+      val next = GraftShim.pin(lloydStep(pts, c, idCol, vecCol))
+      GraftShim.unpin(c)
+      next
     }
+    if (sampled) GraftShim.unpin(pts)
+    index
   }
 
   /** Recall telemetry for an IVF index: sampled queries, ONE
@@ -185,11 +188,11 @@ object Similarity {
                                nprobes: Seq[Int], sampleQueries: Int,
                                idCol: String = "vec_id",
                                vecCol: String = "embedding"): DataFrame = {
-    val stored = graft.ops.TxTable.read(spark, path)
-      .select(col(idCol), col(vecCol), col("nrm"), col("list_id"))
-      .localCheckpoint()
-    recallReportOverLists(stored.select(col(idCol), col(vecCol)), stored,
+    val stored = GraftShim.pin(graft.ops.TxTable.read(spark, path)
+      .select(col(idCol), col(vecCol), col("nrm"), col("list_id")))
+    try recallReportOverLists(stored.select(col(idCol), col(vecCol)), stored,
       index, k, nprobes, sampleQueries, idCol, vecCol)
+    finally GraftShim.unpin(stored)
   }
 
   /** Shared tail of [[ivfRecallReport]]/[[ivfRecallReportFromLists]]:
@@ -206,14 +209,12 @@ object Similarity {
     val spark = corpus.sparkSession
     val numLists = index.count()
     // deterministic pseudo-random sample, pinned for the multi-pass use
-    val queries = corpus
+    val queries = GraftShim.pin(corpus
       .orderBy(xxhash64(col(idCol)).asc, col(idCol).asc)
-      .limit(sampleQueries)
-      .localCheckpoint()
+      .limit(sampleQueries))
     val nQueries = queries.count()
-    val truth = bruteForceTopK(corpus, queries, k, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint()
+    val truth = GraftShim.pin(bruteForceTopK(corpus, queries, k, idCol, vecCol)
+      .select(col("query_id"), col("neighbor_id")))
     val truthPairs = truth.count()
     // the EXPENSIVE half — full-corpus centroid assignment — is pinned
     // ONCE (or read back, already paid); each nprobe candidate only
@@ -223,21 +224,19 @@ object Similarity {
     // is assigned once at the WIDEST nprobe; narrower candidates are a
     // rank filter over the same deterministic (cos desc, list_id asc)
     // order — identical to an independent keep=np assignment.
-    val lists = assigned
+    val lists = GraftShim.pin(assigned
       .select(col(idCol).as("c_id"), col(vecCol).as("c_v"),
-        col("nrm").as("c_n"), col("list_id"))
-      .localCheckpoint()
+        col("nrm").as("c_n"), col("list_id")))
     val qNorm = queries.select(col(idCol), col(vecCol),
       norm(col(vecCol)).as("__n")).filter(col("__n") > 0)
     val qScored = qNorm.crossJoin(broadcast(index))
       .withColumn("__cs",
         dot(col(vecCol), col("centroid")) / (col("__n") * col("cent_n")))
-    val qProbes = graft.ops.Windows.topKPerGroup(qScored, Seq(col(idCol)),
-        Seq(col("__cs").desc, col("list_id").asc), nprobes.max,
-        rankCol = "__pr")
+    val qProbes = GraftShim.pin(graft.ops.Windows.topKPerGroup(qScored,
+        Seq(col(idCol)), Seq(col("__cs").desc, col("list_id").asc),
+        nprobes.max, rankCol = "__pr")
       .select(col(idCol).as("q_id"), col(vecCol).as("q_v"),
-        col("__n").as("q_n"), col("list_id"), col("__pr"))
-      .localCheckpoint()
+        col("__n").as("q_n"), col("list_id"), col("__pr")))
     val rows = nprobes.map { np =>
       val scored = lists.join(qProbes.filter(col("__pr") <= np),
           Seq("list_id"))
@@ -252,6 +251,8 @@ object Similarity {
       (numLists, np, k, nQueries, truthPairs, hits,
         if (truthPairs == 0) 1.0 else hits.toDouble / truthPairs)
     }
+    // every count above ran, so no pin escapes the report
+    Seq(queries, truth, lists, qProbes).foreach(GraftShim.unpin)
     import spark.implicits._
     rows.toDF("num_lists", "nprobe", "k", "n_queries", "truth_pairs",
       "hits", "recall")
@@ -689,10 +690,12 @@ object Similarity {
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): Long = {
     val spark = corpus.sparkSession
-    val ranges = sqTrain(corpus, vecCol).localCheckpoint()
-    graft.ops.TxTable.overwrite(spark, s"$root/ranges", ranges)
-    graft.ops.TxTable.overwrite(spark, s"$root/codes",
-      idSorted(sqEncode(corpus, ranges, idCol, vecCol), idCol))
+    val ranges = GraftShim.pin(sqTrain(corpus, vecCol))
+    try {
+      graft.ops.TxTable.overwrite(spark, s"$root/ranges", ranges)
+      graft.ops.TxTable.overwrite(spark, s"$root/codes",
+        idSorted(sqEncode(corpus, ranges, idCol, vecCol), idCol))
+    } finally GraftShim.unpin(ranges)
   }
 
   /** Encode ONLY `newVectors` under the stored (frozen) codebook and
@@ -1000,7 +1003,7 @@ object Similarity {
             size(col("__v")) / m).as("sub")))).as("p"))
       .select(col("p.j").as("j"), col("p.sub").as("sub"))
     var cur = cbs
-    for (_ <- 0 until iters) {
+    for (i <- 0 until iters) {
       val assigned = pts.crossJoin(broadcast(cur))
         .withColumn("cbj", element_at(col("cbs"), col("j") + 1))
         .withColumn("code", {
@@ -1016,7 +1019,7 @@ object Similarity {
           transform(col("pm"), s => s.getField("mval")).as("cent"))
       val oldExpl = cur.select(posexplode(col("cbs")).as(Seq("j", "cb")))
         .select(col("j"), posexplode(col("cb")).as(Seq("code", "cent_old")))
-      cur = oldExpl.join(updated, Seq("j", "code"), "left")
+      val next = GraftShim.pin(oldExpl.join(updated, Seq("j", "code"), "left")
         .select(col("j"), col("code"),
           coalesce(col("cent"), col("cent_old")).as("centv"))
         .groupBy("j")
@@ -1025,8 +1028,9 @@ object Similarity {
           transform(col("pc"), s => s.getField("centv")).as("cbj"))
         .groupBy()
         .agg(array_sort(collect_list(struct(col("j"), col("cbj")))).as("jc"))
-        .select(transform(col("jc"), s => s.getField("cbj")).as("cbs"))
-        .localCheckpoint()
+        .select(transform(col("jc"), s => s.getField("cbj")).as("cbs")))
+      if (i > 0) GraftShim.unpin(cur) // the caller's seed stays
+      cur = next
     }
     cur
   }
@@ -1164,10 +1168,12 @@ object Similarity {
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): Long = {
     val spark = corpus.sparkSession
-    val cbs = pqTrainSeed(corpus, m, ksub, idCol, vecCol).localCheckpoint()
-    graft.ops.TxTable.overwrite(spark, s"$root/cbs", cbs)
-    graft.ops.TxTable.overwrite(spark, s"$root/codes",
-      idSorted(pqEncode(corpus, cbs, idCol, vecCol), idCol))
+    val cbs = GraftShim.pin(pqTrainSeed(corpus, m, ksub, idCol, vecCol))
+    try {
+      graft.ops.TxTable.overwrite(spark, s"$root/cbs", cbs)
+      graft.ops.TxTable.overwrite(spark, s"$root/codes",
+        idSorted(pqEncode(corpus, cbs, idCol, vecCol), idCol))
+    } finally GraftShim.unpin(cbs)
   }
 
   /** Encode ONLY `newVectors` under the stored (frozen) codebooks and

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.text.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -73,7 +73,7 @@ object Dedup {
     */
   def cappedShingleIndex(df: DataFrame, idCol: String, textCol: String,
                          n: Int, cap: Int): DataFrame = {
-    // Deliberately NOT materialized: an earlier round localCheckpoint'd
+    // Deliberately NOT materialized: an earlier round pinned
     // the raw index here (it feeds the hot-key aggregation, the
     // anti-join probe, and several caller consumers), but pinning the
     // FULL exploded inverted index is the single most expensive thing
@@ -463,40 +463,31 @@ object Dedup {
     * count that stays flat as components deepen with corpus growth —
     * measured 11.7× time at 10× data under plain propagation, because
     * 10× data deepened the largest near-dup chains and added whole
-    * edge-table rounds. `localCheckpoint` truncates lineage so plans
-    * don't snowball. Convergence is read off a per-row `changed` flag
-    * carried INSIDE the round's own result — no separate old-vs-new
-    * join (round 2 ran one per round, doubling each round's shuffle
-    * work); the flag check only scans the freshly checkpointed local
-    * blocks.
+    * edge-table rounds. Each round is pinned, which truncates lineage
+    * so plans don't snowball. Convergence is read off a per-row
+    * `changed` flag carried INSIDE the round's own result — no separate
+    * old-vs-new join (round 2 ran one per round, doubling each round's
+    * shuffle work); the flag check only scans the freshly pinned round.
     *
-    * `checkpointDir`: by default rounds are pinned with `localCheckpoint`
-    * (executor-local blocks — fastest, fine on local mode and for short
-    * jobs). On a real cluster an executor loss under localCheckpoint
-    * KILLS the job (the truncated lineage cannot recompute lost blocks);
-    * pass a reliable `checkpointDir` (HDFS/object store) and rounds
-    * checkpoint there instead, surviving executor churn.
+    * Executor loss: rounds are pinned with [[GraftShim.pin]], so they
+    * follow the session's checkpoint dir. With
+    * `sparkContext.setCheckpointDir` pointing at reliable storage
+    * (HDFS/object store) they are written there and survive executor
+    * churn; without one they live in executor blocks, and an executor
+    * loss fails the job (the truncated lineage cannot recompute them).
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          checkpointDir: Option[String] = None): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     require(maxIter > 0, "maxIter must be positive")
-    import org.apache.spark.sql.GraftShim
-    val pin: DataFrame => (DataFrame, () => Unit) = checkpointDir match {
-      case Some(dir) =>
-        pairs.sparkSession.sparkContext.setCheckpointDir(dir)
-        GraftShim.pinReliable
-      case None => GraftShim.pinLocal
-    }
-    // Materialize the edge list ONCE: without the checkpoint the full
+    // Materialize the edge list ONCE: without the pin the full
     // upstream pairs pipeline (e.g. the MinHash/jaccard joins) would
     // re-execute every iteration. Each round's pin is RELEASED as soon
     // as the next round supersedes it — otherwise a 20-round run keeps
     // 20 generations of labels blocks (or checkpoint files) alive and
     // evicts genuine working memory at scale.
-    val (edges, releaseEdges) = pin(
+    val edges = GraftShim.pin(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
-    var (labels, releaseLabels) = pin(
+    var labels = GraftShim.pin(
       edges.select(col("src").as("id")).distinct()
         .withColumn("comp", col("id")))
     var converged = false
@@ -517,23 +508,22 @@ object Dedup {
       // composing through L_prev contracts chains by the same factor,
       // one round later at most.
       val jumpTo = labels.select(col("id").as("__jid"), col("comp").as("__jcomp"))
-      val (updated, releaseUpdated) = pin(
+      val updated = GraftShim.pin(
         stepped.join(jumpTo, col("comp") === col("__jid"), "left")
           .select(col("id"),
             least(col("comp"), coalesce(col("__jcomp"), col("comp"))).as("comp"),
             (least(col("comp"), coalesce(col("__jcomp"), col("comp")))
               < col("__old")).as("__chg")))
       converged = updated.filter(col("__chg")).isEmpty
-      releaseLabels()
-      labels = updated.drop("__chg")
-      releaseLabels = releaseUpdated
+      GraftShim.unpin(labels)
+      labels = updated
       i += 1
     }
-    releaseEdges()
+    GraftShim.unpin(edges)
     if (!converged)
       log.warn(s"connectedComponents: not converged after $maxIter rounds; " +
         "labels may split one true component — raise maxIter")
-    labels
+    labels.drop("__chg")
   }
 
   /** Keep one document per near-dup cluster: drops every row whose id is

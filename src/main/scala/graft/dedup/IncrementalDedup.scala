@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.TxTable
@@ -161,7 +161,7 @@ object IncrementalDedup {
              cfg: IncDedupConfig = IncDedupConfig(),
              batchId: Option[Long] = None,
              txnApp: String = "inc-dedup"): DataFrame = {
-    val sigNew = sigFrame(batch, idCol, textCol, cfg).localCheckpoint(true)
+    val sigNew = GraftShim.pin(sigFrame(batch, idCol, textCol, cfg))
     val batchIds = sigNew.select("id")
 
     // 1. drop batch docs the corpus already contains (near-dup at
@@ -181,9 +181,9 @@ object IncrementalDedup {
 
     // 2. within-batch: keep the min id of each agreement cluster
     val pairs = agreePairs(fresh, fresh, cfg, selfJoin = true)
-    val surviving = Dedup
-      .keepCanonical(fresh, "id", pairs.select("id_a", "id_b"))
-      .localCheckpoint(true) // pin: the commit and the return both read it
+    // pin: the commit and the return both read it
+    val surviving = GraftShim.pin(Dedup
+      .keepCanonical(fresh, "id", pairs.select("id_a", "id_b")))
 
     // 3. one commit of the survivors' signatures (id-range layout so
     //    a later remove() prunes its rewrite)

@@ -1,6 +1,6 @@
 package graft.events
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 
 /** Event-time windowed aggregation over the batch `events` table
@@ -106,8 +106,7 @@ object EventWindows {
     // will probe it: otherwise the probe's collect() runs the full
     // scan+aggregate once and the grid explode runs the identical
     // aggregate AGAIN — the guard must be genuinely free
-    val spans = if (maxGridRowsPerKey > 0) spans0.localCheckpoint()
-                else spans0
+    val spans = if (maxGridRowsPerKey > 0) GraftShim.pin(spans0) else spans0
     if (maxGridRowsPerKey > 0) {
       val wide = spans
         .filter(col("__hi") - col("__lo") + 1 > maxGridRowsPerKey)

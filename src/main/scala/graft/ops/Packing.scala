@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -104,20 +104,23 @@ object Packing {
   def writeShards(df: DataFrame, dir: String, orderCols: Seq[Column],
                   rowsPerShard: Long,
                   shardCol: String = "shard"): Int = {
-    val assigned = assignShards(df, orderCols, rowsPerShard, shardCol)
-      .localCheckpoint() // one rank computation for both count and write
-    // max over zero rows is null — an empty input writes zero shards
-    // (an empty dir) instead of NPE-ing on getInt
-    val maxRow = assigned.agg(max(col(shardCol))).head()
-    if (maxRow.isNullAt(0)) {
-      assigned.write.partitionBy(shardCol).mode("overwrite").parquet(dir)
-      return 0
-    }
-    val nShards = maxRow.getInt(0) + 1
-    assigned
-      .repartition(math.max(1, nShards), col(shardCol))
-      .sortWithinPartitions(col(shardCol) +: orderCols: _*)
-      .write.partitionBy(shardCol).mode("overwrite").parquet(dir)
-    nShards
+    // one rank computation for both count and write
+    val assigned = GraftShim.pin(
+      assignShards(df, orderCols, rowsPerShard, shardCol))
+    try {
+      // max over zero rows is null — an empty input writes zero shards
+      // (an empty dir) instead of NPE-ing on getInt
+      val maxRow = assigned.agg(max(col(shardCol))).head()
+      if (maxRow.isNullAt(0)) {
+        assigned.write.partitionBy(shardCol).mode("overwrite").parquet(dir)
+        return 0
+      }
+      val nShards = maxRow.getInt(0) + 1
+      assigned
+        .repartition(math.max(1, nShards), col(shardCol))
+        .sortWithinPartitions(col(shardCol) +: orderCols: _*)
+        .write.partitionBy(shardCol).mode("overwrite").parquet(dir)
+      nShards
+    } finally GraftShim.unpin(assigned)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 
 /** Scale-safe running totals over a GLOBAL ordering.
@@ -51,14 +51,13 @@ object Prefix {
     // partition i = contiguous slice of the global order; the local
     // window below keys on the REAL partition id, so its result is
     // exact whatever boundaries the range sampler picked.
-    // localCheckpoint PINS the slice: the range sampler is seeded per
-    // execution, and this plan is executed twice (totals collect +
-    // final join) — without pinning, the two runs could draw different
-    // boundaries and the broadcast offsets would key on pids from a
-    // partitioning the final pass no longer has
-    val ranged = df.repartitionByRange(n, orderCols: _*)
-      .withColumn(pid, spark_partition_id())
-      .localCheckpoint()
+    // the slice is PINNED: the range sampler is seeded per execution,
+    // and this plan is executed twice (totals collect + final join) —
+    // without pinning, the two runs could draw different boundaries and
+    // the broadcast offsets would key on pids from a partitioning the
+    // final pass no longer has
+    val ranged = GraftShim.pin(df.repartitionByRange(n, orderCols: _*)
+      .withColumn(pid, spark_partition_id()))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(pid)).orderBy(orderCols: _*)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -149,9 +148,10 @@ object Prefix {
     val pid = graft.util.Cols.fresh(df, "__pid")
     val local = graft.util.Cols.fresh(df, "__local")
 
-    val ranged = df.repartitionByRange(n, (col(groupCol) +: orderCols): _*)
-      .withColumn(pid, spark_partition_id())
-      .localCheckpoint() // pin sampled boundaries, as in runningSum
+    // pin sampled boundaries, as in runningSum
+    val ranged = GraftShim.pin(
+      df.repartitionByRange(n, (col(groupCol) +: orderCols): _*)
+        .withColumn(pid, spark_partition_id()))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(pid), col(groupCol)).orderBy(orderCols: _*)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -219,7 +219,7 @@ object Prefix {
     require(n > 0, "ntile needs a positive bucket count")
     val rn = graft.util.Cols.fresh(df, "__rn")
     val ranked = globalRowNumber(df, orderCols, rn, partitions)
-    // one count job over the ranked (already checkpointed) slice — the
+    // one count job over the ranked (already pinned) slice — the
     // bucket boundary needs the exact total, and N is the only global
     // statistic the prefix pass doesn't already hand back
     val total = ranked.count()

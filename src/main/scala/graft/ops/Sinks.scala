@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, GraftShim, SaveMode}
 
 /** Parquet sinks (SURVEY §2.1 S3/S4).
   *
@@ -153,28 +153,30 @@ object Sinks {
       else TxTable.merge(spark, path, updates, keyCols, nullSafeKeys = true)
       return
     }
-    val merged =
-      if (!exists) { requireKeyUnique(updates); updates }
-      else {
-        // updates feeds the dup check, the anti-join probe and the
-        // union — materialize once (broadcast anti-join sides get no
-        // ReuseExchange)
-        val up = updates.localCheckpoint()
-        requireKeyUnique(up)
-        val keys = up.select(keyCols.map(
-          org.apache.spark.sql.functions.col): _*).dropDuplicates()
-        val existing = spark.read.parquet(path)
-        // null-safe equality: a null key must MATCH a null key or the
-        // anti-join keeps the old row and the union adds the new one
-        val cond = keyCols.map(c => existing(c) <=> keys(c)).reduce(_ && _)
-        existing.join(keys, cond, "left_anti").unionByName(up)
-      }
+    // updates feeds the dup check, the anti-join probe and the union —
+    // materialize once (broadcast anti-join sides get no ReuseExchange)
+    val up = if (exists) GraftShim.pin(updates) else updates
     val tmp = new Path(p.getParent,
       s".upsert_${p.getName}_${java.util.UUID.randomUUID()}")
     try {
+      requireKeyUnique(up)
+      val merged =
+        if (!exists) up
+        else {
+          val keys = up.select(keyCols.map(
+            org.apache.spark.sql.functions.col): _*).dropDuplicates()
+          val existing = spark.read.parquet(path)
+          // null-safe equality: a null key must MATCH a null key or the
+          // anti-join keeps the old row and the union adds the new one
+          val cond = keyCols.map(c => existing(c) <=> keys(c)).reduce(_ && _)
+          existing.join(keys, cond, "left_anti").unionByName(up)
+        }
       merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       swapInto(fs, tmp, p)
-    } finally if (fs.exists(tmp)) fs.delete(tmp, true)
+    } finally {
+      if (fs.exists(tmp)) fs.delete(tmp, true)
+      if (exists) GraftShim.unpin(up)
+    }
   }
 
   /** Partition-bounded upsert into a hive-partitioned parquet table:
@@ -227,7 +229,7 @@ object Sinks {
         "(no _txlog); migrate it with TxTable.overwrite first")
     // same one-row-per-key contract as upsert(): neither the
     // anti-join+union below nor replacePartitions rejects duplicate
-    // update keys, so enforce here — on the checkpointed frame for the
+    // update keys, so enforce here — on the pinned frame for the
     // merge paths, on the raw frame for the bootstrap
     def requireKeyUnique(df: DataFrame): Unit = {
       import org.apache.spark.sql.functions.count
@@ -247,95 +249,97 @@ object Sinks {
 
     // updates feeds the dup check, the partition listing, the
     // anti-join probe and the union — materialize once
-    val up = updates.localCheckpoint()
-    requireKeyUnique(up)
-    // capped collect: the limit bounds what can ever reach the driver,
-    // and exceeding it fails LOUDLY — an upsert touching more than
-    // `maxAffectedPartitions` partitions is a full-table rewrite in
-    // disguise and should go through overwrite/writePartitioned, not
-    // grow an unbounded disjunctive filter and driver array
-    val affected = up.select(partitionCols.map(col): _*).distinct()
-      .limit(maxAffectedPartitions + 1).collect()
-    if (affected.isEmpty) return
-    require(affected.length <= maxAffectedPartitions,
-      s"upsert touches more than $maxAffectedPartitions distinct " +
-        s"partitions of $path — that is a table-scale rewrite; use " +
-        "overwrite/writePartitioned, or raise maxAffectedPartitions " +
-        "deliberately")
-    // one disjunct per affected partition; <=> matches null partition
-    // values (hive's __HIVE_DEFAULT_PARTITION__)
-    val prune = affected.map { r =>
-      partitionCols.zipWithIndex
-        .map { case (c, i) => col(c) <=> lit(r.get(i)) }
-        .reduce(_ && _)
-    }.reduce(_ || _)
-    val keys = up.select(keyCols.map(col): _*).dropDuplicates()
-    // Pin the read schema to the update's: partition-column types are
-    // otherwise re-inferred from the key=value directory STRINGS, so a
-    // string day "07" comes back as int 7, the <=> prune matches
-    // nothing, and the partition swap would drop every pre-existing
-    // non-updated key. With an explicit schema the directory strings
-    // parse as the update's types — prune and anti-join compare
-    // like-for-like. (Also skips the footer-sampling schema inference
-    // pass entirely.)
-    // tx conflict scope, listed BEFORE the snapshot read: the files
-    // this merge reads in the affected partitions are its read set — the
-    // partition replace may drop only those, so a racing append into an
-    // affected partition (even one that had no files yet) aborts the
-    // claim instead of being silently dropped. The known set comes from
-    // the MANIFEST pruned by the same partition predicate, NOT from
-    // DataFrame.inputFiles: inputFiles surfaces the relation's whole
-    // FileIndex (the .filter below never reaches it), which would widen
-    // the conflict scope to the entire table and spuriously abort every
-    // partition-disjoint concurrent merge. Listing known FIRST makes the
-    // race window safe in the conservative direction — a commit landing
-    // between this listing and the read fails the claim-time check
-    // (abort + retry), never a silent drop. The prune resolves against
-    // the same pinned schema as the read, so a string partition stays
-    // a string there too.
-    val knownRelTx =
-      if (tx) TxTable.headFilesMatching(spark, path, Some(prune),
-        schema = Some(up.schema)).toSet
-      else Set.empty[String]
-    val existing =
-      (if (tx) TxTable.read(spark, path, schema = Some(up.schema))
-       else spark.read.option("basePath", path).schema(up.schema).parquet(path))
-        .filter(prune)
-    val cond = keyCols.map(c => existing(c) <=> keys(c)).reduce(_ && _)
-    val merged = existing.join(keys, cond, "left_anti").unionByName(up)
-
-    if (tx) {
-      TxTable.replacePartitions(spark, path, merged, partitionCols,
-        expectUnchanged = Some(knownRelTx))
-      return
-    }
-    val tmp = new Path(p.getParent,
-      s".upsert_${p.getName}_${java.util.UUID.randomUUID()}")
+    val up = GraftShim.pin(updates)
     try {
-      merged.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*).parquet(tmp.toString)
-      // swap exactly the partition dirs the merge produced (merged holds
-      // only affected-partition rows, so this IS the affected set, with
-      // directory names already hive-escaped by the writer)
-      def leafDirs(base: Path, depth: Int): Seq[Path] =
-        if (depth == 0) Seq(base)
-        else fs.listStatus(base).toSeq
-          .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_")
-            && !s.getPath.getName.startsWith("."))
-          .flatMap(d => leafDirs(d.getPath, depth - 1))
-      // listStatus returns scheme-qualified paths (file:/…); qualify the
-      // tmp prefix the same way or stripPrefix silently no-ops and the
-      // "relative" path is the absolute source itself
-      val tmpQ = fs.makeQualified(tmp).toString
-      leafDirs(tmp, partitionCols.length).foreach { src =>
-        val rel = src.toString.stripPrefix(tmpQ).stripPrefix("/")
-        require(rel.nonEmpty && !rel.contains(":"),
-          s"failed to relativize $src against $tmpQ")
-        val dest = new Path(p, rel)
-        fs.mkdirs(dest.getParent) // first write of a NEW nested partition
-        swapInto(fs, src, dest)
+      requireKeyUnique(up)
+      // capped collect: the limit bounds what can ever reach the driver,
+      // and exceeding it fails LOUDLY — an upsert touching more than
+      // `maxAffectedPartitions` partitions is a full-table rewrite in
+      // disguise and should go through overwrite/writePartitioned, not
+      // grow an unbounded disjunctive filter and driver array
+      val affected = up.select(partitionCols.map(col): _*).distinct()
+        .limit(maxAffectedPartitions + 1).collect()
+      if (affected.isEmpty) return
+      require(affected.length <= maxAffectedPartitions,
+        s"upsert touches more than $maxAffectedPartitions distinct " +
+          s"partitions of $path — that is a table-scale rewrite; use " +
+          "overwrite/writePartitioned, or raise maxAffectedPartitions " +
+          "deliberately")
+      // one disjunct per affected partition; <=> matches null partition
+      // values (hive's __HIVE_DEFAULT_PARTITION__)
+      val prune = affected.map { r =>
+        partitionCols.zipWithIndex
+          .map { case (c, i) => col(c) <=> lit(r.get(i)) }
+          .reduce(_ && _)
+      }.reduce(_ || _)
+      val keys = up.select(keyCols.map(col): _*).dropDuplicates()
+      // Pin the read schema to the update's: partition-column types are
+      // otherwise re-inferred from the key=value directory STRINGS, so a
+      // string day "07" comes back as int 7, the <=> prune matches
+      // nothing, and the partition swap would drop every pre-existing
+      // non-updated key. With an explicit schema the directory strings
+      // parse as the update's types — prune and anti-join compare
+      // like-for-like. (Also skips the footer-sampling schema inference
+      // pass entirely.)
+      // tx conflict scope, listed BEFORE the snapshot read: the files
+      // this merge reads in the affected partitions are its read set — the
+      // partition replace may drop only those, so a racing append into an
+      // affected partition (even one that had no files yet) aborts the
+      // claim instead of being silently dropped. The known set comes from
+      // the MANIFEST pruned by the same partition predicate, NOT from
+      // DataFrame.inputFiles: inputFiles surfaces the relation's whole
+      // FileIndex (the .filter below never reaches it), which would widen
+      // the conflict scope to the entire table and spuriously abort every
+      // partition-disjoint concurrent merge. Listing known FIRST makes the
+      // race window safe in the conservative direction — a commit landing
+      // between this listing and the read fails the claim-time check
+      // (abort + retry), never a silent drop. The prune resolves against
+      // the same pinned schema as the read, so a string partition stays
+      // a string there too.
+      val knownRelTx =
+        if (tx) TxTable.headFilesMatching(spark, path, Some(prune),
+          schema = Some(up.schema)).toSet
+        else Set.empty[String]
+      val existing =
+        (if (tx) TxTable.read(spark, path, schema = Some(up.schema))
+         else spark.read.option("basePath", path).schema(up.schema).parquet(path))
+          .filter(prune)
+      val cond = keyCols.map(c => existing(c) <=> keys(c)).reduce(_ && _)
+      val merged = existing.join(keys, cond, "left_anti").unionByName(up)
+
+      if (tx) {
+        TxTable.replacePartitions(spark, path, merged, partitionCols,
+          expectUnchanged = Some(knownRelTx))
+        return
       }
-    } finally fs.delete(tmp, true)
+      val tmp = new Path(p.getParent,
+        s".upsert_${p.getName}_${java.util.UUID.randomUUID()}")
+      try {
+        merged.write.mode(SaveMode.Overwrite)
+          .partitionBy(partitionCols: _*).parquet(tmp.toString)
+        // swap exactly the partition dirs the merge produced (merged holds
+        // only affected-partition rows, so this IS the affected set, with
+        // directory names already hive-escaped by the writer)
+        def leafDirs(base: Path, depth: Int): Seq[Path] =
+          if (depth == 0) Seq(base)
+          else fs.listStatus(base).toSeq
+            .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_")
+              && !s.getPath.getName.startsWith("."))
+            .flatMap(d => leafDirs(d.getPath, depth - 1))
+        // listStatus returns scheme-qualified paths (file:/…); qualify the
+        // tmp prefix the same way or stripPrefix silently no-ops and the
+        // "relative" path is the absolute source itself
+        val tmpQ = fs.makeQualified(tmp).toString
+        leafDirs(tmp, partitionCols.length).foreach { src =>
+          val rel = src.toString.stripPrefix(tmpQ).stripPrefix("/")
+          require(rel.nonEmpty && !rel.contains(":"),
+            s"failed to relativize $src against $tmpQ")
+          val dest = new Path(p, rel)
+          fs.mkdirs(dest.getParent) // first write of a NEW nested partition
+          swapInto(fs, src, dest)
+        }
+      } finally fs.delete(tmp, true)
+    } finally GraftShim.unpin(up)
   }
 
   /** Small-file compaction: rewrite a parquet directory into

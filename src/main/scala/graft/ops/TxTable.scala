@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
 import org.apache.spark.sql.functions.{abs, coalesce, col, collect_set, count, explode, expr, from_json, input_file_name, lit, not, pmod, sequence, struct, sum, to_json, when, xxhash64}
 import org.apache.spark.sql.types.StructType
@@ -106,16 +106,22 @@ object TxTable {
     * the version it is (None for a path with no commits yet), its
     * manifest's head line, parsed meta, and file lines.
     */
-  private final case class Snapshot(spark: SparkSession, path: String,
-                                    fs: FileSystem, root: Path,
-                                    version: Option[Long], headLine: String,
-                                    lines: Seq[String]) {
+  private[graft] final case class Snapshot(
+      spark: SparkSession, path: String, fs: FileSystem, root: Path,
+      version: Option[Long], headLine: String, lines: Seq[String]) {
     lazy val meta: Map[String, String] = parseMeta(headLine)
     /** The version, 0 before the first commit. */
     def v: Long = version.getOrElse(0L)
     def declaredSchema: Option[StructType] = declaredSchemaOf(meta)
     def partitionCols: Option[Seq[String]] = declaredPartitionColsOf(meta)
     def constraints: Map[String, String] = effectiveConstraints(meta)
+    /** Absolute data-file paths. */
+    def files: Seq[String] = lines.map(l => new Path(root, pathOf(l)).toString)
+    /** The row schema recorded for every file, if one is, as a file scan
+      * resolves it (every field nullable).
+      */
+    def recordedSchema: Option[StructType] = recordedSchemaOf(meta, lines)
+      .map(r => GraftShim.nullable(r).asInstanceOf[StructType])
   }
 
   /** The snapshot of version `at`, or of the head — the one `_txlog`
@@ -133,6 +139,17 @@ object TxTable {
     val (head, lines) = v.fold(("", Seq.empty[String]))(readManifest(fs, p, _))
     Snapshot(spark, path, fs, p, v, head, lines)
   }
+
+  /** [[snapshot]] of a version a caller named (the head when None): a
+    * missing version is refused by name. The `graft` source resolves a
+    * read from this one snapshot.
+    */
+  private[graft] def snapshotAt(spark: SparkSession, path: String,
+                                at: Option[Long],
+                                orEmpty: Boolean = false): Snapshot =
+    try snapshot(spark, path, at, orEmpty)
+    catch { case e: java.io.FileNotFoundException =>
+      require(false, s"version ${at.mkString} of $path does not exist"); throw e }
 
   /** A public version argument: `v >= 0` is that version, else the head. */
   private def at(v: Long): Option[Long] = Option.when(v >= 0)(v)
@@ -770,11 +787,9 @@ object TxTable {
     * reads and maintenance triggering all scale with CLUSTER WIDTH
     * rather than data). Scoped to the write so intermediate query
     * stages elsewhere keep their parallelism; the advisory size is the
-    * standard 128 MB and conf-overridable (`spark.graft.commit
-    * .advisoryPartitionBytes`) for clusters with different file-size
-    * targets. Shuffle bytes compress further in parquet, so files land
-    * below the advisory — the right side of the 128 MB–1 GB guidance
-    * to err on (guide §6, §2.2).
+    * standard 128 MB. Shuffle bytes compress further in parquet, so
+    * files land below the advisory — the right side of the 128 MB–1 GB
+    * guidance to err on (guide §6, §2.2).
     *
     * Session confs are shared across threads; a concurrent committer
     * in the same session may observe the temporary values — harmless
@@ -784,8 +799,7 @@ object TxTable {
     val pairs = Seq(
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
-        spark.conf.get("spark.graft.commit.advisoryPartitionBytes",
-          (128L * 1024 * 1024).toString))
+        (128L * 1024 * 1024).toString)
     val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -883,16 +897,6 @@ object TxTable {
         meta.get(SchemaRecordPrefix + id).map(j => schemaFromJson(dec(j)))
       case _ => None
     }
-
-  /** The schema recorded for every file of version `v`, if one is,
-    * as a file scan resolves it (every field nullable).
-    */
-  private[graft] def recordedSchema(spark: SparkSession, path: String,
-                                    v: Long): Option[StructType] = {
-    val s = snapshot(spark, path, Some(v))
-    recordedSchemaOf(s.meta, s.lines).map(r =>
-      org.apache.spark.sql.GraftShim.nullable(r).asInstanceOf[StructType])
-  }
 
   /** Manifest file line → relative path (stats suffix stripped). */
   private def pathOf(line: String): String = {
@@ -1581,10 +1585,17 @@ object TxTable {
                             schema: Option[StructType],
                             orKeep: Map[String, ColStats] => Boolean =
                               _ => false): Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression, Literal}
     def split(e: Expression): Seq[Expression] = e match {
       case And(l, r) => split(l) ++ split(r)
       case other => Seq(other)
+    }
+    // analysis leaves `id = CAST(5 AS BIGINT)` for a bigint column; fold
+    // such subexpressions into the literals mayMatch and bloomMayMatch
+    // read. One that fails to evaluate stays, and keeps its files
+    def fold(e: Expression): Expression = e.transformUp {
+      case x if x.foldable && !x.isInstanceOf[Literal] =>
+        scala.util.Try(Literal.create(x.eval(), x.dataType)).getOrElse(x)
     }
     // the conjuncts, and the columns the scan resolves as strings: a
     // string partition value that looks numeric (`day=01`) must
@@ -1593,7 +1604,7 @@ object TxTable {
       scanFiles(s, lines, mergeSchema, schema)
         .where(pred).queryExecution.analyzed.collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            (split(f.condition), f.child.output.collect {
+            (split(f.condition).map(fold), f.child.output.collect {
               case a if a.dataType.isInstanceOf[org.apache.spark.sql.types.StringType] => a.name
             }.toSet)
         }).getOrElse((Seq.empty, Set.empty[String]))
@@ -1691,19 +1702,7 @@ object TxTable {
     * provider, [[graft.sources.GraftTableProvider]]) build on.
     */
   def snapshotFiles(spark: SparkSession, path: String, v: Long): Seq[String] =
-    snapshotWithMeta(spark, path, v)._2
-
-  /** Version `v`'s parsed meta AND qualified snapshot files from ONE
-    * manifest read — for per-version loops (streaming sources) that
-    * would otherwise call [[commitMeta]] and [[snapshotFiles]]
-    * back-to-back and read every manifest twice.
-    */
-  private[graft] def snapshotWithMeta(spark: SparkSession, path: String,
-                                      v: Long)
-      : (Map[String, String], Seq[String]) = {
-    val s = snapshot(spark, path, Some(v))
-    (s.meta, s.lines.map(l => new Path(s.root, pathOf(l)).toString))
-  }
+    snapshot(spark, path, Some(v)).files
 
   // ----------------------------------------------- metadata-only aggregates
   //
@@ -1729,9 +1728,7 @@ object TxTable {
     */
   private def metaSnapshot(spark: SparkSession, path: String,
                            version: Long): Snapshot = {
-    val s = try snapshot(spark, path, at(version), orEmpty = true)
-      catch { case e: java.io.FileNotFoundException =>
-        require(false, s"version $version of $path does not exist"); throw e }
+    val s = snapshotAt(spark, path, at(version), orEmpty = true)
     require(s.version.nonEmpty, s"no committed versions at $path")
     s
   }
@@ -2348,23 +2345,22 @@ object TxTable {
     * `source` on `keyCols`, apply `c` to every joined row, and commit
     * the result as one atomic replace version.
     *
-    * Scale shape: `source` is pinned once (localCheckpoint), so a
-    * nondeterministic plan is evaluated once. One aggregate over it —
+    * Scale shape: `source` is pinned once, and released after the commit,
+    * so a nondeterministic plan is evaluated once. One aggregate over it —
     * grouped by key under `checkUniqueKeys` — yields the duplicate-key
     * check, emptiness, the key bounds and the null-key flags. Only files
     * whose key stats intersect those bounds are rewritten (stats and
     * partition pruning, as in [[delete]]); under `nullSafeKeys` a null
-    * source key also keeps every file whose null counts do not prove
-    * zero null keys, and a by-source clause keeps every file. Untouched
-    * files carry over verbatim. The candidate files are FULL OUTER
-    * JOINed to the source once (`===`, or `<=>` under `nullSafeKeys`),
-    * and every joined row is classified once (delete / update / carry /
-    * insert, Delta's MERGE shape). Both writes are single projections of
-    * that join: the new files, and the row-level change feed (delete /
-    * update_preimage / update_postimage / insert, one explode over each
-    * row's images). With the feed on, the join is persisted for the two
-    * writes, so each reads it exactly once. One atomic replace commit
-    * lands both.
+    * source key also keeps every file whose null counts do not prove zero
+    * null keys, and a by-source clause keeps every file. Untouched files
+    * carry over verbatim. The candidate files are FULL OUTER JOINed to the
+    * source once (`===`, or `<=>` under `nullSafeKeys`), and every joined
+    * row is classified once (delete / update / carry / insert, Delta's
+    * MERGE shape). Both writes are single projections of that join: the new
+    * files, and the row-level change feed (delete / update_preimage /
+    * update_postimage / insert, one explode over each row's images). With
+    * the feed on, the join is persisted for the two writes, so each reads
+    * it exactly once. One atomic replace commit lands both.
     *
     * `dataCols` gives the source's data columns and their types when
     * the source carries more ([[applyChanges]]' delete flag and delete
@@ -2389,233 +2385,235 @@ object TxTable {
     val s = snapshot(spark, path)
     val pinned = schema.orElse(s.declaredSchema)
     val layout = layoutOrDeclared(s.meta, partitionCols)
-    val s0 = source.localCheckpoint()
-    val data = dataCols.getOrElse(s0)
-    // the probe: one aggregate yields the key bounds, the null-key flags
-    // and emptiness (a null max count) — over the source GROUPED by key
-    // under checkUniqueKeys, where the max count is the duplicate-key
-    // check too; the offending key is looked up only on the failure path
-    val cnt = graft.util.Cols.fresh(s0, "__cnt")
-    val keys = keyCols.map(col)
-    val counted =
-      if (checkUniqueKeys) s0.groupBy(keys: _*).agg(count(lit(1)).as(cnt))
-      else s0.select(keys :+ lit(1L).as(cnt): _*)
-    val probeAggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k)))) ++
-      keyCols.map(k => max(col(k).isNull.cast("int"))) :+ max(col(cnt))
-    val probe = counted.agg(probeAggs.head, probeAggs.tail: _*).head()
-    val sourceEmpty = probe.isNullAt(probeAggs.size - 1)
-    require(sourceEmpty || probe.getLong(probeAggs.size - 1) == 1,
-      s"$op source has duplicate key " +
-      s"${counted.where(col(cnt) > 1).limit(1).collect().headOption}" +
-      " — aggregate it first so one row per key remains (Delta's" +
-      " multiple-matches error)")
-    // a commit of the inserts alone, in the data columns' shape; it
-    // removes no file, so every head file survives, racing ones too
-    def insertOnly() = {
-      val kept =
-        if (!c.insertUnmatched) s0.where(lit(false))
-        else c.insertWhen.fold(s0)(s0.where(_))
-      val inserts = kept.select(data.schema.fields.toIndexedSeq.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*)
-      commit(s, inserts, "replace", (base, _) => base, layout,
-        meta ++ (if (changeFeed) writeChangeData(s,
-          inserts.withColumn(ChangeTypeCol, lit("insert")))
-        else Map.empty[String, String]), ReadSet(guard = guard))
-    }
-    // nothing to rewrite, but meta (e.g. a consumer offset) must still
-    // land durably: a metadata-only commit — silently dropping it would
-    // stall incremental consumers on empty increments. A guard must be
-    // evaluated through the claim loop too, never skipped: a guard-only
-    // caller is asking "did a concurrent committer beat me"
-    def metaOnly(): Long =
-      if (meta.isEmpty && guard.isEmpty) s.v
-      else metaCommit(s, "append", meta + (ChangeDataMetaKey -> "0"),
-        ReadSet(guard = guard))
-    if (s.lines.isEmpty) return insertOnly()
-    // an empty source is NOT a no-op under a by-source clause: every
-    // target row is then unmatched and subject to the by-source clauses
-    if (sourceEmpty && !c.bySource) return metaOnly()
-
-    // SET keys validated against the TARGET's columns up front:
-    // afterClauses projects over existing.columns and silently skips a
-    // key that matches no target column, so a typo'd SET (through the
-    // SQL surface too) would commit a version that changed nothing and
-    // report success. Checked after the bootstrap path — an empty table
-    // has no target schema to validate against, and its commit never
-    // runs the clauses.
-    val setKeys = c.updateSet.keySet ++ c.updateBySourceSet.keySet
-    if (setKeys.nonEmpty) {
-      val targetCols = pinned.map(_.fieldNames.toSeq)
-        .getOrElse(readSnapshot(s, mergeSchema).columns.toSeq)
-      val unknownSet = setKeys -- targetCols
-      require(unknownSet.isEmpty,
-        s"$op SET columns not in the target: " + unknownSet.mkString(", "))
-    }
-
-    // key-bounds pruning; a null bound (all-null keys) constrains
-    // nothing. Under null-safe matching a null source key may match in
-    // any file whose null-count stats do not PROVE zero null keys
-    // (pre-null-count manifests have no counts and stay candidates). A
-    // by-source clause disables pruning: any file may hold
-    // source-unmatched rows, so every file is a candidate. The null-key
-    // flags are null when the source is empty
-    val bounds = keyCols.zipWithIndex.flatMap { case (k, i) =>
-      if (c.bySource || probe.isNullAt(2 * i) || probe.isNullAt(2 * i + 1))
-        None
-      else Some(col(k).between(lit(probe.get(2 * i)),
-        lit(probe.get(2 * i + 1))))
-    }.reduceOption(_ && _)
-    val anyNullKey = nullSafeKeys && keyCols.indices.map(2 * keyCols.size + _)
-      .exists(i => !probe.isNullAt(i) && probe.getInt(i) == 1)
-    val candidates = mayMatchLines(s, s.lines, bounds,
-      mergeSchema, pinned, orKeep = st => anyNullKey &&
-        keyCols.exists(k => st.get(k).flatMap(_.nulls).forall(_ > 0)))
-    // no candidate file can hold a match: every passing source row is an
-    // insert and nothing is rewritten; with inserts off the statement is
-    // a no-op (meta/guard still honored)
-    if (candidates.isEmpty)
-      return if (c.insertUnmatched) insertOnly() else metaOnly()
-    // drop exactly the rewritten files (see [[rewriteFiles]]), so a
-    // racing append between analysis and claim is never lost
-    val candidatePaths = candidates.map(pathOf).toSet
-    val existing = scanFiles(s, candidates, mergeSchema, pinned)
-    // the joined frame: target columns by name, source columns under a
-    // prefix, plus a match marker (null-safe "did a source row join
-    // here"). mergeInto's clause expressions name source columns
-    // src_<name>, so there a target column that looks like one (or the
-    // marker) would make them silently ambiguous — refuse loudly. The
-    // upsert shape has no clause expressions and takes fresh names, so
-    // any target column name works
-    val (pre, mark) =
-      if (c.upsert) {
-        val taken = (existing.columns ++ s0.columns).toSet
-        val pre = Iterator.from(0).map(i => s"__s${i}_")
-          .find(pr => s0.columns.forall(n => !taken(pr + n))).get
-        (pre, graft.util.Cols.fresh(taken, "__m"))
-      } else {
-        val clash = existing.columns.filter(n =>
-          n == "__m" || n.startsWith("src_"))
-        require(clash.isEmpty,
-          s"mergeInto cannot run against target columns named " +
-          s"${clash.mkString(", ")} — the src_ prefix and __m are " +
-          "reserved for clause-expression scoping")
-        ("src_", "__m")
+    val s0 = GraftShim.pin(source)
+    try {
+      val data = dataCols.getOrElse(s0)
+      // the probe: one aggregate yields the key bounds, the null-key flags
+      // and emptiness (a null max count) — over the source GROUPED by key
+      // under checkUniqueKeys, where the max count is the duplicate-key
+      // check too; the offending key is looked up only on the failure path
+      val cnt = graft.util.Cols.fresh(s0, "__cnt")
+      val keys = keyCols.map(col)
+      val counted =
+        if (checkUniqueKeys) s0.groupBy(keys: _*).agg(count(lit(1)).as(cnt))
+        else s0.select(keys :+ lit(1L).as(cnt): _*)
+      val probeAggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k)))) ++
+        keyCols.map(k => max(col(k).isNull.cast("int"))) :+ max(col(cnt))
+      val probe = counted.agg(probeAggs.head, probeAggs.tail: _*).head()
+      val sourceEmpty = probe.isNullAt(probeAggs.size - 1)
+      require(sourceEmpty || probe.getLong(probeAggs.size - 1) == 1,
+        s"$op source has duplicate key " +
+        s"${counted.where(col(cnt) > 1).limit(1).collect().headOption}" +
+        " — aggregate it first so one row per key remains (Delta's" +
+        " multiple-matches error)")
+      // a commit of the inserts alone, in the data columns' shape; it
+      // removes no file, so every head file survives, racing ones too
+      def insertOnly() = {
+        val kept =
+          if (!c.insertUnmatched) s0.where(lit(false))
+          else c.insertWhen.fold(s0)(s0.where(_))
+        val inserts = kept.select(data.schema.fields.toIndexedSeq.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)): _*)
+        commit(s, inserts, "replace", (base, _) => base, layout,
+          meta ++ (if (changeFeed) writeChangeData(s,
+            inserts.withColumn(ChangeTypeCol, lit("insert")))
+          else Map.empty[String, String]), ReadSet(guard = guard))
       }
-    // ONE full outer join classifies every row once: target rows carry
-    // a target marker, source rows the match marker and their insert
-    // flag (insertWhen over the source's own columns). Both writes are
-    // single projections of it; with the change feed on, two writes
-    // read it, so it is persisted and the second pays a cache read
-    val tMark = graft.util.Cols.fresh(existing, "__t")
-    val iFlag = graft.util.Cols.fresh(existing.columns ++ s0.columns, "__i")
-    val tgt = existing.withColumn(tMark, lit(true))
-    val srcFlagged = s0.withColumn(iFlag,
-      if (!c.insertUnmatched) lit(false)
-      else coalesce(c.insertWhen.getOrElse(lit(true)), lit(false)))
-      .toDF(s0.columns.map(pre + _) :+ iFlag: _*)
-      .withColumn(mark, lit(true))
-    val joined = tgt.join(srcFlagged, keyCols.map(k =>
-        if (nullSafeKeys) tgt(k) <=> col(pre + k)
-        else tgt(k) === col(pre + k)).reduce(_ && _),
-      "full_outer")
-    def holds(cond: Option[Column]): Column =
-      coalesce(cond.getOrElse(lit(false)), lit(false))
-    val isTarget = col(tMark).isNotNull
-    val matched = isTarget && coalesce(col(mark), lit(false))
-    // an upsert replaces a matched row by its source row, or deletes it
-    // when the source row is not kept
-    val delCond = matched &&
-      (if (c.upsert) !col(iFlag) else holds(c.deleteWhen))
-    // by-source clauses: target rows with NO source match; conditions
-    // and SET values see the target row alone (source columns are all
-    // null here). Delete evaluated first, mirroring the matched side.
-    val bySrcDel = isTarget && !matched && holds(c.deleteBySourceWhen)
-    val updCond = matched && !delCond &&
-      (if (c.upsert) lit(true) else holds(c.updateWhen))
-    val bySrcUpdCond = isTarget && !matched && !bySrcDel &&
-      holds(c.updateBySourceWhen)
-    val removed = delCond || bySrcDel
-    val updated = updCond || bySrcUpdCond
-    val inserted = !isTarget && col(iFlag)
-    // a target column after the clauses: matched-update and
-    // by-source-update branches are mutually exclusive (matched vs
-    // not); CaseWhen evaluates only the taken branch, so a matched SET
-    // referencing src_ columns is never evaluated over a source-absent
-    // row
-    def afterClauses(name: String): Column = {
-      val branches =
-        c.updateSet.get(name).filter(_ => c.updateWhen.isDefined)
-          .map(e => (updCond, e)).toSeq ++
-        c.updateBySourceSet.get(name).filter(_ => c.updateBySourceWhen.isDefined)
-          .map(e => (bySrcUpdCond, e))
-      branches match {
-        case Seq() => col(name)
-        case (c1, e1) +: rest =>
-          rest.foldLeft(when(c1, e1)) { case (acc, (c2, e2)) =>
-            acc.when(c2, e2)
-          }.otherwise(col(name))
+      // nothing to rewrite, but meta (e.g. a consumer offset) must still
+      // land durably: a metadata-only commit — silently dropping it would
+      // stall incremental consumers on empty increments. A guard must be
+      // evaluated through the claim loop too, never skipped: a guard-only
+      // caller is asking "did a concurrent committer beat me"
+      def metaOnly(): Long =
+        if (meta.isEmpty && guard.isEmpty) s.v
+        else metaCommit(s, "append", meta + (ChangeDataMetaKey -> "0"),
+          ReadSet(guard = guard))
+      if (s.lines.isEmpty) return insertOnly()
+      // an empty source is NOT a no-op under a by-source clause: every
+      // target row is then unmatched and subject to the by-source clauses
+      if (sourceEmpty && !c.bySource) return metaOnly()
+
+      // SET keys validated against the TARGET's columns up front:
+      // afterClauses projects over existing.columns and silently skips a
+      // key that matches no target column, so a typo'd SET (through the
+      // SQL surface too) would commit a version that changed nothing and
+      // report success. Checked after the bootstrap path — an empty table
+      // has no target schema to validate against, and its commit never
+      // runs the clauses.
+      val setKeys = c.updateSet.keySet ++ c.updateBySourceSet.keySet
+      if (setKeys.nonEmpty) {
+        val targetCols = pinned.map(_.fieldNames.toSeq)
+          .getOrElse(readSnapshot(s, mergeSchema).columns.toSeq)
+        val unknownSet = setKeys -- targetCols
+        require(unknownSet.isEmpty,
+          s"$op SET columns not in the target: " + unknownSet.mkString(", "))
       }
-    }
-    // Output shapes come from unionByName over unexecuted frames of the
-    // target, clause-applied and source sides: the same column order,
-    // widened types and errors as unioning the branches themselves.
-    // Each output column is then taken from its side by name (matched
-    // as unionByName matches) and cast to the shape's type
-    val tgtCols = existing.columns.toIndexedSeq
-    def union(a: DataFrame, b: DataFrame): DataFrame =
-      a.unionByName(b, allowMissingColumns = mergeSchema)
-    def withInserts(df: DataFrame, srcSide: DataFrame): DataFrame =
-      if (c.insertUnmatched) union(df, srcSide) else df
-    val post =
-      if (c.upsert) existing
-      else joined.select(tgtCols.map(n => afterClauses(n).as(n)): _*)
-    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
-    type Side = StructField => Column
-    def side(names: Seq[String], expr: String => Column): Side = f =>
-      names.find(n => if (caseSensitive) n == f.name
-        else n.equalsIgnoreCase(f.name))
-        .map(expr).getOrElse(lit(null)).cast(f.dataType)
-    val preImage = side(tgtCols, col)
-    val srcImage = side(data.columns.toSeq, n => col(pre + n))
-    val postImage: Side =
-      if (c.upsert) f => when(updated, srcImage(f)).otherwise(preImage(f))
-      else side(tgtCols, afterClauses)
-    val newData = {
-      val shape = withInserts(post, data).schema
-      joined.where((isTarget && !removed) || inserted)
-        .select(shape.fields.toIndexedSeq.map(f =>
-          (if (c.insertUnmatched) when(isTarget, postImage(f))
-            .otherwise(srcImage(f))
-          else postImage(f)).as(f.name)): _*)
-    }
-    // the change feed: one explode over each row's conditional images
-    // (delete, update pre + post, insert) in the feed's union shape
-    val changes = if (!changeFeed) None else Some {
-      def tagged(df: DataFrame) = df.withColumn(ChangeTypeCol, lit(""))
-      val shape =
-        withInserts(union(tagged(existing), tagged(post)), tagged(data)).schema
-      def image(cond: Column, img: Side, tag: String) =
-        when(cond, struct(shape.fields.toIndexedSeq.map(f =>
-          (if (f.name == ChangeTypeCol) lit(tag) else img(f))
-            .as(f.name)): _*))
-      val images = Seq(image(removed, preImage, "delete"),
-        image(updated, preImage, "update_preimage"),
-        image(updated, postImage, "update_postimage")) ++
-        (if (c.insertUnmatched) Seq(image(inserted, srcImage, "insert"))
-        else Nil)
-      joined.select(explode(array(images: _*)).as("image"))
-        .where(col("image").isNotNull).select("image.*")
-    }
-    // persisted only now, so a shape error above leaves nothing cached;
-    // both writes still read the cache, which Spark substitutes into a
-    // plan when it executes
-    if (changeFeed)
-      joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try commit(s, newData, "replace", allBut(candidatePaths),
-      layout, meta ++ changes.fold(Map.empty[String, String])(
-        writeChangeData(s, _)),
-      ReadSet(files = Some(candidatePaths), guard = guard))
-    finally if (changeFeed) joined.unpersist(blocking = false)
+
+      // key-bounds pruning; a null bound (all-null keys) constrains
+      // nothing. Under null-safe matching a null source key may match in
+      // any file whose null-count stats do not PROVE zero null keys
+      // (pre-null-count manifests have no counts and stay candidates). A
+      // by-source clause disables pruning: any file may hold
+      // source-unmatched rows, so every file is a candidate. The null-key
+      // flags are null when the source is empty
+      val bounds = keyCols.zipWithIndex.flatMap { case (k, i) =>
+        if (c.bySource || probe.isNullAt(2 * i) || probe.isNullAt(2 * i + 1))
+          None
+        else Some(col(k).between(lit(probe.get(2 * i)),
+          lit(probe.get(2 * i + 1))))
+      }.reduceOption(_ && _)
+      val anyNullKey = nullSafeKeys && keyCols.indices.map(2 * keyCols.size + _)
+        .exists(i => !probe.isNullAt(i) && probe.getInt(i) == 1)
+      val candidates = mayMatchLines(s, s.lines, bounds,
+        mergeSchema, pinned, orKeep = st => anyNullKey &&
+          keyCols.exists(k => st.get(k).flatMap(_.nulls).forall(_ > 0)))
+      // no candidate file can hold a match: every passing source row is an
+      // insert and nothing is rewritten; with inserts off the statement is
+      // a no-op (meta/guard still honored)
+      if (candidates.isEmpty)
+        return if (c.insertUnmatched) insertOnly() else metaOnly()
+      // drop exactly the rewritten files (see [[rewriteFiles]]), so a
+      // racing append between analysis and claim is never lost
+      val candidatePaths = candidates.map(pathOf).toSet
+      val existing = scanFiles(s, candidates, mergeSchema, pinned)
+      // the joined frame: target columns by name, source columns under a
+      // prefix, plus a match marker (null-safe "did a source row join
+      // here"). mergeInto's clause expressions name source columns
+      // src_<name>, so there a target column that looks like one (or the
+      // marker) would make them silently ambiguous — refuse loudly. The
+      // upsert shape has no clause expressions and takes fresh names, so
+      // any target column name works
+      val (pre, mark) =
+        if (c.upsert) {
+          val taken = (existing.columns ++ s0.columns).toSet
+          val pre = Iterator.from(0).map(i => s"__s${i}_")
+            .find(pr => s0.columns.forall(n => !taken(pr + n))).get
+          (pre, graft.util.Cols.fresh(taken, "__m"))
+        } else {
+          val clash = existing.columns.filter(n =>
+            n == "__m" || n.startsWith("src_"))
+          require(clash.isEmpty,
+            s"mergeInto cannot run against target columns named " +
+            s"${clash.mkString(", ")} — the src_ prefix and __m are " +
+            "reserved for clause-expression scoping")
+          ("src_", "__m")
+        }
+      // ONE full outer join classifies every row once: target rows carry
+      // a target marker, source rows the match marker and their insert
+      // flag (insertWhen over the source's own columns). Both writes are
+      // single projections of it; with the change feed on, two writes
+      // read it, so it is persisted and the second pays a cache read
+      val tMark = graft.util.Cols.fresh(existing, "__t")
+      val iFlag = graft.util.Cols.fresh(existing.columns ++ s0.columns, "__i")
+      val tgt = existing.withColumn(tMark, lit(true))
+      val srcFlagged = s0.withColumn(iFlag,
+        if (!c.insertUnmatched) lit(false)
+        else coalesce(c.insertWhen.getOrElse(lit(true)), lit(false)))
+        .toDF(s0.columns.map(pre + _) :+ iFlag: _*)
+        .withColumn(mark, lit(true))
+      val joined = tgt.join(srcFlagged, keyCols.map(k =>
+          if (nullSafeKeys) tgt(k) <=> col(pre + k)
+          else tgt(k) === col(pre + k)).reduce(_ && _),
+        "full_outer")
+      def holds(cond: Option[Column]): Column =
+        coalesce(cond.getOrElse(lit(false)), lit(false))
+      val isTarget = col(tMark).isNotNull
+      val matched = isTarget && coalesce(col(mark), lit(false))
+      // an upsert replaces a matched row by its source row, or deletes it
+      // when the source row is not kept
+      val delCond = matched &&
+        (if (c.upsert) !col(iFlag) else holds(c.deleteWhen))
+      // by-source clauses: target rows with NO source match; conditions
+      // and SET values see the target row alone (source columns are all
+      // null here). Delete evaluated first, mirroring the matched side.
+      val bySrcDel = isTarget && !matched && holds(c.deleteBySourceWhen)
+      val updCond = matched && !delCond &&
+        (if (c.upsert) lit(true) else holds(c.updateWhen))
+      val bySrcUpdCond = isTarget && !matched && !bySrcDel &&
+        holds(c.updateBySourceWhen)
+      val removed = delCond || bySrcDel
+      val updated = updCond || bySrcUpdCond
+      val inserted = !isTarget && col(iFlag)
+      // a target column after the clauses: matched-update and
+      // by-source-update branches are mutually exclusive (matched vs
+      // not); CaseWhen evaluates only the taken branch, so a matched SET
+      // referencing src_ columns is never evaluated over a source-absent
+      // row
+      def afterClauses(name: String): Column = {
+        val branches =
+          c.updateSet.get(name).filter(_ => c.updateWhen.isDefined)
+            .map(e => (updCond, e)).toSeq ++
+          c.updateBySourceSet.get(name).filter(_ => c.updateBySourceWhen.isDefined)
+            .map(e => (bySrcUpdCond, e))
+        branches match {
+          case Seq() => col(name)
+          case (c1, e1) +: rest =>
+            rest.foldLeft(when(c1, e1)) { case (acc, (c2, e2)) =>
+              acc.when(c2, e2)
+            }.otherwise(col(name))
+        }
+      }
+      // Output shapes come from unionByName over unexecuted frames of the
+      // target, clause-applied and source sides: the same column order,
+      // widened types and errors as unioning the branches themselves.
+      // Each output column is then taken from its side by name (matched
+      // as unionByName matches) and cast to the shape's type
+      val tgtCols = existing.columns.toIndexedSeq
+      def union(a: DataFrame, b: DataFrame): DataFrame =
+        a.unionByName(b, allowMissingColumns = mergeSchema)
+      def withInserts(df: DataFrame, srcSide: DataFrame): DataFrame =
+        if (c.insertUnmatched) union(df, srcSide) else df
+      val post =
+        if (c.upsert) existing
+        else joined.select(tgtCols.map(n => afterClauses(n).as(n)): _*)
+      val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+      type Side = StructField => Column
+      def side(names: Seq[String], expr: String => Column): Side = f =>
+        names.find(n => if (caseSensitive) n == f.name
+          else n.equalsIgnoreCase(f.name))
+          .map(expr).getOrElse(lit(null)).cast(f.dataType)
+      val preImage = side(tgtCols, col)
+      val srcImage = side(data.columns.toSeq, n => col(pre + n))
+      val postImage: Side =
+        if (c.upsert) f => when(updated, srcImage(f)).otherwise(preImage(f))
+        else side(tgtCols, afterClauses)
+      val newData = {
+        val shape = withInserts(post, data).schema
+        joined.where((isTarget && !removed) || inserted)
+          .select(shape.fields.toIndexedSeq.map(f =>
+            (if (c.insertUnmatched) when(isTarget, postImage(f))
+              .otherwise(srcImage(f))
+            else postImage(f)).as(f.name)): _*)
+      }
+      // the change feed: one explode over each row's conditional images
+      // (delete, update pre + post, insert) in the feed's union shape
+      val changes = if (!changeFeed) None else Some {
+        def tagged(df: DataFrame) = df.withColumn(ChangeTypeCol, lit(""))
+        val shape =
+          withInserts(union(tagged(existing), tagged(post)), tagged(data)).schema
+        def image(cond: Column, img: Side, tag: String) =
+          when(cond, struct(shape.fields.toIndexedSeq.map(f =>
+            (if (f.name == ChangeTypeCol) lit(tag) else img(f))
+              .as(f.name)): _*))
+        val images = Seq(image(removed, preImage, "delete"),
+          image(updated, preImage, "update_preimage"),
+          image(updated, postImage, "update_postimage")) ++
+          (if (c.insertUnmatched) Seq(image(inserted, srcImage, "insert"))
+          else Nil)
+        joined.select(explode(array(images: _*)).as("image"))
+          .where(col("image").isNotNull).select("image.*")
+      }
+      // persisted only now, so a shape error above leaves nothing cached;
+      // both writes still read the cache, which Spark substitutes into a
+      // plan when it executes
+      if (changeFeed)
+        joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try commit(s, newData, "replace", allBut(candidatePaths),
+        layout, meta ++ changes.fold(Map.empty[String, String])(
+          writeChangeData(s, _)),
+        ReadSet(files = Some(candidatePaths), guard = guard))
+      finally if (changeFeed) joined.unpersist(blocking = false)
+    } finally GraftShim.unpin(s0)
   }
 
   /** `ANALYZE TABLE`: refresh the head manifest's per-file statistics

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,7 +69,7 @@ object TrainingData {
         // per-pair jaccard verify, AND the final canonical filter —
         // materialize it once or the quality+fingerprint+window subplan
         // re-executes for each reference.
-        val exact = exact0.localCheckpoint()
+        val exact = GraftShim.pin(exact0)
         Dedup.keepCanonical(exact, cfg.idCol,
           Dedup.minhashDedupPairs(exact, cfg.idCol, cfg.textCol,
             minJ = cfg.minJaccard, hash = cfg.minhashHash))
@@ -107,7 +107,7 @@ object TrainingData {
     * quality passers); the near-dup loser set (same MinHash pair
     * machinery as [[run]]) joins back as a flag; the sampling verdict
     * is a pure hash predicate. One conditional aggregation over the
-    * (checkpointed) survivor frame then yields ALL downstream stage
+    * (pinned) survivor frame then yields ALL downstream stage
     * totals at once — the corpus is scanned twice regardless of stage
     * count. Final assembly cross-joins two SINGLE-ROW aggregate frames
     * and explodes a 5-element literal array: size-bounded by
@@ -136,10 +136,10 @@ object TrainingData {
     val flagged =
       if (!cfg.nearDup) exact0.withColumn("__lost", lit(false))
       else {
-        // checkpoint: the exact-survivor frame feeds the signature pass,
-        // the pair verify, AND the final count — without a pin the
+        // pin: the exact-survivor frame feeds the signature pass, the
+        // pair verify, AND the final count — without a pin the
         // annotate+window subplan re-executes per reference
-        val exact = exact0.localCheckpoint()
+        val exact = GraftShim.pin(exact0)
         val losers = Dedup.connectedComponents(
             Dedup.minhashDedupPairs(exact, "doc_id", "__text",
               minJ = cfg.minJaccard, hash = cfg.minhashHash))

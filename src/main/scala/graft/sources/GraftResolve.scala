@@ -35,12 +35,9 @@ private[sources] object GraftResolve {
     */
   def resolve(spark: SparkSession, path: String,
               versionAsOf: Option[Long]): GraftResolved = {
-    val versions = TxTable.versions(spark, path)
-    require(versions.nonEmpty, s"$path is not a TxTable (no manifests)")
-    val v = versionAsOf.getOrElse(versions.last)
-    require(versions.contains(v),
-      s"version $v of $path does not exist (have ${versions.mkString(",")})")
-    val files = TxTable.snapshotFiles(spark, path, v)
+    // one `_txlog` listing (none for `versionAsOf`), one manifest read
+    val s = TxTable.snapshotAt(spark, path, versionAsOf)
+    val (v, files) = (s.v, s.files)
     // the schema (and partition columns) the manifest itself DECLARES
     // (create / evolveSchema / every partitioned commit) — when present
     // it pins resolution instead of footer inference, which is what
@@ -48,9 +45,9 @@ private[sources] object GraftResolve {
     // Failing that, the row schema the manifest RECORDED for the
     // snapshot's files pins the data columns: footer inference is a
     // Spark job, left only to snapshots without one shared record
-    val declared = TxTable.declaredSchema(spark, path, v)
-    lazy val recorded = TxTable.recordedSchema(spark, path, v)
-    val declaredParts = TxTable.declaredPartitionCols(spark, path, v)
+    val declared = s.declaredSchema
+    lazy val recorded = s.recordedSchema
+    val declaredParts = s.partitionCols
     val name = s"graft:$path@$v"
 
     if (files.isEmpty) {

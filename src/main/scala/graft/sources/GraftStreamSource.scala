@@ -276,15 +276,17 @@ private[sources] class GraftMicroBatchStream(path: String, spark: SparkSession,
     var prev: Set[String] =
       if (fromV <= 0) Set.empty
       else TxTable.snapshotFiles(spark, path, fromV).toSet
+    // ONE manifest read per version: meta and file list together —
+    // separate commitMeta + snapshotFiles calls would read and parse
+    // every manifest in the window twice per micro-batch
+    var head: Option[TxTable.Snapshot] = None
     range.foreach { v =>
-      // ONE manifest read per version: meta and file list together —
-      // separate commitMeta + snapshotFiles calls would read and
-      // parse every manifest in the window twice per micro-batch
-      val (meta, files) = TxTable.snapshotWithMeta(spark, path, v)
-      val cur = files.toSet
-      if (!meta.get(graft.ops.TxTable.ChangeDataMetaKey).contains("0"))
+      val s = TxTable.snapshotAt(spark, path, Some(v))
+      val cur = s.files.toSet
+      if (!s.meta.get(graft.ops.TxTable.ChangeDataMetaKey).contains("0"))
         (cur -- prev).foreach(out += _)
       prev = cur
+      head = Some(s)
     }
     // a RENAME/DROP COLUMN inside the window is a silent-corruption
     // trap: the stream's schema is pinned at start, and planning later
@@ -292,16 +294,15 @@ private[sources] class GraftMicroBatchStream(path: String, spark: SparkSession,
     // carry fills it with NULLS for every subsequent row, no error.
     // Detect it from the window head's declared schema (carried meta —
     // already in hand) and fail the stream loudly, like Delta does.
-    if (range.nonEmpty)
-      TxTable.declaredSchema(spark, path, range.last).foreach { ds =>
-        val have = ds.fieldNames.toSet
-        val missing = pinned.fieldNames.filterNot(have)
-        require(missing.isEmpty,
-          s"column(s) ${missing.mkString(", ")} of $path were renamed " +
-          "or dropped mid-stream — the pinned stream schema cannot " +
-          "serve them; restart the stream from a fresh checkpoint " +
-          "against the new schema")
-      }
+    head.flatMap(_.declaredSchema).foreach { ds =>
+      val have = ds.fieldNames.toSet
+      val missing = pinned.fieldNames.filterNot(have)
+      require(missing.isEmpty,
+        s"column(s) ${missing.mkString(", ")} of $path were renamed " +
+        "or dropped mid-stream — the pinned stream schema cannot " +
+        "serve them; restart the stream from a fresh checkpoint " +
+        "against the new schema")
+    }
     out.toSeq.sorted
   }
 

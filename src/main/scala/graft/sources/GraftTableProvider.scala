@@ -130,7 +130,9 @@ class GraftTableProvider extends DataSourceRegister
     val spark = SparkSession.active
     val partCols =
       org.apache.spark.sql.GraftShim.identityPartitionCols(partitioning)
-    if (TxTable.versions(spark, path).isEmpty)
+    // a read resolved its snapshot in inferSchema; only a write asks
+    // whether the path holds a table yet
+    if (cached == null && !TxTable.exists(spark, path))
       new GraftTable(path, spark, None, schema, partCols)
     else {
       val t = tableFor(options)

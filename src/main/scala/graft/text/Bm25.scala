@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Okapi BM25 retrieval over a document corpus — the standard lexical
@@ -241,20 +241,22 @@ object Bm25 {
     requireUniqueIds(docs, idCol, "buildIndex")
     // materialized once: the frame feeds both the stats aggregate and
     // the write, and re-evaluating it would re-tokenize the corpus
-    val posts = postingsOf(docs, idCol, textCol).localCheckpoint()
-    // ONE bounded collect: a single (nDocs, totalLen) row
-    val st = posts.agg(countDistinct(col(idCol)).as("n"),
-      sum(col("tf")).as("tot")).collect().head
-    val (n, tot) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-    // the token bloom is declared IN the build commit, so its per-file
-    // tokens are computed for the build's own files in the same claim —
-    // one commit where declare-then-ANALYZE paid three plus a full
-    // re-read of the just-written index (bench: every in-query index
-    // build carries that cost in its timed region)
-    graft.ops.TxTable.overwrite(spark, path, tokenSorted(posts, idCol),
-      meta = Map(StatsMetaKey -> s"$n:$tot", IdColMetaKey -> idCol,
-        SeqMetaKey -> "1") ++
-        graft.ops.TxTable.bloomDeclarationMeta(Seq("token")))
+    val posts = GraftShim.pin(postingsOf(docs, idCol, textCol))
+    try {
+      // ONE bounded collect: a single (nDocs, totalLen) row
+      val st = posts.agg(countDistinct(col(idCol)).as("n"),
+        sum(col("tf")).as("tot")).collect().head
+      val (n, tot) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
+      // the token bloom is declared IN the build commit, so its per-file
+      // tokens are computed for the build's own files in the same claim —
+      // one commit where declare-then-ANALYZE paid three plus a full
+      // re-read of the just-written index (bench: every in-query index
+      // build carries that cost in its timed region)
+      graft.ops.TxTable.overwrite(spark, path, tokenSorted(posts, idCol),
+        meta = Map(StatsMetaKey -> s"$n:$tot", IdColMetaKey -> idCol,
+          SeqMetaKey -> "1") ++
+          graft.ops.TxTable.bloomDeclarationMeta(Seq("token")))
+    } finally GraftShim.unpin(posts)
   }
 
   /** Refuse a batch that carries one doc id twice: postingsOf would
@@ -327,15 +329,17 @@ object Bm25 {
             " — postings are append-only per doc; rebuild via buildIndex")
       }
       val (n, tot, seq) = indexStats(spark, path)
-      val batch = postingsOf(docs, idCol, textCol, spread = false)
-        .localCheckpoint()
-      val st = batch.agg(countDistinct(col(idCol)).as("n"),
-        sum(col("tf")).as("tot")).collect().head
-      val (bn, bt) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-      val v = graft.ops.TxTable.append(spark, path, tokenSorted(batch, idCol),
-        meta = Map(StatsMetaKey -> s"${n + bn}:${tot + bt}",
-          IdColMetaKey -> idCol, SeqMetaKey -> (seq + 1).toString) ++ txnMeta,
-        guard = Map(SeqMetaKey -> (seq + 1L)) ++ txnGuard)
+      val batch = GraftShim.pin(
+        postingsOf(docs, idCol, textCol, spread = false))
+      val v = try {
+        val st = batch.agg(countDistinct(col(idCol)).as("n"),
+          sum(col("tf")).as("tot")).collect().head
+        val (bn, bt) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
+        graft.ops.TxTable.append(spark, path, tokenSorted(batch, idCol),
+          meta = Map(StatsMetaKey -> s"${n + bn}:${tot + bt}",
+            IdColMetaKey -> idCol, SeqMetaKey -> (seq + 1).toString) ++ txnMeta,
+          guard = Map(SeqMetaKey -> (seq + 1L)) ++ txnGuard)
+      } finally GraftShim.unpin(batch)
       // token is the build layout's sort key (tokenSorted): the
       // rewrite restores exactly what buildIndex writes
       graft.ops.TxTable.maintainAfterAppend(spark, path, Seq("token"),

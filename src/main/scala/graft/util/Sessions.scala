@@ -2,9 +2,10 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** One session-builder for the harness mains and perfbench — same
-  * master, shuffle partitions, timezone, and UI setting everywhere, so
-  * the plan Bench and perfbench time is the plan Verify dumps.
+/** One session-builder for the harness mains, perfbench and the tests
+  * — same master, shuffle partitions, timezone, optimizer rules and UI
+  * setting everywhere, so the plan Bench and perfbench time is the plan
+  * Verify dumps and the tests check.
   */
 object Sessions {
 
@@ -12,8 +13,8 @@ object Sessions {
   def cpus(fallback: => String): String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", fallback)
 
-  /** The builder every session here starts from — [[local]], the test
-    * session and `Medallion.main`: local file I/O goes through
+  /** The builder every session here starts from — [[local]] (which the
+    * test session uses) and `Medallion.main`: local file I/O goes through
     * [[NioLocalFileSystem]], so Hadoop forks no `chmod` or `ls` per
     * file it creates or lists.
     */

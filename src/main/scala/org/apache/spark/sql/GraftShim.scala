@@ -108,44 +108,36 @@ object GraftShim {
       s"the graft writer supports identity partitioning only, got $t")
   }
 
-  /** Materialize `df` eagerly with TRUNCATED lineage and return it with
-    * an explicit release handle — the building block iterative
-    * algorithms need to keep executor storage bounded (Dataset's own
-    * `localCheckpoint` offers no way to free a superseded iteration's
-    * blocks before GC gets around to it). The returned frame reads the
-    * pinned blocks directly; after `release()` it must not be used.
-    * InternalRows are copied before caching (Spark reuses row buffers
-    * within a partition iterator).
+  /** Materialize `df` once, eagerly, with its lineage truncated: the
+    * one way library code pins an intermediate. The pinned frame keeps
+    * the plan's output partitioning and ordering, so no consumer gains
+    * an exchange. Storage follows the SparkContext's checkpoint dir:
+    *  - with one set (`sparkContext.setCheckpointDir`, on reliable
+    *    storage for a cluster), the rows are written there and survive
+    *    the loss of an executor or of its blocks;
+    *  - without one, they live in executor block storage only. Losing
+    *    a block fails the next read of the frame with Spark's
+    *    "Checkpoint block ... not found": the truncated lineage cannot
+    *    recompute it.
+    * A pin that does not escape its operator is released with
+    * [[unpin]]; a returned one is left to Spark's ContextCleaner.
     */
-  def pinLocal(df: DataFrame): (DataFrame, () => Unit) = {
-    val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val rdd = df.queryExecution.toRdd.map(_.copy()).localCheckpoint()
-    rdd.count()
-    (cs.internalCreateDataFrame(rdd, df.schema),
-      () => { rdd.unpersist(blocking = false); () })
-  }
+  def pin(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 
-  /** Reliable-storage variant of [[pinLocal]]: writes the rows to the
-    * SparkContext's checkpoint directory (set it first), so the pinned
-    * data survives executor loss; `release()` deletes the checkpoint
-    * files (Spark only cleans them on GC, and then only with
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` on). The RDD is
-    * cached around the checkpoint write to avoid the classic
-    * recompute-twice cost, then the cache is dropped — reads come from
-    * the checkpoint files.
+  /** Free what [[pin]] stored for `pinned` (its blocks, or its
+    * checkpoint files) now instead of at GC. `pinned` must not be read
+    * afterwards.
     */
-  def pinReliable(df: DataFrame): (DataFrame, () => Unit) = {
-    val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.checkpoint()
-    rdd.count()
-    rdd.unpersist(blocking = false)
-    val file = rdd.getCheckpointFile
-    (cs.internalCreateDataFrame(rdd, df.schema), () => file.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(cs.sparkContext.hadoopConfiguration).delete(p, true)
-      ()
-    })
+  def unpin(pinned: DataFrame): Unit = pinned.queryExecution.logical match {
+    case r: execution.LogicalRDD =>
+      r.rdd.unpersist(blocking = false)
+      r.rdd.getCheckpointFile.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(r.rdd.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+    case other =>
+      throw new IllegalArgumentException(s"not a pinned frame: $other")
   }
 }

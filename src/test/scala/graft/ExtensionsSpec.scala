@@ -620,13 +620,25 @@ class DedupSpec extends SparkSpec {
     import s.implicits._
     val pairs = Seq((2L, 3L, 0.9), (1L, 2L, 0.9), (7L, 8L, 0.9))
       .toDF("id_a", "id_b", "jaccard")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_cc_ck").toString
-    val reliable = Dedup.connectedComponents(pairs, checkpointDir = Some(ckDir))
+    def components() = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
-    // the rounds really checkpointed to the reliable dir
-    assert(new java.io.File(ckDir).listFiles != null &&
-      new java.io.File(ckDir).listFiles.nonEmpty)
+    val local = components()
+    assert(local == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    // the session's checkpoint dir makes the pins reliable; the prior
+    // setting comes back after, so later suites keep their pins local
+    val sc = spark.sparkContext
+    val prior = sc.getCheckpointDir
+    val ckDir = java.nio.file.Files.createTempDirectory("graft_cc_ck").toFile
+    sc.setCheckpointDir(ckDir.toString)
+    try {
+      assert(components() == local)
+      // the returned labels are checkpointed in the dir; the superseded
+      // rounds were released
+      def rddDirs(d: java.io.File): Seq[String] =
+        Option(d.listFiles).toSeq.flatten.flatMap(f =>
+          if (f.getName.startsWith("rdd-")) Seq(f.getName) else rddDirs(f))
+      assert(rddDirs(ckDir).size == 1, rddDirs(ckDir))
+    } finally sc.setCheckpointDir(prior.orNull)
   }
 
   test("maxShingleDf caps hot-key fan-out: bounded per-shingle rows, near-dups kept") {

@@ -4,19 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM — Spark startup
-  * is ~10 s, per-suite sessions would dominate test time.
+  * is ~10 s, per-suite sessions would dominate test time. It is the
+  * session the harness mains and perfbench run in, so the tests check
+  * the plans they time; only the app name and the log level differ.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = graft.util.Sessions.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Sessions.local names no app, so Spark takes the name from here
+    sys.props.getOrElseUpdate("spark.app.name", "graft-tests")
+    val s = graft.util.Sessions.local("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

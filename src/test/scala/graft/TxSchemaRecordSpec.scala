@@ -145,7 +145,7 @@ class TxSchemaRecordSpec extends SparkSpec {
     TxTable.append(spark, dir, people.filter(col("id") <= 2))
     TxTable.append(spark, dir, people.filter(col("id") === 3))
     TxTable.append(spark, dir, people.filter(col("id") === 4))
-    assert(TxTable.recordedSchema(spark, dir, 3L).isDefined)
+    assert(TxTable.snapshotAt(spark, dir, Some(3L)).recordedSchema.isDefined)
     // three dirs, one schema: one dictionary entry
     assert(recordIds(dir).size === 1)
     assertSameAsInference(dir)
@@ -158,7 +158,7 @@ class TxSchemaRecordSpec extends SparkSpec {
     // "7" and "07" both infer as the int 7; the record keeps them apart
     TxTable.append(spark, dir,
       people.withColumn("day", lit("7")).filter(col("id") === 1), Seq("day"))
-    assert(TxTable.recordedSchema(spark, dir, 3L).isDefined)
+    assert(TxTable.snapshotAt(spark, dir, Some(3L)).recordedSchema.isDefined)
     assertSameAsInference(dir, Seq("day" -> StringType))
     assert(TxTable.read(spark, dir).select("day").distinct().collect()
       .map(_.getString(0)).toSet === Set("07", "11", "7"))
@@ -201,7 +201,7 @@ class TxSchemaRecordSpec extends SparkSpec {
     TxTable.append(spark, dir, Seq((2L, "b", 0.5)).toDF("id", "v", "w"))
     // two schemas live: two records, and no shared one for the snapshot
     assert(recordIds(dir).size === 2)
-    assert(TxTable.recordedSchema(spark, dir, 2L).isEmpty)
+    assert(TxTable.snapshotAt(spark, dir, Some(2L)).recordedSchema.isEmpty)
     assertSameAsInference(dir)
     val created = tmp() + "/t"
     TxTable.create(spark, created, StructType(Seq(
@@ -239,8 +239,7 @@ class TxSchemaRecordSpec extends SparkSpec {
     TxTable.overwrite(spark, dir, Seq((9, 9.0)).toDF("x", "y"))
     TxTable.restore(spark, dir, 2L)
     assert(recordIds(dir).size === 1)
-    assert(TxTable.recordedSchema(spark, dir,
-      TxTable.versions(spark, dir).last).isEmpty)
+    assert(TxTable.snapshotAt(spark, dir, None).recordedSchema.isEmpty)
     assertSameAsInference(dir)
   }
 
@@ -375,7 +374,7 @@ class TxSchemaRecordSpec extends SparkSpec {
     val parted = tmp() + "/t"
     TxTable.append(spark, parted, people, Seq("day"))
     val bare = stripped(parted)
-    assert(TxTable.recordedSchema(spark, bare, 1L).isEmpty)
+    assert(TxTable.snapshotAt(spark, bare, Some(1L)).recordedSchema.isEmpty)
     assert(jobsStartedBy(spark.read.format("graft").load(bare).schema) === 0,
       "GraftResolve reads the data schema from one footer")
     // the record types the partition column as written ("07"); the

@@ -252,6 +252,32 @@ class TxStatsSpec extends SparkSpec {
       full.collect().map(_.toString).sorted.toSeq)
   }
 
+  test("a literal the analyzer casts to its column's type still prunes") {
+    val s = spark
+    import s.implicits._
+    // four single-file commits over a bigint id: `=== 5` is an int
+    // literal, analyzed to id = CAST(5 AS BIGINT)
+    val dir = tmp()
+    (0L until 4L).foreach(f => TxTable.append(spark, dir,
+      (f * 10 until f * 10 + 10).map(i => (i, s"v$i")).toDF("id", "v")
+        .coalesce(1)))
+    val needle = TxTable.readWhere(spark, dir, col("id") === 5)
+    assert(needle.collect().map(_.getLong(0)).toSeq == Seq(5L))
+    assert(needle.inputFiles.length == 1,
+      s"only the file holding id 5 may be scanned: ${needle.inputFiles.toSeq}")
+    // a bigint partition column: `pt === 2` rewrites partition pt=2 alone
+    val part = tmp()
+    TxTable.replacePartitions(spark, part,
+      (0L until 20L).map(i => (i, i % 4)).toDF("id", "pt"), Seq("pt"))
+    val before = TxTable.read(spark, part).inputFiles.toSet
+    TxTable.delete(spark, part, col("pt") === 2)
+    val after = TxTable.read(spark, part).inputFiles.toSet
+    val rewritten = before -- after
+    assert(rewritten.nonEmpty && rewritten.forall(_.contains("pt=2")),
+      s"only pt=2's files may be rewritten, rewrote $rewritten")
+    assert(TxTable.read(spark, part).count() == 15)
+  }
+
   test("string partition values prune as strings; escaped values round-trip") {
     val s = spark
     import s.implicits._

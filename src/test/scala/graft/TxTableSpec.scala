@@ -382,10 +382,18 @@ class TxTableSpec extends SparkSpec {
       TxTable.setCarriedMeta(spark, dir, Map("graft.probe" -> i.toString)))
     assert(TxTable.versions(spark, dir).last == 52L)
     val appendAtV52 = traffic(TxTable.append(spark, dir, rows(300L)))
+    // the `graft` source resolves a load from one snapshot; a named
+    // version needs no listing at all
+    val sourceHead = traffic(spark.read.format("graft").load(dir).collect())
+    val sourceAt = traffic(spark.read.format("graft")
+      .option("versionAsOf", 2L).load(dir).collect())
     info(s"append at v2 $appendAtV2, at v52 $appendAtV52, " +
-      counts.map { case (op, c) => s"$op $c" }.mkString(", "))
+      counts.map { case (op, c) => s"$op $c" }.mkString(", ") +
+      s", graft source head $sourceHead, versionAsOf $sourceAt")
     assert(appendAtV2 == ((1L, 1L)))
     assert(appendAtV52 == appendAtV2)
     counts.foreach { case (op, c) => assert(c == ((1L, 1L)), s"$op: $c") }
+    assert(sourceHead == ((1L, 1L)), s"graft source head: $sourceHead")
+    assert(sourceAt == ((0L, 1L)), s"graft source versionAsOf: $sourceAt")
   }
 }
