@@ -68,6 +68,9 @@ object TxTable {
   private val ManifestRe = "v(\\d{11})\\.manifest".r
 
   private def fsFor(spark: SparkSession, path: String): (FileSystem, Path) = {
+    // every operation starts here, before Spark copies the session's
+    // Hadoop conf into a write task or a scan broadcast
+    GraftShim.dropConfProvenance(spark)
     val p = new Path(path)
     (FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration), p)
   }
@@ -1295,9 +1298,13 @@ object TxTable {
     def readOne(rel: String): Option[(String, FooterInfo)] = {
       val parsed =
         try {
+          val file = new Path(p, rel)
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(p, rel), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+            .fromPath(file, conf)
+          // options from the filesystem's conf: `open(in)` alone builds
+          // a fresh `Configuration` and parses the default XML per file
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+            org.apache.parquet.HadoopReadOptions.builder(conf, file).build())
           try {
             // (tag, mn, mx) per column, merged across this file's blocks;
             // a column drops out the moment one chunk lacks usable stats
@@ -1814,19 +1821,16 @@ object TxTable {
       vals.map(_._2).reduce((a, b) => if (cmp(a, b) >= 0) a else b)))
   }
 
-  /** The head (or `v`) snapshot's manifest lines grouped by partition
-    * directory, with each group's partition values parsed from its
-    * `k=v` path segments (`None` = the hive null partition). The
-    * backing for PARTITION-GROUPED metadata aggregates: declines
-    * (None) when the table declares no partition columns, or any live
-    * file's path does not carry exactly the declared columns (mixed
-    * or legacy layouts) — the scan path owns those.
+  /** The snapshot's manifest lines grouped by partition directory,
+    * with each group's partition values parsed from its `k=v` path
+    * segments (`None` = the hive null partition). The backing for
+    * PARTITION-GROUPED metadata aggregates: declines (None) when the
+    * table declares no partition columns, or any live file's path does
+    * not carry exactly the declared columns (mixed or legacy layouts)
+    * — the scan path owns those.
     */
-  private[graft] def metaPartitionLines(spark: SparkSession, path: String,
-                                        v: Long)
+  private[graft] def metaPartitionLines(s: Snapshot)
       : Option[Seq[(Map[String, Option[String]], Seq[String])]] = {
-    val s = try snapshot(spark, path, Some(v))
-      catch { case _: java.io.FileNotFoundException => return None }
     val partCols = s.partitionCols.getOrElse(Nil)
     if (partCols.isEmpty) return None
     val grouped = s.lines.groupBy(l => partitionDirOf(pathOf(l))).toSeq

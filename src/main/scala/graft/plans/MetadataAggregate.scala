@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, OneRowRelation, Project, SubqueryAlias}
@@ -21,11 +20,11 @@ import graft.ops.TxTable
   * metadata I/O instead of a full-lake scan for the most common
   * interactive queries there are.
   *
-  * SNAPSHOT-EXACT, never approximate: the relation's table name pins
-  * the resolved version (`graft:<path>@<v>`) and every stat is read
-  * from THAT version's manifest — a commit racing the query cannot
-  * skew the answer (same snapshot isolation as the scan it
-  * replaces). The rewrite declines — leaving the plan, and thus
+  * SNAPSHOT-EXACT, never approximate: every stat comes from the one
+  * snapshot the relation's table resolved when it was loaded — the
+  * manifest it lists its files from, read once — so a commit racing
+  * the query cannot skew the answer (same snapshot isolation as the
+  * scan it replaces). The rewrite declines — leaving the plan, and thus
   * correctness, untouched — whenever anything could make metadata
   * and scan disagree: grouping keys, a Filter anywhere below the
   * aggregate, DISTINCT or FILTER clauses, any other aggregate
@@ -44,8 +43,6 @@ import graft.ops.TxTable
   * same NULL the metadata can't distinguish cheaply.
   */
 object MetadataAggregateRule extends Rule[LogicalPlan] {
-
-  private val NameRe = """graft:(.+)@(\d+)""".r
 
   private sealed trait MetaAgg
   private case object RowCount extends MetaAgg
@@ -129,54 +126,55 @@ object MetadataAggregateRule extends Rule[LogicalPlan] {
         if agg.aggregateExpressions.exists(
           _.exists(_.isInstanceOf[AggregateExpression])) =>
       val (bottom, resolve) = dig(agg.child)
-      bottom match {
-        case rel: DataSourceV2Relation
-            if rel.table.isInstanceOf[graft.sources.GraftTable] &&
-              // a change-feed scan's rows are the FEED, not the snapshot
-              !rel.table.schema().fieldNames.contains("_change_type") =>
-          rel.table.name match {
-            case NameRe(path, vStr) =>
-              val v = vStr.toLong
-              // the final resolver step: the attribute must be one of
-              // the RELATION's own output columns
-              val relIds = rel.output.map(a => a.exprId -> a).toMap
-              val toRelCol = (a: Attribute) =>
-                resolve(a).flatMap(r => relIds.get(r.exprId))
-              val classified = agg.aggregateExpressions.map(ne =>
-                ne -> ne.collect { case ae: AggregateExpression => ae }
-                  .map(ae => ae -> classify(ae, toRelCol)))
-              if (classified.exists(_._2.exists(_._2.isEmpty))) agg
-              else if (agg.groupingExpressions.isEmpty)
-                serve(agg, classified, path, v).getOrElse(agg)
-              else
-                serveGrouped(agg, classified, toRelCol, path, v)
-                  .getOrElse(agg)
-            case _ => agg
-          }
-        case _ => agg
+      val snapshot = bottom match {
+        case rel: DataSourceV2Relation => rel.table match {
+          // a change-feed scan's rows are the FEED, not the snapshot
+          case t: graft.sources.GraftTable
+              if !t.schema().fieldNames.contains("_change_type") =>
+            t.snapshot.map(rel -> _)
+          case _ => None
+        }
+        case _ => None
+      }
+      snapshot match {
+        case Some((rel, snap)) =>
+          // the final resolver step: the attribute must be one of
+          // the RELATION's own output columns
+          val relIds = rel.output.map(a => a.exprId -> a).toMap
+          val toRelCol = (a: Attribute) =>
+            resolve(a).flatMap(r => relIds.get(r.exprId))
+          val classified = agg.aggregateExpressions.map(ne =>
+            ne -> ne.collect { case ae: AggregateExpression => ae }
+              .map(ae => ae -> classify(ae, toRelCol)))
+          if (classified.exists(_._2.exists(_._2.isEmpty))) agg
+          else if (agg.groupingExpressions.isEmpty)
+            serve(agg, classified, snap.lines).getOrElse(agg)
+          else
+            serveGrouped(agg, classified, toRelCol, snap).getOrElse(agg)
+        case None => agg
       }
   }
 
-  /** Evaluate every classified aggregate from the manifest; None the
-    * moment any stat is unavailable (caller keeps the scan).
+  /** Evaluate every classified aggregate from the snapshot's manifest
+    * `lines`; None the moment any stat is unavailable (caller keeps the
+    * scan).
     */
   private def serve(agg: Aggregate,
                     classified: Seq[(NamedExpression,
                       Seq[(AggregateExpression, Option[MetaAgg])])],
-                    path: String, v: Long): Option[LogicalPlan] = {
-    val spark = SparkSession.active
+                    lines: Seq[String]): Option[LogicalPlan] = {
     val memoMinMax =
       scala.collection.mutable.Map.empty[String, Option[(String, String)]]
     // the COLUMN TYPE decides the comparison order — a string
     // partition value "2024" is tagged numeric by the manifest's
     // parse guess, and only the relation knows better
     def minMax(c: String, dt: DataType) =
-      memoMinMax.getOrElseUpdate(c, TxTable.metaMinMax(spark, path, c, v,
+      memoMinMax.getOrElseUpdate(c, TxTable.metaMinMaxOfLines(lines, c,
         stringOrdered = dt == StringType))
     def valueOf(m: MetaAgg): Option[Literal] = m match {
-      case RowCount => TxTable.metaRowCount(spark, path, v).map(Literal(_))
+      case RowCount => TxTable.metaRowCountOfLines(lines).map(Literal(_))
       case ColCount(c) =>
-        TxTable.metaColumnCount(spark, path, c, v).map(Literal(_))
+        TxTable.metaColumnCountOfLines(lines, c).map(Literal(_))
       case ColMin(c, dt) =>
         minMax(c, dt).flatMap(mm =>
           scala.util.Try(literalOf(mm._1, dt)).toOption)
@@ -211,10 +209,8 @@ object MetadataAggregateRule extends Rule[LogicalPlan] {
                            classified: Seq[(NamedExpression,
                              Seq[(AggregateExpression, Option[MetaAgg])])],
                            toRelCol: Attribute => Option[Attribute],
-                           path: String, v: Long): Option[LogicalPlan] = {
-    val spark = SparkSession.active
-    val partCols = TxTable.declaredPartitionCols(spark, path, v)
-      .getOrElse(Nil)
+                           snap: TxTable.Snapshot): Option[LogicalPlan] = {
+    val partCols = snap.partitionCols.getOrElse(Nil)
     if (partCols.isEmpty) return None
     // every grouping expr must be a bare attribute over a partition col
     val groupOk = agg.groupingExpressions.forall {
@@ -234,7 +230,7 @@ object MetadataAggregateRule extends Rule[LogicalPlan] {
     val groupedNames: Set[String] = agg.groupingExpressions.collect {
       case a: Attribute => toRelCol(a).get.name
     }.toSet
-    TxTable.metaPartitionLines(spark, path, v).flatMap { fullGroups =>
+    TxTable.metaPartitionLines(snap).flatMap { fullGroups =>
       val groups: Seq[(Map[String, Option[String]], Seq[String])] =
         fullGroups
           .groupBy { case (pvals, _) =>

@@ -13,14 +13,16 @@ import graft.ops.TxTable
 /** One resolved TxTable snapshot, ready to scan: the pieces
   * [[GraftTable]] hands to Spark's parquet scan builder, shared by the
   * DataSource V2 provider and the SQL catalog so every surface
-  * resolves a version identically.
+  * resolves a version identically. `snapshot` is the log read they
+  * came from; metadata-only aggregates answer from it.
   */
 private[sources] case class GraftResolved(
     name: String,
     fileIndex: PartitioningAwareFileIndex,
     schema: StructType,
     dataSchema: StructType,
-    partitionCols: Seq[String])
+    partitionCols: Seq[String],
+    snapshot: TxTable.Snapshot)
 
 private[sources] object GraftResolve {
 
@@ -60,7 +62,7 @@ private[sources] object GraftResolve {
         .snapshotIndex(spark, Nil, Nil, partSchema)
       val dataSchema =
         StructType(schema.filterNot(f => partCols.contains(f.name)))
-      GraftResolved(name, idx, schema, dataSchema, partCols)
+      GraftResolved(name, idx, schema, dataSchema, partCols, s)
     } else if (!files.exists(_.split('/').exists(_.contains('=')))) {
       require(declaredParts.forall(_.isEmpty),
         s"$path@$v declares partition columns " +
@@ -68,7 +70,7 @@ private[sources] object GraftResolve {
       val pt = ParquetTable(name, spark, CaseInsensitiveStringMap.empty(),
         files, userSpecifiedSchema = declared.orElse(recorded),
         classOf[ParquetFileFormat])
-      GraftResolved(name, pt.fileIndex, pt.schema, pt.dataSchema, Nil)
+      GraftResolved(name, pt.fileIndex, pt.schema, pt.dataSchema, Nil, s)
     } else {
       val root = new Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -117,7 +119,7 @@ private[sources] object GraftResolve {
         .getOrElse(graft.ops.Sources.pinnedParquet(spark, files.head).schema)
       GraftResolved(name, idx,
         StructType(dataSchema.fields ++ partSchema.fields), dataSchema,
-        colNames)
+        colNames, s)
     }
   }
 }

@@ -59,6 +59,10 @@ private[graft] class GraftTable(path: String, spark: SparkSession,
   override def name: String =
     resolved.map(_.name).getOrElse(s"graft:$path (uncommitted)")
 
+  /** The log read this table resolved from, None before a commit. */
+  private[graft] def snapshot: Option[TxTable.Snapshot] =
+    resolved.map(_.snapshot)
+
   override def schema: StructType = {
     val data = resolved.map(_.schema).getOrElse(declaredSchema)
     if (changeFeed) GraftCdf.cdfSchema(data) else data

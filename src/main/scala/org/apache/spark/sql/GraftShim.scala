@@ -18,8 +18,54 @@ object GraftShim {
     * (`sessionState` is `private[sql]`) — what a write path must ship
     * to executors so parquet codec/legacy-format settings apply.
     */
-  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration = {
+    dropConfProvenance(spark)
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+  }
+
+  /** Hadoop's per-key provenance map, `Configuration.updatingResource`
+    * (key → the resources that set it). The lookup first initializes
+    * `JobConf`, whose registration of `mapred-default.xml` and the yarn
+    * defaults reloads every live conf: done after a drop, at the first
+    * write, that reload would refill the map. None if a Hadoop upgrade
+    * renamed the field; the drop is then skipped.
+    */
+  private lazy val provenanceField: Option[java.lang.reflect.Field] =
+    scala.util.Try {
+      Class.forName("org.apache.hadoop.mapred.JobConf")
+      val f = classOf[org.apache.hadoop.conf.Configuration]
+        .getDeclaredField("updatingResource")
+      f.setAccessible(true)
+      f
+    }.toOption
+
+  /** Drop the per-key provenance of the two shared Hadoop confs Spark
+    * copies for every write and scan: `sparkContext.hadoopConfiguration`
+    * and `sharedState.hadoopConf`. Spark serializes the copy into every
+    * write task (deserialized once per task) and into every parquet
+    * scan's conf broadcast, and `Configuration.write` gzips each key's
+    * sources array on its own — with ~1,100 keys that is most of a
+    * small write task's deserialization. Hadoop has no public way to
+    * drop them (`set` itself records "programmatically").
+    *
+    * Values are never touched. Only `getPropertySources` changes: it
+    * returns null for every key set before the drop, so Spark's
+    * Environment page shows no source for them. Idempotent and cheap;
+    * library entry points call it before Spark copies a conf, because
+    * any reload (`reloadConfiguration`, a new default resource) refills
+    * the map.
+    */
+  def dropConfProvenance(spark: SparkSession): Unit =
+    provenanceField.foreach { f =>
+      val s = spark.asInstanceOf[classic.SparkSession]
+      Seq(s.sparkContext.hadoopConfiguration, s.sharedState.hadoopConf)
+        .foreach { c =>
+          c.synchronized {
+            c.size() // loads a pending reload now, before the drop
+            f.get(c).asInstanceOf[java.util.Map[_, _]].clear()
+          }
+        }
+    }
 
   /** Driver half of a do-it-yourself distributed parquet write (the
     * graft STREAMING sink): Spark's own

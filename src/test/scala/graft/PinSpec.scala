@@ -123,23 +123,54 @@ class PinSpec extends SparkSpec {
     left.foreach { case (op, ids) => assert(ids.isEmpty, s"$op left $ids") }
   }
 
-  test("library code pins only through GraftShim.pin") {
-    // the five harness mains live in src/main until they move out of
-    // the library; the pin helper is the one place that may checkpoint
-    val allowed = Set("GraftShim.scala", "SparkEntry.scala", "Bench.scala",
-      "ScaleBench.scala", "MaintBench.scala", "Verify.scala")
+  /** (file, text) of every Scala source under `src/main`. */
+  private def librarySources: Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
     def sources(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f =>
         if (f.isDirectory) sources(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    sources(root).map(f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  test("library code pins only through GraftShim.pin") {
+    // the five harness mains live in src/main until they move out of
+    // the library; the pin helper is the one place that may checkpoint
+    val allowed = Set("GraftShim.scala", "SparkEntry.scala", "Bench.scala",
+      "ScaleBench.scala", "MaintBench.scala", "Verify.scala")
     val offenders = for {
-      f <- sources(root) if !allowed(f.getName)
-      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      (f, text) <- librarySources if !allowed(f.getName)
       call <- Seq("localCheckpoint(", ".checkpoint(", "setCheckpointDir(")
       if text.contains(call)
     } yield s"${f.getPath}: $call"
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("library code opens parquet files with read options") {
+    // `ParquetFileReader.open(file)` alone builds its options on a fresh
+    // `Configuration`, which parses Hadoop's default XML on every call
+    val call = "ParquetFileReader.open("
+    def arguments(text: String, from: Int): Int = {
+      var (depth, i, commas) = (1, from, 0)
+      while (depth > 0) {
+        text(i) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case ',' if depth == 1 => commas += 1
+          case _ =>
+        }
+        i += 1
+      }
+      commas + 1
+    }
+    val opens = for {
+      (f, text) <- librarySources
+      at <- Iterator.iterate(text.indexOf(call))(i =>
+        text.indexOf(call, i + 1)).takeWhile(_ >= 0)
+    } yield f.getName -> arguments(text, at + call.length)
+    val bare = opens.filter(_._2 < 2)
+    assert(bare.isEmpty, bare.map(_._1).mkString("open(file) in ", ", ", ""))
   }
 }

@@ -387,13 +387,23 @@ class TxTableSpec extends SparkSpec {
     val sourceHead = traffic(spark.read.format("graft").load(dir).collect())
     val sourceAt = traffic(spark.read.format("graft")
       .option("versionAsOf", 2L).load(dir).collect())
+    // metadata-only aggregates answer from the snapshot the load read
+    val sourceCount = traffic(spark.read.format("graft").load(dir).count())
+    val sourceMeta = traffic {
+      import org.apache.spark.sql.functions.{count, max, min}
+      spark.read.format("graft").load(dir)
+        .agg(count(lit(1)), min("id"), max("id"), count("v")).collect()
+    }
     info(s"append at v2 $appendAtV2, at v52 $appendAtV52, " +
       counts.map { case (op, c) => s"$op $c" }.mkString(", ") +
-      s", graft source head $sourceHead, versionAsOf $sourceAt")
+      s", graft source head $sourceHead, versionAsOf $sourceAt, " +
+      s"load(p).count() $sourceCount, COUNT/MIN/MAX/COUNT(c) $sourceMeta")
     assert(appendAtV2 == ((1L, 1L)))
     assert(appendAtV52 == appendAtV2)
     counts.foreach { case (op, c) => assert(c == ((1L, 1L)), s"$op: $c") }
     assert(sourceHead == ((1L, 1L)), s"graft source head: $sourceHead")
     assert(sourceAt == ((0L, 1L)), s"graft source versionAsOf: $sourceAt")
+    assert(sourceCount == ((1L, 1L)), s"load(p).count(): $sourceCount")
+    assert(sourceMeta == ((1L, 1L)), s"metadata aggregates: $sourceMeta")
   }
 }
