@@ -348,13 +348,10 @@ object Similarity {
                 txn: Option[(String, Long)] = None,
                 maintain: Option[graft.ops.TxTable.Maintenance] = None)
       : Long =
-    graft.ops.TxTable.withTxn(spark, path, txn) { (txnMeta, txnGuard) =>
-      val v = graft.ops.TxTable.append(spark, path,
-        idSorted(assignToLists(newVectors, index, idCol, vecCol), idCol),
-        meta = txnMeta, guard = txnGuard)
-      graft.ops.TxTable.maintainAfterAppend(spark, path, Seq(idCol),
-        maintain)
-      v
+    graft.ops.TxTable.appendIncrement(spark, path, txn, Seq(idCol),
+        maintain) { _ =>
+      (idSorted(assignToLists(newVectors, index, idCol, vecCol), idCol),
+        Map.empty, Map.empty)
     }
 
   /** REMOVE vectors from persisted inverted lists — the dense index's
@@ -713,15 +710,11 @@ object Similarity {
                txn: Option[(String, Long)] = None,
                maintain: Option[graft.ops.TxTable.Maintenance] = None)
       : Long =
-    graft.ops.TxTable.withTxn(spark, s"$root/codes", txn) {
-      (txnMeta, txnGuard) =>
-        val ranges = graft.ops.TxTable.read(spark, s"$root/ranges")
-        val v = graft.ops.TxTable.append(spark, s"$root/codes",
-          idSorted(sqEncode(newVectors, ranges, idCol, vecCol), idCol),
-          meta = txnMeta, guard = txnGuard)
-        graft.ops.TxTable.maintainAfterAppend(spark, s"$root/codes",
-          Seq(idCol), maintain)
-        v
+    graft.ops.TxTable.appendIncrement(spark, s"$root/codes", txn,
+        Seq(idCol), maintain) { _ =>
+      val ranges = graft.ops.TxTable.read(spark, s"$root/ranges")
+      (idSorted(sqEncode(newVectors, ranges, idCol, vecCol), idCol),
+        Map.empty, Map.empty)
     }
 
   /** Remove vectors' codes — one atomic manifest-pruned copy-on-write
@@ -1188,15 +1181,11 @@ object Similarity {
                txn: Option[(String, Long)] = None,
                maintain: Option[graft.ops.TxTable.Maintenance] = None)
       : Long =
-    graft.ops.TxTable.withTxn(spark, s"$root/codes", txn) {
-      (txnMeta, txnGuard) =>
-        val cbs = graft.ops.TxTable.read(spark, s"$root/cbs")
-        val v = graft.ops.TxTable.append(spark, s"$root/codes",
-          idSorted(pqEncode(newVectors, cbs, idCol, vecCol), idCol),
-          meta = txnMeta, guard = txnGuard)
-        graft.ops.TxTable.maintainAfterAppend(spark, s"$root/codes",
-          Seq(idCol), maintain)
-        v
+    graft.ops.TxTable.appendIncrement(spark, s"$root/codes", txn,
+        Seq(idCol), maintain) { _ =>
+      val cbs = graft.ops.TxTable.read(spark, s"$root/cbs")
+      (idSorted(pqEncode(newVectors, cbs, idCol, vecCol), idCol),
+        Map.empty, Map.empty)
     }
 
   /** Remove vectors' codes — one atomic manifest-pruned copy-on-write

@@ -160,7 +160,7 @@ object SemDedup {
     * route both — pinned by spec).
     * `txn = Some((app, batchId))` makes the append REPLAY-SAFE for a
     * `foreachBatch` maintainer (the [[graft.text.Bm25.appendToIndex]]
-    * contract, via [[graft.ops.TxTable.withTxn]]): without it a
+    * contract, via [[graft.ops.TxTable.appendIncrement]]): without it a
     * checkpoint-replayed batch double-appends its rows into the
     * assignments table — every replayed row then serves as its own
     * duplicate, which for a DEDUP model is self-defeating.
@@ -172,17 +172,13 @@ object SemDedup {
                     txn: Option[(String, Long)] = None,
                     maintain: Option[graft.ops.TxTable.Maintenance] = None)
       : Long =
-    graft.ops.TxTable.withTxn(spark, s"$root/assignments", txn) {
-      (txnMeta, txnGuard) =>
-        val centroids = graft.ops.TxTable.read(spark, s"$root/centroids")
-        val v = graft.ops.TxTable.append(spark, s"$root/assignments",
-          assignedWithZeroNorm(newRows, centroids, idCol, vecCol),
-          meta = txnMeta, guard = txnGuard)
-        // idCol is the build layout (assignedWithZeroNorm's id-range
-        // sort) — the rewrite restores writeModel's file windows
-        graft.ops.TxTable.maintainAfterAppend(spark,
-          s"$root/assignments", Seq(idCol), maintain)
-        v
+    // idCol is the build layout (assignedWithZeroNorm's id-range sort)
+    // — maintenance restores writeModel's file windows
+    graft.ops.TxTable.appendIncrement(spark, s"$root/assignments", txn,
+        Seq(idCol), maintain) { _ =>
+      val centroids = graft.ops.TxTable.read(spark, s"$root/centroids")
+      (assignedWithZeroNorm(newRows, centroids, idCol, vecCol),
+        Map.empty, Map.empty)
     }
 
   /** `(idCol, vecCol, nrm, list_id)` for EVERY row of `rows`: the

@@ -244,7 +244,7 @@ object Sketches {
     */
   def writeHllGrains(df: DataFrame, path: String, grainCols: Seq[String],
                      value: Column, lgK: Int = 12): Long =
-    graft.ops.TxTable.overwrite(df.sparkSession, path,
+    TxTable.overwrite(df.sparkSession, path,
       hllSketch(df, grainCols.map(col), value, lgK),
       meta = Map(LgKMetaKey -> lgK.toString))
 
@@ -268,23 +268,16 @@ object Sketches {
                       path: String, df: DataFrame,
                       grainCols: Seq[String], value: Column,
                       txn: Option[(String, Long)] = None,
-                      maintain: Option[graft.ops.TxTable.Maintenance] = None)
+                      maintain: Option[TxTable.Maintenance] = None)
       : Long =
-    graft.ops.TxTable.withTxn(spark, path, txn) { (txnMeta, txnGuard) =>
-      val v = graft.ops.TxTable.versions(spark, path).last
-      val lgK = graft.ops.TxTable.commitMeta(spark, path, v)
-        .getOrElse(LgKMetaKey, sys.error(
-          s"$path is not a sketch table (no $LgKMetaKey meta — build it " +
-            "with Sketches.writeHllGrains)")).toInt
-      val out = graft.ops.TxTable.append(spark, path,
-        hllSketch(df, grainCols.map(col), value, lgK),
-        meta = Map(LgKMetaKey -> lgK.toString) ++ txnMeta,
-        guard = txnGuard)
-      // grain columns are the serve filter key — the rewrite keeps
-      // range pruning tight while collapsing the per-batch files
-      graft.ops.TxTable.maintainAfterAppend(spark, path, grainCols,
-        maintain)
-      out
+    // grain columns are the serve filter key — maintenance keeps range
+    // pruning tight while collapsing the per-batch files
+    TxTable.appendIncrement(spark, path, txn, grainCols, maintain) { s =>
+      val lgK = s.meta.getOrElse(LgKMetaKey, sys.error(
+        s"$path is not a sketch table (no $LgKMetaKey meta — build it " +
+          "with Sketches.writeHllGrains)")).toInt
+      (hllSketch(df, grainCols.map(col), value, lgK),
+        Map(LgKMetaKey -> lgK.toString), Map.empty)
     }
 
   /** Serve approximate distincts from the stored sketches: filter the
@@ -295,7 +288,7 @@ object Sketches {
   def hllServe(spark: org.apache.spark.sql.SparkSession, path: String,
                groupCols: Seq[String],
                where: Column = lit(true)): DataFrame =
-    hllUnion(graft.ops.TxTable.read(spark, path).filter(where),
+    hllUnion(TxTable.read(spark, path).filter(where),
         groupCols.map(col))
       .withColumn("approx_distinct", hll_sketch_estimate(col("hll")))
       .drop("hll")
@@ -310,7 +303,7 @@ object Sketches {
   /** Build the KLL grain table (k in carried meta). */
   def writeKllGrains(df: DataFrame, path: String, grainCols: Seq[String],
                      value: Column, k: Int = 200): Long =
-    graft.ops.TxTable.overwrite(df.sparkSession, path,
+    TxTable.overwrite(df.sparkSession, path,
       kllSketch(df, grainCols.map(col), value, k),
       meta = Map(KllKMetaKey -> k.toString))
 
@@ -326,22 +319,15 @@ object Sketches {
                       path: String, df: DataFrame,
                       grainCols: Seq[String], value: Column,
                       txn: Option[(String, Long)] = None,
-                      maintain: Option[graft.ops.TxTable.Maintenance] = None)
+                      maintain: Option[TxTable.Maintenance] = None)
       : Long =
-    graft.ops.TxTable.withTxn(spark, path, txn) { (txnMeta, txnGuard) =>
-      val v = graft.ops.TxTable.versions(spark, path).last
-      val k = graft.ops.TxTable.commitMeta(spark, path, v)
-        .getOrElse(KllKMetaKey, sys.error(
-          s"$path is not a KLL sketch table (no $KllKMetaKey meta — " +
-            "build it with Sketches.writeKllGrains)")).toInt
-      val out = graft.ops.TxTable.append(spark, path,
-        kllSketch(df, grainCols.map(col), value, k),
-        meta = Map(KllKMetaKey -> k.toString) ++ txnMeta,
-        guard = txnGuard)
-      graft.ops.TxTable.maintainAfterAppend(spark, path, grainCols,
-        maintain)
-      out
-  }
+    TxTable.appendIncrement(spark, path, txn, grainCols, maintain) { s =>
+      val k = s.meta.getOrElse(KllKMetaKey, sys.error(
+        s"$path is not a KLL sketch table (no $KllKMetaKey meta — " +
+          "build it with Sketches.writeKllGrains)")).toInt
+      (kllSketch(df, grainCols.map(col), value, k),
+        Map(KllKMetaKey -> k.toString), Map.empty)
+    }
 
   /** Quantiles at `probs` from the stored sketches over a grain
     * filter: (groupCols..., quantiles array<double>).
@@ -349,12 +335,11 @@ object Sketches {
   def kllServe(spark: org.apache.spark.sql.SparkSession, path: String,
                groupCols: Seq[String], probs: Seq[Double],
                where: Column = lit(true)): DataFrame = {
-    val v = graft.ops.TxTable.versions(spark, path).last
-    val k = graft.ops.TxTable.commitMeta(spark, path, v)
-      .getOrElse(KllKMetaKey, sys.error(
-        s"$path is not a KLL sketch table (no $KllKMetaKey meta)")).toInt
-    kllUnion(graft.ops.TxTable.read(spark, path).filter(where),
-        groupCols.map(col), k)
+    // k and the sketches from one snapshot
+    val s = TxTable.snapshotAt(spark, path, None)
+    val k = s.meta.getOrElse(KllKMetaKey, sys.error(
+      s"$path is not a KLL sketch table (no $KllKMetaKey meta)")).toInt
+    kllUnion(TxTable.readSnapshot(s).filter(where), groupCols.map(col), k)
       .withColumn("quantiles", kllQuantiles(col("kll"), probs))
       .drop("kll")
   }

@@ -177,10 +177,10 @@ object TxTable {
     commitTimestampOf(snapshot(spark, path, Some(v)))
 
   /** [[commitTimestamp]] of a snapshot in hand — for loops that hold
-    * the manifest (e.g. [[readChanges]]), so stamping a version doesn't
-    * re-read and re-parse the manifest it just read.
+    * the manifest (e.g. [[readChanges]], the change-feed source), so
+    * stamping a version doesn't re-read the manifest it just read.
     */
-  private def commitTimestampOf(s: Snapshot): Long =
+  private[graft] def commitTimestampOf(s: Snapshot): Long =
     s.meta.get(TimestampMetaKey)
       .flatMap(t => scala.util.Try(t.toLong).toOption)
       .getOrElse(s.fs.getFileStatus(new Path(new Path(s.root, LogDir),
@@ -714,29 +714,39 @@ object TxTable {
     (Map(key -> batchId.toString), Map(key -> batchId))
   }
 
-  /** The WHOLE idempotent-append contract in one place: skip-check the
-    * replay token against `path`'s head, then run `doAppend` with the
-    * claim's (meta, guard) to attach to its commit. Returns the head
-    * version unchanged when the token says the batch already landed
-    * (the checkpoint-replay no-op), otherwise `doAppend`'s version.
-    * Every incremental maintainer (Bm25.appendToIndex, Similarity
-    * ivf/sq/pqAppend, Sketches HLL/KLL grain appends, SemDedup
-    * appendToModel) routes through here so the check-then-claim
+  /** The WHOLE incremental-append contract in one place, on ONE read
+    * of `path`'s head: skip-check the replay token against it, hand it
+    * to `batch` (which returns the frame to append, the meta to carry
+    * and the guards its meta depends on), commit the append on that
+    * same snapshot — claiming its version + 1; a lost claim rebuilds on
+    * the new head and rechecks the guards — and then run
+    * [[maintainAfterAppend]] on `layoutCols`. Returns the head version
+    * unchanged when the token says the batch already landed (the
+    * checkpoint-replay no-op; `batch` never runs), otherwise the
+    * append's version. Every incremental maintainer (Bm25.appendToIndex,
+    * Similarity ivf/sq/pqAppend, Sketches HLL/KLL grain appends,
+    * SemDedup appendToModel) routes through here so the check-then-claim
     * semantics — the skip is an optimization; the GUARD is what makes
     * a zombie-vs-restart race safe — can't drift per call site.
-    * `txn = None` degrades to a plain unguarded append.
+    * `txn = None` is a plain append guarded only by `batch`'s guards.
     */
-  private[graft] def withTxn(spark: SparkSession, path: String,
-                             txn: Option[(String, Long)])
-      (doAppend: (Map[String, String], Map[String, Long]) => Long): Long = {
-    txn.foreach { case (app, batchId) =>
-      val s = snapshot(spark, path, orEmpty = true)
-      if (lastTxnOf(s, app).exists(_ >= batchId)) return s.v
-    }
-    val (meta, guard) = txn.map { case (app, batchId) =>
-      txnClaim(app, batchId)
-    }.getOrElse((Map.empty[String, String], Map.empty[String, Long]))
-    doAppend(meta, guard)
+  private[graft] def appendIncrement(spark: SparkSession, path: String,
+                                     txn: Option[(String, Long)],
+                                     layoutCols: Seq[String],
+                                     maintain: Option[Maintenance])
+      (batch: Snapshot => (DataFrame, Map[String, String], Map[String, Long]))
+      : Long = {
+    val s = snapshot(spark, path, orEmpty = true)
+    val (txnMeta, txnGuard) = txn.fold(
+      (Map.empty[String, String], Map.empty[String, Long])) {
+      case (app, batchId) => txnClaim(app, batchId) }
+    if (txn.exists { case (app, batchId) =>
+      lastTxnOf(s, app).exists(_ >= batchId) }) return s.v
+    val (frame, meta, guard) = batch(s)
+    val v = commit(s, frame, "append", (base, _) => base, meta = meta ++ txnMeta,
+      read = ReadSet(guard = guard ++ txnGuard))
+    maintainAfterAppend(spark, path, layoutCols, maintain)
+    v
   }
 
   /** Refuse a caller-supplied token that would break the manifest
@@ -1632,13 +1642,8 @@ object TxTable {
   def readWhere(spark: SparkSession, path: String,
                 predicate: org.apache.spark.sql.Column,
                 mergeSchema: Boolean = false,
-                schema: Option[StructType] = None): DataFrame = {
-    val s = snapshot(spark, path)
-    val kept = mayMatchLines(s, s.lines, Some(predicate), mergeSchema,
-      schema.orElse(s.declaredSchema))
-    val df = scanSnapshot(s, kept, mergeSchema, schema, s"head of $path")
-    if (kept.isEmpty) df else df.where(predicate)
-  }
+                schema: Option[StructType] = None): DataFrame =
+    readSnapshot(snapshot(spark, path), mergeSchema, schema, Some(predicate))
 
   /** Snapshot read of the newest committed version. `mergeSchema` unions
     * the schemas of all referenced files — required once appends have
@@ -1670,10 +1675,21 @@ object TxTable {
                   schema: Option[StructType] = None): DataFrame =
     readSnapshot(snapshot(spark, path, Some(v)), mergeSchema, schema)
 
-  /** Every file of snapshot `s`, scanned as one frame. */
-  private def readSnapshot(s: Snapshot, mergeSchema: Boolean = false,
-                           schema: Option[StructType] = None): DataFrame =
-    scanSnapshot(s, s.lines, mergeSchema, schema, s"version ${s.v} of ${s.path}")
+  /** Every file of snapshot `s`, scanned as one frame; with `where`,
+    * [[readWhere]] of it: the files whose stats may match, filtered.
+    * Callers that hold a snapshot read through this, so the rows come
+    * from the version whose meta they already parsed.
+    */
+  private[graft] def readSnapshot(s: Snapshot, mergeSchema: Boolean = false,
+                                  schema: Option[StructType] = None,
+                                  where: Option[org.apache.spark.sql.Column] = None)
+      : DataFrame = {
+    val kept = where.fold(s.lines)(p => mayMatchLines(s, s.lines, Some(p),
+      mergeSchema, schema.orElse(s.declaredSchema)))
+    val df = scanSnapshot(s, kept, mergeSchema, schema,
+      s"version ${s.v} of ${s.path}")
+    if (kept.isEmpty) df else where.fold(df)(df.where)
+  }
 
   /** The declared schema of snapshot `s`, else its files' union schema. */
   private def tableSchema(s: Snapshot): StructType =

@@ -86,13 +86,24 @@ class GraftCatalog extends TableCatalog {
       Some(TxTable.versionAsOfTimestamp(spark, path, timestamp / 1000L)))
   }
 
-  private def loadVersion(ident: Identifier, version: Option[Long]): Table = {
-    val path = pathOf(ident)
-    val spark = SparkSession.active
-    if (TxTable.versions(spark, path).isEmpty)
-      throw new NoSuchTableException(ident)
-    new GraftTable(path, spark,
-      Some(GraftResolve.resolve(spark, path, version)))
+  private def loadVersion(ident: Identifier, version: Option[Long]): Table =
+    new GraftTable(pathOf(ident), SparkSession.active,
+      Some(GraftResolve.resolve(snapshotOf(ident, version))))
+
+  /** `ident`'s snapshot at `version` (the head when None) — the one log
+    * read a load or an ALTER resolves from. A path with no commits is
+    * NoSuchTableException either way; a named version lists the log only
+    * when its manifest is missing, to tell a missing table from a missing
+    * version.
+    */
+  private def snapshotOf(ident: Identifier,
+                         version: Option[Long]): TxTable.Snapshot = {
+    val (spark, path) = (SparkSession.active, pathOf(ident))
+    val s = try TxTable.snapshotAt(spark, path, version, orEmpty = true)
+      catch { case _: IllegalArgumentException if !TxTable.exists(spark, path) =>
+        throw new NoSuchTableException(ident) }
+    if (s.version.isEmpty) throw new NoSuchTableException(ident)
+    s
   }
 
   /** `CREATE TABLE graft.`/p` (cols) [PARTITIONED BY (c)]`: a
@@ -121,12 +132,8 @@ class GraftCatalog extends TableCatalog {
     * need data rewrite or column mapping and are refused loudly.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val path = pathOf(ident)
-    val spark = SparkSession.active
-    if (TxTable.versions(spark, path).isEmpty)
-      throw new NoSuchTableException(ident)
-    val current = TxTable.declaredSchema(spark, path).getOrElse(
-      GraftResolve.resolve(spark, path, None).schema)
+    val s = snapshotOf(ident, None)
+    val current = s.declaredSchema.getOrElse(GraftResolve.resolve(s).schema)
     val added = changes.map {
       case a: TableChange.AddColumn =>
         require(a.fieldNames.length == 1,
@@ -140,7 +147,7 @@ class GraftCatalog extends TableCatalog {
         s"unsupported ALTER on a graft table: $other — only ADD COLUMNS " +
           "(nullable, top-level); renames/drops/retypes need a rewrite")
     }
-    TxTable.evolveSchema(spark, path,
+    TxTable.evolveSchema(s.spark, s.path,
       StructType(current.fields ++ added))
     loadTable(ident)
   }

@@ -106,23 +106,19 @@ private[sources] object GraftCdf {
       s"fresh checkpoint or startingVersion ${vs.head}")
     val root = new org.apache.hadoop.fs.Path(path).toString
     val range = vs.filter(v => v > fromV && v <= toV)
-    // one manifest listing per version across the whole plan: the
-    // fallback arm needs both v-1 and v, and consecutive fallback
-    // commits reuse v's listing as v+1's baseline (the prev = cur
-    // pattern of filesBetween, GraftStreamSource.scala:279) — without
-    // the cache a long pre-CDF history lists every snapshot twice
-    var lastListed: (Long, Seq[String]) = (-1L, Nil)
-    def snap(v: Long): Seq[String] =
-      if (lastListed._1 == v) lastListed._2
-      else {
-        val s = TxTable.snapshotFiles(spark, path, v)
-        lastListed = (v, s)
-        s
-      }
+    // one manifest read per version across the whole plan: its
+    // timestamp, change-data token and files come from one snapshot, and
+    // the fallback arm's v-1 baseline is the previous iteration's
+    // snapshot (the prev = cur pattern of filesBetween,
+    // GraftStreamSource.scala:279) — without it a long pre-CDF history
+    // reads every manifest twice
+    var lastRead: Option[TxTable.Snapshot] = None
     range.flatMap { v =>
-      val ts = TxTable.commitTimestamp(spark, path, v)
-      TxTable.commitMeta(spark, path, v)
-        .get(TxTable.ChangeDataMetaKey) match {
+      val before = lastRead.filter(_.v == v - 1)
+      val s = TxTable.snapshotAt(spark, path, Some(v))
+      lastRead = Some(s)
+      val ts = TxTable.commitTimestampOf(s)
+      s.meta.get(TxTable.ChangeDataMetaKey) match {
         case Some("0") => Nil // row-change-free commit
         case Some(uuid) =>
           ScanPlanning.plan(spark, root,
@@ -140,8 +136,9 @@ private[sources] object GraftCdf {
               else sys.error(
                 s"version ${v - 1} of $path was vacuumed — file-granular " +
                 s"change capture for v$v has no baseline to diff against")
-            } else snap(v - 1).toSet
-          val cur = snap(v)
+            } else before.getOrElse(
+              TxTable.snapshotAt(spark, path, Some(v - 1))).files.toSet
+          val cur = s.files
           val added = cur.filterNot(prev)
           val removed = (prev -- cur.toSet).toSeq.sorted
           def tagged(files: Seq[String], tag: String): Seq[InputPartition] =
@@ -199,13 +196,19 @@ private[sources] class GraftCdfScan(path: String, spark: SparkSession,
 
   override def description(): String = s"graft-cdf:$path"
 
-  override def toBatch: Batch = new Batch {
-    private val fromV =
-      Option(options.get("startingVersion")).map(_.toLong - 1).getOrElse(0L)
-    private val toV = Option(options.get("endingVersion")).map(_.toLong)
-      .getOrElse(TxTable.versions(spark, path).last)
-    override def planInputPartitions(): Array[InputPartition] =
+  override def toBatch: Batch = batch
+
+  // planned once per scan: Spark asks a scan for its batch and the
+  // batch for its partitions more than once per query
+  private lazy val batch: Batch = new Batch {
+    private lazy val parts = {
+      val fromV =
+        Option(options.get("startingVersion")).map(_.toLong - 1).getOrElse(0L)
+      val toV = Option(options.get("endingVersion")).map(_.toLong)
+        .getOrElse(TxTable.versions(spark, path).last)
       GraftCdf.planPartitions(spark, path, dataSchema, options, fromV, toV)
+    }
+    override def planInputPartitions(): Array[InputPartition] = parts
     override def createReaderFactory(): PartitionReaderFactory =
       new GraftCdf.CdfReaderFactory
   }

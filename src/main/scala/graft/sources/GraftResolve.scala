@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
@@ -26,20 +25,18 @@ private[sources] case class GraftResolved(
 
 private[sources] object GraftResolve {
 
-  /** Resolve `path` at `versionAsOf` (or head) to its immutable file
-    * list and a partition-aware index. Unpartitioned snapshots delegate
-    * wholesale to Spark's own [[ParquetTable]]; partitioned snapshots
-    * build an EXPLICIT partition spec from the manifest's `k=v` path
+  /** Resolve snapshot `s` — the one log read of the caller's load — to
+    * its immutable file list and a partition-aware index. Unpartitioned
+    * snapshots delegate wholesale to Spark's own [[ParquetTable]];
+    * partitioned snapshots build an EXPLICIT partition spec from the
+    * manifest's `k=v` path
     * segments ([[org.apache.spark.sql.GraftPartitionShim]]) — stock
     * directory inference cannot stitch the multi-commit layout, but
     * the manifest already knows every file's partition. Mixed layouts
     * (some files partitioned, some not) fail loudly.
     */
-  def resolve(spark: SparkSession, path: String,
-              versionAsOf: Option[Long]): GraftResolved = {
-    // one `_txlog` listing (none for `versionAsOf`), one manifest read
-    val s = TxTable.snapshotAt(spark, path, versionAsOf)
-    val (v, files) = (s.v, s.files)
+  def resolve(s: TxTable.Snapshot): GraftResolved = {
+    val (spark, path, v, files) = (s.spark, s.path, s.v, s.files)
     // the schema (and partition columns) the manifest itself DECLARES
     // (create / evolveSchema / every partitioned commit) — when present
     // it pins resolution instead of footer inference, which is what

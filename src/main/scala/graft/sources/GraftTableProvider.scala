@@ -89,7 +89,9 @@ class GraftTableProvider extends DataSourceRegister
         .orElse(Option(options.get("timestampAsOf")).map(s =>
           TxTable.versionAsOfTimestamp(SparkSession.active, path,
             parseTsMillis(s))))
-      val t = GraftResolve.resolve(SparkSession.active, path, version)
+      // one `_txlog` listing (none for a named version), one manifest read
+      val t = GraftResolve.resolve(
+        TxTable.snapshotAt(SparkSession.active, path, version))
       cached = (key, t)
       t
     }

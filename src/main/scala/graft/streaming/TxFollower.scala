@@ -43,8 +43,8 @@ object TxFollower {
   /** Highest source version `app` has materialized into `dst`, if any. */
   def processedVersion(spark: SparkSession, dst: String,
                        app: String): Option[Long] =
-    TxTable.versions(spark, dst).lastOption.flatMap(v =>
-      TxTable.commitMeta(spark, dst, v).get(srcKey(app)).map(_.toLong))
+    TxTable.snapshotAt(spark, dst, None, orEmpty = true).meta
+      .get(srcKey(app)).map(_.toLong)
 
   /** Process everything appended to `src` since the last increment:
     * one output commit covering (processed, head]. Returns the source

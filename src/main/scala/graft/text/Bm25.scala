@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.TxTable
+
 /** Okapi BM25 retrieval over a document corpus — the standard lexical
   * ranking a training-data pipeline uses for eval-set retrieval,
   * contamination triage, and "find me documents like this query"
@@ -114,7 +116,7 @@ object Bm25 {
   // serve touches ONLY the posting lists of its query terms — no
   // corpus-wide doc-length join, no full scan:
   //  - files are written token-range-sorted and the table carries a
-  //    bloom filter on `token`, so [[graft.ops.TxTable.readWhere]]
+  //    bloom filter on `token`, so [[TxTable.readWhere]]
   //    prunes non-matching files from the manifest stats alone;
   //  - df(token) = that token's posting-list length — derivable from
   //    the filtered read, exactly (postings are unique per (token, doc));
@@ -171,15 +173,13 @@ object Bm25 {
         col("positions"))
   }
 
-  /** `(nDocs, totalLen, seq)` from the head's carried meta. A
-    * malformed (hand-edited, corrupted) stats value raises the same
+  /** `(nDocs, totalLen, seq)` from an index version's carried `meta`.
+    * A malformed (hand-edited, corrupted) stats value raises the same
     * curated diagnostic as a missing key — never a bare MatchError —
     * and names [[refreshIndexStats]] as the repair.
     */
-  private def indexStats(spark: SparkSession,
-                         path: String): (Long, Long, Long) = {
-    val v = graft.ops.TxTable.versions(spark, path).last
-    val m = graft.ops.TxTable.commitMeta(spark, path, v)
+  private def indexStats(path: String,
+                         m: Map[String, String]): (Long, Long, Long) = {
     val s = m.getOrElse(StatsMetaKey, sys.error(
       s"$path is not a BM25 index (no $StatsMetaKey meta — build it " +
         "with Bm25.buildIndex)"))
@@ -211,12 +211,26 @@ object Bm25 {
       }
     }.getOrElse(0L)
 
-  /** The indexed id column's name, from carried meta. */
-  private def indexIdCol(spark: SparkSession, path: String): String = {
-    val v = graft.ops.TxTable.versions(spark, path).last
-    graft.ops.TxTable.commitMeta(spark, path, v).getOrElse(IdColMetaKey,
-      sys.error(s"$path is not a BM25 index (no $IdColMetaKey meta)"))
+  /** The index's head snapshot and its id column: each serve, removal
+    * and refresh takes the id column, the carried stats and the
+    * postings it reads from this one log read, so an append landing
+    * mid-call cannot pair one version's stats with the next's postings.
+    */
+  private def indexHead(spark: SparkSession,
+                        path: String): (TxTable.Snapshot, String) = {
+    val s = TxTable.snapshotAt(spark, path, None)
+    (s, idColOf(path, s.meta))
   }
+
+  private def idColOf(path: String, m: Map[String, String]): String =
+    m.getOrElse(IdColMetaKey,
+      sys.error(s"$path is not a BM25 index (no $IdColMetaKey meta)"))
+
+  /** The posting rows of `terms` in snapshot `s`, manifest-pruned to
+    * the files whose token range/bloom may hold one.
+    */
+  private def postingsFor(s: TxTable.Snapshot, terms: Seq[String]): DataFrame =
+    TxTable.readSnapshot(s, where = Some(col("token").isin(terms: _*)))
 
   /** Token-range-sorted layout: range partitioning gives each file a
     * tight token min/max window (manifest stats prune serve reads to
@@ -243,19 +257,15 @@ object Bm25 {
     // the write, and re-evaluating it would re-tokenize the corpus
     val posts = GraftShim.pin(postingsOf(docs, idCol, textCol))
     try {
-      // ONE bounded collect: a single (nDocs, totalLen) row
-      val st = posts.agg(countDistinct(col(idCol)).as("n"),
-        sum(col("tf")).as("tot")).collect().head
-      val (n, tot) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
+      val (n, tot) = corpusStats(posts, idCol)
       // the token bloom is declared IN the build commit, so its per-file
       // tokens are computed for the build's own files in the same claim —
       // one commit where declare-then-ANALYZE paid three plus a full
       // re-read of the just-written index (bench: every in-query index
       // build carries that cost in its timed region)
-      graft.ops.TxTable.overwrite(spark, path, tokenSorted(posts, idCol),
+      TxTable.overwrite(spark, path, tokenSorted(posts, idCol),
         meta = Map(StatsMetaKey -> s"$n:$tot", IdColMetaKey -> idCol,
-          SeqMetaKey -> "1") ++
-          graft.ops.TxTable.bloomDeclarationMeta(Seq("token")))
+          SeqMetaKey -> "1") ++ TxTable.bloomDeclarationMeta(Seq("token")))
     } finally GraftShim.unpin(posts)
   }
 
@@ -293,15 +303,15 @@ object Bm25 {
     * postings as a `txn.<app>` token ([[graft.streaming.StreamingSink]]
     * 's exactly-once pattern, applied at the index layer). A
     * checkpoint-replayed batch whose append already landed is a no-op
-    * (returns the head version, no commit, stats untouched); a crash
-    * BEFORE the commit replays into a normal append. Without it a
-    * replayed batch double-counts every posting — `checkDuplicates =
-    * false` skips the only other defense — so any streaming
-    * maintenance of the index should pass it.
+    * (returns the head version before any check runs, no commit,
+    * stats untouched); a crash BEFORE the commit replays into a normal
+    * append. Without it a replayed batch double-counts every posting —
+    * `checkDuplicates = false` skips the only other defense — so any
+    * streaming maintenance of the index should pass it.
     *
     * `maintain = Some(policy)` bounds the FILE count the append trail
     * leaves behind: after a landed (non-replayed) append the policy's
-    * threshold is checked ([[graft.ops.TxTable.optimizeIfFragmented]])
+    * threshold is checked ([[TxTable.optimizeIfFragmented]])
     * and, when crossed, ONE token-range OPTIMIZE restores the
     * [[buildIndex]] layout — without it, 50 micro-batch appends serve
     * ~18× slower (`MAINT_FRAG_r14.json`) until an operator remembers
@@ -312,15 +322,20 @@ object Bm25 {
                     idCol: String, textCol: String,
                     checkDuplicates: Boolean = true,
                     txn: Option[(String, Long)] = None,
-                    maintain: Option[graft.ops.TxTable.Maintenance] = None)
+                    maintain: Option[TxTable.Maintenance] = None)
       : Long = {
-    val storedId = indexIdCol(spark, path)
-    require(storedId == idCol,
-      s"index at $path was built on id column '$storedId', got '$idCol'")
-    graft.ops.TxTable.withTxn(spark, path, txn) { (txnMeta, txnGuard) =>
+    // the postings are materialized once for the stats aggregate and the
+    // write, and released once the append (and its maintenance) is done
+    var pinned: Option[DataFrame] = None
+    // token is the build layout's sort key (tokenSorted): maintenance
+    // restores exactly what buildIndex writes
+    try TxTable.appendIncrement(spark, path, txn, Seq("token"), maintain) { s =>
+      val storedId = idColOf(path, s.meta)
+      require(storedId == idCol,
+        s"index at $path was built on id column '$storedId', got '$idCol'")
       requireUniqueIds(docs, idCol, "appendToIndex")
       if (checkDuplicates) {
-        val dup = graft.ops.TxTable.read(spark, path).select(col(idCol))
+        val dup = TxTable.readSnapshot(s).select(col(idCol))
           .join(docs.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
           .limit(3).collect()
         require(dup.isEmpty,
@@ -328,40 +343,35 @@ object Bm25 {
             dup.map(_.get(0)).mkString(", ") +
             " — postings are append-only per doc; rebuild via buildIndex")
       }
-      val (n, tot, seq) = indexStats(spark, path)
+      val (n, tot, seq) = indexStats(path, s.meta)
       val batch = GraftShim.pin(
         postingsOf(docs, idCol, textCol, spread = false))
-      val v = try {
-        val st = batch.agg(countDistinct(col(idCol)).as("n"),
-          sum(col("tf")).as("tot")).collect().head
-        val (bn, bt) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-        graft.ops.TxTable.append(spark, path, tokenSorted(batch, idCol),
-          meta = Map(StatsMetaKey -> s"${n + bn}:${tot + bt}",
-            IdColMetaKey -> idCol, SeqMetaKey -> (seq + 1).toString) ++ txnMeta,
-          guard = Map(SeqMetaKey -> (seq + 1L)) ++ txnGuard)
-      } finally GraftShim.unpin(batch)
-      // token is the build layout's sort key (tokenSorted): the
-      // rewrite restores exactly what buildIndex writes
-      graft.ops.TxTable.maintainAfterAppend(spark, path, Seq("token"),
-        maintain)
-      v
-    }
+      pinned = Some(batch)
+      val (bn, bt) = corpusStats(batch, idCol)
+      (tokenSorted(batch, idCol),
+        Map(StatsMetaKey -> s"${n + bn}:${tot + bt}",
+          IdColMetaKey -> idCol, SeqMetaKey -> (seq + 1).toString),
+        Map(SeqMetaKey -> (seq + 1L)))
+    } finally pinned.foreach(GraftShim.unpin)
   }
 
   /** Remove documents from a persisted index — the lifecycle's third
     * leg (GDPR purges, contaminated-document excision): ONE atomic
-    * copy-on-write [[graft.ops.TxTable.delete]] of the doc ids'
-    * posting rows that carries the post-delete corpus stats in the
-    * same commit. Serving afterwards is BIT-IDENTICAL to an index
-    * never containing the docs (pinned by the q_x_bm25_removed
+    * copy-on-write [[TxTable.delete]] of the doc ids' posting rows
+    * that carries the post-delete corpus stats in the same commit.
+    * Serving afterwards is BIT-IDENTICAL to an index never containing
+    * the docs (pinned by the q_x_bm25_removed
     * oracle): df is a posting-list length either way, and N/Σ|d| are
     * re-DERIVED from the surviving postings — one column-pruned scan
     * rather than a decrement, because removal is rare and a
     * recomputation can never drift. Because stats ride IN the delete
-    * commit, a concurrent reader sees either the pre-delete rows with
-    * pre-delete stats or the post-delete rows with post-delete stats,
-    * never a mix — there is no crash window and no transient
-    * inconsistency. The sequence guard aborts if a concurrent
+    * commit, and every serve takes its stats and its postings from the
+    * one head snapshot it reads ([[indexHead]]), a concurrent reader
+    * sees either the pre-delete rows with pre-delete stats or the
+    * post-delete rows with post-delete stats, never a mix — there is
+    * no crash window and no transient inconsistency. The derivation
+    * reads the stats' sequence and the surviving postings from one
+    * snapshot too. The sequence guard aborts if a concurrent
     * append/remove advanced the index between the stats derivation
     * and the commit (retry the removal). Removing ids with no
     * postings is an exact no-op (no commit).
@@ -369,22 +379,20 @@ object Bm25 {
   def removeFromIndex(spark: SparkSession, path: String,
                       docIds: Seq[Any]): Long = {
     require(docIds.nonEmpty, "removeFromIndex needs at least one doc id")
-    val idCol = indexIdCol(spark, path)
-    val (_, _, seq) = indexStats(spark, path)
-    // post-delete stats from the SURVIVING postings, derived BEFORE
-    // the commit so the transition is a single atomic version; the
-    // seq guard (revalidated on every commit retry) catches a racing
-    // writer that would make this derivation stale
-    val st = graft.ops.TxTable.read(spark, path)
-      .filter(!col(idCol).isin(docIds: _*))
-      .agg(countDistinct(col(idCol)).as("n"), sum(col("tf")).as("tot"))
-      .collect().head
-    val (n, tot) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-    graft.ops.TxTable.delete(spark, path, col(idCol).isin(docIds: _*),
+    val (s, idCol) = indexHead(spark, path)
+    val (_, _, seq) = indexStats(path, s.meta)
+    // post-delete stats from the SURVIVING postings of the snapshot
+    // whose sequence the guard names, derived BEFORE the commit so the
+    // transition is a single atomic version; the seq guard (revalidated
+    // on every commit retry) catches a racing writer that would make
+    // this derivation stale
+    val (n, tot) = corpusStats(TxTable.readSnapshot(s)
+      .filter(!col(idCol).isin(docIds: _*)), idCol)
+    TxTable.delete(spark, path, col(idCol).isin(docIds: _*),
         meta = Map(StatsMetaKey -> s"$n:$tot",
           IdColMetaKey -> idCol, SeqMetaKey -> (seq + 1).toString),
         guard = Map(SeqMetaKey -> (seq + 1)))
-      .getOrElse(graft.ops.TxTable.versions(spark, path).last)
+      .getOrElse(s.v)
   }
 
   /** Recompute the carried (N, Σ|d|) stats exactly from the surviving
@@ -396,16 +404,19 @@ object Bm25 {
     * [[indexStats]]' validation) and a defense-in-depth audit hook.
     */
   def refreshIndexStats(spark: SparkSession, path: String): Long = {
-    val idCol = indexIdCol(spark, path)
-    val v = graft.ops.TxTable.versions(spark, path).last
-    val seq = indexSeq(graft.ops.TxTable.commitMeta(spark, path, v))
-    val st = graft.ops.TxTable.read(spark, path)
-      .agg(countDistinct(col(idCol)).as("n"), sum(col("tf")).as("tot"))
-      .collect().head
-    val (n, tot) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-    graft.ops.TxTable.setCarriedMeta(spark, path,
+    val (s, idCol) = indexHead(spark, path)
+    val seq = indexSeq(s.meta)
+    val (n, tot) = corpusStats(TxTable.readSnapshot(s), idCol)
+    TxTable.setCarriedMeta(spark, path,
       Map(StatsMetaKey -> s"$n:$tot", SeqMetaKey -> (seq + 1).toString),
       guard = Map(SeqMetaKey -> (seq + 1)))
+  }
+
+  /** (N, Σ|d|) of `postings`: one bounded single-row collect. */
+  private def corpusStats(postings: DataFrame, idCol: String): (Long, Long) = {
+    val st = postings.agg(countDistinct(col(idCol)).as("n"),
+      sum(col("tf")).as("tot")).collect().head
+    (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
   }
 
   /** PHRASE search from a persisted positional index: top-`topK`
@@ -435,7 +446,7 @@ object Bm25 {
     require(queries.nonEmpty, "need at least one phrase")
     require(topK > 0, "topK must be positive")
     import spark.implicits._
-    val idCol = indexIdCol(spark, path)
+    val (s, idCol) = indexHead(spark, path)
     // phrase tokens WITH offsets via the ENGINE tokenizer — the same
     // bounded driver-side collect searchIndexed documents
     val qtRows = queries.toDF("query_id", "__qtext")
@@ -447,9 +458,7 @@ object Bm25 {
     val qt = qtRows.map(r => (r.getString(0), r.getInt(1), r.getString(2)))
       .toSeq.toDF("query_id", "j", "token")
     val qLen = qt.groupBy("query_id").agg(count(lit(1)).as("__k"))
-    val terms = qtRows.map(_.getString(2)).distinct.toSeq
-    val posts = graft.ops.TxTable.readWhere(spark, path,
-      col("token").isin(terms: _*))
+    val posts = postingsFor(s, qtRows.map(_.getString(2)).distinct.toSeq)
     require(posts.columns.contains("positions"),
       s"index at $path predates positional postings — rebuild it with " +
         "Bm25.buildIndex to serve phrase queries")
@@ -490,8 +499,8 @@ object Bm25 {
     require(queries.nonEmpty, "need at least one query")
     require(topK > 0, "topK must be positive")
     import spark.implicits._
-    val idCol = indexIdCol(spark, path)
-    val (n, tot, _) = indexStats(spark, path)
+    val (s, idCol) = indexHead(spark, path)
+    val (n, tot, _) = indexStats(path, s.meta)
     require(n > 0, s"index at $path is empty")
     // distinct query terms, via the ENGINE tokenizer (no driver-side
     // re-implementation to drift). Bounded collect: Σ distinct terms
@@ -503,11 +512,9 @@ object Bm25 {
       .collect()
     val qt = qtRows.map(r => (r.getString(0), r.getString(1))).toSeq
       .toDF("query_id", "token")
-    val terms = qtRows.map(_.getString(1)).distinct.toSeq
     // manifest-stats-pruned read: only files whose token min/max and
     // bloom may hold a query term are scanned at all
-    val posts = graft.ops.TxTable.readWhere(spark, path,
-      col("token").isin(terms: _*))
+    val posts = postingsFor(s, qtRows.map(_.getString(1)).distinct.toSeq)
     // df(token) IS the filtered posting-list length — exact, no
     // corpus-wide aggregate
     val docFreq = posts.groupBy("token").agg(count(lit(1)).as("__df"))
@@ -564,8 +571,8 @@ object Bm25 {
     require(queries.nonEmpty, "need at least one boolean query")
     require(topK > 0, "topK must be positive")
     import spark.implicits._
-    val idCol = indexIdCol(spark, path)
-    val (n, tot, _) = indexStats(spark, path)
+    val (s, idCol) = indexHead(spark, path)
+    val (n, tot, _) = indexStats(path, s.meta)
     require(n > 0, s"index at $path is empty")
     // per-(query, token, role) rows via the engine tokenizer; bounded
     // driver-side collect (queries are driver-side data already).
@@ -587,10 +594,8 @@ object Bm25 {
     }.toSeq.toDF("query_id", "token", "role")
     require(qt.filter(col("role") =!= "n").limit(1).count() > 0,
       "every query tokenized to no scoring terms")
-    val terms = qt.select("token").distinct().collect()
-      .map(_.getString(0)).toSeq
-    val posts = graft.ops.TxTable.readWhere(spark, path,
-      col("token").isin(terms: _*))
+    val posts = postingsFor(s,
+      qt.select("token").distinct().collect().map(_.getString(0)).toSeq)
     // one posting read feeds all three roles
     val matchedAll = posts.join(broadcast(qt), Seq("token"))
     // mustNot gate: any forbidden token present → the doc is out
@@ -662,7 +667,7 @@ object Bm25 {
       "window must be in [1, 64] (votes explode by window)")
     require(topK > 0, "topK must be positive")
     import spark.implicits._
-    val idCol = indexIdCol(spark, path)
+    val (s, idCol) = indexHead(spark, path)
     val qtRows = queries.toDF("query_id", "__qtext")
       .select(col("query_id"),
         explode(array_distinct(TextAnalysis.tokens(col("__qtext"))))
@@ -672,9 +677,7 @@ object Bm25 {
     val qt = qtRows.map(r => (r.getString(0), r.getString(1))).toSeq
       .toDF("query_id", "token")
     val qLen = qt.groupBy("query_id").agg(count(lit(1)).as("__k"))
-    val terms = qtRows.map(_.getString(1)).distinct.toSeq
-    val posts = graft.ops.TxTable.readWhere(spark, path,
-      col("token").isin(terms: _*))
+    val posts = postingsFor(s, qtRows.map(_.getString(1)).distinct.toSeq)
     require(posts.columns.contains("positions"),
       s"index at $path predates positional postings — rebuild it with " +
         "Bm25.buildIndex to serve proximity queries")

@@ -93,9 +93,8 @@ object Dsir {
   /** Load a model persisted by [[writeModel]]. */
   def loadModel(spark: org.apache.spark.sql.SparkSession,
                 path: String): DsirModel = {
-    val meta = graft.ops.TxTable.commitMeta(spark, path,
-      graft.ops.TxTable.versions(spark, path).max)
-    DsirModel(graft.ops.TxTable.read(spark, path), meta("dsir.buckets").toInt)
+    val s = graft.ops.TxTable.snapshotAt(spark, path, None)
+    DsirModel(graft.ops.TxTable.readSnapshot(s), s.meta("dsir.buckets").toInt)
   }
 
   /** Score `docs`: importance weight = sum of per-bucket multiplicity x

@@ -94,13 +94,12 @@ object LmScore {
   /** Load a model persisted by [[writeModel]]. */
   def loadModel(spark: org.apache.spark.sql.SparkSession,
                 path: String): BigramModel = {
-    val uni = s"$path/unigrams"
-    val meta = graft.ops.TxTable.commitMeta(spark, uni,
-      graft.ops.TxTable.versions(spark, uni).max)
+    // the normalizers and the unigram rows from one snapshot
+    val uni = graft.ops.TxTable.snapshotAt(spark, s"$path/unigrams", None)
     BigramModel(
-      graft.ops.TxTable.read(spark, uni),
+      graft.ops.TxTable.readSnapshot(uni),
       graft.ops.TxTable.read(spark, s"$path/bigrams"),
-      meta("lm.totalTokens").toLong, meta("lm.vocabSize").toLong)
+      uni.meta("lm.totalTokens").toLong, uni.meta("lm.vocabSize").toLong)
   }
 
   /** Adjacent-token pairs of a token array as array<struct<prev,cur>>.

@@ -233,6 +233,33 @@ class GraftSqlSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq === Seq(2L, 3L))
   }
 
+  test("catalog: a path with no commits is a missing table, at the head and AS OF a version") {
+    val s = spark
+    import s.implicits._
+    val missing = tmp()
+    def notFound(sql: String, condition: String): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(sql).collect())
+      assert(e.getCondition == condition, e.getMessage)
+    }
+    // the catalog answers NoSuchTableException; for a query Spark then
+    // tries the backticked name as a direct file query, which `graft`
+    // refuses
+    notFound(s"SELECT * FROM graft.`$missing`",
+      "UNSUPPORTED_DATASOURCE_FOR_DIRECT_QUERY")
+    notFound(s"SELECT * FROM graft.`$missing` VERSION AS OF 1",
+      "UNSUPPORTED_DATASOURCE_FOR_DIRECT_QUERY")
+    notFound(s"ALTER TABLE graft.`$missing` ADD COLUMNS (x INT)",
+      "TABLE_OR_VIEW_NOT_FOUND")
+    // a version a table never had (or vacuumed) is named as such
+    val table = tmp()
+    TxTable.append(spark, table, Seq((1L, "a")).toDF("id", "v"))
+    val e = intercept[IllegalArgumentException](
+      spark.sql(s"SELECT * FROM graft.`$table` VERSION AS OF 9").collect())
+    assert(e.getMessage.contains(s"version 9 of $table does not exist"),
+      e.getMessage)
+  }
+
   test("catalog: CREATE empty then INSERT INTO / INSERT OVERWRITE commit through the log") {
     val s = spark
     import s.implicits._

@@ -13,7 +13,9 @@ import org.apache.hadoop.util.Progressable
   * claims through its rename path. Statuses carry default permissions:
   * the local one loads them through a `file:` URI, which a `racefs:`
   * path is not. `listStatus`, `open` and `rename` calls are counted per
-  * path ([[RaceFs.calls]]).
+  * path ([[RaceFs.calls]]). A second hook, [[RaceFs.beforeListing]],
+  * runs a body once just before the n-th `_txlog` listing, so a commit
+  * can land between two log reads of one operation.
   */
 class RaceFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("racefs:///")
@@ -21,6 +23,7 @@ class RaceFs extends RawLocalFileSystem {
 
   override def listStatus(f: Path): Array[FileStatus] = {
     RaceFs.count("listStatus", f)
+    RaceFs.listing(f)
     super.listStatus(f).map(RaceFs.plain)
   }
 
@@ -56,6 +59,7 @@ class RaceFs extends RawLocalFileSystem {
 
 object RaceFs {
   private var hook: Option[() => Unit] = None
+  private var listingHook: Option[(Int, () => Unit)] = None
   private val counts =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
 
@@ -74,6 +78,30 @@ object RaceFs {
 
   def beforeNextManifest(body: => Unit): Unit =
     synchronized { hook = Some(() => body) }
+
+  /** Run `body`, once, just before the `n`-th `_txlog` listing from now
+    * (`n >= 1`); listings are counted as [[calls]] counts them.
+    */
+  def beforeListing(n: Int)(body: => Unit): Unit = {
+    require(n >= 1, "n counts listings from 1")
+    synchronized { listingHook = Some((n, () => body)) }
+  }
+
+  /** Drop a [[beforeListing]] hook; true iff it had not fired yet. */
+  def cancelListingHook(): Boolean =
+    synchronized { val armed = listingHook.isDefined; listingHook = None; armed }
+
+  private def listing(f: Path): Unit =
+    if (f.getName == "_txlog") {
+      val due = synchronized {
+        listingHook match {
+          case Some((1, body)) => listingHook = None; Some(body)
+          case Some((n, body)) => listingHook = Some((n - 1, body)); None
+          case None => None
+        }
+      }
+      due.foreach(_())
+    }
 
   private def plain(s: FileStatus): FileStatus =
     new FileStatus(s.getLen, s.isDirectory, s.getReplication, s.getBlockSize,

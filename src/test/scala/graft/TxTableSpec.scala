@@ -327,6 +327,19 @@ class TxTableSpec extends SparkSpec {
     assert(TxTable.versions(spark, dir) == Seq(1L))
   }
 
+  /** (`_txlog` listings, manifest opens) of table `dir` while `op` runs;
+    * the rename claim's read-back of the slot it just claimed is not
+    * counted.
+    */
+  private def logTraffic(dir: String)(op: => Any): (Long, Long) = {
+    val log = dir.stripPrefix("racefs://") + "/_txlog"
+    RaceFs.resetCalls()
+    op
+    def manifest(p: String) = p.startsWith(log + "/") && p.endsWith(".manifest")
+    (RaceFs.calls("listStatus")(_ == log),
+      RaceFs.calls("open")(manifest) - RaceFs.calls("rename")(manifest))
+  }
+
   /** A fresh table under the counting `racefs` scheme. */
   private def raceTable(prefix: String): String = {
     spark.sparkContext.hadoopConfiguration
@@ -355,18 +368,9 @@ class TxTableSpec extends SparkSpec {
     import s.implicits._
     import org.apache.spark.sql.functions.{col, lit}
     val dir = raceTable("graft_log_traffic")
-    val log = dir.stripPrefix("racefs://") + "/_txlog"
     def rows(lo: Long) = (lo until lo + 20L).map(i => (i, s"v$i"))
       .toDF("id", "v").repartition(2)
-    // (`_txlog` listings, manifest opens) of `op`; the rename claim's
-    // read-back of the slot it just claimed is not counted
-    def traffic(op: => Any): (Long, Long) = {
-      RaceFs.resetCalls()
-      op
-      def manifest(p: String) = p.startsWith(log + "/") && p.endsWith(".manifest")
-      (RaceFs.calls("listStatus")(_ == log),
-        RaceFs.calls("open")(manifest) - RaceFs.calls("rename")(manifest))
-    }
+    def traffic(op: => Any): (Long, Long) = logTraffic(dir)(op)
     TxTable.append(spark, dir, rows(0L))
     TxTable.append(spark, dir, rows(100L))
     val appendAtV2 = traffic(TxTable.append(spark, dir, rows(200L)))
@@ -405,5 +409,95 @@ class TxTableSpec extends SparkSpec {
     assert(sourceAt == ((0L, 1L)), s"graft source versionAsOf: $sourceAt")
     assert(sourceCount == ((1L, 1L)), s"load(p).count(): $sourceCount")
     assert(sourceMeta == ((1L, 1L)), s"metadata aggregates: $sourceMeta")
+  }
+
+  test("index serves, loads and appends read the head once") {
+    import org.apache.spark.sql.functions.col
+    import graft.ops.Sketches
+    import graft.text.{Bm25, Dsir}
+    val s = spark
+    import s.implicits._
+    val root = raceTable("graft_index_traffic")
+    val docs = Seq(BmDoc(1L, "spark merge table"), BmDoc(2L, "merge join"),
+      BmDoc(3L, "window agg spark"))
+    def batch(lo: Long) = df(Seq(BmDoc(lo, "spark stream"), BmDoc(lo + 1, "join")))
+    val idx = s"$root/bm25"
+    Bm25.buildIndex(df(docs), "doc_id", "text", idx)
+    def bm25(op: => Any) = logTraffic(idx)(op)
+    val bm25Counts = Seq(
+      "searchIndexed" -> bm25(Bm25.searchIndexed(spark, idx,
+        Seq(("q", "spark merge"))).collect()),
+      "phraseSearchIndexed" -> bm25(Bm25.phraseSearchIndexed(spark, idx,
+        Seq(("q", "merge join"))).collect()),
+      "appendToIndex" -> bm25(Bm25.appendToIndex(spark, idx, batch(10L),
+        "doc_id", "text")),
+      "appendToIndex(txn)" -> bm25(Bm25.appendToIndex(spark, idx,
+        batch(20L), "doc_id", "text", txn = Some(("app", 1L)))),
+      "appendToIndex(txn), replayed" -> bm25(Bm25.appendToIndex(spark, idx,
+        batch(20L), "doc_id", "text", txn = Some(("app", 1L)))))
+    // the policy's threshold check reads the head after the commit
+    val maintained = bm25(Bm25.appendToIndex(spark, idx, batch(30L),
+      "doc_id", "text", maintain = Some(TxTable.Maintenance(maxFiles = 1000))))
+    val removed = bm25(Bm25.removeFromIndex(spark, idx, Seq(10L)))
+    val kll = s"$root/kll"
+    Sketches.writeKllGrains(Seq((1, 1.0), (1, 2.0), (2, 3.0)).toDF("g", "x"),
+      kll, Seq("g"), col("x"))
+    val kllAppend = logTraffic(kll)(Sketches.appendKllGrains(spark, kll,
+      Seq((2, 4.0)).toDF("g", "x"), Seq("g"), col("x")))
+    val kllServe = logTraffic(kll)(
+      Sketches.kllServe(spark, kll, Seq("g"), Seq(0.5)).collect())
+    val dsir = s"$root/dsir"
+    Dsir.writeModel(Dsir.fit(df(docs), df(docs), "text", buckets = 16), dsir)
+    val dsirLoad = logTraffic(dsir)(Dsir.loadModel(spark, dsir).logRatios.collect())
+    val sql = logTraffic(idx)(spark.sql(s"SELECT * FROM graft.`$idx`").collect())
+    // a change-feed batch over k versions: each version's timestamp,
+    // change-data token and files come from one manifest read
+    val feed = s"$root/feed"
+    (1 to 4).foreach(i => TxTable.append(spark, feed, Seq((i.toLong, "a")).toDF("id", "v")))
+    TxTable.delete(spark, feed, col("id") === 2L)
+    val changes = spark.read.format("graft").option("readChangeFeed", "true")
+      .option("startingVersion", 1L).option("endingVersion", 5L).load(feed)
+    val cdf = logTraffic(feed)(assert(changes.collect().length == 5))
+    info((bm25Counts ++ Seq("appendToIndex(maintain)" -> maintained,
+      "removeFromIndex" -> removed, "appendKllGrains" -> kllAppend,
+      "kllServe" -> kllServe, "Dsir.loadModel" -> dsirLoad,
+      "SELECT * FROM graft.`p`" -> sql, "change feed over 5 versions" -> cdf))
+      .map { case (op, c) => s"$op $c" }.mkString(", "))
+    bm25Counts.foreach { case (op, c) => assert(c == ((1L, 1L)), s"$op: $c") }
+    assert(maintained == ((2L, 2L)), s"appendToIndex(maintain): $maintained")
+    assert(removed._1 <= 2L && removed._2 <= 2L, s"removeFromIndex: $removed")
+    assert(kllAppend == ((1L, 1L)), s"appendKllGrains: $kllAppend")
+    assert(kllServe == ((1L, 1L)), s"kllServe: $kllServe")
+    assert(dsirLoad == ((1L, 1L)), s"Dsir.loadModel: $dsirLoad")
+    assert(sql == ((1L, 1L)), s"SELECT * FROM graft.`p`: $sql")
+    assert(cdf == ((1L, 5L)), s"change feed over 5 versions: $cdf")
+  }
+
+  test("a BM25 serve never pairs one version's stats with the next's postings") {
+    import graft.text.Bm25
+    val idx = raceTable("graft_bm25_tear")
+    Bm25.buildIndex(df(Seq(BmDoc(1L, "spark spark spark merge"),
+      BmDoc(2L, "spark merge"), BmDoc(3L, "merge table"),
+      BmDoc(4L, "window agg"), BmDoc(5L, "table window"))),
+      "doc_id", "text", idx)
+    // ten more docs holding both query terms: df outgrows the old N
+    val more = df((100L until 110L).map(BmDoc(_, "spark spark merge")))
+    def append(): Unit = Bm25.appendToIndex(spark, idx, more, "doc_id", "text")
+    def ranking(): Seq[(Long, Double)] =
+      Bm25.searchIndexed(spark, idx, Seq(("q", "spark merge")), topK = 3)
+        .collect().map(r => (r.getLong(2), r.getDouble(3))).toSeq
+    val before = ranking()
+    // the append lands just before the search's third `_txlog` listing:
+    // after a serve that reads the head more than once has read its
+    // stats, before it reads the postings
+    RaceFs.beforeListing(3)(append())
+    val served = ranking()
+    if (RaceFs.cancelListingHook()) append()
+    val after = ranking()
+    info(s"before $before, served $served, after $after")
+    assert(before != after)
+    assert(served.forall(_._2 >= 0.0), s"negative BM25 score: $served")
+    assert(served == before || served == after,
+      s"torn ranking $served: neither $before nor $after")
   }
 }
